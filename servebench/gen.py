@@ -42,17 +42,20 @@ _5XX = [500, 502, 503]
 _SPAN_NAMES = ["GET /api", "db.query", "cache.get", "render", "auth"]
 
 
-@dataclass(frozen=True)
-class Sizes:
-    """Preload sizes. ``scrape_s`` is the remote-write sample interval."""
-
-    streams: int = 48
-    lines: int = 6_000
-    series: int = 30
-    scrape_s: int = 120
-    traces: int = 120
-    error_rate: float = 0.1
-    status5xx_rate: float = 0.08
+# preload sizes
+STREAMS = 48
+LINES = 6_000
+SERIES = 30
+SCRAPE_S = 120  # remote-write sample interval
+TRACES = 120
+ERROR_RATE = 0.1
+STATUS5XX_RATE = 0.08
+# svc3's JSON streams are the hot ones: they carry HOT_SHARE of all lines
+# and a high 5xx rate, so the ``logs_json`` panel's 1 h window holds well
+# over its limit of 100 matching lines (about 180 on average)
+HOT_APP = "svc3"
+HOT_SHARE = 0.3
+HOT_5XX_RATE = 0.6
 
 
 @dataclass
@@ -95,6 +98,11 @@ class Truth:
     def count_lines(self, start_ns: int, end_ns: int, **match) -> int:
         return sum(1 for _ in self._matching(start_ns, end_ns, match))
 
+    def newest_ts(self, start_ns: int, end_ns: int, limit: int, **match) -> list[int]:
+        """Timestamps of the newest ``limit`` matching lines, newest first."""
+        ts = [ln.ts for ln, _ in self._matching(start_ns, end_ns, match)]
+        return ts[::-1][:limit]
+
     def lines_by(self, start_ns: int, end_ns: int, key: str, **match) -> dict:
         """Matching line counts in [start, end) grouped by stream label ``key``."""
         out: dict = {}
@@ -131,9 +139,8 @@ class Generator:
     """All payloads for one seed. Building it draws the preload data;
     the live pushes are pure functions of (seed, marker)."""
 
-    def __init__(self, seed: int, sizes: Sizes = Sizes()):
+    def __init__(self, seed: int):
         self.seed = seed
-        self.sizes = sizes
         self.truth = Truth()
         rng = random.Random(seed)
         self._streams(rng)
@@ -143,7 +150,7 @@ class Generator:
 
     # ------------------------------------------------------------ model
     def _streams(self, rng: random.Random) -> None:
-        for i in range(self.sizes.streams):
+        for i in range(STREAMS):
             env = ("prod", "dev")[i % 2]
             app = APPS[(i // 2) % len(APPS)]
             if env == "dev":
@@ -175,33 +182,38 @@ class Generator:
         return f"{head}{method} {path} {status} {lat}ms {req}"
 
     def _draw_line(self, rng: random.Random, ts: int, stream: int) -> Line:
-        error = rng.random() < self.sizes.error_rate
-        s5xx = rng.random() < self.sizes.status5xx_rate
-        text = self._line_text(rng, self.truth.stream_labels[stream]["fmt"], error, s5xx)
+        lab = self.truth.stream_labels[stream]
+        hot = lab["app"] == HOT_APP and lab["fmt"] == "json"
+        error = rng.random() < ERROR_RATE
+        s5xx = rng.random() < (HOT_5XX_RATE if hot else STATUS5XX_RATE)
+        text = self._line_text(rng, lab["fmt"], error, s5xx)
         return Line(ts, stream, error, s5xx, text)
 
     def _lines(self, rng: random.Random) -> None:
-        n, streams = self.sizes.lines, self.sizes.streams
+        labels = self.truth.stream_labels
+        hot = [i for i, lab in enumerate(labels)
+               if lab["app"] == HOT_APP and lab["fmt"] == "json"]
+        cold = [i for i in range(len(labels)) if i not in hot]
         # distinct millisecond timestamps: no two lines of the store tie
-        ms = sorted(rng.sample(range(PRELOAD_NS // 1_000_000), n))
+        ms = sorted(rng.sample(range(PRELOAD_NS // 1_000_000), LINES))
         self.truth.lines = [
-            self._draw_line(rng, T0 + m * 1_000_000, rng.randrange(streams))
+            self._draw_line(rng, T0 + m * 1_000_000,
+                            rng.choice(hot if rng.random() < HOT_SHARE else cold))
             for m in ms
         ]
 
     def _series(self, rng: random.Random) -> None:
-        n = self.sizes.series
         # distinct increments: the topk ranking has no ties
-        self.truth.series_inc = rng.sample(range(1, 1000), n)
+        self.truth.series_inc = rng.sample(range(1, 1000), SERIES)
         self.truth.series_labels = [
             {"__name__": METRIC, "job": JOBS[j % len(JOBS)], "instance": f"h{j}"}
-            for j in range(n)
+            for j in range(SERIES)
         ]
-        step = self.sizes.scrape_s * NS
+        step = SCRAPE_S * NS
         self.truth.scrape_ts = list(range(T0, T0 + PRELOAD_NS, step))
 
     def _spans(self, rng: random.Random) -> None:
-        for _ in range(self.sizes.traces):
+        for _ in range(TRACES):
             trace = f"{rng.getrandbits(128):032x}"
             root_ts = T0 + rng.randrange(PRELOAD_NS // 1000) * 1000
             for k in range(rng.randint(2, 8)):
@@ -213,7 +225,7 @@ class Generator:
                     "dur_us": rng.randint(100, 50_000),
                     "service": rng.choice(SERVICES),
                     "name": rng.choice(_SPAN_NAMES),
-                    "error": rng.random() < self.sizes.error_rate,
+                    "error": rng.random() < ERROR_RATE,
                 })
         self.truth.spans.sort(key=lambda s: (s["trace"], s["ts"]))
         roots: dict = {}

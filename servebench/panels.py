@@ -77,14 +77,18 @@ def check(panel: str, body: bytes, truth: Truth, start: int, end: int,
         want = truth.lines_by(start, end, "app", env="prod", error=True)
         return None if got == want else f"error lines by app {got} != {want}"
     if panel == "logs_json":
-        lines = [v for s in doc["data"]["result"] for v in s["values"]]
-        want = min(JSON_LIMIT, truth.count_lines(
-            start, end, app="svc3", fmt="json", status5xx=True))
+        # limit 100, backward: exactly the newest 100 matching lines
+        got = sorted((int(v[0]) for s in doc["data"]["result"] for v in s["values"]),
+                     reverse=True)
+        want = truth.newest_ts(start, end, JSON_LIMIT, app="svc3", fmt="json",
+                               status5xx=True)
         bad = [s["stream"].get("status") for s in doc["data"]["result"]
                if int(s["stream"].get("status", 0)) < 500]
         if bad:
             return f"status<500 streams returned: {bad[:3]}"
-        return None if len(lines) == want else f"{len(lines)} lines != {want}"
+        if got != want:
+            return f"{len(got)} lines, not the newest {len(want)} matching ones"
+        return None
     if panel == "logs_logfmt":
         got = _sum_by(doc["data"]["result"], "level")
         total = truth.count_lines(start, end, env="dev")

@@ -33,9 +33,9 @@ def seeds(spec: str) -> list[int]:
     return [int(s) for s in spec.split(",")]
 
 
-def run_once(workload: str, seed: int, seconds: float, trace: int) -> dict:
+def run_once(workload: str, seed: int, seconds: float) -> dict:
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, capture_output=True, text=True, timeout=900)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or len(lines) < 2:
@@ -49,7 +49,6 @@ def main(argv=None) -> int:
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--seconds", type=float, default=None,
                     help="default: run_seconds from BENCHMARK.json")
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
     with open("BENCHMARK.json") as fh:
         bench = json.load(fh)
@@ -60,7 +59,7 @@ def main(argv=None) -> int:
     runs = []
     with open(log, "a") as fh:
         for seed in seeds(args.seeds):
-            r = run_once(args.workload, seed, seconds, args.trace)
+            r = run_once(args.workload, seed, seconds)
             fh.write(json.dumps(r) + "\n")
             fh.flush()
             runs.append(r)

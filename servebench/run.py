@@ -49,7 +49,7 @@ def main(argv=None) -> int:
     base = os.path.join(os.getcwd(), ".servebench_run")
     work = os.path.join(base, f"{args.workload}-{args.seed}-{os.getpid()}")
     configure_env(work)
-    from workloads import WORKLOADS
+    from workloads import WORKLOADS, log
 
     spans_path = (
         os.path.join(base, f"spans-{args.workload}-seed{args.seed}.jsonl")
@@ -65,8 +65,10 @@ def main(argv=None) -> int:
         env = {**wl.served.env(args.seed), "workload": args.workload,
                "trace": args.trace, "seconds": args.seconds}
     finally:
+        t = time.perf_counter()
         wl.close()
         shutil.rmtree(work, ignore_errors=True)
+        log(f"closed in {time.perf_counter() - t:.1f} s")
     for msg in out.errors:
         print(f"servebench: wrong answer: {msg}", file=sys.stderr)
     print(json.dumps({"env": env, "reads": len(out.reads)}))

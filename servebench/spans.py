@@ -59,6 +59,7 @@ TARGETS = {
     ],
     "storage.patterns": [("gigapipe_spark.storage.writer", "patterns_fanout")],
     "storage.journal": [
+        ("gigapipe_spark.storage.journal", "BatchJournal.__init__"),  # snapshot
         ("gigapipe_spark.storage.journal", "BatchJournal.begin"),
         ("gigapipe_spark.storage.journal", "BatchJournal.done"),
     ],

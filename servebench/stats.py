@@ -18,25 +18,25 @@ class TooFewSamples(ValueError):
     """A percentile was asked of fewer samples than the rule allows."""
 
 
-def min_samples(q: float, beyond: int = MIN_BEYOND) -> int:
+def min_samples(q: float) -> int:
     """Smallest sample count for which percentile ``q`` (0 < q < 100)
-    has ``beyond`` samples above its rank."""
+    has ``MIN_BEYOND`` samples above its rank."""
     if not 0 < q < 100:
         raise ValueError(f"percentile must be in (0, 100), got {q}")
-    n = beyond
-    while n - math.ceil(n * q / 100) < beyond:
+    n = MIN_BEYOND
+    while n - math.ceil(n * q / 100) < MIN_BEYOND:
         n += 1
     return n
 
 
-def percentile(values, q: float, beyond: int = MIN_BEYOND) -> float:
+def percentile(values, q: float) -> float:
     """Nearest-rank percentile ``q`` of ``values``. Raises TooFewSamples
-    unless at least ``beyond`` samples lie above the returned rank."""
+    unless at least ``MIN_BEYOND`` samples lie above the returned rank."""
     xs = sorted(values)
-    need = min_samples(q, beyond)
+    need = min_samples(q)
     if len(xs) < need:
         raise TooFewSamples(
-            f"p{q:g} needs {need} samples ({beyond} beyond it), got {len(xs)}"
+            f"p{q:g} needs {need} samples ({MIN_BEYOND} beyond it), got {len(xs)}"
         )
     return xs[math.ceil(len(xs) * q / 100) - 1]
 

@@ -134,7 +134,6 @@ class Dashboard(Workload):
     last panel returns."""
 
     name = "dashboard"
-    warm_refreshes = 3  # the first pays JIT; refresh time settles by the third
     min_refreshes = 3  # 21 reads: the median has ten beyond it
 
     def __init__(self, *a):
@@ -191,15 +190,31 @@ class Dashboard(Workload):
         return time.perf_counter() - t
 
     def preload(self) -> None:
-        """The generator's preload, one large synchronous push per kind."""
-        c = self.served.client()
-        try:
-            for kind, body, _ in self.gen.preload():
-                status = c.push(kind, body)
-                if status // 100 != 2:
-                    raise RuntimeError(f"preload {kind} push answered {status}")
-        finally:
-            c.close()
+        """The generator's preload: one large synchronous push per kind,
+        the three kinds at once on their own connections, so each
+        route's first-use JIT overlaps the others' (the writer's store
+        lock still serializes the fan-outs)."""
+        answers: dict = {}
+
+        def push(kind: str, body: bytes) -> None:
+            c = self.served.client()
+            t = time.perf_counter()
+            try:
+                answers[kind] = c.push(kind, body)
+            finally:
+                c.close()
+            log(f"preload {kind} push in {time.perf_counter() - t:.1f} s")
+
+        preload = self.gen.preload()
+        pushes = [threading.Thread(target=push, args=(kind, body))
+                  for kind, body, _ in preload]
+        for th in pushes:
+            th.start()
+        for th in pushes:
+            th.join()
+        for kind, _, _ in preload:
+            if answers.get(kind, 0) // 100 != 2:
+                raise RuntimeError(f"preload {kind} push answered {answers.get(kind)}")
 
     def warm(self) -> None:
         self.preload()
@@ -209,9 +224,9 @@ class Dashboard(Workload):
         ]
         for w in self._workers:
             w.start()
+        # one refresh warms every panel: it pays the read path's JIT
         warm = Outcome()
-        for _ in range(self.warm_refreshes):
-            self.refresh(warm)
+        log(f"warm-up refresh in {self.refresh(warm):.1f} s")
         if warm.failed:
             raise RuntimeError(f"warm-up answers wrong: {warm.errors}")
 
@@ -264,7 +279,6 @@ class Live(Workload):
     rate = 15.0  # pushes per second
     lines = 5  # lines per push, each carrying the push's marker
     drain_s = 60.0
-    warm_flushes = 3
 
     def __init__(self, *a):
         super().__init__(*a)
@@ -303,19 +317,18 @@ class Live(Workload):
         return seq, status, ack
 
     def warm(self) -> None:
-        """Three flushes of three marker pushes each, every one polled
-        until visible: the first pays the write path's JIT warm-up, the
-        rest let the flush cost settle before timing starts."""
+        """A flush of three marker pushes, polled until visible: it pays
+        the write path's JIT warm-up before timing starts."""
         c = self.served.client()
         try:
-            for _ in range(self.warm_flushes):
-                for _ in range(3):
-                    self.push(c)
-                t = time.perf_counter()
-                while self.tail(c) < max(self.acked):
-                    if time.perf_counter() > t + self.drain_s:
-                        raise RuntimeError("warm-up markers never became visible")
-                    time.sleep(0.2)
+            for _ in range(3):
+                self.push(c)
+            t = time.perf_counter()
+            while self.tail(c) < max(self.acked):
+                if time.perf_counter() > t + self.drain_s:
+                    raise RuntimeError("warm-up markers never became visible")
+                time.sleep(0.2)
+            log(f"warm-up flush visible in {time.perf_counter() - t:.1f} s")
         finally:
             c.close()
 
@@ -358,6 +371,7 @@ class Live(Workload):
             self.final_check(reader, out)
         finally:
             reader.close()
+        out.extra["lags"] = self.lags(out)
         return out
 
     def final_check(self, client, out: Outcome) -> None:
@@ -380,7 +394,8 @@ class Live(Workload):
             out.fail(f"bulk flush errors {bulk.errors}, dropped {bulk.dropped_payloads}")
 
     def lags(self, out: Outcome) -> list:
-        """Per acked push: ack → start of the first tail poll showing it."""
+        """Per acked push: ack → start of the first tail poll showing it.
+        A marker no tail poll saw is a failed operation."""
         lags = []
         for seq, _, _, ack in out.extra["pushes"]:
             if seq not in self.acked:
@@ -396,7 +411,7 @@ class Live(Workload):
     def metrics(self, out: Outcome, setup_s: float) -> dict:
         pushes = out.extra["pushes"]
         push_lat = [ack - due for _, due, _, ack in pushes]
-        lags = self.lags(out)
+        lags = out.extra["lags"]
         late = sorted(sent - due for _, due, sent, _ in pushes)
         log(f"{len(pushes)} pushes, {len(lags)} lags, {len(out.reads)} reads;"
             f" generator late p50 {late[len(late) // 2] * 1e3:.2f} ms,"
