@@ -14,6 +14,7 @@ import resource
 import shutil
 import subprocess
 
+TRACE_HEADER = "X-Servebench-Trace"
 PUSH_ROUTES = {
     "loki": ("/loki/api/v1/push", "application/json"),
     "rw": ("/api/v1/prom/remote/write", "application/x-protobuf"),
@@ -54,8 +55,10 @@ class Client:
         resp = self.conn.getresponse()
         return resp.status, resp.read()
 
-    def get(self, path: str) -> tuple[int, bytes]:
-        return self.request("GET", path)
+    def get(self, path: str, traced: bool = False) -> tuple[int, bytes]:
+        """GET ``path``; a traced read carries ``TRACE_HEADER``, which
+        the traced run's spans key on (the engine ignores it)."""
+        return self.request("GET", path, headers={TRACE_HEADER: "1"} if traced else None)
 
     def push(self, kind: str, body: bytes) -> int:
         route, ctype = PUSH_ROUTES[kind]

@@ -3,30 +3,35 @@ around the run: GC time (GC MXBeans), Spark jobs and tasks (status
 tracker, by the job group each request runs under), and the store
 listing.
 
-Write-side spans stay on for the whole run. Read-side spans are turned
-on for half of the read cycles (a dashboard refresh, a live tail poll)
-and off for the rest, so the traced and untraced reads of one run give
-the tracing overhead.
+Write-side spans cover every write the workload makes: the preload for
+``dashboard`` (its only writes, in set-up), the bulk flushes of the
+measured run for ``live``. Read-side spans are recorded for the reads
+that carry the trace header, half of the timed reads; the traced and
+untraced reads of one run give the tracing overhead.
 
 Read-side figures are self milliseconds per traced GET request, so they
 add up to ``httpd.get_ms``. Write-side figures are per fan-out call (one
-bulk flush group or one synchronous push).
+bulk flush group or one synchronous push). Every workload reports every
+metric; a count the workload does not exercise (bulk flushes of the
+synchronous dashboard preload) reads 0.
 """
 
 from __future__ import annotations
 
+from harness import TRACE_HEADER
 from spans import Tracer
 
+COMPILERS = ("logql.compile", "promql.compile", "traceql.compile")
 READ_LAYERS = {
-    "httpd.other_ms": "httpd.get",
-    "httpd.labels_join_ms": "httpd.labels_join",
-    "httpd.envelope_ms": "httpd.envelope",
-    "logql.parse_ms": "logql.parse",
-    "logql.compile_ms": "logql.compile",
-    "promql.compile_ms": "promql.compile",
-    "traceql.compile_ms": "traceql.compile",
-    "spark.collect_ms": "spark.collect",
-    "storage.read_ms": "storage.read",
+    "httpd.other_ms": ("httpd.get",),
+    "httpd.labels_join_ms": ("httpd.labels_join",),
+    "httpd.envelope_ms": ("httpd.envelope",),
+    "logql.parse_ms": ("logql.parse",),
+    # live reads only LogQL: the three compilers are one layer here, and
+    # the per-language split goes on the dashboard's environment line
+    "query.compile_ms": COMPILERS,
+    "spark.collect_ms": ("spark.collect",),
+    "storage.read_ms": ("storage.read",),
 }
 WRITE_LAYERS = {
     "storage.fanout_ms": "storage.fanout",
@@ -55,6 +60,17 @@ def _guard_group(span, args, result) -> None:
     span.info = {"group": args[0].group_id}
 
 
+def _traced_request(args) -> bool:
+    return args[0].headers.get(TRACE_HEADER) == "1"  # (handler,)
+
+
+# a read is recorded from its do_GET down, and only when the client
+# marked it; the other read-side spans are recorded only inside a
+# recorded span (a traced GET, or a write that calls them)
+READ_GATES = {name: (lambda args: False) for name in READ_SPANS}
+READ_GATES["httpd.get"] = _traced_request
+
+
 class LayerProbe:
     def __init__(self, served, spans_path: str):
         self.served = served
@@ -62,22 +78,19 @@ class LayerProbe:
         self.tracer = Tracer(hooks={
             "bulk.flush_group": _flush_group_payloads,
             "httpd.guard": _guard_group,
-        })
+        }, gates=READ_GATES)
         self.tracker = served.spark.sparkContext.statusTracker()
 
-    def start(self) -> None:
-        self.gc0 = self.served.gc_ms()
+    def start_writes(self) -> None:
+        """Spans on (before the workload's first write); store listing
+        and ungrouped jobs noted."""
         self.listing0 = self.served.store_listing()
         self.ungrouped0 = set(self.tracker.getJobIdsForGroup(None))
-        self.tracer.install(WRITE_SPANS)
+        self.tracer.install(WRITE_SPANS + READ_SPANS)
 
-    def trace_reads(self, on: bool) -> None:
-        """Turn the read-side spans on or off; call only while no read
-        is in flight."""
-        if on:
-            self.tracer.install(READ_SPANS)
-        else:
-            self.tracer.remove(READ_SPANS)
+    def start_reads(self) -> None:
+        """Start of the measured run: GC time noted."""
+        self.gc0 = self.served.gc_ms()
 
     def stop(self) -> None:
         self.tracer.remove()
@@ -121,8 +134,10 @@ class LayerProbe:
         gets = [s for s in self._spans("httpd.get") if s.parent is None]
         n = max(len(gets), 1)
         own = self._self_by(("httpd.get",))
-        # only the layers this workload's reads reach
-        m = {k: (own[span] * 1e3 / n, "ms") for k, span in READ_LAYERS.items() if span in own}
+        m = {
+            k: (sum(own.get(span, 0.0) for span in names) * 1e3 / n, "ms")
+            for k, names in READ_LAYERS.items()
+        }
         get_ms = sum(s.end - s.start for s in gets) * 1e3 / n
         m["httpd.get_ms"] = (get_ms, "ms")
         client_ms = sum(r.seconds for r in reads) * 1e3 / max(len(reads), 1)
@@ -148,9 +163,6 @@ class LayerProbe:
         posts = self._spans("httpd.post")
         m["httpd.post_ms"] = (
             sum(s.end - s.start for s in posts) * 1e3 / max(len(posts), 1), "ms")
-        submits = self._spans("bulk.submit")
-        m["bulk.submit_ms"] = (
-            sum(s.end - s.start for s in submits) * 1e3 / max(len(submits), 1), "ms")
         flush_groups = self._spans("bulk.flush_group")
         m["bulk.flush_count"] = (len(flush_groups), "count")
         m["bulk.pushes_per_flush"] = (
@@ -168,3 +180,20 @@ class LayerProbe:
             m[f"storage.bytes.{t}"] = (self.listing1.get(t, (0, 0))[1], "bytes")
         m["spark.jobs_per_push"] = (len(self.ungrouped) / n, "count")
         return m
+
+    # ----------------------------------------- one workload's figures
+    def compile_split(self) -> dict:
+        """Compile self ms per traced GET, per query language."""
+        n = max(len([s for s in self._spans("httpd.get") if s.parent is None]), 1)
+        own = self._self_by(("httpd.get",))
+        return {f"{c}_ms": own.get(c, 0.0) * 1e3 / n for c in COMPILERS}
+
+    def bulk_submit(self) -> dict:
+        """Mean ``BulkWriter.submit`` time per push."""
+        submits = self._spans("bulk.submit")
+        return {"bulk.submit_ms": _mean_ms(s.end - s.start for s in submits)}
+
+
+def _mean_ms(xs) -> float:
+    xs = list(xs)
+    return sum(xs) * 1e3 / len(xs) if xs else 0.0

@@ -5,10 +5,12 @@
 Run from the repository root. Embeds ``HttpGateway(StoreEngine)`` the
 way ``python -m gigapipe_spark`` does, drives it over loopback HTTP with
 payloads generated from ``--seed``, measures for ``--seconds`` and
-checks every answer. Standard output ends with an environment line and
-then one JSON result line: ``{"correct", "attempted", "failed",
-"metrics"}``. ``--trace 0`` reports the end-to-end metrics and
-``--trace 1`` the per-layer metrics of a traced run (see README.md).
+checks every answer. Standard output ends with an environment line
+(environment, plus the figures only this workload exercises) and then
+one JSON result line: ``{"correct", "attempted", "failed", "metrics"}``.
+``--trace 0`` reports the end-to-end metrics and ``--trace 1`` the
+per-layer metrics of a traced run (see README.md); every workload
+reports every metric.
 All scratch files live under ``.servebench_run/`` in the working
 directory; the store of each run is removed when it ends.
 """
@@ -34,6 +36,14 @@ def parse_args(argv=None):
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     return ap.parse_args(argv)
+
+
+def manifest_names(trace: int) -> set:
+    """The metric names BENCHMARK.json lists for this mode: every
+    workload prints exactly these."""
+    with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    return {m["name"] for m in bench["per_layer" if trace else "end_to_end"]}
 
 
 def main(argv=None) -> int:
@@ -64,6 +74,7 @@ def main(argv=None) -> int:
         metrics = wl.layer_metrics(out) if args.trace else wl.metrics(out, setup_s)
         env = {**wl.served.env(args.seed), "workload": args.workload,
                "trace": args.trace, "seconds": args.seconds}
+        details = wl.details(out)
     finally:
         t = time.perf_counter()
         wl.close()
@@ -71,7 +82,12 @@ def main(argv=None) -> int:
         log(f"closed in {time.perf_counter() - t:.1f} s")
     for msg in out.errors:
         print(f"servebench: wrong answer: {msg}", file=sys.stderr)
-    print(json.dumps({"env": env, "reads": len(out.reads)}))
+    differ = manifest_names(args.trace) ^ set(metrics)
+    if differ:
+        print(f"servebench: metrics differ from BENCHMARK.json: {sorted(differ)}",
+              file=sys.stderr)
+        return 3
+    print(json.dumps({"env": env, "details": details}))
     print(json.dumps({
         "correct": out.failed == 0,
         "attempted": out.attempted,

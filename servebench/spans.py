@@ -3,10 +3,12 @@
 ``Tracer.install(names)`` replaces each target attribute of the named
 spans with a wrapper that records a span (name, start, end, parent,
 request id, thread) and ``remove()`` puts the originals back, so the
-wrappers exist only while a traced run has them on. Spans are kept in memory and written out when
-the run ends. A span's self time is its duration minus the time its
-child spans cover; spans nest per thread, so a child is always inside
-its parent's interval.
+wrappers exist only while a traced run has them on. A gate per span
+name picks which requests are recorded: the traced run records the
+reads that carry the trace header, and every write. Spans are kept in
+memory and written out when the run ends. A span's self time is its
+duration minus the time its child spans cover; spans nest per thread,
+so a child is always inside its parent's interval.
 
 The spans sit at layer boundaries seen from outside the engine. Work
 inside a layer that no wrapped function covers stays in its parent's
@@ -89,11 +91,15 @@ class Tracer:
     """Span recorder. ``hooks`` maps a span name to a callable
     ``hook(span, args, result)`` run after the span closes, outside its
     timing, to attach facts to the span (payloads flushed, the request's
-    Spark job group)."""
+    Spark job group). ``gates`` maps a span name to a callable
+    ``gate(args)`` deciding whether a call that would start a new
+    request (no recorded span open on its thread) is recorded; calls
+    nested in a recorded span always are."""
 
-    def __init__(self, hooks: dict | None = None):
+    def __init__(self, hooks: dict | None = None, gates: dict | None = None):
         self.spans: list[Span] = []
         self.hooks = hooks or {}
+        self.gates = gates or {}
         self._lock = threading.Lock()
         self._local = threading.local()
         self._req = itertools.count(1)
@@ -102,12 +108,15 @@ class Tracer:
     # -------------------------------------------------------- wrapping
     def _wrapper(self, name: str, fn):
         tracer = self
+        gate = self.gates.get(name)
 
         def traced(*args, **kwargs):
             local = tracer._local
             stack = getattr(local, "stack", None)
             if stack is None:
                 stack = local.stack = []
+            if not stack and gate is not None and not gate(args):
+                return fn(*args, **kwargs)
             if not stack:  # a root span starts a new request
                 local.req = next(tracer._req)
             span = Span(name, 0.0, 0.0, stack[-1] if stack else None,

@@ -2,17 +2,20 @@
 
 Each workload sets up a fresh store through the real push routes, warms
 every path it will time, then measures for a fixed time and checks every
-answer. ``run()`` returns the end-to-end samples; ``metrics()`` turns
-them into the workload's own metrics (only the ones it exercises).
+answer. Both are closed-loop readers; ``live`` also runs an open-loop
+pusher. ``run()`` returns the samples, ``metrics()`` the end-to-end
+metrics both workloads share, and ``details()`` the figures only one of
+them exercises.
 
-A traced run (``--trace 1``) keeps the write-side spans on throughout
-and turns the read-side spans on for half of the read cycles; the
-tracing overhead is the mean latency of traced reads minus that of the
-untraced reads of the same run (layers.py).
+A traced run (``--trace 1``) records every write the workload makes and
+half of its timed reads, which carry the trace header; the tracing
+overhead is the mean latency of traced reads minus that of the untraced
+reads of the same run (layers.py).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import queue
 import sys
@@ -33,7 +36,7 @@ class Read:
     panel: str
     seconds: float
     nbytes: int
-    traced: bool | None  # None: outside the traced/untraced comparison
+    traced: bool | None  # None: outside the timed window (live's drain polls)
 
 
 @dataclass
@@ -81,6 +84,8 @@ class Workload:
         t = time.perf_counter()
         self.served = Served(self.work, self.bulk_max_age_ms)
         log(f"engine up in {time.perf_counter() - t:.1f} s")
+        if self.trace:
+            self.probe = LayerProbe(self.served, self.spans_path)
         t = time.perf_counter()
         self.warm()
         log(f"preload and warm-up in {time.perf_counter() - t:.1f} s")
@@ -91,32 +96,53 @@ class Workload:
 
     def start_tracing(self) -> None:
         if self.trace:
-            self.probe = LayerProbe(self.served, self.spans_path)
-            self.probe.start()
+            self.probe.start_writes()
+            self.probe.start_reads()
 
     def read_cycle(self, i: int) -> bool:
-        """Whether read cycle ``i`` is traced: in a traced run, half of
-        them in the order untraced, traced, traced, untraced, so a steady
-        drift (warm-up still ending) cancels out of the overhead."""
-        traced = self.trace and i % 4 in (1, 2)
-        if self.trace:
-            self.probe.trace_reads(traced)
-        return traced
+        """Whether read ``i`` (a dashboard refresh, or one tail poll of
+        a connection) is traced: in a traced run, half of them in the
+        order untraced, traced, traced, untraced, so a steady drift
+        (warm-up still ending) cancels out of the overhead."""
+        return self.trace and i % 4 in (1, 2)
 
     def stop_tracing(self) -> None:
         if self.probe is not None:
             self.probe.stop()
 
+    def metrics(self, out: Outcome, setup_s: float) -> dict:
+        """The end-to-end metrics, the same for every workload, over the
+        timed reads (a read outside the timed window has ``traced`` None).
+        Read latency is a mean: the reads mix panels of different cost
+        (dashboard) or polls with and without a fan-out running beside
+        them (live), and a median of such a mix jumps between clusters."""
+        lat = _timed(out)
+        return {
+            "setup_s": (setup_s, "s"),
+            "read_mean_ms": (_mean(lat) * 1e3, "ms"),
+            "read_qps": (len(lat) / out.extra["elapsed_s"], "1/s"),
+        }
+
     def layer_metrics(self, out: Outcome) -> dict:
         reads = [r for r in out.reads if r.traced is True]
         plain = [r for r in out.reads if r.traced is False]
         m = self.probe.read_metrics(reads)
+        m.update(self.probe.write_metrics())
         m["jvm.peak_rss_mb"] = (self.served.peak_rss_mb(), "MB")
         m["trace.overhead_ms"] = (
             (_mean(r.seconds for r in reads) - _mean(r.seconds for r in plain)) * 1e3,
             "ms",
         )
         return m
+
+    def details(self, out: Outcome) -> dict:
+        """Figures of this workload alone, for the environment line."""
+        lat = _timed(out)
+        return {"reads": len(lat), "read_p50_ms": _ms_percentile(lat, 50)}
+
+
+def _timed(out: Outcome) -> list:
+    return [r.seconds for r in out.reads if r.traced is not None]
 
 
 def _mean(xs) -> float:
@@ -148,11 +174,11 @@ class Dashboard(Workload):
         self.refresh_no = 0
 
     def read_panel(self, client, panel: str, refresh: int, out: Outcome,
-                   traced: bool | None) -> None:
+                   traced: bool) -> None:
         start, end = panels.window(refresh, gen.T0)
         t = time.perf_counter()
         try:
-            status, body = client.get(panels.path(panel, start, end))
+            status, body = client.get(panels.path(panel, start, end), traced)
         except OSError as ex:
             out.attempt()
             out.fail(f"{panel}: {ex}")
@@ -217,6 +243,10 @@ class Dashboard(Workload):
                 raise RuntimeError(f"preload {kind} push answered {answers.get(kind)}")
 
     def warm(self) -> None:
+        # the preload is the dashboard's only writing: a traced run
+        # traces its write side
+        if self.trace:
+            self.probe.start_writes()
         self.preload()
         self._workers = [
             threading.Thread(target=self._worker, args=(i,), daemon=True)
@@ -229,6 +259,10 @@ class Dashboard(Workload):
         log(f"warm-up refresh in {self.refresh(warm):.1f} s")
         if warm.failed:
             raise RuntimeError(f"warm-up answers wrong: {warm.errors}")
+
+    def start_tracing(self) -> None:
+        if self.trace:
+            self.probe.start_reads()
 
     def run(self, seconds: float) -> Outcome:
         out = Outcome()
@@ -251,39 +285,40 @@ class Dashboard(Workload):
             w.join(timeout=60)
         super().close()
 
-    def metrics(self, out: Outcome, setup_s: float) -> dict:
-        lat = [r.seconds for r in out.reads]
-        m = {"setup_s": (setup_s, "s")}
-        m["read_p50_ms"] = (_ms_percentile(lat, 50), "ms")
-        m["read_qps"] = (len(lat) / out.extra["elapsed_s"], "1/s")
-        return m
-
-    def layer_metrics(self, out: Outcome) -> dict:
-        m = super().layer_metrics(out)
-        for p in panels.PANELS:
-            xs = [r.seconds for r in out.reads if r.traced and r.panel == p]
-            m[f"panel.{p}.mean_ms"] = (_mean(xs) * 1e3, "ms")
-        return m
+    def details(self, out: Outcome) -> dict:
+        d = super().details(out)
+        d["panel_mean_ms"] = {
+            p: _mean(r.seconds for r in out.reads if r.panel == p) * 1e3
+            for p in panels.PANELS
+        }
+        if self.probe is not None:
+            d.update(self.probe.compile_split())
+        return d
 
 
 class Live(Workload):
     """Bulk ingest at the reference default ``BULK_MAX_AGE_MS=100``. An
-    open-loop pusher sends Loki marker pushes at a fixed rate; one
-    closed-loop reader polls the tail of the marker stream. Every flush
-    refreshes the engine, so each poll runs on a cold plan and competes
-    with the flushes for the cores. The store starts empty: the first
-    flush, in set-up, pays the write path's JIT warm-up."""
+    open-loop pusher sends Loki marker pushes at a fixed rate; three
+    closed-loop viewers each poll the tail of the marker stream on their
+    own connection. Every flush refreshes the engine, so polls run on
+    cold plans and compete with the flushes for the cores. The store
+    starts empty: the first flush, in set-up, pays the write path's JIT
+    warm-up."""
 
     name = "live"
     bulk_max_age_ms = 100.0
+    readers = 3
     rate = 15.0  # pushes per second
     lines = 5  # lines per push, each carrying the push's marker
+    min_reads = 21  # the median needs 20 (stats.min_samples(50))
     drain_s = 60.0
 
     def __init__(self, *a):
         super().__init__(*a)
         self.seq = 0
         self.acked: dict = {}  # marker -> ack time
+        self.newest = -1  # newest marker any tail poll has returned
+        self._lock = threading.Lock()
 
     def tail_path(self, limit: int = 1) -> str:
         q = quote('{app="%s"}' % gen.LIVE_APP)
@@ -293,7 +328,7 @@ class Live(Workload):
     def tail(self, client, out: Outcome | None = None, traced: bool | None = None) -> int:
         """One tail poll: the newest visible marker, or -1."""
         t = time.perf_counter()
-        status, body = client.get(self.tail_path())
+        status, body = client.get(self.tail_path(), bool(traced))
         newest = -1
         if status == 200:
             result = json.loads(body)["data"]["result"]
@@ -304,6 +339,8 @@ class Live(Workload):
             out.extra["polls"].append((t, newest))
             if status != 200:
                 out.fail(f"tail: HTTP {status}: {body[:200]!r}")
+        with self._lock:
+            self.newest = max(self.newest, newest)
         return newest
 
     def push(self, client) -> tuple[int, int, float]:
@@ -332,12 +369,13 @@ class Live(Workload):
         finally:
             c.close()
 
-    def _pusher(self, t0: float, n: int, out: Outcome) -> None:
+    def _pusher(self, t0: float, out: Outcome, stop: threading.Event) -> None:
         c = self.served.client()
         try:
-            for i in range(n):
+            for i in itertools.count():
                 due = t0 + i / self.rate
-                time.sleep(max(0.0, due - time.perf_counter()))
+                if stop.wait(max(0.0, due - time.perf_counter())):
+                    break
                 sent = time.perf_counter()
                 out.attempt()
                 seq, status, ack = self.push(c)
@@ -347,30 +385,58 @@ class Live(Workload):
         finally:
             c.close()
 
+    def _reader(self, out: Outcome, stop: threading.Event) -> None:
+        c = self.served.client()
+        try:
+            i = 0
+            while not stop.is_set():
+                self.tail(c, out, self.read_cycle(i))
+                i += 1
+        except OSError as ex:
+            out.attempt()
+            out.fail(f"tail: {ex}")
+        finally:
+            c.close()
+
     def run(self, seconds: float) -> Outcome:
+        """Timed tail polls while the pusher pushes, for ``seconds`` and
+        at least ``min_reads`` polls; then untimed polls until every
+        acked marker is visible."""
         out = Outcome(extra={"pushes": [], "polls": []})
+        stop_reads, stop_pushes = threading.Event(), threading.Event()
         t0 = time.perf_counter()
         self.start_tracing()
-        pusher = threading.Thread(
-            target=self._pusher, args=(t0, int(seconds * self.rate), out))
+        pusher = threading.Thread(target=self._pusher, args=(t0, out, stop_pushes))
+        readers = [threading.Thread(target=self._reader, args=(out, stop_reads))
+                   for _ in range(self.readers)]
         pusher.start()
-        reader = self.served.client()
+        for th in readers:
+            th.start()
         try:
-            r = 0
-            while pusher.is_alive():
-                self.tail(reader, out, self.read_cycle(r))
-                r += 1
-            pusher.join()
-            self.read_cycle(0)
-            # drain: keep polling until every acked marker is visible
-            deadline = time.perf_counter() + self.drain_s
-            while (self.tail(reader, out) < max(self.acked)
-                   and time.perf_counter() < deadline):
-                pass
-            self.stop_tracing()
-            self.final_check(reader, out)
+            while ((time.perf_counter() < t0 + seconds or len(out.reads) < self.min_reads)
+                   and any(th.is_alive() for th in readers)):
+                time.sleep(0.05)
         finally:
-            reader.close()
+            stop_reads.set()
+            for th in readers:  # each ends its poll in flight
+                th.join()
+            out.extra["elapsed_s"] = time.perf_counter() - t0
+            stop_pushes.set()
+            pusher.join()
+        # drain: keep polling until every acked marker is visible
+        c = self.served.client()
+        try:
+            deadline = time.perf_counter() + self.drain_s
+            while self.newest < max(self.acked) and time.perf_counter() < deadline:
+                self.tail(c, out, None)
+        finally:
+            c.close()
+        self.stop_tracing()
+        c = self.served.client()
+        try:
+            self.final_check(c, out)
+        finally:
+            c.close()
         out.extra["lags"] = self.lags(out)
         return out
 
@@ -400,34 +466,33 @@ class Live(Workload):
         for seq, _, _, ack in out.extra["pushes"]:
             if seq not in self.acked:
                 continue
-            seen = next((t for t, newest in out.extra["polls"]
-                         if t >= ack and newest >= seq), None)
+            seen = min((t for t, newest in out.extra["polls"]
+                        if t >= ack and newest >= seq), default=None)
             if seen is None:
                 out.fail(f"marker {seq} never seen by a tail poll")
             else:
                 lags.append(seen - ack)
         return lags
 
-    def metrics(self, out: Outcome, setup_s: float) -> dict:
+    def details(self, out: Outcome) -> dict:
+        """Push latency, freshness lag and generator lateness: figures
+        of the pusher, which the dashboard does not have."""
         pushes = out.extra["pushes"]
         push_lat = [ack - due for _, due, _, ack in pushes]
-        lags = out.extra["lags"]
         late = sorted(sent - due for _, due, sent, _ in pushes)
-        log(f"{len(pushes)} pushes, {len(lags)} lags, {len(out.reads)} reads;"
-            f" generator late p50 {late[len(late) // 2] * 1e3:.2f} ms,"
-            f" max {late[-1] * 1e3:.2f} ms")
-        m = {"setup_s": (setup_s, "s")}
-        m["push_p90_ms"] = (_ms_percentile(push_lat, 90), "ms")
-        m["fresh_lag_p50_ms"] = (_ms_percentile(lags, 50), "ms")
-        m["fresh_lag_p90_ms"] = (_ms_percentile(lags, 90), "ms")
-        return m
-
-    def layer_metrics(self, out: Outcome) -> dict:
-        m = super().layer_metrics(out)
-        m.update(self.probe.write_metrics())
-        late = [sent - due for _, due, sent, _ in out.extra["pushes"]]
-        m["client.late_ms"] = (_mean(late) * 1e3, "ms")
-        return m
+        lags = out.extra["lags"]
+        d = super().details(out)
+        d.update({
+            "pushes": len(pushes),
+            "push_p90_ms": _ms_percentile(push_lat, 90),
+            "fresh_lag_p50_ms": _ms_percentile(lags, 50),
+            "fresh_lag_p90_ms": _ms_percentile(lags, 90),
+            "late_p50_ms": late[len(late) // 2] * 1e3,
+            "late_max_ms": late[-1] * 1e3,
+        })
+        if self.probe is not None:
+            d.update(self.probe.bulk_submit())
+        return d
 
 
 WORKLOADS = {w.name: w for w in (Dashboard, Live)}
