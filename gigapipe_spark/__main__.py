@@ -34,15 +34,6 @@ the store IS a parquet root, not a server):
   GIGAPIPE_COMPACT              "1" (default) also compacts small files
                                 each tick — the MergeTree background-
                                 merge analog; "0" disables
-  GIGAPIPE_REFRESH_INTERVAL_S   MODE=reader freshness cadence (default
-                                10): a reader process fronting a store
-                                another process writes re-lists files
-                                via StoreEngine.refresh() on this
-                                period (the reference never needs this
-                                — its reader and writer share
-                                ClickHouse, whose reads always see
-                                committed parts); same-process pushes
-                                in MODE=all refresh inline
   SPARK_GRAFT_CPUS              local[] parallelism for the session
 
 Not mapped (documented divergence): CLICKHOUSE_* / CLUSTER_NAME /
@@ -51,6 +42,11 @@ maintenance.RotatePolicy for operators; a policy-name string has no
 portable meaning here), OMIT_CREATE_TABLES (parquet tables materialize
 on first append; there is no DDL step — the canonical schema registry
 makes a never-written table answer empty).
+
+Reader freshness needs no knob: every committed write (push, bulk
+flush, ruler writeback, maintenance walk — from this process or
+another) bumps the store's mutation seq, and the engine re-lists files
+on the next request that sees it move (StoreEngine, storage/query.py).
 
 MODE=init_only initializes the store root (directory + writer-lock
 probe, which also runs journal repair + compact-leftover healing) and
@@ -98,7 +94,6 @@ def config_from_env(env=None) -> dict:
         "samples_days": int(samples_days) if samples_days else None,
         "rotate_interval_s": float(env.get("GIGAPIPE_ROTATE_INTERVAL_S", "3600")),
         "compact": env.get("GIGAPIPE_COMPACT", "1") == "1",
-        "refresh_interval_s": float(env.get("GIGAPIPE_REFRESH_INTERVAL_S", "10")),
         "bulk_max_age_ms": (
             float(env["BULK_MAX_AGE_MS"]) if env.get("BULK_MAX_AGE_MS") else None
         ),
@@ -185,30 +180,12 @@ def maintenance_tick(spark, catalog, cfg: dict, today=None) -> dict:
     return out
 
 
-def _maintenance_loop(spark, engine, cfg: dict, stop: threading.Event) -> None:
+def _maintenance_loop(spark, catalog, cfg: dict, stop: threading.Event) -> None:
     while not stop.wait(cfg["rotate_interval_s"]):
         try:
-            tick = maintenance_tick(spark, engine.catalog, cfg)
-            # a tick that moved data must drop the engine's memoized
-            # file listings, or every query until the next push reads
-            # paths the rotate just deleted (found by the soak probe:
-            # sustained 500s between a rotation and the next push)
-            if tick["rotated"] or tick["compacted"]:
-                engine.refresh()
+            maintenance_tick(spark, catalog, cfg)
         except Exception:
             log.exception("maintenance tick failed; retrying next interval")
-
-
-def _refresh_loop(engine, cfg: dict, stop: threading.Event) -> None:
-    """MODE=reader freshness: the engine's memoized contexts snapshot
-    the parquet file listing at first action; another process's appends
-    stay invisible until refresh() drops them (the reader/writer
-    freshness contract, storage/query.py:refresh)."""
-    while not stop.wait(cfg["refresh_interval_s"]):
-        try:
-            engine.refresh()
-        except Exception:
-            log.exception("refresh failed; retrying next interval")
 
 
 def main() -> int:
@@ -233,12 +210,8 @@ def main() -> int:
     ):
         threading.Thread(
             target=_maintenance_loop,
-            args=(spark, gw.engine, cfg, stop),
+            args=(spark, gw.engine.catalog, cfg, stop),
             daemon=True,
-        ).start()
-    if cfg["mode"] == "reader" and cfg["refresh_interval_s"] > 0:
-        threading.Thread(
-            target=_refresh_loop, args=(gw.engine, cfg, stop), daemon=True
         ).start()
     import signal
 

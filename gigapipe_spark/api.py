@@ -114,23 +114,31 @@ class Engine:
     _tracectx: TraceQLContext | None = field(default=None, repr=False)
 
     # ------------------------------------------------------ contexts
+    # The _new_* factories build a context; the accessors memoize one.
+    # A store-backed engine (storage/query.StoreEngine) overrides the
+    # factories to bind the same compilers to its stored tables.
+    def _new_logctx(self) -> LogQLContext:
+        return LogQLContext(self.spark, self.sf_dir)
+
+    def _new_promctx(self, step_ns: int) -> PromQLContext:
+        return PromQLContext(self.spark, self.sf_dir, step_ns=step_ns)
+
+    def _new_tracectx(self) -> TraceQLContext:
+        return TraceQLContext(self.spark, self.sf_dir, step_ns=self.trace_step_ns)
+
     def logctx(self) -> LogQLContext:
         if self._logctx is None:
-            self._logctx = LogQLContext(self.spark, self.sf_dir)
+            self._logctx = self._new_logctx()
         return self._logctx
 
     def promctx(self) -> PromQLContext:
         if self._promctx is None:
-            self._promctx = PromQLContext(
-                self.spark, self.sf_dir, step_ns=self.prom_step_ns
-            )
+            self._promctx = self._new_promctx(self.prom_step_ns)
         return self._promctx
 
     def tracectx(self) -> TraceQLContext:
         if self._tracectx is None:
-            self._tracectx = TraceQLContext(
-                self.spark, self.sf_dir, step_ns=self.trace_step_ns
-            )
+            self._tracectx = self._new_tracectx()
         return self._tracectx
 
     # ------------------------------------------------- table providers
@@ -413,7 +421,7 @@ class Engine:
         default-step context and its cached views are untouched);
         start/end bound the result window like the endpoint's params."""
         if step_ns is not None and step_ns != self.prom_step_ns:
-            ctx = PromQLContext(self.spark, self.sf_dir, step_ns=step_ns)
+            ctx = self._new_promctx(step_ns)
         else:
             ctx = self.promctx()
         # request window → widened raw scan bound below the aggs

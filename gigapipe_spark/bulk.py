@@ -496,8 +496,8 @@ class BulkWriter:
             # the flusher thread must NEVER die: an escaped exception
             # here would leave every subsequent push acked and buffered
             # forever (silent loss + unbounded heap). flush_now guards
-            # its groups and the refresh hook, but a failure in the
-            # buffer swap itself still lands here.
+            # its groups, but a failure in the buffer swap itself still
+            # lands here.
             try:
                 self.flush_now()
             except Exception:
@@ -522,20 +522,6 @@ class BulkWriter:
             wrote |= self._flush_isolating(kind, dict(params_t), payloads)
         if wrote:
             self.flushes += 1
-            # same freshness hook the synchronous push path triggers
-            # (httpd._invalidate_contexts): refresh() on store engines,
-            # else drop the memoized contexts directly. Guarded: a
-            # refresh error must not escape into the flusher loop.
-            try:
-                if hasattr(self.engine, "refresh"):
-                    self.engine.refresh()
-                else:
-                    for attr in ("_logctx", "_promctx", "_tracectx"):
-                        if hasattr(self.engine, attr):
-                            setattr(self.engine, attr, None)
-            except Exception:
-                self.errors += 1
-                log.exception("bulk post-flush refresh failed")
 
     def _flush_isolating(
         self, kind: str, params: dict, payloads: list[bytes]

@@ -340,20 +340,10 @@ class _Handler(BaseHTTPRequestHandler):
         return None
 
     def _rule_managers(self):
-        """The engine's two rule managers ("loki" LogQL / "prom"
-        PromQL), built once per engine so CRUD, evaluation ticks and
-        the health-annotated listing share state
-        (ruler/router/init.go:88-105). None without a store."""
-        e = self.engine
-        if getattr(e, "catalog", None) is None:
-            return None
-        if getattr(e, "_rule_managers_cache", None) is None:
-            from gigapipe_spark.streaming.rules import store_rule_managers
-
-            e._rule_managers_cache = store_rule_managers(
-                e.spark, e.catalog, e
-            )
-        return e._rule_managers_cache
+        """The engine's rule managers (StoreEngine.rule_managers); None
+        without a store."""
+        build = getattr(self.engine, "rule_managers", None)
+        return None if build is None else build()
 
     def _text(
         self,
@@ -1043,11 +1033,13 @@ class _Handler(BaseHTTPRequestHandler):
                 # a rotate/compact swapped parquet files under an
                 # in-flight scan (the soak's reproducible 500: a query
                 # planned against the pre-tick listing reads a file the
-                # tick deleted). The maintenance loop refreshes AFTER
-                # its tick, which fixes future queries but not this
-                # one — refresh and re-run the request once, the way
-                # the reference's reader simply re-queries ClickHouse
-                # (whose MVCC makes parts-gone invisible to it).
+                # tick deleted). The engine's seq check cannot catch
+                # this: the walk deletes files before its maintenance
+                # window bumps the mutation seq on exit, so the seq the
+                # contexts were built under still looks current — refresh
+                # explicitly and re-run the request once, the way the
+                # reference's reader simply re-queries ClickHouse (whose
+                # MVCC makes parts-gone invisible to it).
                 self._stale_retried = True
                 self._in_stale_retry = True
                 try:
@@ -1059,21 +1051,6 @@ class _Handler(BaseHTTPRequestHandler):
                 finally:
                     self._in_stale_retry = False
             return self._guard_error(guard, ex)
-
-    def _invalidate_contexts(self) -> None:
-        """A push appends parquet files; the engine's cached query
-        contexts hold DataFrames whose file listing snapshotted at
-        first read — drop them so the next query sees the new data
-        (the reader/writer are separate processes in the reference, so
-        it never caches across a write). StoreEngine.refresh() also
-        clears Spark's path caches (the cross-process contract in
-        storage/writer.py "Reader freshness")."""
-        if hasattr(self.engine, "refresh"):
-            self.engine.refresh()
-            return
-        for attr in ("_logctx", "_promctx", "_tracectx"):
-            if hasattr(self.engine, attr):
-                setattr(self.engine, attr, None)
 
     def _querier_v1(self, method: str, req: dict):
         """connect-protocol Pyroscope querier RPCs (reader/router/
@@ -1596,7 +1573,6 @@ class _Handler(BaseHTTPRequestHandler):
             else:
                 decoded = ingest.loki_push(self._raw_df(body))
             ingest_fanout(decoded, cat)
-            self._invalidate_contexts()
             return self._push_ok(204)
         if path in (
             "/api/prom/remote/write",
@@ -1608,7 +1584,6 @@ class _Handler(BaseHTTPRequestHandler):
             from gigapipe_spark.sources.protowire import remote_write
 
             ingest_fanout(remote_write(_raw_bin()), cat)
-            self._invalidate_contexts()
             return self._push_ok(204)
         if path == "/v1/logs":  # OTLP
             if is_pb:
@@ -1620,7 +1595,6 @@ class _Handler(BaseHTTPRequestHandler):
                     self._raw_df(body), now_ns=time.time_ns()
                 )
             ingest_fanout(decoded, cat)
-            self._invalidate_contexts()
             return self._push_ok(204)
         if path == "/v1/traces":  # OTLP
             if is_pb:
@@ -1630,7 +1604,6 @@ class _Handler(BaseHTTPRequestHandler):
             else:
                 decoded = ingest.otlp_traces(self._raw_df(body))
             spans_fanout(decoded, cat)
-            self._invalidate_contexts()
             return self._push_ok(200, b"{}")
         if path == "/api/v2/logs":  # Datadog logs
             ingest_fanout(
@@ -1638,14 +1611,12 @@ class _Handler(BaseHTTPRequestHandler):
                     self._raw_df(body), now_ns=time.time_ns()
                 ), cat
             )
-            self._invalidate_contexts()
             return self._push_ok(202, b"{}")
         if path == "/api/v2/series":  # Datadog metrics, insert.go:12
             decoded = ingest.datadog_metrics(
                 self._raw_df(body), now_ns=time.time_ns()
             )
             ingest_fanout(decoded, cat)
-            self._invalidate_contexts()
             return self._push_ok(202, b"{}")
         if path == "/cf/v1/insert":  # Cloudflare via Datadog, insert.go:13
             lines = e.spark.createDataFrame(
@@ -1658,7 +1629,6 @@ class _Handler(BaseHTTPRequestHandler):
                 now_ns=time.time_ns(),
             )
             ingest_fanout(decoded, cat)
-            self._invalidate_contexts()
             return self._push_ok(202, b"{}")
         if path.startswith(("/influx", "/write")):
             # one row per PROTOCOL LINE (a push body carries many);
@@ -1678,7 +1648,6 @@ class _Handler(BaseHTTPRequestHandler):
                 ),
                 cat,
             )
-            self._invalidate_contexts()
             return self._push_ok(204)
         if path in ("/tempo/spans", "/api/v2/spans", "/tempo/api/push"):
             # content-type "ndjson" selects the line decoder (tempo.go:
@@ -1689,7 +1658,6 @@ class _Handler(BaseHTTPRequestHandler):
                 else ingest.zipkin_spans
             )
             spans_fanout(dec(self._raw_df(body)), cat)
-            self._invalidate_contexts()
             return self._push_ok(202)
         if path == "/ingest":  # Pyroscope, profile.go:10
             return self._push_pyroscope(q, body, ctype, cat)
@@ -1710,7 +1678,6 @@ class _Handler(BaseHTTPRequestHandler):
                 ),
                 cat,
             )
-            self._invalidate_contexts()
             return self._push_ok(
                 200, json.dumps({"took": 0, "errors": False}).encode()
             )
@@ -1729,7 +1696,6 @@ class _Handler(BaseHTTPRequestHandler):
                 " ingest_ts_ns long",
             )
             ingest_fanout(ingest.elastic_doc(raw), cat)
-            self._invalidate_contexts()
             return self._push_ok(
                 200, json.dumps({"took": 0, "errors": False}).encode()
             )
@@ -1795,7 +1761,6 @@ class _Handler(BaseHTTPRequestHandler):
         profiles_fanout(
             folded_profiles_input(folded, st, su), cat
         )
-        self._invalidate_contexts()
         return self._push_ok(200, b"{}")
 
     def _push_otlp_profiles(self, body: bytes, cat) -> None:
@@ -1839,7 +1804,6 @@ class _Handler(BaseHTTPRequestHandler):
                 cat,
             )
         folded.unpersist()
-        self._invalidate_contexts()
         return self._push_ok(200, b"{}")
 
     # ------------------------------------------------------- WebSocket
@@ -2028,13 +1992,9 @@ class HttpGateway:
         self._ruler_thread: threading.Thread | None = None
 
     def _ruler_loop(self) -> None:
-        from gigapipe_spark.streaming.rules import store_rule_managers
-
-        e = self.engine
-        if getattr(e, "_rule_managers_cache", None) is None:
-            e._rule_managers_cache = store_rule_managers(e.spark, e.catalog, e)
+        mgrs = self.engine.rule_managers()
         while not self._ruler_stop.wait(self._ruler_poll_sec):
-            for mgr in e._rule_managers_cache.values():
+            for mgr in mgrs.values():
                 try:
                     mgr.tick()
                 except Exception:  # rule health captures per-rule errors;

@@ -63,7 +63,8 @@ def register(name: str, oracle: str | None = None):
 # per (session, sf, query[, params]); EXECUTION still runs fully every
 # call. Entries with call-time side effects (store_roundtrip_* writes,
 # engine construction) never route through these builders and are
-# never memoized; store-backed contexts invalidate via refresh().
+# never memoized; store-backed contexts re-list when the store's
+# mutation seq moves (StoreEngine).
 # Keyed on the session OBJECT (not id(spark)): CPython id() reuse
 # after GC could serve a stale plan bound to a DEAD SparkSession to a
 # brand-new one. Weak keying alone does NOT evict here — the memoized

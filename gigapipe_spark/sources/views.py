@@ -134,13 +134,7 @@ def metric_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-paid a full fact shuffle + sort + window on EVERY PromQL
     execution (measured r14: the whole-plan floor of
     promql_instant_sum_by). Under the cache-if-fits gate small heaps
-    still stream the plan per query — slower, never fatal.
-
-    GIGAPIPE_NO_METRIC_SAMPLES_CACHE=1 bypasses the cache (plan memo
-    only): the A/B knob for the r14 in-bench datapipe-regression
-    root-cause (VERDICT r15 task 1) — it isolates whether THIS cache's
-    storage-memory footprint is what slows the untouched
-    dedup_minhash_lsh / sim_cosine_topk entries mid-bench."""
+    still stream the plan per query — slower, never fatal."""
 
     def build():
         w = (
@@ -156,12 +150,6 @@ def metric_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).cast("byte").alias("type"),
         )
 
-    if os.environ.get("GIGAPIPE_NO_METRIC_SAMPLES_CACHE"):
-        memo = _dim_memo(spark)
-        key = (sf_dir, "metric_samples")
-        if key not in memo:
-            memo[key] = build()  # plan memo, data streams per query
-        return memo[key]
     return _cached(spark, sf_dir, "metric_samples", build, fact=True)
 
 

@@ -16,7 +16,8 @@ transform. Type filtering follows the reference planners' `type IN
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,6 +27,7 @@ from gigapipe_spark.logql.compiler import LogQLContext
 from gigapipe_spark.promql.compiler import PromQLContext
 from gigapipe_spark.sources.views import ancestors_from_spans
 from gigapipe_spark.traceql.compiler import TraceQLContext
+from gigapipe_spark.storage.snapshot import read_mutation_seq
 from gigapipe_spark.storage.writer import Catalog
 from gigapipe_spark.streaming.rollup import rollup_15s_batch
 
@@ -257,6 +259,14 @@ class StoreEngine(Engine):
     """
 
     catalog: Catalog | None = None
+    _seq: int | None = field(default=None, repr=False)
+    _seq_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
+    _rule_mgrs: dict | None = field(default=None, repr=False)
+    _rules_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
 
     def __post_init__(self) -> None:
         # Retention races: rotate() deletes whole date partitions while
@@ -278,18 +288,13 @@ class StoreEngine(Engine):
         return os.path.isdir(self.catalog.path(table))
 
     def refresh(self) -> None:
-        """Cross-process read-after-write hook (the reader/writer
-        freshness contract — see storage/writer.py "Reader freshness"):
-        drop the memoized query contexts (their DataFrames snapshot the
-        parquet file listing at first action) and invalidate Spark's
-        cached file listings under the store root, so the NEXT query
-        re-lists files and sees appends made by the (flock-enforced
-        single) writer process. Same-process pushes call this
-        automatically via the gateway (_invalidate_contexts); a reader
-        process fronting a store another process writes calls it on its
-        own cadence — the reference never needs this because its
-        reader/writer share ClickHouse, whose reads always see committed
-        parts."""
+        """Drop the memoized query contexts (their DataFrames snapshot
+        the parquet file listing at first action) and invalidate
+        Spark's cached file listings under the store root, so the NEXT
+        query re-lists files. Called by the context accessors whenever
+        the store's mutation seq moved (the reader freshness contract —
+        see storage/writer.py "Reader freshness"), and by the gateway's
+        stale-listing retry."""
         self._logctx = None
         self._promctx = None
         self._tracectx = None
@@ -298,33 +303,64 @@ class StoreEngine(Engine):
         except Exception:
             pass  # no cached relations under the root yet
 
-    # contexts → store-backed twins
+    def _fresh(self, ctx):
+        """Return the memoized context `ctx()`, first refreshing if any
+        writer — this process's pushes, bulk flushes, ruler writeback,
+        maintenance, or another process — bumped the store's mutation
+        seq since the contexts were built. The reference's reader never
+        needs this: ClickHouse reads always see committed parts."""
+        with self._seq_lock:
+            # Read the seq BEFORE the refresh and before any context is
+            # built, record it only AFTER the refresh: a context is then
+            # never labelled with a seq newer than its file listing, so
+            # a commit racing this check is caught by the next access.
+            seq = read_mutation_seq(self.catalog.root)
+            if seq != self._seq:
+                self.refresh()
+                self._seq = seq
+            return ctx()
+
+    def rule_managers(self) -> dict:
+        """The engine's two rule managers ("loki" LogQL / "prom"
+        PromQL), built once so CRUD, evaluation ticks and the
+        health-annotated listing share state
+        (ruler/router/init.go:88-105). Lock-guarded: a request racing
+        the ruler thread must not build a second pair whose rule health
+        diverges from the first."""
+        with self._rules_lock:
+            if self._rule_mgrs is None:
+                from gigapipe_spark.streaming.rules import store_rule_managers
+
+                self._rule_mgrs = store_rule_managers(
+                    self.spark, self.catalog, self
+                )
+            return self._rule_mgrs
+
+    # contexts → store-backed twins, memoized per mutation seq
+    def _new_logctx(self) -> LogQLContext:
+        return StoreLogQLContext(self.spark, self.sf_dir, catalog=self.catalog)
+
+    def _new_promctx(self, step_ns: int) -> PromQLContext:
+        return StorePromQLContext(
+            self.spark, self.sf_dir, step_ns=step_ns, catalog=self.catalog
+        )
+
+    def _new_tracectx(self) -> TraceQLContext:
+        return StoreTraceQLContext(
+            self.spark,
+            self.sf_dir,
+            step_ns=self.trace_step_ns,
+            catalog=self.catalog,
+        )
+
     def logctx(self) -> LogQLContext:
-        if self._logctx is None:
-            self._logctx = StoreLogQLContext(
-                self.spark, self.sf_dir, catalog=self.catalog
-            )
-        return self._logctx
+        return self._fresh(super().logctx)
 
     def promctx(self) -> PromQLContext:
-        if self._promctx is None:
-            self._promctx = StorePromQLContext(
-                self.spark,
-                self.sf_dir,
-                step_ns=self.prom_step_ns,
-                catalog=self.catalog,
-            )
-        return self._promctx
+        return self._fresh(super().promctx)
 
     def tracectx(self) -> TraceQLContext:
-        if self._tracectx is None:
-            self._tracectx = StoreTraceQLContext(
-                self.spark,
-                self.sf_dir,
-                step_ns=self.trace_step_ns,
-                catalog=self.catalog,
-            )
-        return self._tracectx
+        return self._fresh(super().tracectx)
 
     # table providers → stored tables (date columns flow through, so the
     # label endpoints' _date_bounded becomes real partition pruning)

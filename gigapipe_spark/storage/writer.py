@@ -23,12 +23,16 @@ contexts, whose DataFrames pin the parquet file listing taken at their
 first action, and (b) Spark's shared file-status/plan caches for the
 paths. The contract: appends are atomic at file granularity (parquet
 files land whole, then readers list them), so a stale reader is merely
-BEHIND, never inconsistent; to catch up it calls StoreEngine.refresh()
-(storage/query.py), which drops the context memos and issues
-spark.catalog.refreshByPath(root). The HTTP gateway invalidates after
-its own pushes automatically; a read-only gateway over an externally
-written store refreshes on its own cadence. Pinned by
-tests/test_cache_coherence.py (two real processes).
+BEHIND, never inconsistent. Every journaled fan-out and every
+maintenance walk bumps the store's mutation seq (`_journal/.seq`,
+storage/snapshot.py), and each StoreEngine context access compares it
+with the seq its contexts were built under: when it moved, the engine
+calls StoreEngine.refresh() (storage/query.py), which drops the context
+memos and issues spark.catalog.refreshByPath(root). Same-process pushes,
+bulk flushes, ruler writeback and foreign-process writes are therefore
+all visible on the next request, with no writer-side hook and no
+polling. Pinned by tests/test_cache_coherence.py (two real processes)
+and tests/test_store_query.py.
 """
 
 from __future__ import annotations

@@ -524,7 +524,7 @@ def _fused_struct_ids(ctx: TraceQLContext, e) -> DataFrame | None:
     if getattr(e, "op", None) not in ("&>>", "!>>", "<<&", "<<~"):
         return None
     if os.environ.get("GIGAPIPE_NO_STRUCT_FUSION"):
-        return None  # A/B kill switch (same pattern as the cacheprobe knob)
+        return None  # A/B kill switch
     if not (
         _amap_routed_selector(ctx, e.left)
         and _amap_routed_selector(ctx, e.right)

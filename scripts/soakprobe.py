@@ -127,7 +127,6 @@ def run_soak(
         "samples_days": 30,
         "rotate_interval_s": 3600.0,
         "compact": True,
-        "refresh_interval_s": 10.0,
         "bulk_max_age_ms": 100.0,
         "bulk_max_size_bytes": 16 * 1024 * 1024,
         # the reference's manager ticker (QRYN_RULER_ENABLED); group
@@ -304,7 +303,6 @@ def run_soak(
     # mid-soak rotation tick on the main thread
     time.sleep(seconds / 2)
     tick = maintenance_tick(spark, gw.engine.catalog, cfg)
-    gw.engine.refresh()  # same-process reader must drop stale listings
     rotated_old = any("2023-11-14" in p for p in
                       (tick["rotated"] or {}).get("dropped", []))
 

@@ -287,31 +287,6 @@ def test_bulk_poison_payload_isolated(spark, bulk_gateway):
     assert cat.read(spark, "samples").count() == 4  # good ones landed
 
 
-def test_bulk_flusher_survives_refresh_exception(spark, bulk_gateway):
-    """A refresh()/context-drop exception after a flush must not kill
-    the flusher thread — later pushes still flush (the round-11 failure
-    mode: thread dies, every push acked + buffered forever)."""
-    gw, base, cat = bulk_gateway
-    calls = {"n": 0}
-
-    def bad_refresh():
-        calls["n"] += 1
-        raise RuntimeError("refresh boom")
-
-    gw.bulk.engine.refresh = bad_refresh
-    assert _post(base, "/loki/api/v1/push", _loki(0)) == 204
-    _wait_flushed(gw)
-    assert calls["n"] >= 1
-    assert gw.bulk._thread.is_alive()
-    assert _post(base, "/loki/api/v1/push", _loki(1)) == 204
-    deadline = time.monotonic() + 60
-    while time.monotonic() < deadline:
-        if cat.read(spark, "samples").count() == 2:
-            break
-        time.sleep(0.2)
-    assert cat.read(spark, "samples").count() == 2
-
-
 def test_bulk_cf_and_elastic_doc_routes(spark, bulk_gateway):
     """The round-12 kinds: Datadog CF and elastic _doc go through the
     buffer (enqueue-speed ack) and land via the flusher."""

@@ -5,12 +5,14 @@ store root, but says nothing about a READER process's freshness: its
 StoreEngine memoizes query contexts (whose DataFrames pin the parquet
 file listing of their first action) and Spark caches file listings per
 path. The documented contract ("Reader freshness", storage/writer.py):
-a stale reader is only BEHIND, never inconsistent, and catches up via
-StoreEngine.refresh(). This test runs a REAL second process: the
-parent seeds a store and hands off the writer flock, a child process
-appends a second trace with its own SparkSession, and the parent's
-refreshed engine must see the child's spans — including through the
-ingest-maintained ancestor index.
+a stale reader is only BEHIND, never inconsistent, and catches up on
+its own — the foreign write bumps the store's mutation seq, and the
+engine's next context access re-lists files. This test runs a REAL
+second process: the parent seeds a store and hands off the writer
+flock, a child process appends a second trace with its own
+SparkSession, and the parent's engine must see the child's spans with
+no refresh call — including through the ingest-maintained ancestor
+index.
 """
 
 from __future__ import annotations
@@ -89,9 +91,9 @@ def test_two_process_refresh_sees_foreign_appends(spark, tmp_path):
     )
     assert "CHILD_WROTE" in res.stdout, res.stderr[-2000:]
 
-    # refresh() drops context memos + Spark path caches: the child's
-    # trace is now visible, including via the stored ancestor index
-    eng.refresh()
+    # no refresh call: the child's commit moved the mutation seq, so
+    # the next context access re-lists — the child's trace is visible,
+    # including via the stored ancestor index
     spans = eng.tracectx().spans()
     assert spans.count() == 4
     tid = "bb02".rjust(32, "0")

@@ -223,10 +223,6 @@ def test_http_otlp_and_remote_write_push(gateway):
     """The writer's other push families over the socket: OTLP JSON logs
     and snappy-protobuf Prometheus remote-write, both landing in the
     store through the MV fan-out."""
-    import struct
-
-    from gigapipe_spark.sources import protowire as pw
-
     base, _ = gateway
     otlp = json.dumps(
         {
@@ -264,28 +260,57 @@ def test_http_otlp_and_remote_write_push(gateway):
     assert vals == ["otlp line"]
 
     # remote-write: one timeseries, one sample
-    lbl = lambda n, v: pw.pb_encode([(1, 2, n.encode()), (2, 2, v.encode())])
-    sample = pw.pb_encode([(1, 1, struct.pack("<d", 42.5)), (2, 0, T0 // 1_000_000)])
-    ts = pw.pb_encode(
-        [
-            (1, 2, lbl("__name__", "rw_metric")),
-            (1, 2, lbl("job", "rw")),
-            (2, 2, sample),
-        ]
-    )
-    wr = pw.snappy_compress(pw.pb_encode([(1, 2, ts)]))
-    req = urllib.request.Request(
-        base + "/api/prom/remote/write",
-        data=wr,
-        method="POST",
-        headers={"Content-Type": "application/x-protobuf"},
-    )
-    with urllib.request.urlopen(req, timeout=120) as r:
-        assert r.status == 204
+    assert _remote_write(base, "rw", [(T0, 42.5)]) == 204
     st, body = _get(
         base, "/api/v1/query?query=" + urllib.parse.quote('{job="rw"}')
     )
     assert float(body["data"]["result"][0]["value"][1]) == 42.5
+
+
+def _remote_write(base, job: str, samples) -> int:
+    """POST one snappy-protobuf remote-write series `rw_metric{job}`
+    with (timestamp_ns, value) samples; returns the HTTP status."""
+    from gigapipe_spark.sources import protowire as pw
+
+    lbl = lambda n, v: pw.pb_encode([(1, 2, n.encode()), (2, 2, v.encode())])
+    ts = pw.pb_encode(
+        [(1, 2, lbl("__name__", "rw_metric")), (1, 2, lbl("job", job))]
+        + [
+            (2, 2, pw.pb_encode(
+                [(1, 1, struct.pack("<d", v)), (2, 0, t // 1_000_000)]
+            ))
+            for t, v in samples
+        ]
+    )
+    req = urllib.request.Request(
+        base + "/api/prom/remote/write",
+        data=pw.snappy_compress(pw.pb_encode([(1, 2, ts)])),
+        method="POST",
+        headers={"Content-Type": "application/x-protobuf"},
+    )
+    with urllib.request.urlopen(req, timeout=120) as r:
+        return r.status
+
+
+def test_prom_query_range_custom_step_reads_store(gateway):
+    """A non-default `step` builds its PromQL context through the
+    engine's factory, so a store-backed engine evaluates it over the
+    stored samples (not a fixture context looking for events.parquet)."""
+    base, _ = gateway
+    t0 = T0 // 10**9 + 10  # on the 15 s grid
+    samples = [((t0 + 15 * i) * 10**9, float(i + 1)) for i in range(4)]
+    assert _remote_write(base, "rwstep", samples) == 204
+    st, body = _get(
+        base,
+        "/api/v1/query_range?query=" + urllib.parse.quote('{job="rwstep"}')
+        + f"&start={t0}&end={t0 + 60}&step=15",
+    )
+    assert st == 200 and body["status"] == "success"
+    (series,) = body["data"]["result"]
+    assert series["metric"]["job"] == "rwstep"
+    assert sorted(series["values"]) == [
+        [t / 10**9, str(v)] for t, v in samples
+    ]
 
 
 def test_http_meta_and_metrics_routes(gateway):

@@ -284,14 +284,12 @@ def test_logql_evaluator_vector_shortcut(spark, cat):
     assert rows[0]["labels"] == {}
 
 
-@pytest.fixture(scope="module")
-def seeded_engine(spark, tmp_path_factory):
+def _log_store_engine(spark, root):
     """A store with a few pushed log lines + a StoreEngine over it."""
     from gigapipe_spark.sources.ingest import loki_push
     from gigapipe_spark.storage.query import StoreEngine
     from gigapipe_spark.storage.writer import Catalog, ingest_fanout
 
-    root = str(tmp_path_factory.mktemp("rulerstore") / "store")
     cat = Catalog(root)
     payload = json.dumps(
         {
@@ -309,6 +307,13 @@ def seeded_engine(spark, tmp_path_factory):
     df = spark.createDataFrame([(payload,)], "payload string")
     ingest_fanout(loki_push(df), cat)
     return StoreEngine(spark, root, catalog=cat), cat
+
+
+@pytest.fixture(scope="module")
+def seeded_engine(spark, tmp_path_factory):
+    return _log_store_engine(
+        spark, str(tmp_path_factory.mktemp("rulerstore") / "store")
+    )
 
 
 def test_store_managers_end_to_end(spark, seeded_engine):
@@ -346,6 +351,56 @@ def test_store_managers_end_to_end(spark, seeded_engine):
     labels = dict(rows[0]["labels"])
     assert labels["source"] == "ruler"
     assert rows[0]["value"] > 0
+
+
+def test_ruler_writeback_visible_to_warm_engine(spark, tmp_path):
+    """A recording rule's writeback bumps the store's mutation seq, so
+    an engine whose PromQL context was warmed before the tick returns
+    the recorded series on its next query — no push, no refresh call.
+    The engine builds its rule managers once, even under racing
+    callers (a request and the ruler thread)."""
+    import sys
+    import threading
+
+    eng, _ = _log_store_engine(spark, str(tmp_path / "store"))
+    record = '{__name__="web:lines:warm"}'
+    now_ns = T0 + 10_000_000_000
+    assert eng.prom_query(record, now_ns + 1).count() == 0  # warm, empty
+
+    got = []
+    callers = [
+        threading.Thread(target=lambda: got.append(eng.rule_managers()))
+        for _ in range(16)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in callers:
+            t.start()
+        for t in callers:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in callers)
+    mgrs = eng.rule_managers()
+    assert len(got) == 16 and all(m is mgrs for m in got)
+
+    mgrs["loki"].store.set_rule_group(
+        "ns",
+        RuleGroup(
+            name="g",
+            interval="1s",
+            rules=[
+                Rule(
+                    record="web:lines:warm",
+                    expr='sum(count_over_time({app="web"}[10s]))',
+                )
+            ],
+        ),
+    )
+    assert mgrs["loki"].tick(now_ns) == 1
+    rows = eng.prom_query(record, now_ns + 1).collect()
+    assert len(rows) == 1 and rows[0]["value"] > 0
 
 
 # ------------------------------------------------------------- gateway

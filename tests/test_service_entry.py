@@ -159,72 +159,66 @@ def test_maintenance_tick_rotates_and_compacts(spark, tmp_path):
     assert part_days == ["date=2023-11-14"]  # T0 = 2023-11-14 UTC
 
 
-def test_reader_refresh_loop_calls_refresh():
-    """MODE=reader wires the cross-process freshness contract: the loop
-    calls engine.refresh() every GIGAPIPE_REFRESH_INTERVAL_S."""
-    import threading
-    import time
-
-    from gigapipe_spark.__main__ import _refresh_loop, config_from_env
-
-    cfg = config_from_env({"GIGAPIPE_REFRESH_INTERVAL_S": "0.05"})
-    assert cfg["refresh_interval_s"] == 0.05
-
-    class Eng:
-        calls = 0
-
-        def refresh(self):
-            Eng.calls += 1
-
-    stop = threading.Event()
-    t = threading.Thread(target=_refresh_loop, args=(Eng(), cfg, stop))
-    t.start()
-    time.sleep(0.3)
-    stop.set()
-    t.join(timeout=2)
-    assert Eng.calls >= 2
-
-
-def test_maintenance_loop_refreshes_engine_after_moving_data():
-    """A tick that rotated or compacted data must drop the engine's
-    memoized file listings — found by the soak probe: every query
-    between a rotation and the next push read deleted paths."""
+def test_maintenance_loop_refreshes_engine_after_moving_data(
+    spark, tmp_path, monkeypatch
+):
+    """A real maintenance tick (rotate + compact) under a warm engine:
+    the walk bumps the store's mutation seq, so the next query re-lists
+    on its own — no refresh call — sees the compacted partition, and
+    no longer returns the rotated one. (The soak probe once found
+    sustained failures between a rotation and the next push.)"""
     import threading
     import time as _time
 
     from gigapipe_spark import __main__ as M
+    from gigapipe_spark.sources import ingest
+    from gigapipe_spark.storage.query import StoreEngine
+    from gigapipe_spark.storage.writer import Catalog, ingest_fanout
 
-    calls = {"tick": 0, "refresh": 0}
-
-    class Eng:
-        catalog = object()
-
-        def refresh(self):
-            calls["refresh"] += 1
-
-    def fake_tick(spark, catalog, cfg, today=None):
-        calls["tick"] += 1
-        # first tick moves data, second is a no-op
-        if calls["tick"] == 1:
-            return {"rotated": {"dropped": ["x"]}, "compacted": {}}
-        return {"rotated": None, "compacted": {}}
-
-    orig = M.maintenance_tick
-    M.maintenance_tick = fake_tick
-    try:
-        cfg = {"rotate_interval_s": 0.05, "samples_days": 1,
-               "compact": False}
-        stop = threading.Event()
-        t = threading.Thread(
-            target=M._maintenance_loop, args=(None, Eng(), cfg, stop)
+    cfg = config_from_env(
+        {"SAMPLES_DAYS": "7", "GIGAPIPE_STORE": str(tmp_path / "store")}
+    )
+    cfg["rotate_interval_s"] = 0.05
+    cat = Catalog(cfg["store"])
+    now_ns = _time.time_ns()
+    old_ns = now_ns - 90 * 86400 * 10**9
+    # two batches today (two files: compaction rewrites the partition)
+    # and one 90 days ago (rotated away)
+    for ts, line in ((now_ns, "new0"), (now_ns + 1, "new1"), (old_ns, "old")):
+        payload = json.dumps(
+            {"streams": [{"stream": {"app": "web"},
+                          "values": [[str(ts), line]]}]}
         )
-        t.start()
-        deadline = _time.monotonic() + 5
-        while _time.monotonic() < deadline and calls["tick"] < 2:
-            _time.sleep(0.02)
-        stop.set()
-        t.join(timeout=2)
-    finally:
-        M.maintenance_tick = orig
-    assert calls["tick"] >= 2
-    assert calls["refresh"] == 1  # only the data-moving tick refreshed
+        ingest_fanout(
+            ingest.loki_push(
+                spark.createDataFrame([(payload,)], "payload string")
+            ),
+            cat,
+        )
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    lines = lambda: sorted(
+        r["string"] for r in eng.loki_query_range('{app="web"}').collect()
+    )
+    assert lines() == ["new0", "new1", "old"]  # contexts warm
+
+    ticks = []
+    real_tick = M.maintenance_tick
+
+    def tick(*a, **kw):
+        ticks.append(real_tick(*a, **kw))
+
+    monkeypatch.setattr(M, "maintenance_tick", tick)
+    stop = threading.Event()
+    t = threading.Thread(target=M._maintenance_loop, args=(spark, cat, cfg, stop))
+    t.start()
+    deadline = _time.monotonic() + 120
+    while _time.monotonic() < deadline and not ticks:
+        _time.sleep(0.05)
+    stop.set()
+    t.join(timeout=120)
+    assert not t.is_alive()
+    assert ticks and ticks[0]["rotated"]["dropped"]
+    assert "samples" in ticks[0]["compacted"]
+    assert lines() == ["new0", "new1"]
+
+

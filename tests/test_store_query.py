@@ -183,6 +183,36 @@ def test_store_engine_endpoints(spark, tmp_path):
         eng.pyroscope_render()
 
 
+def test_store_engine_sees_foreign_catalog_append(spark, tmp_path):
+    """Warm LogQL and PromQL contexts pick up rows a separate Catalog on
+    the same root appended, with no refresh call: the append bumps the
+    store's mutation seq and the next context access re-lists files."""
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    warm_log, warm_prom = eng.logctx(), eng.promctx()
+    assert eng.loki_query_range('{app="db"}').count() == 1
+    assert eng.prom_query('{app="web"}').count() == 1
+    assert eng.logctx() is warm_log  # unchanged store: memo kept
+
+    streams = [
+        {"stream": {"app": "db"},
+         "values": [[str(T0 + 7_000_000_000), "slower query"]]},
+        {"stream": {"app": "cache"},
+         "values": [[str(T0 + 8_000_000_000), "miss", 1.0]]},
+    ]
+    raw = spark.createDataFrame(
+        [(json.dumps({"streams": streams}),)], "payload string"
+    )
+    ingest_fanout(ingest.loki_push(raw), Catalog(cat.root))
+
+    lines = {r["string"] for r in eng.loki_query_range('{app="db"}').collect()}
+    assert lines == {"slow query", "slower query"}
+    assert eng.prom_query('{app="cache"}').count() == 1
+    assert eng.logctx() is not warm_log and eng.promctx() is not warm_prom
+
+
 def test_store_rollup_partials_merge_across_flushes(spark, tmp_path):
     """Two ingest flushes touching the SAME 15s cell store partials; the
     read-side merge reconstructs the exact cell (counter partials
