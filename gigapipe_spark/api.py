@@ -34,6 +34,7 @@ facade level).
 
 from __future__ import annotations
 
+import copy
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -116,7 +117,9 @@ class Engine:
     # ------------------------------------------------------ contexts
     # The _new_* factories build a context; the accessors memoize one.
     # A store-backed engine (storage/query.StoreEngine) overrides the
-    # factories to bind the same compilers to its stored tables.
+    # factories to bind the same compilers to its stored tables. A query
+    # compiles on a shallow copy of the memoized context: concurrent
+    # requests share its cached frames, never its query window.
     def _new_logctx(self) -> LogQLContext:
         return LogQLContext(self.spark, self.sf_dir)
 
@@ -144,7 +147,7 @@ class Engine:
     # ------------------------------------------------- table providers
     # Every endpoint reads its tables through these, so a store-backed
     # engine (storage/query.StoreEngine) redirects the WHOLE surface by
-    # overriding four methods.
+    # overriding them.
     def samples_table(self) -> DataFrame:
         return views.samples(self.spark, self.sf_dir)
 
@@ -156,6 +159,15 @@ class Engine:
 
     def gin_table(self) -> DataFrame:
         return views.time_series_gin(self.spark, self.sf_dir)
+
+    def stream_labels(self) -> DataFrame:
+        """(fingerprint, labels), one row per stream: the label sets the
+        HTTP envelope attaches to collected log rows."""
+        return (
+            self.series_table()
+            .select("fingerprint", "labels")
+            .dropDuplicates(["fingerprint"])
+        )
 
     # ------------------------------------------------------ Loki
     def loki_query_range(
@@ -173,7 +185,7 @@ class Engine:
         grid (ref: planner_step_fix.go / matrix_step.go response
         shaping); ignored for stream (log-line) results."""
         res = _logql_query_range(
-            self.logctx(), query, start_ns, end_ns, limit, direction
+            copy.copy(self.logctx()), query, start_ns, end_ns, limit, direction
         )
         if step_ns is not None and res.kind == "matrix":
             from gigapipe_spark.logql.compiler import restep
@@ -190,7 +202,7 @@ class Engine:
         (the reference's instant query is a backward range ending at
         the evaluation time)."""
         return _logql_query_range(
-            self.logctx(), query, None, time_ns, limit, "backward"
+            copy.copy(self.logctx()), query, None, time_ns, limit, "backward"
         ).df
 
     def _match_fps(self, match: str | list[str]) -> DataFrame:
@@ -312,11 +324,8 @@ class Engine:
             # one row per fingerprint: StoreEngine's series table keeps a
             # row per (fingerprint, type) — a mixed log+metric stream
             # would double the byte sums through this join
-            series = self.series_table().dropDuplicates(["fingerprint"])
             return (
-                s.join(
-                    F.broadcast(series.select("fingerprint", "labels")), "fingerprint"
-                )
+                s.join(F.broadcast(self.stream_labels()), "fingerprint")
                 .groupBy(F.col("labels")[by].alias(by))
                 .agg(F.sum(F.length("string")).cast("long").alias("volume"))
             )
@@ -329,7 +338,9 @@ class Engine:
             f"sum(bytes_over_time({query} [{step_ms}ms]))"
             f" by ({','.join(target_labels)})"
         )
-        res = _logql_query_range(self.logctx(), text, start_ns, end_ns, None, "forward")
+        res = _logql_query_range(
+            copy.copy(self.logctx()), text, start_ns, end_ns, None, "forward"
+        )
         return (
             res.df.groupBy(
                 *[F.col("labels")[lbl].alias(lbl) for lbl in target_labels]
@@ -423,7 +434,7 @@ class Engine:
         if step_ns is not None and step_ns != self.prom_step_ns:
             ctx = self._new_promctx(step_ns)
         else:
-            ctx = self.promctx()
+            ctx = copy.copy(self.promctx())
         # request window → widened raw scan bound below the aggs
         # (ctx.set_scan_bounds inside _promql_query), exact trim here
         ctx.start_ns, ctx.end_ns = start_ns, end_ns
@@ -437,9 +448,7 @@ class Engine:
     def prom_query(self, expr: str, time_ns: int | None = None) -> DataFrame:
         """/api/v1/query — instant vector: latest step at/before the
         evaluation time, per series."""
-        ctx = self.promctx()
-        ctx.start_ns, ctx.end_ns = None, None  # shared ctx: drop stale window
-        m = _promql_query(ctx, expr)
+        m = _promql_query(copy.copy(self.promctx()), expr)
         if time_ns is not None:
             m = m.filter(F.col("timestamp_ns") <= time_ns)
         group_cols = [c for c in m.columns if c not in ("timestamp_ns", "value")]
@@ -495,10 +504,10 @@ class Engine:
         """/api/v1/metadata — metric names with sample counts (the
         closest stored analogue of Prometheus metadata)."""
         m = self.metric_samples_table()
-        # per-(fingerprint, type) store rows would double sample counts
-        series = self.series_table().dropDuplicates(["fingerprint"])
+        # one row per fingerprint: per-(fingerprint, type) store rows
+        # would double sample counts
         return (
-            m.join(F.broadcast(series.select("fingerprint", "labels")), "fingerprint")
+            m.join(F.broadcast(self.stream_labels()), "fingerprint")
             .groupBy(F.col("labels")["app"].alias("metric"))
             .agg(F.count(F.lit(1)).alias("samples"))
         )

@@ -60,16 +60,25 @@ def _loki_envelope(rows) -> dict:
             "status": "success",
             "data": {"resultType": "streams", "result": list(streams.values())},
         }
+    return {
+        "status": "success",
+        "data": {"resultType": "matrix", "result": _matrix(rows)},
+    }
+
+
+def _matrix(rows) -> list:
+    """Rows → matrix series, each series' values in ascending time
+    order whatever the row order (the Prometheus/Loki matrix contract;
+    a backward query_range collects newest-first)."""
     series: dict[tuple, dict] = {}
     for r in rows:
         lab = _labels_of(r)
         key = tuple(sorted(lab.items()))
         s = series.setdefault(key, {"metric": lab, "values": []})
         s["values"].append([r["timestamp_ns"] / 1e9, str(r["value"])])
-    return {
-        "status": "success",
-        "data": {"resultType": "matrix", "result": list(series.values())},
-    }
+    for s in series.values():
+        s["values"].sort(key=lambda v: v[0])
+    return list(series.values())
 
 
 def _prom_envelope(rows, instant: bool) -> dict:
@@ -83,13 +92,7 @@ def _prom_envelope(rows, instant: bool) -> dict:
         ]
         rt = "vector"
     else:
-        series: dict[tuple, dict] = {}
-        for r in rows:
-            lab = _labels_of(r)
-            key = tuple(sorted(lab.items()))
-            s = series.setdefault(key, {"metric": lab, "values": []})
-            s["values"].append([r["timestamp_ns"] / 1e9, str(r["value"])])
-        result = list(series.values())
+        result = _matrix(rows)
         rt = "matrix"
     return {"status": "success", "data": {"resultType": rt, "result": result}}
 
@@ -105,9 +108,9 @@ def _stream_labels(engine, df) -> list:
 
     if "string" not in df.columns or "fingerprint" not in df.columns:
         return df.collect()
-    series = engine.series_table().select(
+    series = engine.stream_labels().select(
         "fingerprint", F.col("labels").alias("__slabels")
-    ).dropDuplicates(["fingerprint"])
+    )
     return (
         df.join(F.broadcast(series), "fingerprint", "left")
         .withColumn("labels", F.coalesce(F.col("labels"), F.col("__slabels")))

@@ -243,6 +243,54 @@ def store_traceql_context(spark, catalog: Catalog, **kw) -> StoreTraceQLContext:
     return StoreTraceQLContext(spark, catalog.root, catalog=catalog, **kw)
 
 
+class _SeqCatalog(Catalog):
+    """The store's tables as of one mutation seq — StoreEngine's
+    per-seq table cache. Each table's relation (file listing plus the
+    inferred parquet schema) is read once, the rollup's merge-on-read
+    plan is built once, and each `read_series` variant is deduplicated
+    once and materialized with an eager localCheckpoint, so every
+    request under one seq shares them instead of re-listing,
+    re-inferring, re-planning and re-running the time_series dedup
+    shuffle (the reference's series lookup is a local ClickHouse table;
+    this is its per-version analog). Builds run under one lock, so the
+    readers that arrive together after a write share one build.
+
+    A superseded instance is just dropped. Its checkpoints are
+    unpersisted by Spark's ContextCleaner once nothing references them
+    — an in-flight request's plan holds its checkpoint's RDD, so it is
+    never released under a running query (the flush checkpoints in
+    storage/writer.py rely on the same cleaner)."""
+
+    def __init__(self, base: Catalog):
+        super().__init__(base.root, base.oid)
+        # re-entrant: a read_series build reads time_series through read()
+        self._lock = threading.RLock()
+        self._frames: dict = {}
+
+    def _memo(self, key, build) -> DataFrame:
+        df = self._frames.get(key)
+        if df is not None:  # built: no wait behind another table's build
+            return df
+        with self._lock:
+            if key not in self._frames:
+                self._frames[key] = build()
+            return self._frames[key]
+
+    def read(self, spark, table: str) -> DataFrame:
+        return self._memo(table, lambda: super(_SeqCatalog, self).read(spark, table))
+
+    def read_rollup(self, spark) -> DataFrame:
+        return self._memo("rollup", lambda: super(_SeqCatalog, self).read_rollup(spark))
+
+    def read_series(self, spark, types=None, per_fingerprint=False) -> DataFrame:
+        return self._memo(
+            ("series", types, per_fingerprint),
+            lambda: super(_SeqCatalog, self)
+            .read_series(spark, types, per_fingerprint)
+            .localCheckpoint(eager=True),
+        )
+
+
 @dataclass
 class StoreEngine(Engine):
     """The full endpoint facade over a written store: every loki_* /
@@ -256,12 +304,19 @@ class StoreEngine(Engine):
     the folded-stack layout (folded_fanout) — a store with NEITHER
     layout raises with that explanation rather than silently reading
     fixture views.
+
+    Everything it reads is cached per store version: the memoized query
+    contexts and the table relations and series dimension they and the
+    table providers share (`_SeqCatalog`) are built under the store's
+    mutation seq and dropped when it moves (`_store`).
     """
 
     catalog: Catalog | None = None
     _seq: int | None = field(default=None, repr=False)
-    _seq_lock: threading.Lock = field(
-        default_factory=threading.Lock, repr=False, compare=False
+    _tables: _SeqCatalog | None = field(default=None, repr=False)
+    # re-entrant: the context factories read the tables under it
+    _seq_lock: threading.RLock = field(
+        default_factory=threading.RLock, repr=False, compare=False
     )
     _rule_mgrs: dict | None = field(default=None, repr=False)
     _rules_lock: threading.Lock = field(
@@ -288,36 +343,46 @@ class StoreEngine(Engine):
         return os.path.isdir(self.catalog.path(table))
 
     def refresh(self) -> None:
-        """Drop the memoized query contexts (their DataFrames snapshot
-        the parquet file listing at first action) and invalidate
-        Spark's cached file listings under the store root, so the NEXT
-        query re-lists files. Called by the context accessors whenever
-        the store's mutation seq moved (the reader freshness contract —
-        see storage/writer.py "Reader freshness"), and by the gateway's
-        stale-listing retry."""
-        self._logctx = None
-        self._promctx = None
-        self._tracectx = None
-        try:
-            self.spark.catalog.refreshByPath(self.catalog.root)
-        except Exception:
-            pass  # no cached relations under the root yet
-
-    def _fresh(self, ctx):
-        """Return the memoized context `ctx()`, first refreshing if any
-        writer — this process's pushes, bulk flushes, ruler writeback,
-        maintenance, or another process — bumped the store's mutation
-        seq since the contexts were built. The reference's reader never
-        needs this: ClickHouse reads always see committed parts."""
+        """Drop the memoized query contexts and the per-seq table cache
+        (their relations pin the parquet file listing they were read
+        with, the series checkpoints the rows) and invalidate Spark's
+        cached file listings under the store root, so the NEXT query
+        re-lists files. Called by `_store` whenever the store's mutation
+        seq moved (the reader freshness contract — see storage/writer.py
+        "Reader freshness"), and by the gateway's stale-listing retry."""
         with self._seq_lock:
-            # Read the seq BEFORE the refresh and before any context is
-            # built, record it only AFTER the refresh: a context is then
+            self._logctx = None
+            self._promctx = None
+            self._tracectx = None
+            self._tables = None
+            try:
+                self.spark.catalog.refreshByPath(self.catalog.root)
+            except Exception:
+                pass  # no cached relations under the root yet
+
+    def _store(self) -> Catalog:
+        """The store's tables as of its current mutation seq, first
+        refreshing if any writer — this process's pushes, bulk flushes,
+        ruler writeback, maintenance, or another process — bumped the
+        seq since they were read. The reference's reader never needs
+        this: ClickHouse reads always see committed parts."""
+        with self._seq_lock:
+            # Read the seq BEFORE the refresh and before anything is
+            # read, record it only AFTER the refresh: a table is then
             # never labelled with a seq newer than its file listing, so
             # a commit racing this check is caught by the next access.
             seq = read_mutation_seq(self.catalog.root)
             if seq != self._seq:
                 self.refresh()
                 self._seq = seq
+            if self._tables is None:
+                self._tables = _SeqCatalog(self.catalog)
+            return self._tables
+
+    def _fresh(self, ctx):
+        """Return the memoized context `ctx()`, built over `_store()`."""
+        with self._seq_lock:
+            self._store()
             return ctx()
 
     def rule_managers(self) -> dict:
@@ -336,13 +401,14 @@ class StoreEngine(Engine):
                 )
             return self._rule_mgrs
 
-    # contexts → store-backed twins, memoized per mutation seq
+    # contexts → store-backed twins over the per-seq tables, memoized
+    # per mutation seq
     def _new_logctx(self) -> LogQLContext:
-        return StoreLogQLContext(self.spark, self.sf_dir, catalog=self.catalog)
+        return StoreLogQLContext(self.spark, self.sf_dir, catalog=self._store())
 
     def _new_promctx(self, step_ns: int) -> PromQLContext:
         return StorePromQLContext(
-            self.spark, self.sf_dir, step_ns=step_ns, catalog=self.catalog
+            self.spark, self.sf_dir, step_ns=step_ns, catalog=self._store()
         )
 
     def _new_tracectx(self) -> TraceQLContext:
@@ -350,7 +416,7 @@ class StoreEngine(Engine):
             self.spark,
             self.sf_dir,
             step_ns=self.trace_step_ns,
-            catalog=self.catalog,
+            catalog=self._store(),
         )
 
     def logctx(self) -> LogQLContext:
@@ -365,25 +431,29 @@ class StoreEngine(Engine):
     # table providers → stored tables (date columns flow through, so the
     # label endpoints' _date_bounded becomes real partition pruning)
     def samples_table(self) -> DataFrame:
-        return self.catalog.read(self.spark, "samples").filter(
+        return self._store().read(self.spark, "samples").filter(
             F.col("type").isin(0, 1)
         )
 
     def metric_samples_table(self) -> DataFrame:
-        return self.catalog.read(self.spark, "samples").filter(
+        return self._store().read(self.spark, "samples").filter(
             F.col("type").isin(0, 2)
         )
 
     def series_table(self) -> DataFrame:
-        return self.catalog.read_series(self.spark)
+        return self._store().read_series(self.spark)
 
     def gin_table(self) -> DataFrame:
-        return self.catalog.read(self.spark, "gin")
+        return self._store().read(self.spark, "gin")
+
+    def stream_labels(self) -> DataFrame:
+        # the selector-matching dimension is exactly this shape
+        return self.logctx().match_series()
 
     def prom_metadata(self) -> DataFrame:
         """Real stored metadata (metadata.go) instead of the fixture's
         sample-count approximation."""
-        return self.catalog.metadata(self.spark)
+        return self._store().metadata(self.spark)
 
     def loki_patterns(
         self,
@@ -406,7 +476,7 @@ class StoreEngine(Engine):
 
         fps = self._match_fps(query) if query else None
         return patterns_response(
-            self.catalog.read(self.spark, "patterns"),
+            self._store().read(self.spark, "patterns"),
             fps, start_ns, end_ns, step_ns, limit,
         )
 
@@ -444,7 +514,7 @@ class StoreEngine(Engine):
                 "no profiles_folded table in this store — ingest profiles "
                 "through folded_fanout first"
             )
-        df = self.catalog.read(self.spark, "profiles_folded")
+        df = self._store().read(self.spark, "profiles_folded")
         if start_ns is not None:
             df = df.filter(F.col("timestamp_ns") >= start_ns)
         if end_ns is not None:
@@ -465,8 +535,8 @@ class StoreEngine(Engine):
         views)."""
         from gigapipe_spark.prof.selector import profile_fingerprints_frames
 
-        series = _stu_tp_unit(self.catalog.read(self.spark, "profiles_series"))
-        gin = self.catalog.read(self.spark, "profiles_series_gin")
+        series = _stu_tp_unit(self._store().read(self.spark, "profiles_series"))
+        gin = self._store().read(self.spark, "profiles_series_gin")
         return profile_fingerprints_frames(series, gin, scripts)
 
     def _stored_profiles(
@@ -483,7 +553,7 @@ class StoreEngine(Engine):
         functions projected)."""
         from gigapipe_spark.prof import selector as psel
 
-        prof = self.catalog.read(self.spark, "profiles")
+        prof = self._store().read(self.spark, "profiles")
         if start_ns is not None:
             prof = prof.filter(F.col("timestamp_ns") >= start_ns)
         if end_ns is not None:
@@ -512,7 +582,7 @@ class StoreEngine(Engine):
         normalized to the fixture column contract (tags→labels, stu
         field names) so every frame-based planner runs unchanged."""
         series = (
-            _stu_tp_unit(self.catalog.read(self.spark, "profiles_series"))
+            _stu_tp_unit(self._store().read(self.spark, "profiles_series"))
             .withColumnRenamed("tags", "labels")
             # the stored table is append-only (dropDuplicates at write is
             # per-batch): a re-pushed series must collapse back to ONE
@@ -521,10 +591,10 @@ class StoreEngine(Engine):
             # Catalog.read_series for the log/metric series table)
             .dropDuplicates(["fingerprint"])
         )
-        gin = self.catalog.read(
+        gin = self._store().read(
             self.spark, "profiles_series_gin"
         ).dropDuplicates(["fingerprint", "key", "val"])
-        prof = _stu_tp_unit(self.catalog.read(self.spark, "profiles"))
+        prof = _stu_tp_unit(self._store().read(self.spark, "profiles"))
         return prof, series, gin
 
     def _profiles(

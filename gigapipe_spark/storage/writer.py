@@ -18,17 +18,19 @@ Layout decisions for 100 TB (SURVEY §1.2):
 
 Reader freshness (the flock enforces single WRITER, not single-reader
 freshness): a reader PROCESS holds two layers of snapshot state over a
-store another process appends to — (a) its StoreEngine's memoized query
-contexts, whose DataFrames pin the parquet file listing taken at their
-first action, and (b) Spark's shared file-status/plan caches for the
-paths. The contract: appends are atomic at file granularity (parquet
-files land whole, then readers list them), so a stale reader is merely
-BEHIND, never inconsistent. Every journaled fan-out and every
-maintenance walk bumps the store's mutation seq (`_journal/.seq`,
-storage/snapshot.py), and each StoreEngine context access compares it
-with the seq its contexts were built under: when it moved, the engine
-calls StoreEngine.refresh() (storage/query.py), which drops the context
-memos and issues spark.catalog.refreshByPath(root). Same-process pushes,
+store another process appends to — (a) its StoreEngine's per-seq cache:
+the memoized query contexts plus the table relations (file listing and
+parquet schema, read once per table) and the checkpointed, deduplicated
+series dimension they share, and (b) Spark's shared file-status/plan
+caches for the paths. The contract: appends are atomic at file
+granularity (parquet files land whole, then readers list them), so a
+stale reader is merely BEHIND, never inconsistent. Every journaled
+fan-out and every maintenance walk bumps the store's mutation seq
+(`_journal/.seq`, storage/snapshot.py), and every StoreEngine context
+access and table read compares it with the seq its cache was built
+under: when it moved, the engine calls StoreEngine.refresh()
+(storage/query.py), which drops the contexts and the table cache and
+issues spark.catalog.refreshByPath(root). Same-process pushes,
 bulk flushes, ruler writeback and foreign-process writes are therefore
 all visible on the next request, with no writer-side hook and no
 polling. Pinned by tests/test_cache_coherence.py (two real processes)

@@ -313,6 +313,47 @@ def test_prom_query_range_custom_step_reads_store(gateway):
     ]
 
 
+def test_prom_query_range_matrix_values_ascending(gateway):
+    """A store-backed `query_range?step=15` returns each series' values
+    in ascending time order, as Prometheus does, whatever order the
+    rows were collected in."""
+    base, _ = gateway
+    t0 = T0 // 10**9 + 3_610  # on the 15 s grid
+    samples = [((t0 + 15 * i) * 10**9, float(i + 1)) for i in range(12)]
+    assert _remote_write(base, "rwsorted", samples) == 204
+    st, body = _get(
+        base,
+        "/api/v1/query_range?query=" + urllib.parse.quote('{job="rwsorted"}')
+        + f"&start={t0}&end={t0 + 180}&step=15",
+    )
+    assert st == 200
+    (series,) = body["data"]["result"]
+    assert series["values"] == [[t / 10**9, str(v)] for t, v in samples]
+
+
+def test_loki_query_range_matrix_values_ascending(gateway):
+    """A Loki metric query_range with the default `direction=backward`
+    still returns each series' values oldest-first (the matrix
+    contract); only log-line streams follow the direction."""
+    base, _ = gateway
+    t0 = T0 + 7_200 * 10**9
+    payload = json.dumps(
+        {"streams": [{"stream": {"app": "lokisorted"},
+                      "values": [[str(t0 + i * 10**9), f"l{i}"]
+                                 for i in range(40)]}]}
+    ).encode()
+    assert _post(base, "/loki/api/v1/push", payload) == 204
+    q = urllib.parse.quote('count_over_time({app="lokisorted"}[10s])')
+    st, body = _get(
+        base,
+        f"/loki/api/v1/query_range?query={q}&start={t0}&end={t0 + 40 * 10**9}",
+    )
+    assert st == 200 and body["data"]["resultType"] == "matrix"
+    (series,) = body["data"]["result"]
+    ts = [v[0] for v in series["values"]]
+    assert len(ts) > 1 and ts == sorted(ts)
+
+
 def test_http_meta_and_metrics_routes(gateway):
     """The volume/detected/series/exemplar/tempo-metrics route family."""
     base, _ = gateway

@@ -659,3 +659,238 @@ def test_store_tail_poll_prunes_scan(spark, tmp_path):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "date" in m.group(1)
+
+
+def _push(spark, cat, streams) -> None:
+    raw = spark.createDataFrame(
+        [(json.dumps({"streams": streams}),)], "payload string"
+    )
+    ingest_fanout(ingest.loki_push(raw), cat)
+
+
+def test_store_engine_new_stream_visible_on_warm_engine(spark, tmp_path):
+    """A push adding a new stream reaches a warm engine's next
+    query_range, labels attached the way the HTTP envelope attaches
+    them, and its next label listing: the per-seq tables are rebuilt
+    when the push bumps the mutation seq."""
+    from gigapipe_spark.httpd import _stream_labels
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    q = lambda: _stream_labels(eng, eng.loki_query_range('{app=~"web|cache"}'))
+    assert {r["labels"]["app"] for r in q()} == {"web"}
+    values = lambda: {r["val"] for r in eng.loki_label_values("app").collect()}
+    assert values() == {"web", "db"}
+
+    _push(spark, cat, [{"stream": {"app": "cache", "zone": "z1"},
+                        "values": [[str(T0 + 9_000_000_000), "miss"]]}])
+    rows = [r for r in q() if r["string"] == "miss"]
+    assert len(rows) == 1
+    assert rows[0]["labels"] == {"app": "cache", "zone": "z1",
+                                 "service_name": "cache"}
+    assert "zone" in {r["key"] for r in eng.loki_labels().collect()}
+    assert values() == {"web", "db", "cache"}
+
+
+def test_store_engine_maintenance_leaves_no_stale_series(spark, tmp_path):
+    """Rotation drops a stream's only partitions and compaction rewrites
+    the rest under a warm engine: its series dimension must not keep
+    serving the rotated stream (the walk bumps the mutation seq)."""
+    import datetime
+
+    from gigapipe_spark.storage.maintenance import compact, rotate
+    from gigapipe_spark.storage.query import StoreEngine
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+    now_ns = int(now.timestamp()) * 10**9
+    old_ns = now_ns - 90 * 86_400 * 10**9
+    cat = Catalog(str(tmp_path / "store"))
+    for app, ts in (("web", now_ns), ("web", now_ns + 1), ("old", old_ns)):
+        _push(spark, cat, [{"stream": {"app": app},
+                            "values": [[str(ts), app]]}])
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    apps = lambda: sorted(
+        r["labels"]["app"] for r in eng.loki_series('{app=~".+"}').collect()
+    )
+    assert apps() == ["old", "web"]
+    assert eng.loki_query_range('{app="old"}').count() == 1
+
+    assert rotate(spark, cat, drop_days=7, today=now.date())["dropped"]
+    assert compact(spark, cat, "time_series")
+    assert apps() == ["web"]
+    assert eng.loki_query_range('{app="old"}').count() == 0
+    values = {r["val"] for r in eng.loki_label_values("app").collect()}
+    assert values == {"web"}
+
+
+def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
+    """Every seq move builds a new series checkpoint; the superseded
+    ones must not pile up as persisted RDDs (Spark's ContextCleaner
+    releases a checkpoint once no DataFrame or plan references it)."""
+    import gc
+    import time
+
+    from gigapipe_spark.storage.query import StoreEngine
+    from gigapipe_spark.storage.snapshot import bump_mutation_seq
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    jsc = spark.sparkContext._jsc
+
+    def settle() -> int:
+        # drop the Python side's references, then let the JVM notice
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+        return jsc.getPersistentRDDs().size()
+
+    def read() -> None:
+        assert eng.loki_query_range('{app="web"}').count() == 6
+        assert eng.prom_query('{app="web"}').count() == 1
+
+    read()
+    base = settle()
+    for _ in range(20):
+        bump_mutation_seq(cat.root)
+        read()
+    deadline = time.monotonic() + 60
+    count = settle()
+    while count > base and time.monotonic() < deadline:
+        count = settle()
+    # the current seq's checkpoints are live; twenty superseded
+    # generations (two checkpoints each) are gone
+    assert count <= base, (count, base)
+
+
+def test_store_engine_warm_query_reads_no_time_series_files(spark, tmp_path):
+    """Plan guard: a repeated selector query on a warm engine takes its
+    series from the materialized dimension (an RDD scan), never from a
+    parquet scan of time_series. Checked on the executed plan, so a
+    Spark upgrade that stops reusing the checkpoint fails here."""
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    for _ in range(2):
+        df = eng.loki_query_range('{app="web"}', T0, T0 + 10**12, 3)
+        assert [r["string"] for r in df.collect()] == ["hit 5", "hit 4", "hit 3"]
+    for frame in (df, eng.stream_labels()):
+        frame.collect()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" in plan, plan
+        assert "time_series" not in plan, plan
+    assert "FileScan parquet" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def _race(monkeypatch, cls, run_a, run_b):
+    """Run request A alone, then again on a thread parked in
+    `cls.set_scan_bounds` (after A set its window, before the compile
+    reads it) while request B runs to the end on the same engine.
+    Returns (A alone, A raced)."""
+    import threading
+
+    alone = run_a()
+    held, release = threading.Event(), threading.Event()
+    real = cls.set_scan_bounds
+
+    def hold(self, lookback_ns):
+        if threading.current_thread().name == "A" and not held.is_set():
+            held.set()
+            assert release.wait(120)
+        return real(self, lookback_ns)
+
+    monkeypatch.setattr(cls, "set_scan_bounds", hold)
+    out = {}
+    t = threading.Thread(target=lambda: out.setdefault("a", run_a()), name="A")
+    t.start()
+    assert held.wait(120)
+    run_b()
+    release.set()
+    t.join(120)
+    assert not t.is_alive()
+    monkeypatch.undo()
+    return alone, out["a"]
+
+
+def test_store_engine_concurrent_windows_do_not_mix(spark, tmp_path, monkeypatch):
+    """Two requests on one memoized context with different windows: A is
+    held between setting its window and compiling; B runs to the end
+    meanwhile. A must return exactly what it returns alone."""
+    from gigapipe_spark.logql.compiler import LogQLContext
+    from gigapipe_spark.promql.compiler import PromQLContext
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    hour = 3_600_000_000_000
+
+    def log(lo, hi):
+        return sorted(
+            r["string"]
+            for r in eng.loki_query_range('{app="web"}', lo, hi).collect()
+        )
+
+    alone, raced = _race(
+        monkeypatch, LogQLContext,
+        lambda: log(T0, T0 + 25_000_000_000),
+        lambda: log(T0 + 30_000_000_000, T0 + hour),
+    )
+    assert alone == ["hit 0", "hit 1", "hit 2"] and raced == alone
+
+    def prom(lo, hi):
+        return sorted(
+            (r["timestamp_ns"], r["value"])
+            for r in eng.prom_query_range('{app="web"}', lo, hi).collect()
+        )
+
+    alone, raced = _race(
+        monkeypatch, PromQLContext,
+        lambda: prom(T0, T0 + 120_000_000_000),
+        lambda: prom(T0 + hour, T0 + 2 * hour),
+    )
+    assert alone and raced == alone
+
+
+def test_store_engine_concurrent_readers_share_one_build(spark, tmp_path, monkeypatch):
+    """Readers that arrive together after a write share the new seq's
+    builds: with more reader threads than cores and a short switch
+    interval, each series variant is deduplicated exactly once and
+    every reader gets the full answer."""
+    import collections
+    import sys
+    import threading
+
+    from gigapipe_spark.storage.query import StoreEngine
+    from gigapipe_spark.storage.snapshot import bump_mutation_seq
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    assert eng.loki_query_range('{app="web"}').count() == 6
+    builds = collections.Counter()
+    real = Catalog.read_series
+
+    def counted(self, spark, types=None, per_fingerprint=False):
+        builds[(types, per_fingerprint)] += 1
+        return real(self, spark, types, per_fingerprint)
+
+    monkeypatch.setattr(Catalog, "read_series", counted)
+    bump_mutation_seq(cat.root)
+    counts = []
+
+    def reader():
+        counts.append(eng.loki_query_range('{app="web"}').count())
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert counts == [6] * 8
+    assert builds and set(builds.values()) == {1}, builds
