@@ -34,8 +34,7 @@ facade level).
 
 from __future__ import annotations
 
-import copy
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,48 +100,33 @@ def _find_range_ns(query: str) -> int | None:
 
 @dataclass
 class Engine:
-    """One engine per (session, store dir) — contexts cache the derived
-    views (samples/series/GIN/spans/attrs), so repeated endpoint calls
-    reuse the same cached dimension tables exactly like the reference's
-    stored MVs."""
+    """One engine per (session, store dir). It holds no per-request
+    state: each request compiles on a context of its own, over the
+    cached derived views (samples/series/GIN/spans/attrs) the contexts
+    read, so repeated endpoint calls reuse the same cached dimension
+    tables exactly like the reference's stored MVs."""
 
     spark: SparkSession
     sf_dir: str
     prom_step_ns: int = 60_000_000_000
     trace_step_ns: int = 3_600_000_000_000
-    _logctx: LogQLContext | None = field(default=None, repr=False)
-    _promctx: PromQLContext | None = field(default=None, repr=False)
-    _tracectx: TraceQLContext | None = field(default=None, repr=False)
 
     # ------------------------------------------------------ contexts
-    # The _new_* factories build a context; the accessors memoize one.
-    # A store-backed engine (storage/query.StoreEngine) overrides the
-    # factories to bind the same compilers to its stored tables. A query
-    # compiles on a shallow copy of the memoized context: concurrent
-    # requests share its cached frames, never its query window.
-    def _new_logctx(self) -> LogQLContext:
+    # Each call builds a new context: a context is one request's planner
+    # state (query window, probe verdict, the frames it derives), like
+    # the reference's per-request planner chain. The caches live below
+    # it — the views' per-session cache here, the per-seq table cache
+    # on a store-backed engine (storage/query.StoreEngine), which
+    # overrides these to bind the same compilers to its stored tables.
+    def logctx(self) -> LogQLContext:
         return LogQLContext(self.spark, self.sf_dir)
 
-    def _new_promctx(self, step_ns: int) -> PromQLContext:
+    def promctx(self, step_ns: int | None = None) -> PromQLContext:
+        step_ns = self.prom_step_ns if step_ns is None else step_ns
         return PromQLContext(self.spark, self.sf_dir, step_ns=step_ns)
 
-    def _new_tracectx(self) -> TraceQLContext:
-        return TraceQLContext(self.spark, self.sf_dir, step_ns=self.trace_step_ns)
-
-    def logctx(self) -> LogQLContext:
-        if self._logctx is None:
-            self._logctx = self._new_logctx()
-        return self._logctx
-
-    def promctx(self) -> PromQLContext:
-        if self._promctx is None:
-            self._promctx = self._new_promctx(self.prom_step_ns)
-        return self._promctx
-
     def tracectx(self) -> TraceQLContext:
-        if self._tracectx is None:
-            self._tracectx = self._new_tracectx()
-        return self._tracectx
+        return TraceQLContext(self.spark, self.sf_dir, step_ns=self.trace_step_ns)
 
     # ------------------------------------------------- table providers
     # Every endpoint reads its tables through these, so a store-backed
@@ -161,8 +145,10 @@ class Engine:
         return views.time_series_gin(self.spark, self.sf_dir)
 
     def stream_labels(self) -> DataFrame:
-        """(fingerprint, labels), one row per stream: the label sets the
-        HTTP envelope attaches to collected log rows."""
+        """One row per stream with its `fingerprint` and `labels`: the
+        label sets the HTTP envelope attaches to collected log rows. It
+        may carry more columns (a store engine returns its cached
+        series frame as is); consumers select the ones they read."""
         return (
             self.series_table()
             .select("fingerprint", "labels")
@@ -185,7 +171,7 @@ class Engine:
         grid (ref: planner_step_fix.go / matrix_step.go response
         shaping); ignored for stream (log-line) results."""
         res = _logql_query_range(
-            copy.copy(self.logctx()), query, start_ns, end_ns, limit, direction
+            self.logctx(), query, start_ns, end_ns, limit, direction
         )
         if step_ns is not None and res.kind == "matrix":
             from gigapipe_spark.logql.compiler import restep
@@ -202,7 +188,7 @@ class Engine:
         (the reference's instant query is a backward range ending at
         the evaluation time)."""
         return _logql_query_range(
-            copy.copy(self.logctx()), query, None, time_ns, limit, "backward"
+            self.logctx(), query, None, time_ns, limit, "backward"
         ).df
 
     def _match_fps(self, match: str | list[str]) -> DataFrame:
@@ -214,9 +200,10 @@ class Engine:
         from gigapipe_spark.logql.parser import parse
 
         matches = [match] if isinstance(match, str) else list(match)
+        ctx = self.logctx()
         fps = None
         for m in matches:
-            f = fingerprints(self.logctx(), parse(m).selector)
+            f = fingerprints(ctx, parse(m).selector)
             fps = f if fps is None else fps.unionByName(f)
         return fps.distinct()
 
@@ -324,8 +311,9 @@ class Engine:
             # one row per fingerprint: StoreEngine's series table keeps a
             # row per (fingerprint, type) — a mixed log+metric stream
             # would double the byte sums through this join
+            labels = self.stream_labels().select("fingerprint", "labels")
             return (
-                s.join(F.broadcast(self.stream_labels()), "fingerprint")
+                s.join(F.broadcast(labels), "fingerprint")
                 .groupBy(F.col("labels")[by].alias(by))
                 .agg(F.sum(F.length("string")).cast("long").alias("volume"))
             )
@@ -339,7 +327,7 @@ class Engine:
             f" by ({','.join(target_labels)})"
         )
         res = _logql_query_range(
-            copy.copy(self.logctx()), text, start_ns, end_ns, None, "forward"
+            self.logctx(), text, start_ns, end_ns, None, "forward"
         )
         return (
             res.df.groupBy(
@@ -428,13 +416,9 @@ class Engine:
     ) -> DataFrame:
         """/api/v1/query_range (ref: router/prometheus_query_range.go).
 
-        `step_ns` overrides the evaluation grid (a fresh context — the
-        default-step context and its cached views are untouched);
-        start/end bound the result window like the endpoint's params."""
-        if step_ns is not None and step_ns != self.prom_step_ns:
-            ctx = self._new_promctx(step_ns)
-        else:
-            ctx = copy.copy(self.promctx())
+        `step_ns` overrides the evaluation grid; start/end bound the
+        result window like the endpoint's params."""
+        ctx = self.promctx(step_ns)
         # request window → widened raw scan bound below the aggs
         # (ctx.set_scan_bounds inside _promql_query), exact trim here
         ctx.start_ns, ctx.end_ns = start_ns, end_ns
@@ -448,7 +432,7 @@ class Engine:
     def prom_query(self, expr: str, time_ns: int | None = None) -> DataFrame:
         """/api/v1/query — instant vector: latest step at/before the
         evaluation time, per series."""
-        m = _promql_query(copy.copy(self.promctx()), expr)
+        m = _promql_query(self.promctx(), expr)
         if time_ns is not None:
             m = m.filter(F.col("timestamp_ns") <= time_ns)
         group_cols = [c for c in m.columns if c not in ("timestamp_ns", "value")]
@@ -529,7 +513,8 @@ class Engine:
         same raw timestamp_ns predicates); minDuration/maxDuration use
         the reference's ms-truncated comparison
         (traces_query.go:39-44: duration_ms > min/1e6, <= max/1e6)."""
-        out = _traceql_query(self.tracectx(), q)
+        ctx = self.tracectx()
+        out = _traceql_query(ctx, q)
         if "timestamp_ns" in out.columns:
             if start_ns is not None:
                 out = out.filter(F.col("timestamp_ns") >= start_ns)
@@ -542,7 +527,7 @@ class Engine:
             if max_duration_ns:
                 out = out.filter(dur_ms <= max_duration_ns // 1_000_000)
         if set(out.columns) >= {"trace_id", "span_id", "timestamp_ns", "duration_ns"}:
-            out = assemble_traces(self.tracectx(), out).orderBy(
+            out = assemble_traces(ctx, out).orderBy(
                 F.col("end_ns").desc(), "trace_id"
             )
         return out.limit(limit)
@@ -580,8 +565,9 @@ class Engine:
             expr = cmp_ if expr is None else AttrNode(op="&&", left=expr, right=cmp_)
         if tags[pos:].strip() or expr is None:
             raise ValueError(f"invalid tags search string: {tags!r}")
-        ids = select_spans(self.tracectx(), SpanSelector(expr=expr))
-        spans = self.tracectx().spans().join(ids, ["trace_id", "span_id"], "left_semi")
+        ctx = self.tracectx()
+        ids = select_spans(ctx, SpanSelector(expr=expr))
+        spans = ctx.spans().join(ids, ["trace_id", "span_id"], "left_semi")
         if start_ns is not None:
             spans = spans.filter(F.col("timestamp_ns") >= start_ns)
         if end_ns is not None:
@@ -590,7 +576,7 @@ class Engine:
             spans = spans.filter(F.col("duration_ns") >= min_duration_ns)
         if max_duration_ns is not None:
             spans = spans.filter(F.col("duration_ns") < max_duration_ns)
-        out = assemble_traces(self.tracectx(), spans).orderBy(
+        out = assemble_traces(ctx, spans).orderBy(
             F.col("end_ns").desc(), "trace_id"
         )
         return out.limit(limit)

@@ -58,23 +58,12 @@ def _norm_s(a: str) -> str:
     )
 
 
-def _sq_dist_s(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        f"cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-
-
 def _as_double_s(c: str) -> str:
     return f"transform({c}, x -> cast(x as double))"
 
 
 def _cosine_s(q: str, v: str) -> Column:
     return F.expr(f"{_dot_s(q, v)} / ({_norm_s(q)} * {_norm_s(v)})")
-
-
-def _sq_dist_c(a: str, b: str) -> Column:
-    return F.expr(_sq_dist_s(a, b))
 
 
 def _as_double(col: str) -> Column:

@@ -518,11 +518,6 @@ class _Handler(BaseHTTPRequestHandler):
     def do_GET(self) -> None:  # noqa: C901 - one router, like the reference's
         if not self._check_auth():
             return
-        # keep-alive connections reuse one handler instance across
-        # requests: re-arm the stale-listing retry latch per request
-        # (the recursive retry call sets it to stop a second loop)
-        if not getattr(self, "_in_stale_retry", False):
-            self._stale_retried = False
         url = urlparse(self.path)
         q = parse_qs(url.query)
         path = url.path
@@ -550,9 +545,7 @@ class _Handler(BaseHTTPRequestHandler):
                 raise
             except Exception as ex:
                 return self._json({"status": "error", "error": str(ex)}, 500)
-        guard = self._guard(f"GET {path}", path=path)
-        try:
-          with guard:
+        def route():
             if path == "/ready":
                 return self._text(e.ready())
             if path == "/config":
@@ -1025,35 +1018,37 @@ class _Handler(BaseHTTPRequestHandler):
 
                 return self._yaml(group_to_yaml(group))
             return self._json({"error": f"unknown route {path}"}, 404)
-        except BrokenPipeError:
-            raise
-        except Exception as ex:  # one route fails, server survives
-            if (
-                guard.reason is None
-                and _stale_listing_error(ex)
-                and not getattr(self, "_stale_retried", False)
-            ):
-                # a rotate/compact swapped parquet files under an
-                # in-flight scan (the soak's reproducible 500: a query
-                # planned against the pre-tick listing reads a file the
-                # tick deleted). The engine's seq check cannot catch
-                # this: the walk deletes files before its maintenance
-                # window bumps the mutation seq on exit, so the seq the
-                # contexts were built under still looks current — refresh
-                # explicitly and re-run the request once, the way the
-                # reference's reader simply re-queries ClickHouse (whose
-                # MVCC makes parts-gone invisible to it).
-                self._stale_retried = True
-                self._in_stale_retry = True
-                try:
-                    self.engine.refresh()
-                except Exception:
-                    pass
-                try:
-                    return self.do_GET()
-                finally:
-                    self._in_stale_retry = False
-            return self._guard_error(guard, ex)
+
+        return self._guarded_read(f"GET {path}", path, route)
+
+    def _guarded_read(self, desc: str, path: str, read):
+        """Run one read route under a RequestGuard (see `_guard`) and
+        answer its errors; one route fails, the server survives.
+
+        A stale file listing is retried once: a rotate/compact swapped
+        parquet files under an in-flight scan (the soak's reproducible
+        500: a query planned against the pre-tick listing reads a file
+        the tick deleted). The engine's seq check cannot catch this:
+        the walk deletes files before its maintenance window bumps the
+        mutation seq on exit, so the seq the tables were read under
+        still looks current — refresh explicitly and re-run the read
+        once under a new guard, the way the reference's reader simply
+        re-queries ClickHouse (whose MVCC makes parts-gone invisible to
+        it)."""
+        for retry in (False, True):
+            guard = self._guard(f"{desc} retry" if retry else desc, path=path)
+            try:
+                with guard:
+                    return read()
+            except BrokenPipeError:
+                raise
+            except Exception as ex:
+                if retry or guard.reason is not None or not _stale_listing_error(ex):
+                    return self._guard_error(guard, ex)
+            try:
+                self.engine.refresh()
+            except Exception:
+                pass
 
     def _querier_v1(self, method: str, req: dict):
         """connect-protocol Pyroscope querier RPCs (reader/router/
@@ -1173,33 +1168,17 @@ class _Handler(BaseHTTPRequestHandler):
             if path.startswith("/querier.v1.QuerierService/"):
                 body = self._body()
                 req = json.loads(body or b"{}")
-                # querier RPCs are reads — same per-request deadline +
-                # disconnect cancellation as the GET query surface
-                guard = self._guard(f"POST {path}", path=path)
-                try:
-                    with guard:
-                        out = self._querier_v1(path.rsplit("/", 1)[-1], req)
-                except Exception as ex:
-                    # same stale-listing retry as the GET surface: a
-                    # rotate/compact mid-scan must not 500 a read
-                    if guard.reason is None and _stale_listing_error(ex):
-                        try:
-                            self.engine.refresh()
-                        except Exception:
-                            pass
-                        guard = self._guard(f"POST {path} retry", path=path)
-                        try:
-                            with guard:
-                                out = self._querier_v1(
-                                    path.rsplit("/", 1)[-1], req
-                                )
-                        except Exception as ex2:
-                            return self._guard_error(guard, ex2)
-                    else:
-                        return self._guard_error(guard, ex)
-                if out is None:
-                    return self._json({"error": f"unknown rpc {path}"}, 404)
-                return self._json(out)
+
+                def rpc():
+                    out = self._querier_v1(path.rsplit("/", 1)[-1], req)
+                    if out is None:
+                        return self._json({"error": f"unknown rpc {path}"}, 404)
+                    return self._json(out)
+
+                # querier RPCs are reads — same per-request deadline,
+                # disconnect cancellation and stale-listing retry as the
+                # GET query surface
+                return self._guarded_read(f"POST {path}", path, rpc)
             if path == "/settings.v1.SettingsService/Get":
                 return self._json(e.pyroscope_settings())
             rr = self._rules_route(path)

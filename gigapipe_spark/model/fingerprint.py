@@ -10,8 +10,6 @@ uses ONE canonical scheme everywhere (SURVEY §7.4 risk 3):
 
   canonical string = "k=v" pairs, key-sorted, joined by 0xFF
   fingerprint      = xxhash64(canonical string)   (JVM-side, codegen'd)
-
-A pure-Python FNV-64a is kept for driver-side ingest paths and tests.
 """
 
 from __future__ import annotations
@@ -19,27 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-FNV_OFFSET = 0xCBF29CE484222325
-FNV_PRIME = 0x100000001B3
 _SEP = "ÿ"
-
-
-def fnv64a(data: bytes) -> int:
-    """FNV-64a over raw bytes (same algorithm family the reference uses)."""
-    h = FNV_OFFSET
-    for b in data:
-        h ^= b
-        h = (h * FNV_PRIME) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-def fingerprint_labels_py(labels: dict[str, str]) -> int:
-    """Driver-side fingerprint of a label set (signed 64-bit to match Spark)."""
-    parts = []
-    for k in sorted(labels):
-        parts.append(f"{k}={labels[k]}")
-    h = fnv64a(_SEP.join(parts).encode("utf-8"))
-    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 def sorted_entries(labels_col: Column) -> Column:

@@ -190,37 +190,6 @@ def cluster_lines(lines: list[str], similarity: float = 0.6) -> list[Pattern]:
     return clusters
 
 
-def _pattern_from_precomputed(tokens: list[str], costs: list[int]) -> Pattern:
-    """Pattern seeded with JVM-classified costs (skips the per-token
-    Python regex chain; _cost_col and classify() are pinned equal by
-    test_patterns' singles/multi parity)."""
-    p = Pattern.__new__(Pattern)
-    p.tokens = tokens
-    p.costs = costs
-    p.samples_count = 1
-    p.last_seen = 0
-    p._overall = sum(costs)
-    p._gen = 0
-    return p
-
-
-def cluster_token_rows(rows, similarity: float = 0.6) -> list[Pattern]:
-    """cluster_lines over pre-tokenized (tokens, classes) pairs — the
-    same merge loop, with token costs taken from the JVM classify pass
-    instead of re-running Python regexes per token."""
-    clusters: list[Pattern] = []
-    for toks, costs in rows:
-        tokens = list(toks)
-        if not tokens:
-            continue
-        for c in clusters:
-            if c.try_merge(tokens, similarity):
-                break
-        else:
-            clusters.append(_pattern_from_precomputed(tokens, list(costs)))
-    return clusters
-
-
 def mine_patterns(
     samples: DataFrame,
     similarity: float = 0.6,
@@ -393,18 +362,14 @@ def mine_patterns(
             )
         )
 
-    def _multi(rows: DataFrame, n_multi: int | None = None) -> DataFrame:
+    def _multi(rows: DataFrame, n_multi: int) -> DataFrame:
         # Strategy gate, MEASURED (docs/SCALE.md round-14): the JVM
         # fold wins ~2x warm on small/mixed multi slices by skipping
         # the Python stage; the tight pandas loop wins ~1.6x on
         # massive all-multi corpora where interpreted HOF evaluation
         # per token dominates. Route by the sizing job's observed
-        # multi-row count; env overrides pin each path for the
-        # differential tests.
-        if os.environ.get("GIGAPIPE_MINER_PANDAS") != "1" and (
-            os.environ.get("GIGAPIPE_MINER_JVM") == "1"
-            or (n_multi is not None and n_multi <= JVM_FOLD_CAP)
-        ):
+        # multi-row count.
+        if n_multi <= JVM_FOLD_CAP:
             return _mine_multi_jvm(rows, shard_keys, similarity)
         # multi-line shards re-spread across the full core count (a
         # Python merge-loop stage's cost is per-ROW, so byte-sized

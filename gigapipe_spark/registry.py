@@ -1474,16 +1474,6 @@ def rollup_metrics_15s(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- PromQL long tail
 
 from gigapipe_spark.promql import functions as _pf  # noqa: E402
-
-
-def _metric_with_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return views.metric_samples(spark, sf_dir).join(
-        F.broadcast(views.time_series(spark, sf_dir).select("fingerprint", "labels")),
-        "fingerprint",
-        "left",
-    )
-
-
 from gigapipe_spark.sources import views  # noqa: E402
 
 

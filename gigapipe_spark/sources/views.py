@@ -179,6 +179,17 @@ def _dim_memo(spark: SparkSession) -> dict:
     return _dim_cache_by_session.setdefault(spark, {})
 
 
+def session_memo(spark: SparkSession, sf_dir: str, name, build):
+    """`build()` memoized per (session, sf_dir, name): driver-side
+    values derived from the session's views (layout decisions, index
+    stats, TraceQL probe verdicts)."""
+    memo = _dim_memo(spark)
+    key = (sf_dir, name)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
 # fact-sized caches need this much JVM heap to coexist with 32-wide
 # execution; below it they stream from parquet instead (cache-if-fits)
 _FACT_CACHE_MIN_HEAP = 4 * 1024**3
@@ -405,15 +416,12 @@ def span_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode("attrs").alias("key", "val"),
         )
 
-    memo = _dim_memo(spark)
-    key = (sf_dir, "span_attrs_cacheable")
-    if key not in memo:
-        # one cheap count over the already-cached map decides the
-        # layout for the session
-        memo[key] = (
-            span_attr_map(spark, sf_dir).count() <= 5_000_000
-        )
-    if memo[key]:
+    # one cheap count over the already-cached map decides the layout
+    # for the session
+    if session_memo(
+        spark, sf_dir, "span_attrs_cacheable",
+        lambda: span_attr_map(spark, sf_dir).count() <= 5_000_000,
+    ):
         return _cached(spark, sf_dir, "span_attrs", build, fact=True)
     return build()
 
@@ -432,10 +440,9 @@ def attr_stats(spark: SparkSession, sf_dir: str) -> dict | None:
     per-request ids): callers fall back to the scan probe. At store
     scale this is a WRITER-maintained table, not a session derivation;
     the session build is fixture plumbing."""
-    memo = _dim_memo(spark)
-    key = (sf_dir, "attr_stats")
-    if key not in memo:
-        cap = 100_000
+    cap = 100_000
+
+    def build():
         rows = (
             span_attr_map(spark, sf_dir)
             .select(F.explode("attrs").alias("key", "val"))
@@ -444,12 +451,11 @@ def attr_stats(spark: SparkSession, sf_dir: str) -> dict | None:
             .limit(cap + 1)
             .collect()
         )
-        memo[key] = (
-            None
-            if len(rows) > cap
-            else {(r["key"], r["val"]): r["count"] for r in rows}
-        )
-    return memo[key]
+        if len(rows) > cap:
+            return None
+        return {(r["key"], r["val"]): r["count"] for r in rows}
+
+    return session_memo(spark, sf_dir, "attr_stats", build)
 
 
 def span_attr_map(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -70,7 +70,6 @@ class StoreLogQLContext(LogQLContext):
     """LogQL over the stored samples/time_series/gin tables."""
 
     catalog: Catalog | None = None
-    _match_series: DataFrame | None = None
 
     def match_series(self) -> DataFrame:
         # NO type scoping (the GIN-bitmask matcher this replaces had
@@ -78,12 +77,12 @@ class StoreLogQLContext(LogQLContext):
         # per_fingerprint=True keeps the one-row-per-fingerprint
         # contract fingerprints() broadcasts rely on — labels are
         # identical across a fingerprint's type/version rows by
-        # construction (the fingerprint IS the label hash).
-        if self._match_series is None:
-            self._match_series = self.catalog.read_series(
-                self.spark, types=None, per_fingerprint=True
-            ).select("fingerprint", "labels")
-        return self._match_series
+        # construction (the fingerprint IS the label hash). The frame
+        # is the catalog's own (on a StoreEngine, one per mutation
+        # seq); consumers select the columns they need.
+        return self.catalog.read_series(
+            self.spark, types=None, per_fingerprint=True
+        )
 
     def samples(self) -> DataFrame:
         if self._samples is None:
@@ -215,6 +214,9 @@ class StoreTraceQLContext(TraceQLContext):
             )
         )
 
+    def memo(self, key, build):
+        return self.catalog._memo(key, build)
+
     def ancestors(self) -> DataFrame:
         # stored ancestor-closure index maintained at ingest
         # (writer._maintain_ancestor_index) — structural queries scan it
@@ -248,7 +250,8 @@ class _SeqCatalog(Catalog):
     per-seq table cache. Each table's relation (file listing plus the
     inferred parquet schema) is read once, the rollup's merge-on-read
     plan is built once, and each `read_series` variant is deduplicated
-    once and materialized with an eager localCheckpoint, so every
+    once and materialized with an eager localCheckpoint (and each
+    TraceQL probe verdict is computed once, via `_memo`), so every
     request under one seq shares them instead of re-listing,
     re-inferring, re-planning and re-running the time_series dedup
     shuffle (the reference's series lookup is a local ClickHouse table;
@@ -305,8 +308,9 @@ class StoreEngine(Engine):
     layout raises with that explanation rather than silently reading
     fixture views.
 
-    Everything it reads is cached per store version: the memoized query
-    contexts and the table relations and series dimension they and the
+    Each request builds its own query context (see `Engine`); what
+    they read is cached per store version: the table relations, the
+    series dimension and the TraceQL probe verdicts that contexts and
     table providers share (`_SeqCatalog`) are built under the store's
     mutation seq and dropped when it moves (`_store`).
     """
@@ -314,7 +318,7 @@ class StoreEngine(Engine):
     catalog: Catalog | None = None
     _seq: int | None = field(default=None, repr=False)
     _tables: _SeqCatalog | None = field(default=None, repr=False)
-    # re-entrant: the context factories read the tables under it
+    # re-entrant: `_store` refreshes under it
     _seq_lock: threading.RLock = field(
         default_factory=threading.RLock, repr=False, compare=False
     )
@@ -343,17 +347,14 @@ class StoreEngine(Engine):
         return os.path.isdir(self.catalog.path(table))
 
     def refresh(self) -> None:
-        """Drop the memoized query contexts and the per-seq table cache
-        (their relations pin the parquet file listing they were read
-        with, the series checkpoints the rows) and invalidate Spark's
-        cached file listings under the store root, so the NEXT query
-        re-lists files. Called by `_store` whenever the store's mutation
-        seq moved (the reader freshness contract — see storage/writer.py
-        "Reader freshness"), and by the gateway's stale-listing retry."""
+        """Drop the per-seq table cache (its relations pin the parquet
+        file listing they were read with, the series checkpoints the
+        rows) and invalidate Spark's cached file listings under the
+        store root, so the NEXT query re-lists files. Called by `_store`
+        whenever the store's mutation seq moved (the reader freshness
+        contract — see storage/writer.py "Reader freshness"), and by
+        the gateway's stale-listing retry."""
         with self._seq_lock:
-            self._logctx = None
-            self._promctx = None
-            self._tracectx = None
             self._tables = None
             try:
                 self.spark.catalog.refreshByPath(self.catalog.root)
@@ -361,8 +362,9 @@ class StoreEngine(Engine):
                 pass  # no cached relations under the root yet
 
     def _store(self) -> Catalog:
-        """The store's tables as of its current mutation seq, first
-        refreshing if any writer — this process's pushes, bulk flushes,
+        """The store's tables as of its current mutation seq (what every
+        context build and table provider reads), first refreshing if
+        any writer — this process's pushes, bulk flushes,
         ruler writeback, maintenance, or another process — bumped the
         seq since they were read. The reference's reader never needs
         this: ClickHouse reads always see committed parts."""
@@ -378,12 +380,6 @@ class StoreEngine(Engine):
             if self._tables is None:
                 self._tables = _SeqCatalog(self.catalog)
             return self._tables
-
-    def _fresh(self, ctx):
-        """Return the memoized context `ctx()`, built over `_store()`."""
-        with self._seq_lock:
-            self._store()
-            return ctx()
 
     def rule_managers(self) -> dict:
         """The engine's two rule managers ("loki" LogQL / "prom"
@@ -401,32 +397,23 @@ class StoreEngine(Engine):
                 )
             return self._rule_mgrs
 
-    # contexts → store-backed twins over the per-seq tables, memoized
-    # per mutation seq
-    def _new_logctx(self) -> LogQLContext:
+    # contexts → store-backed twins over the current seq's tables
+    def logctx(self) -> LogQLContext:
         return StoreLogQLContext(self.spark, self.sf_dir, catalog=self._store())
 
-    def _new_promctx(self, step_ns: int) -> PromQLContext:
+    def promctx(self, step_ns: int | None = None) -> PromQLContext:
+        step_ns = self.prom_step_ns if step_ns is None else step_ns
         return StorePromQLContext(
             self.spark, self.sf_dir, step_ns=step_ns, catalog=self._store()
         )
 
-    def _new_tracectx(self) -> TraceQLContext:
+    def tracectx(self) -> TraceQLContext:
         return StoreTraceQLContext(
             self.spark,
             self.sf_dir,
             step_ns=self.trace_step_ns,
             catalog=self._store(),
         )
-
-    def logctx(self) -> LogQLContext:
-        return self._fresh(super().logctx)
-
-    def promctx(self) -> PromQLContext:
-        return self._fresh(super().promctx)
-
-    def tracectx(self) -> TraceQLContext:
-        return self._fresh(super().tracectx)
 
     # table providers → stored tables (date columns flow through, so the
     # label endpoints' _date_bounded becomes real partition pruning)
@@ -447,7 +434,8 @@ class StoreEngine(Engine):
         return self._store().read(self.spark, "gin")
 
     def stream_labels(self) -> DataFrame:
-        # the selector-matching dimension is exactly this shape
+        # the selector-matching dimension: the same per-seq frame on
+        # every call under one seq
         return self.logctx().match_series()
 
     def prom_metadata(self) -> DataFrame:

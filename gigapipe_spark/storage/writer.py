@@ -18,19 +18,19 @@ Layout decisions for 100 TB (SURVEY §1.2):
 
 Reader freshness (the flock enforces single WRITER, not single-reader
 freshness): a reader PROCESS holds two layers of snapshot state over a
-store another process appends to — (a) its StoreEngine's per-seq cache:
-the memoized query contexts plus the table relations (file listing and
-parquet schema, read once per table) and the checkpointed, deduplicated
-series dimension they share, and (b) Spark's shared file-status/plan
-caches for the paths. The contract: appends are atomic at file
+store another process appends to — (a) its StoreEngine's per-seq table
+cache: the table relations (file listing and parquet schema, read once
+per table), the checkpointed, deduplicated series dimension and the
+TraceQL probe verdicts every request's query context reads, and (b)
+Spark's shared file-status/plan caches for the paths. The contract: appends are atomic at file
 granularity (parquet files land whole, then readers list them), so a
 stale reader is merely BEHIND, never inconsistent. Every journaled
 fan-out and every maintenance walk bumps the store's mutation seq
 (`_journal/.seq`, storage/snapshot.py), and every StoreEngine context
-access and table read compares it with the seq its cache was built
+build and table read compares it with the seq its cache was built
 under: when it moved, the engine calls StoreEngine.refresh()
-(storage/query.py), which drops the contexts and the table cache and
-issues spark.catalog.refreshByPath(root). Same-process pushes,
+(storage/query.py), which drops the table cache and issues
+spark.catalog.refreshByPath(root). Same-process pushes,
 bulk flushes, ruler writeback and foreign-process writes are therefore
 all visible on the next request, with no writer-side hook and no
 polling. Pinned by tests/test_cache_coherence.py (two real processes)
@@ -251,6 +251,12 @@ class Catalog:
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
+
+    def _memo(self, key: tuple, build):
+        """`build()`, for a value derived from these tables; a view
+        pinned to one table version (StoreEngine's per-seq catalog)
+        caches it under `key`."""
+        return build()
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         try:
@@ -1300,23 +1306,6 @@ def stream_spans_fanout(
     per micro-batch (same trigger-as-timer-flush shape as samples)."""
 
     _sink = _marked_sink(spans_fanout, catalog, checkpoint)
-
-    return (
-        decoded_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
-def stream_profiles_fanout(
-    decoded_stream: DataFrame, catalog: Catalog, checkpoint: str,
-    trigger_seconds: int = 5,
-):
-    """Streaming profile ingest: profiles_input-shaped stream → the
-    profiles MV layer per micro-batch."""
-
-    _sink = _marked_sink(profiles_fanout, catalog, checkpoint)
 
     return (
         decoded_stream.writeStream.foreachBatch(_sink)

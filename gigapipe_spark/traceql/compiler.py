@@ -28,7 +28,6 @@ the index entirely and scan the spans table (ref: attrless.go).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -86,6 +85,11 @@ class TraceQLContext:
     def ancestors(self) -> DataFrame:
         """Transitive ancestor closure; store-backed contexts override."""
         return views.span_ancestors(self.spark, self.sf_dir)
+
+    def memo(self, key, build):
+        """`build()`, cached with the tables this context reads (the
+        views' per-session cache); store-backed contexts override."""
+        return views.session_memo(self.spark, self.sf_dir, key, build)
 
 
 # intrinsics resolvable on the spans table itself — selectors touching
@@ -242,16 +246,6 @@ def _build_direct_intrinsic(e) -> Column:
 # single-pass plan to paginated "complex" processing
 # (ref: complexity_evaluator.go:29 COMPLEXITY_THRESHOLD).
 COMPLEXITY_THRESHOLD = 10_000_000
-
-# (session id, sf_dir, spanset repr) → probe verdict; the AST nodes are
-# dataclasses so repr is canonical for a query shape
-# per-session probe-verdict memo, weakref-keyed on the session object
-# (an id(spark) key never evicts and can alias a dead session's verdict
-# to a new one after id reuse)
-import weakref as _weakref
-
-_COMPLEXITY_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
 
 def _selectors(e) -> list[SpanSelector]:
     if e is None:
@@ -427,21 +421,15 @@ def _probe_bound(ctx: TraceQLContext) -> bool:
     The probe is LAZY: it runs at the first strategy decision, so plans
     with no size-sensitive site pay no probe job at all."""
     if ctx.complexity is None and ctx.pending_spanset is not None:
-        # session-level memo: dashboards re-issue the same spanset
-        # shapes, and the probe's inputs (the cached dims for one
-        # session+sf) don't change between calls — so the two probe
-        # count JOBS run once per shape, not once per query call.
-        # Store-backed contexts are excluded (their tables grow between
-        # pushes; the probe must re-run against fresh listings).
-        cacheable = type(ctx).__name__ == "TraceQLContext"
-        memo = _COMPLEXITY_MEMO.setdefault(ctx.spark, {})
-        key = (ctx.sf_dir, repr(ctx.pending_spanset))
-        if cacheable and key in memo:
-            ctx.complexity = memo[key]
-        else:
-            ctx.complexity = eval_complexity(ctx, ctx.pending_spanset)
-            if cacheable:
-                memo[key] = ctx.complexity
+        # the verdict is cached with the tables it counts (ctx.memo):
+        # dashboards re-issue the same spanset shapes, so the probe's
+        # count JOBS run once per shape and table version — for a store,
+        # once per (mutation seq, spanset). The AST nodes are
+        # dataclasses, so repr is canonical for a query shape.
+        spanset = ctx.pending_spanset
+        ctx.complexity = ctx.memo(
+            ("complexity", repr(spanset)), lambda: eval_complexity(ctx, spanset)
+        )
     return ctx.complexity is not None and ctx.complexity <= COMPLEXITY_THRESHOLD
 
 
@@ -523,8 +511,6 @@ def _fused_struct_ids(ctx: TraceQLContext, e) -> DataFrame | None:
     when the fast path does not apply."""
     if getattr(e, "op", None) not in ("&>>", "!>>", "<<&", "<<~"):
         return None
-    if os.environ.get("GIGAPIPE_NO_STRUCT_FUSION"):
-        return None  # A/B kill switch
     if not (
         _amap_routed_selector(ctx, e.left)
         and _amap_routed_selector(ctx, e.right)

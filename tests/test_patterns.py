@@ -223,7 +223,8 @@ def test_mine_patterns_jvm_fold_equals_pandas_loop(spark, monkeypatch):
 
     def canon():
         out = CL.mine_patterns(df)
-        return sorted(
+        in_pandas = "MapInPandas" in out._jdf.queryExecution().logical().toString()
+        return in_pandas, sorted(
             (
                 r["fingerprint"], r["timestamp_10m"], tuple(r["tokens"]),
                 tuple(r["classes"]), r["overall_cost"],
@@ -232,12 +233,13 @@ def test_mine_patterns_jvm_fold_equals_pandas_loop(spark, monkeypatch):
             for r in out.collect()
         )
 
-    monkeypatch.delenv("GIGAPIPE_MINER_PANDAS", raising=False)
-    monkeypatch.setenv("GIGAPIPE_MINER_JVM", "1")  # pin the fold path
-    via_jvm = canon()
-    monkeypatch.delenv("GIGAPIPE_MINER_JVM", raising=False)
-    monkeypatch.setenv("GIGAPIPE_MINER_PANDAS", "1")
-    via_pandas = canon()
+    # the size gate routes by the observed multi-row count (at most the
+    # corpus size): a cap above it pins the fold, one below it the loop
+    monkeypatch.setattr(CL, "JVM_FOLD_CAP", len(rows))
+    jvm_pandas, via_jvm = canon()
+    monkeypatch.setattr(CL, "JVM_FOLD_CAP", -1)
+    loop_pandas, via_pandas = canon()
+    assert (jvm_pandas, loop_pandas) == (False, True)
     assert via_jvm == via_pandas
     # the corpus really generalized something (classes re-classify
     # `<_>` slots as plain words — cost 5 — unlike the frozen costs)

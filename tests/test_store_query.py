@@ -184,17 +184,17 @@ def test_store_engine_endpoints(spark, tmp_path):
 
 
 def test_store_engine_sees_foreign_catalog_append(spark, tmp_path):
-    """Warm LogQL and PromQL contexts pick up rows a separate Catalog on
+    """Warm LogQL and PromQL queries pick up rows a separate Catalog on
     the same root appended, with no refresh call: the append bumps the
-    store's mutation seq and the next context access re-lists files."""
+    store's mutation seq and the next context build re-lists files."""
     from gigapipe_spark.storage.query import StoreEngine
 
     cat = _seed(spark, tmp_path)
     eng = StoreEngine(spark, cat.root, catalog=cat)
-    warm_log, warm_prom = eng.logctx(), eng.promctx()
+    warm = eng._store()
     assert eng.loki_query_range('{app="db"}').count() == 1
     assert eng.prom_query('{app="web"}').count() == 1
-    assert eng.logctx() is warm_log  # unchanged store: memo kept
+    assert eng._store() is warm  # unchanged store: table cache kept
 
     streams = [
         {"stream": {"app": "db"},
@@ -210,7 +210,7 @@ def test_store_engine_sees_foreign_catalog_append(spark, tmp_path):
     lines = {r["string"] for r in eng.loki_query_range('{app="db"}').collect()}
     assert lines == {"slow query", "slower query"}
     assert eng.prom_query('{app="cache"}').count() == 1
-    assert eng.logctx() is not warm_log and eng.promctx() is not warm_prom
+    assert eng._store() is not warm
 
 
 def test_store_rollup_partials_merge_across_flushes(spark, tmp_path):
@@ -282,6 +282,73 @@ def test_store_engine_tempo(spark, tmp_path):
     assert [r["name"] for r in spans] == ["root", "leaf"]  # root first
     tags = {r["key"] for r in eng.tempo_tags().collect()}
     assert {"status", "name", "service.name"} <= tags
+
+
+def _push_spans(spark, cat, trace, tier, flags):
+    """One trace: a root span tagged `tier` with one child per flag."""
+    from gigapipe_spark.storage.writer import spans_fanout
+
+    t = 1700000000000000
+    spans = [{"id": f"{trace}0", "traceId": trace, "name": "root",
+              "timestamp": t, "duration": 2000,
+              "localEndpoint": {"serviceName": "web"},
+              "tags": {"tier": tier}}]
+    spans += [{"id": f"{trace}{i + 1}", "traceId": trace, "parentId": f"{trace}0",
+               "name": "leaf", "timestamp": t + 100 * (i + 1), "duration": 50,
+               "localEndpoint": {"serviceName": "db"}, "tags": {"flag": f}}
+              for i, f in enumerate(flags)]
+    payload = spark.createDataFrame([(json.dumps(spans),)], "payload string")
+    spans_fanout(ingest.zipkin_spans(payload), cat)
+
+
+def test_store_engine_probe_verdict_per_spanset_and_seq(spark, tmp_path, monkeypatch):
+    """On a StoreEngine each structural search decides its strategy
+    gates on its OWN spanset's probe verdict, and the verdict is cached
+    with the per-seq tables it counts: a repeated query does not
+    re-probe, a push that moves the mutation seq does (and sees the
+    pushed rows)."""
+    import gigapipe_spark.traceql.compiler as C
+    from gigapipe_spark.storage.query import StoreEngine
+    from gigapipe_spark.traceql.parser import parse
+
+    gold = '{ tier = "gold" } &>> { flag = "R" }'
+    silver = '{ tier = "silver" } &>> { flag = "A" }'
+    a, b = repr(parse(gold).spanset), repr(parse(silver).spanset)
+    cat = Catalog(str(tmp_path / "store"))
+    _push_spans(spark, cat, "a1", "gold", ["R", "R", "R"])
+    _push_spans(spark, cat, "a2", "silver", ["A"])
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+
+    probes, seen = [], []
+    real_eval, real_bound = C.eval_complexity, C._probe_bound
+
+    def eval_spy(c, spanset):
+        probes.append(repr(spanset))
+        return real_eval(c, spanset)
+
+    def bound_spy(c):
+        out = real_bound(c)
+        seen.append((repr(c.pending_spanset), c.complexity))
+        return out
+
+    monkeypatch.setattr(C, "eval_complexity", eval_spy)
+    monkeypatch.setattr(C, "_probe_bound", bound_spy)
+
+    # (a) each spanset is probed, and decides on its own verdict: the
+    # any-term upper bound is 3 flag=R rows vs 1 row per silver term
+    assert len(eng.tempo_search(gold).collect()) == 1
+    assert len(eng.tempo_search(silver).collect()) == 1
+    assert probes == [a, b]
+    assert seen and set(seen) == {(a, 3), (b, 1)}
+    # (b) same seq: the verdict is served from the table cache
+    seen.clear()
+    eng.tempo_search(gold)
+    assert probes == [a, b] and set(seen) == {(a, 3)}
+    # a push moves the seq: the next query re-probes the new tables
+    seen.clear()
+    _push_spans(spark, cat, "a3", "gold", ["R", "R"])
+    assert len(eng.tempo_search(gold).collect()) == 2
+    assert probes == [a, b, a] and set(seen) == {(a, 5)}
 
 
 def _folded_profiles_seed(spark, tmp_path):
@@ -814,7 +881,7 @@ def _race(monkeypatch, cls, run_a, run_b):
 
 
 def test_store_engine_concurrent_windows_do_not_mix(spark, tmp_path, monkeypatch):
-    """Two requests on one memoized context with different windows: A is
+    """Two requests on one engine with different windows: A is
     held between setting its window and compiling; B runs to the end
     meanwhile. A must return exactly what it returns alone."""
     from gigapipe_spark.logql.compiler import LogQLContext

@@ -586,6 +586,7 @@ def test_struct_fusion_one_tagged_scan(spark, monkeypatch):
         '{ priority = "1-URGENT" } &>> { returnflag = "R" }',
         '{ priority = "1-URGENT" } !>> { returnflag = "R" }',
         '{ returnflag = "R" } <<& { priority = "1-URGENT" }',
+        '{ returnflag = "R" } <<~ { priority = "1-URGENT" }',
     ):
         fused = ids(query(ctx(spark), text, ids_only=True))
         # the optimizer inlines the flag aliases into join conditions, so
@@ -594,11 +595,11 @@ def test_struct_fusion_one_tagged_scan(spark, monkeypatch):
         # pair); semantics are pinned by the A/B collect below
         plan = fused._jdf.queryExecution().analyzed().toString()
         assert "__l" in plan and "__r" in plan, (text, "fusion not engaged")
-        monkeypatch.setenv("GIGAPIPE_NO_STRUCT_FUSION", "1")
+        monkeypatch.setattr(C, "_fused_struct_ids", lambda c, e: None)
         unfused = ids(query(ctx(spark), text, ids_only=True))
         uplan = unfused._jdf.queryExecution().analyzed().toString()
         assert "__l" not in uplan and "__r" not in uplan
-        monkeypatch.delenv("GIGAPIPE_NO_STRUCT_FUSION")
+        monkeypatch.undo()
         assert sorted(map(tuple, fused.collect())) == sorted(
             map(tuple, unfused.collect())
         ), text
@@ -610,3 +611,101 @@ def test_struct_fusion_one_tagged_scan(spark, monkeypatch):
     )
     mplan = mixed._jdf.queryExecution().analyzed().toString()
     assert "__l" not in mplan and "__r" not in mplan
+
+
+# ------------------------------------------- per-request probe verdicts
+
+STRUCT_A = '{ priority = "1-URGENT" } &>> { returnflag = "R" }'
+STRUCT_B = '{ priority = "5-LOW" } &>> { returnflag = "A" }'
+
+
+def record_verdicts(monkeypatch) -> list:
+    """Spy on every probe-gated strategy decision: appends (thread name,
+    the spanset the deciding context probes for, its verdict)."""
+    import threading
+
+    import gigapipe_spark.traceql.compiler as C
+
+    seen = []
+    real = C._probe_bound
+
+    def spy(c):
+        out = real(c)
+        seen.append(
+            (threading.current_thread().name, repr(c.pending_spanset), c.complexity)
+        )
+        return out
+
+    monkeypatch.setattr(C, "_probe_bound", spy)
+    return seen
+
+
+def expected_verdicts(spark) -> dict:
+    import gigapipe_spark.traceql.compiler as C
+
+    want = {
+        repr(parse(t).spanset): C.eval_complexity(ctx(spark), parse(t).spanset)
+        for t in (STRUCT_A, STRUCT_B)
+    }
+    assert len(set(want.values())) == 2, want  # the verdicts tell apart
+    return want
+
+
+def test_engine_probes_each_requests_own_spanset(spark, monkeypatch):
+    """Two structural searches on one Engine each decide their
+    broadcast/dedup/fusion gates on their OWN probe verdict: a query
+    context is a per-request value, so the first search's verdict never
+    leaks into the second."""
+    from gigapipe_spark.api import Engine
+
+    want = expected_verdicts(spark)
+    seen = record_verdicts(monkeypatch)
+    eng = Engine(spark, SF_DIR)
+    for text in (STRUCT_A, STRUCT_B):
+        eng.tempo_search(text)
+    assert {s for _, s, _ in seen} == set(want)
+    for _, spanset, verdict in seen:
+        assert verdict == want[spanset], (spanset, verdict)
+
+
+def test_engine_concurrent_searches_probe_their_own_spansets(spark, monkeypatch):
+    """Concurrent structural searches on one Engine, with the GIL
+    switching every microsecond: each thread's strategy decisions read
+    the verdict for its own spanset (a shared context would let one
+    request's compile overwrite the other's pending spanset)."""
+    import sys
+    import threading
+
+    from gigapipe_spark.api import Engine
+
+    want = expected_verdicts(spark)
+    eng = Engine(spark, SF_DIR)
+    seen = record_verdicts(monkeypatch)
+    mine, errors = {}, []
+
+    def run(text):
+        mine[threading.current_thread().name] = repr(parse(text).spanset)
+        try:
+            for _ in range(2):
+                eng.tempo_search(text)
+        except Exception as ex:  # surfaced below
+            errors.append(ex)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=run, args=(t,)) for t in (STRUCT_A, STRUCT_B)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert {tid for tid, _, _ in seen} == set(mine)
+    for tid, spanset, verdict in seen:
+        assert spanset == mine[tid], (spanset, mine[tid])
+        assert verdict == want[spanset], (spanset, verdict)
