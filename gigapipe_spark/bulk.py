@@ -21,8 +21,10 @@ acks after appending to the in-memory bulk too). The store itself
 stays consistent — each flush is one journaled batch — so the exposure
 is bounded by max_age_ms of acked-but-unflushed pushes, exactly like
 the reference's insert window. Deployments that need a synchronous ack
-leave bulk off (the default): every push then runs its own fan-out
-before the response, a STRONGER contract than the reference's.
+leave bulk off (the default) or send `X-Async-Insert: false`: the
+push then runs `write_group` on a group of one payload — the same
+decoder and fan-out a flush runs — before the response, a STRONGER
+contract than the reference's.
 
 Per-kind params that change decode semantics (elastic target, cf
 ddsource) key the buffer, so only identical-parameter payloads merge.
@@ -162,7 +164,7 @@ def _dec_datadog_cf(spark, df, p):
     from gigapipe_spark.sources import ingest
 
     lines = (
-        df.select(F.explode(F.split("payload", "\n")).alias("line"))
+        df.select(F.explode(F.split("payload", "\r?\n")).alias("line"))
         .filter(F.length(F.trim(F.col("line"))) > 0)
     )
     return ingest.datadog_cf(
@@ -413,7 +415,7 @@ _VALIDATORS = {
     "otlp_traces_pb": _pb_wire_ok,
     "datadog_cf": lambda p: None,  # free-form log lines, any text valid
     "elastic_doc": lambda p: _json_ok(p, (dict,)),
-    "pyroscope": lambda p: None,  # pprof validated by frame_profile caller
+    "pyroscope": lambda p: None,  # httpd._pyroscope_payload checks pprof
     "otlp_profiles": _pb_wire_ok,
 }
 
@@ -422,6 +424,48 @@ def validate(kind: str, payload: bytes) -> None:
     """Raise BulkValidationError when the payload can't possibly decode
     — called in the request path BEFORE the 2xx ack."""
     _VALIDATORS[kind](payload)
+
+
+def write_group(spark, catalog, kind: str, params: dict, payloads: list) -> None:
+    """Decode one (kind, params) group of payloads and write it: ONE
+    decode + ONE MV fan-out into `catalog`. The flusher runs it on each
+    buffered group; a synchronous push runs it on a group of one."""
+    from gigapipe_spark.storage.writer import (
+        ingest_fanout,
+        profiles_fanout,
+        spans_fanout,
+    )
+
+    col_type, decoder, fanout = KINDS[kind]
+    if col_type == _RAWLIST:
+        df = payloads
+    elif col_type == _BINARY:
+        df = spark.createDataFrame(
+            [(bytearray(p),) for p in payloads], "payload binary"
+        )
+    else:
+        df = spark.createDataFrame(
+            [(p.decode("utf-8", "replace"),) for p in payloads],
+            "payload string",
+        )
+    decoded = decoder(spark, df, params)
+    if decoded is None:
+        return  # decoder determined the batch is a no-op
+    # X-Ttl-Days keys the group, so every payload here shares this TTL
+    ttl = int(params.get("ttl_days", 0))
+    if fanout == "spans":
+        if ttl > 0 and "ttl_days" in decoded.columns:
+            from pyspark.sql import functions as F
+
+            decoded = decoded.withColumn(
+                "ttl_days",
+                F.lit(ttl).cast(dict(decoded.dtypes)["ttl_days"]),
+            )
+        spans_fanout(decoded, catalog)
+    elif fanout == "profiles":
+        profiles_fanout(decoded, catalog)
+    else:
+        ingest_fanout(decoded, catalog, ttl_days=ttl)
 
 
 class BulkWriter:
@@ -546,41 +590,5 @@ class BulkWriter:
             return a or b
 
     def _flush_group(self, kind: str, params: dict, payloads: list[bytes]) -> None:
-        from gigapipe_spark.storage.writer import (
-            ingest_fanout,
-            profiles_fanout,
-            spans_fanout,
-        )
-
-        col_type, decoder, fanout = KINDS[kind]
-        spark = self.engine.spark
-        if col_type == _RAWLIST:
-            df = payloads
-        elif col_type == _BINARY:
-            df = spark.createDataFrame(
-                [(bytearray(p),) for p in payloads], "payload binary"
-            )
-        else:
-            df = spark.createDataFrame(
-                [(p.decode("utf-8", "replace"),) for p in payloads],
-                "payload string",
-            )
-        decoded = decoder(spark, df, params)
-        if decoded is None:
-            return  # decoder determined the batch is a no-op
-        # per-group X-Ttl-Days (the header keys the group, so every
-        # payload here shares this TTL)
-        ttl = int(params.get("ttl_days", 0))
-        if fanout == "spans":
-            if ttl > 0 and "ttl_days" in decoded.columns:
-                from pyspark.sql import functions as F
-
-                decoded = decoded.withColumn(
-                    "ttl_days",
-                    F.lit(ttl).cast(dict(decoded.dtypes)["ttl_days"]),
-                )
-            spans_fanout(decoded, self.engine.catalog)
-        elif fanout == "profiles":
-            profiles_fanout(decoded, self.engine.catalog)
-        else:
-            ingest_fanout(decoded, self.engine.catalog, ttl_days=ttl)
+        eng = self.engine
+        write_group(eng.spark, eng.catalog, kind, params, payloads)

@@ -11,9 +11,13 @@ reference emits (Loki streams/matrix, Prometheus vector/matrix, Tempo
 search traces, Pyroscope flamebearer levels); all query planning and
 execution stay in the engine — this layer is transport only.
 
-Push routes require a store-backed engine (StoreEngine with a Catalog):
-a POST body runs through the matching sources.ingest decoder and the MV
-fan-out writer, completing the reference loop over a socket.
+Push routes require a store-backed engine (StoreEngine with a Catalog).
+One route table (`push_route`) maps a push to its bulk.KINDS name,
+decode params and reference ack; the body is checked once
+(`bulk.validate`) and then either enqueued in the bulk buffer or, with
+bulk off or `X-Async-Insert: false`, written before the ack by
+`bulk.write_group` on a group of one — the same decoder and MV fan-out
+a bulk flush runs, completing the reference loop over a socket.
 
 Scale note: the reference runs its readers/writers as horizontally
 scaled stateless HTTP pods over shared ClickHouse; this façade is the
@@ -137,6 +141,120 @@ def _multipart_first_file(body: bytes, ctype: str) -> bytes:
             # payloads may end in \r/\n/- bytes, so no blanket rstrip
             return payload[:-2] if payload.endswith(b"\r\n") else payload
     return body
+
+
+def _pyroscope_payload(q: dict, body: bytes, ctype: str):
+    """Pyroscope /ingest request checks (binary_pprof.go:25-170):
+    from/name/until are required, `name` is service{k=v,...}, the
+    body is a (gzip) pprof and multipart bodies contribute their
+    first file part. Returns (framed payload, sample params), or
+    the 400 message. The per-push metadata rides WITH the pprof
+    body via bulk.frame_profile, so pushes with different
+    from/name/until still coalesce in one group keyed only by
+    (sampleType, sampleUnit), which agent fleets hold constant."""
+    from gigapipe_spark.bulk import (
+        BulkValidationError,
+        _pb_wire_ok,
+        frame_profile,
+    )
+    from gigapipe_spark.sources.ingest import (
+        parse_pyroscope_name,
+        pyroscope_ingest_ns,
+    )
+
+    for p in ("from", "name", "until"):
+        if p not in q:
+            return f"please provide {p} value"
+    try:
+        service, tags = parse_pyroscope_name(q["name"][0])
+        start = pyroscope_ingest_ns(int(q["from"][0]))
+        end = pyroscope_ingest_ns(int(q["until"][0]))
+    except ValueError as ex:
+        return str(ex)
+    if "multipart/form-data" in ctype:
+        body = _multipart_first_file(body, ctype)
+    # pprof bodies are gzip (magic-checked) or bare protobuf
+    # (wire-scanned) — malformed 400s before the ack
+    try:
+        if not body[:2] == b"\x1f\x8b":
+            _pb_wire_ok(body)
+    except BulkValidationError as ex:
+        return str(ex)
+    meta = {
+        "service": service,
+        "tags": tags,
+        "start": start,
+        "end": end,
+        "spy": q.get("spyName", ["process_cpu"])[0],
+    }
+    params = {
+        "sample_type": q.get("sampleType", ["cpu"])[0],
+        "sample_unit": q.get("sampleUnit", ["nanoseconds"])[0],
+    }
+    return frame_profile(meta, body), params
+
+
+_REMOTE_WRITE_PATHS = (
+    "/api/prom/remote/write", "/api/v1/prom/remote/write",
+    "/v1/prom/remote/write", "/prom/remote/write",
+    "/api/prom/push",  # legacy alias, prom.go:14
+)
+_ELASTIC_ACK = json.dumps({"took": 0, "errors": False}).encode()
+
+
+def push_route(path: str, q: dict, ctype: str):
+    """Push route → (bulk.KINDS name, decode params, (status, ack
+    body)), or None for a path no push route serves. The one route
+    table of both push modes: params that change decode semantics key
+    the bulk group, and the ack is the reference's per-route reply
+    (writer/controller/*: loki/remote-write 204, datadog 202 {},
+    elastic 200 took/errors, tempo 202, profiles 200 {}). The elastic
+    catch-all patterns match LAST, like the reference's route
+    registration order."""
+    is_pb = "protobuf" in ctype or "octet-stream" in ctype
+    if path == "/loki/api/v1/push":
+        return ("loki_pb" if is_pb else "loki_json"), {}, (204, None)
+    if path in _REMOTE_WRITE_PATHS:
+        return "remote_write", {}, (204, None)
+    if path == "/v1/logs":  # OTLP
+        kind = "otlp_logs_pb" if is_pb else "otlp_logs_json"
+        return kind, {}, (204, None)
+    if path == "/v1/traces":  # OTLP
+        kind = "otlp_traces_pb" if is_pb else "otlp_traces_json"
+        return kind, {}, (200, b"{}")
+    if path == "/api/v2/logs":  # Datadog logs
+        return "datadog_logs", {}, (202, b"{}")
+    if path == "/api/v2/series":  # Datadog metrics, insert.go:12
+        return "datadog_metrics", {}, (202, b"{}")
+    if path == "/cf/v1/insert":  # Cloudflare via Datadog, insert.go:13
+        ddsource = q.get("ddsource", ["unknown"])[0]
+        return "datadog_cf", {"ddsource": ddsource}, (202, b"{}")
+    if path.startswith(("/influx", "/write")):
+        # precision (influx.go:44 SetTimePrecision) changes decode
+        # semantics, so a non-default one keys the group
+        prec = q.get("precision", ["ns"])[0]
+        params = {"precision": prec} if prec != "ns" else {}
+        return "influx", params, (204, None)
+    if path in ("/tempo/spans", "/api/v2/spans", "/tempo/api/push"):
+        # content-type "ndjson" selects the line decoder (tempo.go:
+        # PushV2 withSimpleParser("ndjson", ...)); else JSON array
+        kind = "zipkin_ndjson" if "ndjson" in ctype else "zipkin_json"
+        return kind, {}, (202, None)
+    if path == "/ingest":  # Pyroscope, profile.go:10
+        return "pyroscope", {}, (200, b"{}")
+    if path == "/v1development/profiles":  # OTLP profiles, profile.go:12
+        return "otlp_profiles", {}, (200, b"{}")
+    if path.endswith("/_bulk"):  # Elastic, elastic.go:13-14
+        target = path.rsplit("/", 2)[-2] if path.count("/") > 1 else ""
+        params = {"target": target or "unknown"}
+        return "elastic_bulk", params, (200, _ELASTIC_ACK)
+    if "/_doc" in path or "/_create/" in path:  # elastic.go:9-12
+        parts = [p for p in path.split("/") if p]
+        params = {"target": parts[0] if parts else "unknown"}
+        if len(parts) > 2 and parts[1] in ("_doc", "_create"):
+            params["doc_id"] = parts[2]
+        return "elastic_doc", params, (200, _ELASTIC_ACK)
+    return None
 
 
 def _ms_to_ns(val: str) -> int:
@@ -360,11 +478,7 @@ class _Handler(BaseHTTPRequestHandler):
     # loki_push_pb / remote_write decompress per payload, with the
     # decode-error accumulator catching bad bodies) — the gateway must
     # not decompress these twice
-    _SNAPPY_NATIVE = (
-        "/loki/api/v1/push", "/api/prom/remote/write",
-        "/api/v1/prom/remote/write", "/v1/prom/remote/write",
-        "/prom/remote/write", "/api/prom/push",
-    )
+    _SNAPPY_NATIVE = ("/loki/api/v1/push", *_REMOTE_WRITE_PATHS)
 
     def _body(self) -> bytes:
         """Request body with the reference's Content-Encoding handling
@@ -503,11 +617,6 @@ class _Handler(BaseHTTPRequestHandler):
             self.close_connection = True
             return None
         return self._json({"status": "error", "error": str(ex)}, 500)
-
-    def _raw_df(self, payload: bytes):
-        return self.engine.spark.createDataFrame(
-            [(payload.decode("utf-8", "replace"),)], "payload string"
-        )
 
     # routes a MODE=writer process still serves (the reference's writer
     # service registers its own health/config/metrics next to the push
@@ -1212,7 +1321,7 @@ class _Handler(BaseHTTPRequestHandler):
             return self._bulk_or_500(ex)
 
     def _bulk_or_500(self, ex: Exception) -> None:
-        """Map bulk pre-enqueue failures to their status: malformed →
+        """Map push pre-ack failures to their status: malformed →
         400 (reference-parity decode-before-ack), buffer full → 503
         (shed load, client retries); anything else keeps the 500."""
         from gigapipe_spark.bulk import BulkOverflow, BulkValidationError
@@ -1276,517 +1385,59 @@ class _Handler(BaseHTTPRequestHandler):
         except ValueError:
             return 0
 
-    @staticmethod
-    def _route_kind(path, q, is_pb, ctype) -> str | None:
-        """Push route → bulk.KINDS name, for the SYNC path's pre-decode
-        syntactic validation (the reference maps unmarshal errors to
-        400 — writer/utils/errors/error.go NewUnmarshalError Code 400 —
-        while our Spark decoders drop bad rows silently or raise
-        generic 500s). Mirrors _bulk_submit's routing; the sync/bulk
-        agreement is pinned by test_push_validation_agrees_across_modes
-        so the two maps cannot drift."""
-        if path == "/loki/api/v1/push":
-            return "loki_pb" if is_pb else "loki_json"
-        if path in (
-            "/api/prom/remote/write", "/api/v1/prom/remote/write",
-            "/v1/prom/remote/write", "/prom/remote/write", "/api/prom/push",
-        ):
-            return "remote_write"
-        if path == "/v1/logs":
-            return "otlp_logs_pb" if is_pb else "otlp_logs_json"
-        if path == "/v1/traces":
-            return "otlp_traces_pb" if is_pb else "otlp_traces_json"
-        if path == "/api/v2/logs":
-            return "datadog_logs"
-        if path == "/api/v2/series":
-            return "datadog_metrics"
-        if path.startswith(("/influx", "/write")):
-            return "influx"
-        if path in ("/tempo/spans", "/api/v2/spans", "/tempo/api/push"):
-            return "zipkin_ndjson" if "ndjson" in ctype else "zipkin_json"
-        if path.endswith("/_bulk"):
-            return "elastic_bulk"
-        if path == "/cf/v1/insert":
-            return "datadog_cf"
-        if "/_doc" in path or "/_create/" in path:
-            return "elastic_doc"
-        if path == "/v1development/profiles" and "application/json" not in ctype:
-            return "otlp_profiles"
-        return None  # /ingest validates in its own handler
-
-    def _bulk_submit(self, path, q, body, is_pb, ctype) -> bool:
-        """Route one push into the BulkWriter (bulk.py), send the
-        route's reference ack, and return True; False when the route
-        isn't bufferable — those fall through to the synchronous
-        fan-out. (_push_ok returns None, so the ack CANNOT double as
-        the handled signal — an early version did exactly that and ran
-        the synchronous fan-out a second time after the ack.)
-
-        Each submit VALIDATES syntactically first (bulk.validate) —
-        malformed bodies 400 before the ack, matching the reference's
-        decode-before-ack contract — and a buffer past its hard cap
-        503s (BulkOverflow) instead of buffering unboundedly; both
-        raise out of here and are mapped by do_POST's handler."""
-        b = self.bulk
-        from gigapipe_spark.bulk import validate as _validate
-
-        # a nonzero X-Ttl-Days keys the buffer group (different TTLs
-        # must not merge) and overrides ttl_days at flush
-        _ttl = self._ttl_days_header()
-        tp = {"ttl_days": str(_ttl)} if _ttl > 0 else {}
-
-        def submit(kind, payload, **extra):
-            _validate(kind, payload)
-            b.submit(kind, payload, **{**tp, **extra})
-
-        if path == "/loki/api/v1/push":
-            submit("loki_pb" if is_pb else "loki_json", body)
-            self._push_ok(204)
-            return True
-        if path in (
-            "/api/prom/remote/write", "/api/v1/prom/remote/write",
-            "/v1/prom/remote/write", "/prom/remote/write", "/api/prom/push",
-        ):
-            submit("remote_write", body)
-            self._push_ok(204)
-            return True
-        if path == "/v1/logs":
-            submit("otlp_logs_pb" if is_pb else "otlp_logs_json", body)
-            self._push_ok(204)
-            return True
-        if path == "/v1/traces":
-            submit("otlp_traces_pb" if is_pb else "otlp_traces_json", body)
-            self._push_ok(200, b"{}")
-            return True
-        if path == "/api/v2/logs":
-            submit("datadog_logs", body)
-            self._push_ok(202, b"{}")
-            return True
-        if path == "/api/v2/series":
-            submit("datadog_metrics", body)
-            self._push_ok(202, b"{}")
-            return True
-        if path.startswith(("/influx", "/write")):
-            # precision changes decode semantics → it keys the group
-            prec = q.get("precision", ["ns"])[0]
-            submit("influx", body, **({"precision": prec}
-                                      if prec != "ns" else {}))
-            self._push_ok(204)
-            return True
-        if path in ("/tempo/spans", "/api/v2/spans", "/tempo/api/push"):
-            submit(
-                "zipkin_ndjson" if "ndjson" in ctype else "zipkin_json", body
-            )
-            self._push_ok(202)
-            return True
-        if path.endswith("/_bulk"):
-            target = path.rsplit("/", 2)[-2] if path.count("/") > 1 else ""
-            submit("elastic_bulk", body, target=target or "unknown")
-            self._push_ok(
-                200, json.dumps({"took": 0, "errors": False}).encode()
-            )
-            return True
-        if path == "/cf/v1/insert":
-            submit("datadog_cf", body,
-                   ddsource=q.get("ddsource", ["unknown"])[0])
-            self._push_ok(202, b"{}")
-            return True
-        if "/_doc" in path or "/_create/" in path:
-            parts = [p for p in path.split("/") if p]
-            target = parts[0] if parts else "unknown"
-            doc_id = (
-                parts[2]
-                if len(parts) > 2 and parts[1] in ("_doc", "_create")
-                else None
-            )
-            extra = {"target": target}
-            if doc_id is not None:
-                extra["doc_id"] = doc_id
-            submit("elastic_doc", body, **extra)
-            self._push_ok(
-                200, json.dumps({"took": 0, "errors": False}).encode()
-            )
-            return True
-        if path == "/ingest":
-            return self._bulk_submit_pyroscope(q, body, ctype, submit)
-        if path == "/v1development/profiles":
-            if "application/json" in ctype:
-                self._json(
-                    {"error": "OTLP profiles: JSON not supported, "
-                              "use application/x-protobuf"},
-                    415,
-                )
-                return True
-            submit("otlp_profiles", body)
-            self._push_ok(200, b"{}")
-            return True
-        return False
-
-    def _bulk_submit_pyroscope(self, q, body, ctype, submit) -> bool:
-        """Pyroscope /ingest into the bulk buffer: param validation and
-        multipart extraction stay in the request path (400s must
-        precede the ack); the per-push metadata rides WITH the pprof
-        body via bulk.frame_profile so pushes with different
-        from/name/until still coalesce — the group is keyed only by
-        (sampleType, sampleUnit), which agent fleets hold constant."""
-        from gigapipe_spark.bulk import frame_profile
-        from gigapipe_spark.sources.ingest import (
-            parse_pyroscope_name,
-            pyroscope_ingest_ns,
-        )
-
-        for p in ("from", "name", "until"):
-            if p not in q:
-                self._json({"error": f"please provide {p} value"}, 400)
-                return True
-        try:
-            service, tags = parse_pyroscope_name(q["name"][0])
-            start = pyroscope_ingest_ns(int(q["from"][0]))
-            end = pyroscope_ingest_ns(int(q["until"][0]))
-        except ValueError as ex:
-            self._json({"error": str(ex)}, 400)
-            return True
-        if "multipart/form-data" in ctype:
-            body = _multipart_first_file(body, ctype)
-        # pprof bodies are gzip (magic-checked) or bare protobuf
-        # (wire-scanned) — malformed 400s before the ack
-        from gigapipe_spark.bulk import BulkValidationError, _pb_wire_ok
-
-        try:
-            if not body[:2] == b"\x1f\x8b":
-                _pb_wire_ok(body)
-        except BulkValidationError as ex:
-            self._json({"error": str(ex)}, 400)
-            return True
-        meta = {
-            "service": service,
-            "tags": tags,
-            "start": start,
-            "end": end,
-            "spy": q.get("spyName", ["process_cpu"])[0],
-        }
-        submit(
-            "pyroscope",
-            frame_profile(meta, body),
-            sample_type=q.get("sampleType", ["cpu"])[0],
-            sample_unit=q.get("sampleUnit", ["nanoseconds"])[0],
-        )
-        self._push_ok(200, b"{}")
-        return True
-
     def _push(self, path: str, q: dict, cat) -> None:
         """Push-route router (writer/router/insert.go, prom.go:9-14,
-        elastic.go:9-14, tempo.go:9-13, profile.go:10-12): body →
-        sources decoder → MV fan-out writer → per-route reference
-        status. The elastic catch-all patterns match LAST, like the
-        reference's route registration order."""
+        elastic.go:9-14, tempo.go:9-13, profile.go:10-12): body → one
+        syntactic check → bulk buffer, or `bulk.write_group` on a group
+        of one (decoder + MV fan-out) → per-route reference ack."""
         if self.mode == "reader":
             # push routes aren't registered in the reader-only service
             # (docs/configuration.md MODE=reader / READONLY)
             return self._json({"error": f"unknown route {path}"}, 404)
-        from gigapipe_spark.sources import ingest
-        from gigapipe_spark.storage.writer import (
-            ingest_fanout as _raw_ingest_fanout,
-            spans_fanout as _raw_spans_fanout,
-        )
+        from gigapipe_spark import bulk
 
-        # X-Ttl-Days header → per-request row TTL override (the
-        # reference's middleware threads it as ContextKeyTTLDays,
-        # writer/controller/middleware.go:167-173; unparsable → 0).
-        # Shadowing the fan-outs keeps every route's call site as-is.
-        ttl_hdr = self._ttl_days_header()
-
-        def _with_ttl(decoded):
-            if ttl_hdr > 0 and "ttl_days" in decoded.columns:
-                from pyspark.sql import functions as F
-
-                return decoded.withColumn(
-                    "ttl_days",
-                    F.lit(ttl_hdr).cast(dict(decoded.dtypes)["ttl_days"]),
-                )
-            return decoded
-
-        def ingest_fanout(decoded, cat, **kw):
-            return _raw_ingest_fanout(
-                decoded, cat, ttl_days=ttl_hdr, **kw
-            )
-
-        def spans_fanout(decoded, cat, **kw):
-            return _raw_spans_fanout(_with_ttl(decoded), cat, **kw)
-
-        e = self.engine
         body = self._body()
         ctype = self.headers.get("Content-Type", "")
-        is_pb = "protobuf" in ctype or "octet-stream" in ctype
-        # reference-parity 400 on malformed bodies for the SYNC path
-        # too (unmarshal errors are 400 there, error.go:68; our Spark
-        # decoders would otherwise drop bad rows silently) — the same
-        # cheap syntactic check the bulk path runs before its ack
-        kind = self._route_kind(path, q, is_pb, ctype)
-        if kind is not None:
-            from gigapipe_spark.bulk import validate as _validate
-
-            _validate(kind, body)  # BulkValidationError → 400
+        route = push_route(path, q, ctype)
+        if route is None:
+            return self._json({"error": f"unknown push route {path}"}, 404)
+        kind, params, (status, ack) = route
+        if kind == "otlp_profiles" and "application/json" in ctype:
+            return self._json(
+                {"error": "OTLP profiles: JSON not supported, "
+                          "use application/x-protobuf"},
+                415,
+            )
+        if kind == "pyroscope":
+            got = _pyroscope_payload(q, body, ctype)
+            if isinstance(got, str):
+                return self._json({"error": got}, 400)
+            body, sample = got
+            params.update(sample)
+        # reference-parity 400 on malformed bodies in both modes
+        # (unmarshal errors are 400 there, error.go:68; the Spark
+        # decoders would otherwise drop bad rows silently)
+        bulk.validate(kind, body)  # BulkValidationError → 400
+        # X-Ttl-Days header → per-request row TTL override (the
+        # reference's middleware threads it as ContextKeyTTLDays,
+        # writer/controller/middleware.go:167-173; unparsable → 0); a
+        # nonzero TTL keys the bulk group, so different TTLs never merge
+        ttl = self._ttl_days_header()
+        if ttl > 0:
+            params["ttl_days"] = str(ttl)
         # X-Async-Insert (middleware.go getAsyncMode): with bulk
         # configured every push is async by default; "false"/"0" forces
-        # this request through the synchronous fan-out (the reference's
+        # this request through the synchronous write (the reference's
         # INSERT_MODE_SYNC), e.g. a client that needs a durable ack.
         sync_requested = (
             self.headers.get("X-Async-Insert", "").strip().lower()
             in ("false", "0")
         )
-        if (
-            self.bulk is not None
-            and not sync_requested
-            and self._bulk_submit(path, q, body, is_pb, ctype)
-        ):
-            return None  # acked; the flusher owns decode + fan-out
-
-        def _raw_bin():
-            return e.spark.createDataFrame(
-                [(bytearray(body),)], "payload binary"
-            )
-
-        if path == "/loki/api/v1/push":
-            if is_pb:
-                from gigapipe_spark.sources.protowire import loki_push_pb
-
-                decoded = loki_push_pb(_raw_bin())
-            else:
-                decoded = ingest.loki_push(self._raw_df(body))
-            ingest_fanout(decoded, cat)
-            return self._push_ok(204)
-        if path in (
-            "/api/prom/remote/write",
-            "/api/v1/prom/remote/write",
-            "/v1/prom/remote/write",
-            "/prom/remote/write",
-            "/api/prom/push",  # legacy alias, prom.go:14
-        ):
-            from gigapipe_spark.sources.protowire import remote_write
-
-            ingest_fanout(remote_write(_raw_bin()), cat)
-            return self._push_ok(204)
-        if path == "/v1/logs":  # OTLP
-            if is_pb:
-                from gigapipe_spark.sources.protowire import otlp_logs_pb
-
-                decoded = otlp_logs_pb(_raw_bin())
-            else:
-                decoded = ingest.otlp_logs(
-                    self._raw_df(body), now_ns=time.time_ns()
-                )
-            ingest_fanout(decoded, cat)
-            return self._push_ok(204)
-        if path == "/v1/traces":  # OTLP
-            if is_pb:
-                from gigapipe_spark.sources.protowire import otlp_traces_pb
-
-                decoded = otlp_traces_pb(_raw_bin())
-            else:
-                decoded = ingest.otlp_traces(self._raw_df(body))
-            spans_fanout(decoded, cat)
-            return self._push_ok(200, b"{}")
-        if path == "/api/v2/logs":  # Datadog logs
-            ingest_fanout(
-                ingest.datadog_logs(
-                    self._raw_df(body), now_ns=time.time_ns()
-                ), cat
-            )
-            return self._push_ok(202, b"{}")
-        if path == "/api/v2/series":  # Datadog metrics, insert.go:12
-            decoded = ingest.datadog_metrics(
-                self._raw_df(body), now_ns=time.time_ns()
-            )
-            ingest_fanout(decoded, cat)
-            return self._push_ok(202, b"{}")
-        if path == "/cf/v1/insert":  # Cloudflare via Datadog, insert.go:13
-            lines = e.spark.createDataFrame(
-                [(ln,) for ln in body.decode("utf-8", "replace").splitlines()
-                 if ln.strip()],
-                "line string",
-            )
-            decoded = ingest.datadog_cf(
-                lines, ddsource=q.get("ddsource", ["unknown"])[0],
-                now_ns=time.time_ns(),
-            )
-            ingest_fanout(decoded, cat)
-            return self._push_ok(202, b"{}")
-        if path.startswith(("/influx", "/write")):
-            # one row per PROTOCOL LINE (a push body carries many);
-            # precision comes from the write API's query param
-            # (influx.go:44 SetTimePrecision), absent timestamps stamp
-            # receive time like the reference
-            lines = e.spark.createDataFrame(
-                [(ln,) for ln in body.decode("utf-8", "replace").splitlines()
-                 if ln.strip()],
-                "line string",
-            )
-            ingest_fanout(
-                ingest.influx_line(
-                    lines,
-                    precision=q.get("precision", ["ns"])[0],
-                    now_ns=time.time_ns(),
-                ),
-                cat,
-            )
-            return self._push_ok(204)
-        if path in ("/tempo/spans", "/api/v2/spans", "/tempo/api/push"):
-            # content-type "ndjson" selects the line decoder (tempo.go:
-            # PushV2 withSimpleParser("ndjson", ...)); else JSON array
-            dec = (
-                ingest.zipkin_ndjson
-                if "ndjson" in ctype
-                else ingest.zipkin_spans
-            )
-            spans_fanout(dec(self._raw_df(body)), cat)
-            return self._push_ok(202)
-        if path == "/ingest":  # Pyroscope, profile.go:10
-            return self._push_pyroscope(q, body, ctype, cat)
-        if path == "/v1development/profiles":  # OTLP profiles, profile.go:12
-            if "application/json" in ctype:
-                return self._json(
-                    {"error": "OTLP profiles: JSON not supported, "
-                              "use application/x-protobuf"},
-                    415,
-                )
-            return self._push_otlp_profiles(body, cat)
-        if path.endswith("/_bulk"):  # Elastic, elastic.go:13-14
-            target = path.rsplit("/", 2)[-2] if path.count("/") > 1 else ""
-            ingest_fanout(
-                ingest.elastic_bulk(
-                    self._raw_df(body), target=target or "unknown",
-                    now_ns=time.time_ns(),
-                ),
-                cat,
-            )
-            return self._push_ok(
-                200, json.dumps({"took": 0, "errors": False}).encode()
-            )
-        if "/_doc" in path or "/_create/" in path:  # elastic.go:9-12
-            parts = [p for p in path.split("/") if p]
-            target = parts[0] if parts else "unknown"
-            doc_id = (
-                parts[2]
-                if len(parts) > 2 and parts[1] in ("_doc", "_create")
-                else None
-            )
-            raw = e.spark.createDataFrame(
-                [(body.decode("utf-8", "replace"), target, doc_id,
-                  time.time_ns())],
-                "payload string, target string, doc_id string,"
-                " ingest_ts_ns long",
-            )
-            ingest_fanout(ingest.elastic_doc(raw), cat)
-            return self._push_ok(
-                200, json.dumps({"took": 0, "errors": False}).encode()
-            )
-        return self._json({"error": f"unknown push route {path}"}, 404)
-
-    def _push_pyroscope(self, q: dict, body: bytes, ctype: str, cat) -> None:
-        """Pyroscope /ingest (writer/router/profile.go:10 →
-        binary_pprof.go:25-170): from/name/until query params required,
-        `name` is service{k=v,...}, body is a (gzip) pprof — multipart
-        bodies contribute their first file part. Lands through the
-        shared folded-tree pipeline into profiles_fanout."""
-        from pyspark.sql import functions as F
-
-        from gigapipe_spark.sources import protowire as pw
-        from gigapipe_spark.sources.ingest import (
-            folded_profiles_input,
-            parse_pyroscope_name,
-            pyroscope_ingest_ns,
-        )
-        from gigapipe_spark.storage.writer import profiles_fanout
-
-        for p in ("from", "name", "until"):
-            if p not in q:
-                return self._json(
-                    {"error": f"please provide {p} value"}, 400
-                )
-        try:
-            service, tags = parse_pyroscope_name(q["name"][0])
-        except ValueError as ex:
-            return self._json({"error": str(ex)}, 400)
-        start = pyroscope_ingest_ns(int(q["from"][0]))
-        end = pyroscope_ingest_ns(int(q["until"][0]))
-        if "multipart/form-data" in ctype:
-            body = _multipart_first_file(body, ctype)
-        # same decode-before-ack 400 as the bulk path: pprof bodies are
-        # gzip (magic-checked) or bare protobuf (wire-scanned)
-        from gigapipe_spark.bulk import _pb_wire_ok
-
-        if not body[:2] == b"\x1f\x8b":
-            _pb_wire_ok(body)  # BulkValidationError → 400
-        raw = self.engine.spark.createDataFrame(
-            [(f"{service}-{start}", bytearray(body))],
-            "profile_id string, payload binary",
-        )
-        st, su = q.get("sampleType", ["cpu"])[0], q.get(
-            "sampleUnit", ["nanoseconds"]
-        )[0]
-        tag_cols = []
-        for k, v in tags.items():
-            tag_cols += [F.lit(k), F.lit(v)]
-        folded = pw.pprof_folded(raw).select(
-            "profile_id",
-            F.lit(start).alias("timestamp_ns"),
-            F.lit(q.get("spyName", ["process_cpu"])[0]).alias("type"),
-            F.lit(service).alias("service_name"),
-            F.lit(st).alias("period_type"),
-            F.lit(su).alias("period_unit"),
-            (F.create_map(*tag_cols) if tag_cols
-             else F.create_map().cast("map<string,string>")).alias("tags"),
-            F.lit(end - start).cast("long").alias("duration_ns"),
-            "line",
-        )
-        profiles_fanout(
-            folded_profiles_input(folded, st, su), cat
-        )
-        return self._push_ok(200, b"{}")
-
-    def _push_otlp_profiles(self, body: bytes, cat) -> None:
-        """OTLP profiles push (profile.go:12 → otlp_profile.go): decode
-        once, then one folded-tree fanout per distinct profile type id
-        in the batch (bounded by the handful of sample types a single
-        push carries, never corpus-sized)."""
-        from pyspark.sql import functions as F
-
-        from gigapipe_spark.sources import protowire as pw
-        from gigapipe_spark.sources.ingest import folded_profiles_input
-        from gigapipe_spark.storage.writer import profiles_fanout
-
-        now = time.time_ns()
-        raw = self.engine.spark.createDataFrame(
-            [("otlp", bytearray(body))], "profile_id string, payload binary"
-        )
-        folded = pw.otlp_profiles_pb(raw).persist()
-        type_ids = [r["type_id"] for r in
-                    folded.select("type_id").distinct().collect()]
-        for tid in type_ids:
-            st, _, su = tid.partition(":")
-            rows = folded.filter(F.col("type_id") == tid).select(
-                F.concat_ws(
-                    "-", F.col("profile_id"), F.col("service_name"),
-                    F.lit(tid)
-                ).alias("profile_id"),
-                F.lit(now).alias("timestamp_ns"),
-                F.lit(st or "process_cpu").alias("type"),
-                F.col("service_name"),
-                F.lit(st or "cpu").alias("period_type"),
-                F.lit(su or "nanoseconds").alias("period_unit"),
-                F.create_map().cast("map<string,string>").alias("tags"),
-                F.lit(0).cast("long").alias("duration_ns"),
-                "line",
-            )
-            profiles_fanout(
-                folded_profiles_input(
-                    rows, st or "cpu", su or "nanoseconds"
-                ),
-                cat,
-            )
-        folded.unpersist()
-        return self._push_ok(200, b"{}")
+        if self.bulk is not None and not sync_requested:
+            self.bulk.submit(kind, body, **params)  # BulkOverflow → 503
+        else:
+            bulk.write_group(self.engine.spark, cat, kind, params, [body])
+        return self._push_ok(status, ack)
 
     # ------------------------------------------------------- WebSocket
     def _tail_ws(self, q: dict) -> None:

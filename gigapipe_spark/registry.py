@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from gigapipe_spark.logql.compiler import LogQLContext
 from gigapipe_spark.logql.compiler import query as logql_query
 from gigapipe_spark.sources.oracle import with_spans
+from gigapipe_spark.sources.views import session_memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -64,30 +65,11 @@ def register(name: str, oracle: str | None = None):
 # call. Entries with call-time side effects (store_roundtrip_* writes,
 # engine construction) never route through these builders and are
 # never memoized; store-backed contexts re-list when the store's
-# mutation seq moves (StoreEngine).
-# Keyed on the session OBJECT (not id(spark)): CPython id() reuse
-# after GC could serve a stale plan bound to a DEAD SparkSession to a
-# brand-new one. Weak keying alone does NOT evict here — the memoized
-# DataFrames strongly reference their session, keeping the weak key
-# alive (ADVICE r13) — so eviction is a stopped-session sweep on every
-# access (session.evict_stopped_sessions).
-import weakref as _weakref
-
-_PLAN_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+# mutation seq moves (StoreEngine). The memo is views.session_memo
+# (keying and stopped-session eviction documented there).
 def _plan_memo(key: tuple, build) -> DataFrame:
-    from gigapipe_spark.session import evict_stopped_sessions
-
-    spark = key[0]
-    evict_stopped_sessions(_PLAN_MEMO)
-    memo = _PLAN_MEMO.setdefault(spark, {})
-    sub = key[1:]
-    if sub not in memo:
-        memo[sub] = build()
-    return memo[sub]
+    spark, sf_dir, *name = key
+    return session_memo(spark, sf_dir, ("plan", *name), build)
 
 
 def _rounded(df: DataFrame, *cols: str) -> DataFrame:
@@ -3781,18 +3763,14 @@ def store_roundtrip_pyroscope(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select("fn_name", "self", "total").orderBy("fn_name")
 
 
-_RULE_BASE_ROOT: "_weakref.WeakKeyDictionary[SparkSession, str]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def _rule_base_store(spark: SparkSession) -> str:
     """One pushed 5-line store shared by store_roundtrip_ruler and
     store_roundtrip_rules (VERDICT r7 task 3: the base push is
     identical in both; building it twice bought only cold latency).
     The two entries write back DIFFERENT recorded metric names and both
     reads filter by __name__, so sharing cannot cross-talk. Memoized
-    per Spark session; rebuilt from scratch in every new process."""
+    per Spark session (views.session_memo); rebuilt from scratch in
+    every new process."""
     import json as _json
     import os
     import shutil
@@ -3801,30 +3779,30 @@ def _rule_base_store(spark: SparkSession) -> str:
     from gigapipe_spark.sources.ingest import loki_push
     from gigapipe_spark.storage.writer import Catalog, ingest_fanout
 
-    if spark in _RULE_BASE_ROOT:
-        return _RULE_BASE_ROOT[spark]
-    root = os.path.join(tempfile.gettempdir(), "gigapipe_store_rulebase")
-    shutil.rmtree(root, ignore_errors=True)
-    t0 = 1_700_000_000_000_000_000
-    payload = _json.dumps(
-        {
-            "streams": [
-                {
-                    "stream": {"app": "web"},
-                    "values": [
-                        [str(t0 + i * 1_000_000_000), f"hit {i}"]
-                        for i in range(5)
-                    ],
-                }
-            ]
-        }
-    )
-    ingest_fanout(
-        loki_push(spark.createDataFrame([(payload,)], "payload string")),
-        Catalog(root),
-    )
-    _RULE_BASE_ROOT[spark] = root
-    return root
+    def build() -> str:
+        root = os.path.join(tempfile.gettempdir(), "gigapipe_store_rulebase")
+        shutil.rmtree(root, ignore_errors=True)
+        t0 = 1_700_000_000_000_000_000
+        payload = _json.dumps(
+            {
+                "streams": [
+                    {
+                        "stream": {"app": "web"},
+                        "values": [
+                            [str(t0 + i * 1_000_000_000), f"hit {i}"]
+                            for i in range(5)
+                        ],
+                    }
+                ]
+            }
+        )
+        ingest_fanout(
+            loki_push(spark.createDataFrame([(payload,)], "payload string")),
+            Catalog(root),
+        )
+        return root
+
+    return session_memo(spark, None, "rule_base_store", build)
 
 
 @register(

@@ -182,7 +182,8 @@ def _dim_memo(spark: SparkSession) -> dict:
 def session_memo(spark: SparkSession, sf_dir: str, name, build):
     """`build()` memoized per (session, sf_dir, name): driver-side
     values derived from the session's views (layout decisions, index
-    stats, TraceQL probe verdicts)."""
+    stats, TraceQL probe verdicts, the registry's fixture-query plans
+    and its shared ruler store)."""
     memo = _dim_memo(spark)
     key = (sf_dir, name)
     if key not in memo:

@@ -293,16 +293,22 @@ def test_bulk_cf_and_elastic_doc_routes(spark, bulk_gateway):
     gw, base, cat = bulk_gateway
     assert _post(base, "/cf/v1/insert?ddsource=cfsrc",
                  b"line one\nline two\n", "text/plain") == 202
-    assert _post(base, "/myidx/_doc/42",
-                 json.dumps({"message": "doc body"}).encode()) == 200
+    # CRLF line ends split like LF ones: no trailing \r is stored
+    assert _post(base, "/cf/v1/insert?ddsource=cfsrc",
+                 b"line one\r\nline two\r\n", "text/plain") == 202
+    doc = json.dumps({"message": "doc body"})
+    assert _post(base, "/myidx/_doc/42", doc.encode()) == 200
     _wait_flushed(gw)
     assert gw.bulk.errors == 0
     deadline = time.monotonic() + 60
     while time.monotonic() < deadline:
-        if cat.read(spark, "samples").count() >= 3:
+        if cat.read(spark, "samples").count() >= 5:
             break
         time.sleep(0.2)
-    assert cat.read(spark, "samples").count() == 3  # 2 cf lines + 1 doc
+    samples = cat.read(spark, "samples")
+    assert samples.count() == 5  # 2 × 2 cf lines + 1 doc
+    stored = {r["string"] for r in samples.select("string").collect()}
+    assert stored == {"line one", "line two", doc}
 
 
 def test_bulk_pyroscope_ingest_coalesces(spark, bulk_gateway):
@@ -391,16 +397,18 @@ def test_timestampless_logs_stamp_receive_time(spark, bulk_gateway):
 
 
 def test_push_validation_agrees_across_modes(spark, tmp_path):
-    """Drift guard for httpd._route_kind vs _bulk_submit: every
-    malformed body that 400s in bulk mode must 400 in SYNC mode too
-    (the reference maps unmarshal errors to 400 in both shapes,
-    writer/utils/errors/error.go:68), and valid pushes must keep their
-    reference acks in sync mode."""
+    """Every malformed body or /ingest parameter that 400s in bulk
+    mode must 400 in SYNC mode too (the reference maps unmarshal
+    errors to 400 in both shapes, writer/utils/errors/error.go:68),
+    and valid pushes must keep their reference acks in sync mode. Both
+    modes resolve the route through httpd.push_route and run the same
+    checks before either enqueueing or writing."""
     import urllib.error
 
     from gigapipe_spark.httpd import HttpGateway
     from gigapipe_spark.storage.query import StoreEngine
     from gigapipe_spark.storage.writer import Catalog
+    from tests.test_httpd import _pprof_gz_body
 
     root = str(tmp_path / "syncstore")
     eng = StoreEngine(spark, root, catalog=Catalog(root))
@@ -418,6 +426,10 @@ def test_push_validation_agrees_across_modes(spark, tmp_path):
             ("/cf2/_doc/1", b"not json", "application/json"),
             ("/ingest?name=a&from=1&until=2", b"\x07\x08junk",
              "binary/octet-stream"),
+            ("/ingest?name=a&from=abc&until=2", _pprof_gz_body(),
+             "binary/octet-stream"),
+            ("/ingest?name=a&from=1&until=zz", _pprof_gz_body(),
+             "binary/octet-stream"),
         ]
         for path, body, ctype in bad:
             with pytest.raises(urllib.error.HTTPError) as ei:
@@ -430,3 +442,75 @@ def test_push_validation_agrees_across_modes(spark, tmp_path):
                      "text/plain") == 204
     finally:
         gw.stop()
+
+
+# every push route the gateway serves: (method, path, content type)
+_PUSH_ROUTES = [
+    ("POST", "/loki/api/v1/push", "application/json"),
+    ("POST", "/loki/api/v1/push", "application/x-protobuf"),
+    ("POST", "/api/prom/remote/write", "application/x-protobuf"),
+    ("POST", "/api/v1/prom/remote/write", "application/x-protobuf"),
+    ("POST", "/v1/prom/remote/write", "application/x-protobuf"),
+    ("POST", "/prom/remote/write", "application/x-protobuf"),
+    ("POST", "/api/prom/push", "application/x-protobuf"),
+    ("POST", "/v1/logs", "application/json"),
+    ("POST", "/v1/logs", "application/x-protobuf"),
+    ("POST", "/v1/traces", "application/json"),
+    ("POST", "/v1/traces", "application/x-protobuf"),
+    ("POST", "/api/v2/logs", "application/json"),
+    ("POST", "/api/v2/series", "application/json"),
+    ("POST", "/cf/v1/insert?ddsource=cf", "text/plain"),
+    ("POST", "/influx/write?precision=ms", "text/plain"),
+    ("POST", "/influx/api/v2/write", "text/plain"),
+    ("POST", "/write", "text/plain"),
+    ("POST", "/tempo/spans", "application/json"),
+    ("POST", "/tempo/spans", "application/x-ndjson"),
+    ("POST", "/api/v2/spans", "application/json"),
+    ("POST", "/api/v2/spans", "application/x-ndjson"),
+    ("POST", "/tempo/api/push", "application/json"),
+    ("POST", "/tempo/api/push", "application/x-ndjson"),
+    ("POST", "/_bulk", "application/x-ndjson"),
+    ("POST", "/es1/_bulk", "application/x-ndjson"),
+    ("POST", "/es1/_doc", "application/json"),
+    ("POST", "/es1/_doc/7", "application/json"),
+    ("POST", "/es1/_create/7", "application/json"),
+    ("PUT", "/es1/_doc/7", "application/json"),
+    ("PUT", "/es1/_create/7", "application/json"),
+    ("POST", "/ingest?name=a&from=1&until=2", "binary/octet-stream"),
+    ("POST", "/v1development/profiles", "application/x-protobuf"),
+]
+
+
+def test_push_route_table_covers_every_kind():
+    """The gateway's one push route table (httpd.push_route): every
+    served push path resolves to a kind with both a decoder
+    (bulk.KINDS) and a pre-ack check (bulk._VALIDATORS), every kind is
+    reachable from some route, and any other path resolves to None.
+    No SparkSession is started."""
+    from urllib.parse import parse_qs, urlparse
+
+    from gigapipe_spark import bulk
+    from gigapipe_spark.httpd import push_route
+
+    reached = set()
+    for _method, target, ctype in _PUSH_ROUTES:
+        url = urlparse(target)
+        route = push_route(url.path, parse_qs(url.query), ctype)
+        assert route is not None, target
+        kind, params, (status, ack) = route
+        assert kind in bulk.KINDS and kind in bulk._VALIDATORS, (target, kind)
+        assert status in (200, 202, 204), target
+        assert status != 204 or ack is None, target  # 204 has no body
+        reached.add(kind)
+    assert reached == set(bulk.KINDS)
+    for path in ("/nope", "/loki/api/v1/query", "/api/v1/query_range", "/"):
+        assert push_route(path, {}, "application/json") is None, path
+    # decode params come from the route itself
+    assert push_route("/es1/_doc/7", {}, "")[1] == {
+        "target": "es1", "doc_id": "7"
+    }
+    assert push_route("/_bulk", {}, "")[1] == {"target": "unknown"}
+    assert push_route("/influx/write", {"precision": ["ms"]}, "")[1] == {
+        "precision": "ms"
+    }
+    assert push_route("/influx/write", {}, "")[1] == {}
