@@ -430,11 +430,21 @@ class Engine:
         return m
 
     def prom_query(self, expr: str, time_ns: int | None = None) -> DataFrame:
-        """/api/v1/query — instant vector: latest step at/before the
-        evaluation time, per series."""
-        m = _promql_query(self.promctx(), expr)
+        """/api/v1/query — instant vector (ref:
+        router/prom_query_instant.go, the stock engine's instant
+        evaluation).
+
+        With `time_ns` the expression is compiled at that one instant
+        (PromQLContext.at_ns): each range selector reads (t - range, t],
+        each instant selector its newest sample in (t - 5m, t], every
+        row is stamped t, and no sample after t is read. Without a time:
+        the whole history on the step grid, reduced to each series'
+        newest step."""
+        ctx = self.promctx()
         if time_ns is not None:
-            m = m.filter(F.col("timestamp_ns") <= time_ns)
+            ctx.at_ns = time_ns
+            return _promql_query(ctx, expr)
+        m = _promql_query(ctx, expr)
         group_cols = [c for c in m.columns if c not in ("timestamp_ns", "value")]
         w_val = F.max_by("value", F.col("timestamp_ns"))
         return m.groupBy(*group_cols).agg(

@@ -32,7 +32,7 @@ from gigapipe_spark.logql.compiler import (
     _labels_keyed_agg,
 )
 from gigapipe_spark.model.fingerprint import canonical_labels_str
-from gigapipe_spark.promql.functions import fp_entries_agg
+from gigapipe_spark.promql.functions import fp_entries_agg, window_key
 from gigapipe_spark.promql import parser as P
 from gigapipe_spark.promql.parser import (
     AggExpr,
@@ -46,6 +46,7 @@ from gigapipe_spark.sources import views
 
 
 ROLLUP_NS = 15_000_000_000
+_LOOKBACK_NS = 5 * 60 * 1_000_000_000  # instant-vector staleness window
 
 
 @dataclass
@@ -62,12 +63,23 @@ class PromQLContext:
     # fixture it stops above the counter cumsum, which needs history.
     start_ns: int | None = None
     end_ns: int | None = None
+    # instant evaluation time (/api/v1/query): query() pins every
+    # selector without its own @ to it, so the tree evaluates at that one
+    # point — one window (t - range, t] per range selector, the newest
+    # sample in (t - 5m, t] per instant selector, every row stamped t
+    # (ref: the stock engine's instant evaluation, instant_vector.go)
+    at_ns: int | None = None
     _scan_bounds: tuple = (None, None)
     _metrics: DataFrame | None = None
     _rollup: DataFrame | None = None
     _logctx: LogQLContext | None = None
 
     def set_scan_bounds(self, lookback_ns: int) -> None:
+        if self.at_ns is not None:
+            # instant: only subquery inners scan unpinned; no sample
+            # after t is ever read
+            self._scan_bounds = (self.at_ns - lookback_ns, self.at_ns + 1)
+            return
         lo = None if self.start_ns is None else self.start_ns - lookback_ns
         self._scan_bounds = (lo, self.end_ns)
 
@@ -128,30 +140,25 @@ def _selector_samples(
         matchers.append(LA.Matcher(label="__name__", op="=", value=sel.name))
     lctx = ctx.logctx()
     df = ctx.metrics()
-    if sel.at_ns is None:  # @-pinned selectors read outside the window
+    if sel.at_ns is None:
         df = ctx.bound_scan(df)
+    else:
+        # pinned: the selector's one window (at - width, at] in shifted
+        # time, applied as raw timestamp bounds the parquet scan takes
+        hi = sel.at_ns - sel.offset_ns
+        lo = hi - (sel.range_ns or _LOOKBACK_NS)
+        df = df.filter(
+            (F.col("timestamp_ns") > lo) & (F.col("timestamp_ns") <= hi)
+        )
     if matchers:
         fps = fingerprints(lctx, LA.Selector(matchers=matchers))
         df = df.join(F.broadcast(fps), "fingerprint", "inner")
-    if not with_labels:
-        if sel.offset_ns:
-            df = df.withColumn(
-                "timestamp_ns", F.col("timestamp_ns") + F.lit(sel.offset_ns)
-            )
-        if sel.at_ns is not None:
-            df = df.filter(F.col("timestamp_ns") <= sel.at_ns)
-        return df
-    series = ctx.series().select("fingerprint", "labels")
-    df = df.join(F.broadcast(series), "fingerprint", "left")
+    if with_labels:
+        series = ctx.series().select("fingerprint", "labels")
+        df = df.join(F.broadcast(series), "fingerprint", "left")
     if sel.offset_ns:
         df = df.withColumn("timestamp_ns", F.col("timestamp_ns") + F.lit(sel.offset_ns))
-    if sel.at_ns is not None:
-        # @-modifier: restrict to data at/before the pinned time
-        df = df.filter(F.col("timestamp_ns") <= sel.at_ns)
     return df
-
-
-_LOOKBACK_NS = 5 * 60 * 1_000_000_000  # instant-vector staleness window
 
 
 def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
@@ -170,7 +177,6 @@ def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
     df = _selector_samples(ctx, sel, with_labels=False)
     series = F.broadcast(ctx.series().select("fingerprint", "labels"))
     if sel.at_ns is not None:
-        df = df.filter(F.col("timestamp_ns") > sel.at_ns - _LOOKBACK_NS)
         return (
             df.groupBy("fingerprint")
             .agg(F.max_by("value", "timestamp_ns").alias("value"))
@@ -233,31 +239,45 @@ def _range_fn_subquery(ctx: PromQLContext, fn: FnCall, sq) -> DataFrame:
     reference) accepts ANY range function over a subquery, so the full
     dispatcher surface routes here (simple/counter/quantile plus
     mad/ts_of_*/deriv/predict_linear/holt_winters). The inner
-    evaluation runs at sq.step_ns."""
+    evaluation runs at sq.step_ns.
+
+    At an instant t (ctx.at_ns) the inner runs unpinned on its own grid
+    inside (t - range, t] — its window, with no sample after t — and the
+    range fn is the one window over those points, stamped t."""
     if fn.fn not in _SUBQUERY_FNS:
         raise NotImplementedError(f"{fn.fn} over a subquery")
     import dataclasses
 
+    at = ctx.at_ns
     inner_ctx = dataclasses.replace(ctx, step_ns=sq.step_ns, _metrics=None, _rollup=None, _logctx=None)
+    if at is not None:
+        # the window as the inner's request window: an unaligned end
+        # also keeps the inner off 15s rollup cells that reach past t
+        inner_ctx = dataclasses.replace(
+            inner_ctx, at_ns=None, start_ns=at - sq.range_ns, end_ns=at + 1
+        )
     inner = compile_expr(inner_ctx, sq.inner)
-    bucket = _bucket(F.col("timestamp_ns"), sq.range_ns).alias("timestamp_ns")
+    if at is not None:
+        ts = F.col("timestamp_ns")
+        inner = inner.filter((ts > at - sq.range_ns) & (ts <= at))
+    wb = window_key(sq.range_ns, at)
+    bucket = wb.alias("timestamp_ns")
     if fn.fn in _COUNTER_FNS:
         # counter math over the inner expression's step-grid points —
         # same window/reset formula as the raw path
-        wb = _bucket(F.col("timestamp_ns"), sq.range_ns)
         return _counter_agg(inner, wb, sq.range_ns, fn.fn)
     if fn.fn == "deriv":
         from gigapipe_spark.promql import functions as _pf
 
-        return _pf.deriv(inner, sq.range_ns)
+        return _pf.deriv(inner, sq.range_ns, at)
     if fn.fn == "predict_linear":
         from gigapipe_spark.promql import functions as _pf
 
-        return _pf.predict_linear(inner, sq.range_ns, fn.param or 0.0)
+        return _pf.predict_linear(inner, sq.range_ns, fn.param or 0.0, at)
     if fn.fn in ("holt_winters", "double_exponential_smoothing"):
         from gigapipe_spark.promql import functions as _pf
 
-        out = _pf.holt_winters(inner, fn.param, fn.param2, sq.range_ns)
+        out = _pf.holt_winters(inner, fn.param, fn.param2, sq.range_ns, at)
         # holt_winters drops labels; the inner's labels may be DERIVED
         # (e.g. sum by(...)), so rehydrate from the inner matrix itself,
         # not from ctx.series()
@@ -293,7 +313,6 @@ def _range_fn_subquery(ctx: PromQLContext, fn: FnCall, sq) -> DataFrame:
     if fn.fn == "mad_over_time":
         # window median + regroup share the (fingerprint, bucket)
         # partitioning — one exchange, like the raw path (:437)
-        wb = _bucket(F.col("timestamp_ns"), sq.range_ns)
         w = Window.partitionBy("fingerprint", wb)
         med = F.percentile("value", F.lit(0.5)).over(w)
         return (
@@ -398,10 +417,10 @@ def _range_fn(
 
         df = _selector_samples(ctx, sel)
         if fn.fn == "deriv":
-            return _pf.deriv(df, rng)
+            return _pf.deriv(df, rng, sel.at_ns)
         if fn.fn == "predict_linear":
-            return _pf.predict_linear(df, rng, fn.param or 0.0)
-        out = _pf.holt_winters(df, fn.param, fn.param2, rng)
+            return _pf.predict_linear(df, rng, fn.param or 0.0, sel.at_ns)
+        out = _pf.holt_winters(df, fn.param, fn.param2, rng, sel.at_ns)
         series = ctx.series().select(
             "fingerprint", "labels"
         )
@@ -413,7 +432,10 @@ def _range_fn(
         # the selector matched nothing — same grid derivation as
         # absent(), bucketed by the range instead of the step
         df = _selector_samples(ctx, sel)
-        if ctx.start_ns is not None and ctx.end_ns is not None:
+        if sel.at_ns is not None:
+            # pinned: the one window (at - range, at]
+            grid = ctx.spark.range(1).select(F.lit(sel.at_ns).alias("timestamp_ns"))
+        elif ctx.start_ns is not None and ctx.end_ns is not None:
             # explicit window: pure-arithmetic grid, no extent scan
             lo = ctx.start_ns - ctx.start_ns % rng
             grid = ctx.spark.range(1).select(
@@ -435,9 +457,7 @@ def _range_fn(
                     ).alias("timestamp_ns")
                 )
             )
-        present = df.select(
-            _bucket(F.col("timestamp_ns"), rng).alias("timestamp_ns")
-        ).distinct()
+        present = df.select(window_key(rng, sel.at_ns).alias("timestamp_ns")).distinct()
         return grid.join(present, "timestamp_ns", "left_anti").select(
             F.lit(0).cast("long").alias("fingerprint"),
             F.expr("map()").cast("map<string,string>").alias("labels"),
@@ -473,12 +493,7 @@ def _range_fn(
         df = df.withColumn("labels", new_labels).withColumn(
             "fingerprint", F.xxhash64(canonical_labels_str(F.col("labels")))
         )
-    if sel.at_ns is not None:
-        # pinned range: one window (at-range, at] → one output point
-        df = df.filter(F.col("timestamp_ns") > sel.at_ns - rng)
-        bucket = F.lit(sel.at_ns).alias("timestamp_ns")
-    else:
-        bucket = _bucket(F.col("timestamp_ns"), rng).alias("timestamp_ns")
+    bucket = window_key(rng, sel.at_ns).alias("timestamp_ns")
     if fn.fn in _SIMPLE_RANGE or fn.fn == "quantile_over_time":
         agg = (
             F.percentile("value", F.lit(fn.param))
@@ -505,12 +520,7 @@ def _range_fn(
     if fn.fn in _COUNTER_FNS:
         # window: per-series consecutive-pair deltas WITHIN each bucket
         # (@-pinned ranges are one window per series)
-        b = (
-            F.lit(sel.at_ns)
-            if sel.at_ns is not None
-            else _bucket(F.col("timestamp_ns"), rng)
-        )
-        return _counter_agg(df, b, rng, fn.fn)
+        return _counter_agg(df, window_key(rng, sel.at_ns), rng, fn.fn)
     if fn.fn in (
         "ts_of_min_over_time", "ts_of_max_over_time", "ts_of_last_over_time"
     ):
@@ -544,12 +554,7 @@ def _range_fn(
         # interpolation, twice). One shuffle: the window median and the
         # groupBy share the (fingerprint, bucket) partitioning, so the
         # second aggregation adds no exchange.
-        b = (
-            F.lit(sel.at_ns)
-            if sel.at_ns is not None
-            else _bucket(F.col("timestamp_ns"), rng)
-        )
-        w = Window.partitionBy("fingerprint", b)
+        w = Window.partitionBy("fingerprint", window_key(rng, sel.at_ns))
         med = F.percentile("value", F.lit(0.5)).over(w)
         out = (
             df.withColumn("__med", med)
@@ -878,13 +883,11 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
             # sample. The grid derives lazily from the store's time
             # bounds (one tiny agg subquery — no driver-side action).
             inner = compile_expr(ctx, e.args[0])
-            step = F.lit(ctx.step_ns)
             grid = _step_grid(ctx)
-            present = inner.select(
-                (F.col("timestamp_ns") - F.pmod(F.col("timestamp_ns"), step)).alias(
-                    "timestamp_ns"
-                )
-            ).distinct()
+            ts = F.col("timestamp_ns")
+            if ctx.at_ns is None:
+                ts = _bucket(ts, ctx.step_ns)
+            present = inner.select(ts.alias("timestamp_ns")).distinct()
             missing = grid.join(present, "timestamp_ns", "left_anti")
             return missing.select(
                 F.lit(0).cast("long").alias("fingerprint"),
@@ -1109,7 +1112,10 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
 
 def _step_grid(ctx: PromQLContext):
     """Step-aligned timestamp grid over the store's time extent, derived
-    lazily (one tiny agg subquery — no driver-side action)."""
+    lazily (one tiny agg subquery — no driver-side action); at an
+    instant, the one row t."""
+    if ctx.at_ns is not None:
+        return ctx.spark.range(1).select(F.lit(ctx.at_ns).alias("timestamp_ns"))
     step = F.lit(ctx.step_ns)
     return (
         ctx.metrics()
@@ -1356,10 +1362,13 @@ def _max_lookback_ns(e) -> int:
 
 def _resolve_at_refs(ctx: PromQLContext, e) -> None:
     """`@ start()` / `@ end()` pin to the request window's edges
-    (upstream promql preprocessors): resolved before compilation."""
+    (upstream promql preprocessors): resolved before compilation. An
+    instant query's window is its one time: both resolve to it."""
     if isinstance(e, VectorSelector):
         if e.at_ref:
-            t = ctx.start_ns if e.at_ref == "start" else ctx.end_ns
+            t = ctx.at_ns
+            if t is None:
+                t = ctx.start_ns if e.at_ref == "start" else ctx.end_ns
             if t is None:
                 raise ValueError("@ start()/end() requires an explicit query window")
             e.at_ns = t
@@ -1376,8 +1385,28 @@ def _resolve_at_refs(ctx: PromQLContext, e) -> None:
         _resolve_at_refs(ctx, e.right)
 
 
+def _pin(e, at_ns: int) -> None:
+    """Pin every selector without its own @ to the instant `at_ns`. A
+    subquery's inner keeps its own grid (_range_fn_subquery)."""
+    if isinstance(e, VectorSelector):
+        if e.at_ns is None:
+            e.at_ns = at_ns
+    elif isinstance(e, FnCall):
+        for a in e.args:
+            _pin(a, at_ns)
+    elif isinstance(e, AggExpr):
+        _pin(e.inner, at_ns)
+    elif isinstance(e, PromBinOp):
+        _pin(e.left, at_ns)
+        _pin(e.right, at_ns)
+
+
 def query(ctx: PromQLContext, text: str) -> DataFrame:
+    """Compile `text` to a matrix: over the step grid, or — with
+    `ctx.at_ns` set — at that one instant, every row stamped at_ns."""
     expr = P.parse(text)
     _resolve_at_refs(ctx, expr)
+    if ctx.at_ns is not None:
+        _pin(expr, ctx.at_ns)
     ctx.set_scan_bounds(_max_lookback_ns(expr))
     return compile_expr(ctx, expr)

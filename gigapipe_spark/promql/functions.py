@@ -30,6 +30,15 @@ def _bucket(ts: Column, width_ns: int) -> Column:
     return ts - F.pmod(ts, F.lit(width_ns))
 
 
+def window_key(range_ns: int, at_ns: int | None = None) -> Column:
+    """A sample's range window: its tumbling bucket, or the pinned time
+    when `at_ns` is given — the samples are then the one window
+    (at - range, at] (compiler._selector_samples)."""
+    if at_ns is not None:
+        return F.lit(at_ns)
+    return _bucket(F.col("timestamp_ns"), range_ns)
+
+
 def fp_entries_agg(df: DataFrame, bucket: Column, *aggs: Column) -> DataFrame:
     """groupBy (fingerprint, sorted label entries, bucket) — labels ride
     the group key instead of a first(map) aggregate.
@@ -57,22 +66,23 @@ def fp_entries_agg(df: DataFrame, bucket: Column, *aggs: Column) -> DataFrame:
     )
 
 
-def _bucket_rel_seconds(range_ns: int):
-    """(bucket, t) where t = seconds SINCE THE BUCKET START. The slope
-    is translation-invariant, and regressing on raw epoch seconds
-    (~1.7e9) loses ~6 digits to cancellation in the covariance
-    accumulators — enough to drift past the oracle's 6-decimal compare
-    at sf0.1 under 32-way partial-merge order. Relative seconds
-    (0..range) keep the same answer at full precision."""
-    b = _bucket(F.col("timestamp_ns"), range_ns)
+def _bucket_rel_seconds(range_ns: int, at_ns: int | None = None):
+    """(bucket, t) where t = seconds SINCE THE BUCKET START (since the
+    pinned time with `at_ns`, see window_key). The slope is
+    translation-invariant, and regressing on raw epoch seconds (~1.7e9)
+    loses ~6 digits to cancellation in the covariance accumulators —
+    enough to drift past the oracle's 6-decimal compare at sf0.1 under
+    32-way partial-merge order. Relative seconds (within ±range) keep
+    the same answer at full precision."""
+    b = window_key(range_ns, at_ns)
     t = (F.col("timestamp_ns") - b) / F.lit(1e9)
     return b, t
 
 
-def deriv(samples: DataFrame, range_ns: int) -> DataFrame:
+def deriv(samples: DataFrame, range_ns: int, at_ns: int | None = None) -> DataFrame:
     """Per-second least-squares slope per (series, bucket)
     (PromQL deriv): regr_slope over (value, t_seconds)."""
-    b, t = _bucket_rel_seconds(range_ns)
+    b, t = _bucket_rel_seconds(range_ns, at_ns)
     return fp_entries_agg(
         samples.withColumn("__t", t),
         b.alias("timestamp_ns"),
@@ -80,12 +90,14 @@ def deriv(samples: DataFrame, range_ns: int) -> DataFrame:
     ).select("fingerprint", "labels", "timestamp_ns", "value")
 
 
-def predict_linear(samples: DataFrame, range_ns: int, horizon_s: float) -> DataFrame:
+def predict_linear(
+    samples: DataFrame, range_ns: int, horizon_s: float, at_ns: int | None = None
+) -> DataFrame:
     """Extrapolate each series horizon_s past its bucket end:
     intercept + slope * (t_end + horizon). Runs in bucket-relative
     seconds (see _bucket_rel_seconds) — the intercept shifts with the
     origin but the PREDICTION is origin-invariant."""
-    b, t = _bucket_rel_seconds(range_ns)
+    b, t = _bucket_rel_seconds(range_ns, at_ns)
     df = samples.withColumn("__t", t)
     grouped = fp_entries_agg(
         df,
@@ -223,7 +235,9 @@ def sort_matrix(matrix: DataFrame, descending: bool = False) -> DataFrame:
 _HW_SCHEMA = "fingerprint long, timestamp_ns long, value double"
 
 
-def holt_winters(matrix: DataFrame, sf: float, tf: float, range_ns: int) -> DataFrame:
+def holt_winters(
+    matrix: DataFrame, sf: float, tf: float, range_ns: int, at_ns: int | None = None
+) -> DataFrame:
     """Double exponential smoothing per (series, bucket).
 
     Sequential per series, but a 2-state LINEAR recurrence — so it runs
@@ -233,7 +247,7 @@ def holt_winters(matrix: DataFrame, sf: float, tf: float, range_ns: int) -> Data
     handful of rows each (25.8s → 1.1s at sf0.01). The groupBy is the
     same single shuffle either way; state is bounded per group."""
     arr_agg = (
-        matrix.withColumn("__bucket", _bucket(F.col("timestamp_ns"), range_ns))
+        matrix.withColumn("__bucket", window_key(range_ns, at_ns))
         .groupBy("fingerprint", "__bucket")
         .agg(
             F.sort_array(

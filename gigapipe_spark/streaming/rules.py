@@ -359,8 +359,9 @@ def logql_rule_evaluator(engine) -> Callable[[str, int], DataFrame]:
 def promql_rule_evaluator(engine) -> Callable[[str, int], DataFrame]:
     """PromQL recording rules run as instant queries via the engine's
     /api/v1/query path (ref: ruler/prom_evaluator.go:31-59). prom_query
-    already reduces to the latest sample per series; scalar results
-    come back as a single unlabelled row (prom_evaluator.go:55)."""
+    evaluates the rule at the tick's time — one row per series, stamped
+    now_ns; scalar results come back as a single unlabelled row
+    (prom_evaluator.go:55)."""
 
     def evaluate(expr: str, now_ns: int) -> DataFrame:
         if not expr:

@@ -558,3 +558,22 @@ def test_ingest_decoder_filters_do_not_clone_extraction(spark):
             if line.lstrip().startswith(("Filter", "+- Filter", ":- Filter")):
                 assert "regexp_extract" not in line, line
                 assert "regexp_replace" not in line, line
+
+
+def test_nonpushable_tripwire(spark):
+    """planutil.nonpushable relies on Catalyst treating its wrapper as
+    non-deterministic, so predicate pushdown leaves a filter over the
+    wrapped column above its Project. A Spark upgrade that folds the
+    one-element shuffle breaks every caller silently; fail here."""
+    from gigapipe_spark.planutil import nonpushable
+
+    hint = (
+        f"planutil.py nonpushable() no longer blocks pushdown on Spark "
+        f"{spark.version}: pick a new non-deterministic identity wrapper"
+    )
+    df = spark.range(4).select(nonpushable(F.col("id") * 2).alias("x"))
+    alias = df._jdf.queryExecution().analyzed().projectList().apply(0)
+    assert not alias.deterministic(), hint
+    plan = df.filter(F.col("x") > 2)._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "Filter", hint + "\n" + plan.toString()
+    assert plan.child().nodeName() == "Project", hint + "\n" + plan.toString()

@@ -26,6 +26,18 @@ def test_engine_confs_applied_once_and_idempotent(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_engine_session_skips_origin_capture(spark):
+    """get_spark turns off PySpark's per-call origin capture, so a
+    DataFrame/Column call pays no stack walk and no Py4J round trips for
+    its call site."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    )
+    assert not is_debugging_enabled()
+
+
 def test_registry_entries_bootstrap_foreign_sessions(spark):
     # every registered query flows through the bootstrap wrapper
     import __spark_entry__ as e

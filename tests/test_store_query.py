@@ -794,7 +794,15 @@ def test_store_engine_maintenance_leaves_no_stale_series(spark, tmp_path):
 def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
     """Every seq move builds a new series checkpoint; the superseded
     ones must not pile up as persisted RDDs (Spark's ContextCleaner
-    releases a checkpoint once no DataFrame or plan references it)."""
+    releases a checkpoint once no DataFrame or plan references it).
+
+    Checked on the RDD ids of the checkpoints this engine built, not on
+    the session's persisted-RDD count, which other tests' frames move
+    both ways. The ids are listed through RDDInfo records: the map that
+    `getPersistentRDDs()` returns references every persisted RDD, and
+    Py4J releases a dropped Java object up to a second later — long
+    enough for that map to keep every checkpoint alive across the next
+    settle's JVM GC."""
     import gc
     import time
 
@@ -803,31 +811,44 @@ def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
 
     cat = _seed(spark, tmp_path)
     eng = StoreEngine(spark, cat.root, catalog=cat)
-    jsc = spark.sparkContext._jsc
+    sc = spark.sparkContext._jsc.sc()
 
-    def settle() -> int:
+    def persisted() -> set:
         # drop the Python side's references, then let the JVM notice
         gc.collect()
         spark.sparkContext._jvm.System.gc()
         time.sleep(0.5)
-        return jsc.getPersistentRDDs().size()
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    def checkpoint_ids() -> set:
+        """The RDDs behind the current seq's series checkpoints."""
+        ids = set()
+        for df in list(eng._store()._frames.values()):
+            node = df._jdf.queryExecution().logical()
+            if node.nodeName() == "LogicalRDD":
+                ids.add(node.rdd().id())
+        return ids
 
     def read() -> None:
         assert eng.loki_query_range('{app="web"}').count() == 6
         assert eng.prom_query('{app="web"}').count() == 1
 
     read()
-    base = settle()
+    built = checkpoint_ids()
     for _ in range(20):
         bump_mutation_seq(cat.root)
         read()
+        built |= checkpoint_ids()
+    live = checkpoint_ids()
+    # twenty superseded generations, two checkpoints each
+    superseded = built - live
+    assert len(superseded) == 40, sorted(built)
     deadline = time.monotonic() + 60
-    count = settle()
-    while count > base and time.monotonic() < deadline:
-        count = settle()
-    # the current seq's checkpoints are live; twenty superseded
-    # generations (two checkpoints each) are gone
-    assert count <= base, (count, base)
+    left = superseded & persisted()
+    while left and time.monotonic() < deadline:
+        left = superseded & persisted()
+    assert not left, sorted(left)
+    assert live <= persisted()
 
 
 def test_store_engine_warm_query_reads_no_time_series_files(spark, tmp_path):
