@@ -436,10 +436,12 @@ class Engine:
 
         With `time_ns` the expression is compiled at that one instant
         (PromQLContext.at_ns): each range selector reads (t - range, t],
-        each instant selector its newest sample in (t - 5m, t], every
-        row is stamped t, and no sample after t is read. Without a time:
-        the whole history on the step grid, reduced to each series'
-        newest step."""
+        each instant selector its newest sample in (t - 5m, t], a
+        subquery's inner runs on its own grid inside (t - range, t],
+        every row is stamped t, and no sample after t is read. Every
+        serving caller passes a time. Without one — only timeless test
+        callers — the whole history on the step grid, reduced to each
+        series' newest step (not Prometheus' "no time means now")."""
         ctx = self.promctx()
         if time_ns is not None:
             ctx.at_ns = time_ns

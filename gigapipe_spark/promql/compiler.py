@@ -161,6 +161,14 @@ def _selector_samples(
     return df
 
 
+def _stamp(ctx: PromQLContext, sel: VectorSelector) -> int | None:
+    """A pinned selector's output time: the instant query's t when there
+    is one — an explicit `@ T` moves only the window it reads, its rows
+    are still stamped t (upstream: every instant-query sample carries
+    the evaluation time) — else the selector's own @ (None: unpinned)."""
+    return sel.at_ns if ctx.at_ns is None else ctx.at_ns
+
+
 def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
     """Instant vector: last raw sample per step bucket per series
     (ref: downsample_values.go argMaxMerge(last) per step). With an
@@ -183,7 +191,7 @@ def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
             .join(series, "fingerprint", "left")
             .select(
                 "fingerprint", "labels",
-                F.lit(sel.at_ns).alias("timestamp_ns"), "value",
+                F.lit(_stamp(ctx, sel)).alias("timestamp_ns"), "value",
             )
         )
     return (
@@ -411,16 +419,17 @@ def _range_fn(
     if not isinstance(sel, VectorSelector) or sel.range_ns is None:
         raise ValueError(f"{fn.fn} expects a range vector selector")
     rng = sel.range_ns
+    at = _stamp(ctx, sel)
     if fn.fn in ("deriv", "predict_linear", "holt_winters",
                  "double_exponential_smoothing"):
         from gigapipe_spark.promql import functions as _pf
 
         df = _selector_samples(ctx, sel)
         if fn.fn == "deriv":
-            return _pf.deriv(df, rng, sel.at_ns)
+            return _pf.deriv(df, rng, at)
         if fn.fn == "predict_linear":
-            return _pf.predict_linear(df, rng, fn.param or 0.0, sel.at_ns)
-        out = _pf.holt_winters(df, fn.param, fn.param2, rng, sel.at_ns)
+            return _pf.predict_linear(df, rng, fn.param or 0.0, at)
+        out = _pf.holt_winters(df, fn.param, fn.param2, rng, at)
         series = ctx.series().select(
             "fingerprint", "labels"
         )
@@ -432,9 +441,9 @@ def _range_fn(
         # the selector matched nothing — same grid derivation as
         # absent(), bucketed by the range instead of the step
         df = _selector_samples(ctx, sel)
-        if sel.at_ns is not None:
-            # pinned: the one window (at - range, at]
-            grid = ctx.spark.range(1).select(F.lit(sel.at_ns).alias("timestamp_ns"))
+        if at is not None:
+            # pinned: the one window, stamped at
+            grid = ctx.spark.range(1).select(F.lit(at).alias("timestamp_ns"))
         elif ctx.start_ns is not None and ctx.end_ns is not None:
             # explicit window: pure-arithmetic grid, no extent scan
             lo = ctx.start_ns - ctx.start_ns % rng
@@ -457,7 +466,7 @@ def _range_fn(
                     ).alias("timestamp_ns")
                 )
             )
-        present = df.select(window_key(rng, sel.at_ns).alias("timestamp_ns")).distinct()
+        present = df.select(window_key(rng, at).alias("timestamp_ns")).distinct()
         return grid.join(present, "timestamp_ns", "left_anti").select(
             F.lit(0).cast("long").alias("fingerprint"),
             F.expr("map()").cast("map<string,string>").alias("labels"),
@@ -493,7 +502,7 @@ def _range_fn(
         df = df.withColumn("labels", new_labels).withColumn(
             "fingerprint", F.xxhash64(canonical_labels_str(F.col("labels")))
         )
-    bucket = window_key(rng, sel.at_ns).alias("timestamp_ns")
+    bucket = window_key(rng, at).alias("timestamp_ns")
     if fn.fn in _SIMPLE_RANGE or fn.fn == "quantile_over_time":
         agg = (
             F.percentile("value", F.lit(fn.param))
@@ -520,7 +529,7 @@ def _range_fn(
     if fn.fn in _COUNTER_FNS:
         # window: per-series consecutive-pair deltas WITHIN each bucket
         # (@-pinned ranges are one window per series)
-        return _counter_agg(df, window_key(rng, sel.at_ns), rng, fn.fn)
+        return _counter_agg(df, window_key(rng, at), rng, fn.fn)
     if fn.fn in (
         "ts_of_min_over_time", "ts_of_max_over_time", "ts_of_last_over_time"
     ):
@@ -554,7 +563,7 @@ def _range_fn(
         # interpolation, twice). One shuffle: the window median and the
         # groupBy share the (fingerprint, bucket) partitioning, so the
         # second aggregation adds no exchange.
-        w = Window.partitionBy("fingerprint", window_key(rng, sel.at_ns))
+        w = Window.partitionBy("fingerprint", window_key(rng, at))
         med = F.percentile("value", F.lit(0.5)).over(w)
         out = (
             df.withColumn("__med", med)
@@ -987,7 +996,10 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
             parts: list = [F.col("timestamp_ns")]
             if grouping:
                 parts.append(F.col("__g"))
-            if e.fn == "limitk":
+            if e.fn == "limitk" and ctx.at_ns is None:
+                # (at an instant there is one step: the rank window
+                # below is as cheap, and the persisted frames here
+                # would be new cache entries for every distinct t)
                 # FAST PATH (r11, VERDICT task 3): limitk's pick at a
                 # step is "the k smallest ranks among series PRESENT at
                 # that step" — so wherever ALL of the global rank ≤ k
@@ -1050,6 +1062,7 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
                     F.col("__rank").asc(),
                 ]
             else:
+                # limitk (at an instant) keeps the k lowest ranks;
                 # limit_ratio r>0 keeps the first ceil-free r·n prefix;
                 # r<0 keeps the complement suffix, so limit_ratio(r) ∪
                 # limit_ratio(-(1-r)) == everything (upstream's
@@ -1111,12 +1124,20 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
 
 
 def _step_grid(ctx: PromQLContext):
-    """Step-aligned timestamp grid over the store's time extent, derived
-    lazily (one tiny agg subquery — no driver-side action); at an
-    instant, the one row t."""
+    """Step-aligned timestamp grid: at an instant, the one row t; over an
+    explicit request window (a range query, a subquery's inner), the
+    steps covering it by arithmetic alone — no extent scan; otherwise
+    over the store's time extent, derived lazily (one tiny agg subquery
+    — no driver-side action)."""
     if ctx.at_ns is not None:
         return ctx.spark.range(1).select(F.lit(ctx.at_ns).alias("timestamp_ns"))
     step = F.lit(ctx.step_ns)
+    if ctx.start_ns is not None and ctx.end_ns is not None:
+        lo = ctx.start_ns - ctx.start_ns % ctx.step_ns
+        hi = F.lit(max(lo, ctx.end_ns - 1))
+        return ctx.spark.range(1).select(
+            F.explode(F.sequence(F.lit(lo), hi, step)).alias("timestamp_ns")
+        )
     return (
         ctx.metrics()
         .agg(F.min("timestamp_ns").alias("lo"), F.max("timestamp_ns").alias("hi"))

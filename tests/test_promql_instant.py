@@ -95,6 +95,22 @@ def test_instant_window_refs_resolve_to_time(eng):
     assert values("req_total @ end()") == want
 
 
+def test_instant_explicit_at_rows_are_stamped_at_time(eng):
+    """`x @ T` reads its window at T but, like every row of an instant
+    query, is stamped t — so a binary op against the unpinned `x` joins
+    and answers the difference at t."""
+    at = T0 + 600 * S
+    got = _by_instance(
+        eng.prom_query(f"req_total - req_total @ {at // S}", T_MID)
+    )
+    want = {
+        inst: _window(inst, T_MID, 300 * S)[-1][1] - _window(inst, at, 300 * S)[-1][1]
+        for inst in LEAD
+    }
+    assert {k: r["value"] for k, r in got.items()} == want
+    assert {r["timestamp_ns"] for r in got.values()} == {T_MID}
+
+
 def test_instant_topk_returns_at_most_k(eng):
     """Each series led in some era; at T_LATE only c leads, and topk(2)
     is two series — not every series that was in the top 2 at some
@@ -103,6 +119,19 @@ def test_instant_topk_returns_at_most_k(eng):
     assert len(rows) == 2
     assert "c" in {r["labels"]["instance"] for r in rows}
     assert {r["timestamp_ns"] for r in rows} == {T_LATE}
+
+
+def test_instant_limitk_caches_nothing(eng, spark):
+    """limitk at an instant picks the k lowest-ranked series and leaves
+    no persisted frame behind: every distinct t is a new plan, so a
+    cache entry per request would pile up."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    for t in (T_MID, T_LATE):
+        rows = eng.prom_query("limitk(2, req_total)", t).collect()
+        assert len(rows) == 2
+        assert {r["timestamp_ns"] for r in rows} == {t}
+    assert cache.numCachedEntries() == before
 
 
 @pytest.mark.parametrize(
@@ -134,6 +163,33 @@ def test_instant_subquery_matches_hand_computation(eng):
         )
     assert {k: r["value"] for k, r in got.items()} == pytest.approx(want)
     assert {r["timestamp_ns"] for r in got.values()} == {t}
+
+
+def test_instant_subquery_grid_reads_no_samples(eng):
+    """A subquery inner over `time()` runs on the 1m steps of its window
+    (t - 5m, t], built by arithmetic: the answer is the newest step and
+    the plan scans no samples."""
+    t = T_MID
+    df = eng.prom_query("max_over_time(time()[5m:1m])", t)
+    rows = df.collect()
+    assert [(r["timestamp_ns"], r["value"]) for r in rows] == [
+        (t, (t - t % (60 * S)) / S)
+    ]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "/samples" not in plan, plan
+
+
+def test_range_grid_covers_request_window(eng):
+    """A range query's grid functions answer at every step of [start,
+    end), also past the stored samples' last timestamp."""
+    start = T0 + 1800 * S  # the last stored sample
+    end = start + 600 * S
+    rows = eng.prom_query_range("vector(1)", start, end, 60 * S).collect()
+    first = start - start % (60 * S) + 60 * S
+    assert sorted(r["timestamp_ns"] for r in rows) == list(
+        range(first, end, 60 * S)
+    )
+    assert {r["value"] for r in rows} == {1.0}
 
 
 def test_http_instant_value_is_stamped_at_time(eng):

@@ -4,6 +4,7 @@ writer's tables)."""
 
 import json
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gigapipe_spark.logql.compiler import query_range
@@ -796,13 +797,14 @@ def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
     ones must not pile up as persisted RDDs (Spark's ContextCleaner
     releases a checkpoint once no DataFrame or plan references it).
 
-    Checked on the RDD ids of the checkpoints this engine built, not on
-    the session's persisted-RDD count, which other tests' frames move
-    both ways. The ids are listed through RDDInfo records: the map that
-    `getPersistentRDDs()` returns references every persisted RDD, and
-    Py4J releases a dropped Java object up to a second later — long
-    enough for that map to keep every checkpoint alive across the next
-    settle's JVM GC."""
+    Checked two ways: the session's persisted-RDD count comes back to
+    its level after the first read (so no RDD the read path persists
+    per request or per seq piles up), and every checkpoint RDD id this
+    engine built for a superseded seq is gone. Persisted RDDs are
+    listed through RDDInfo records, not `getPersistentRDDs()`: the map
+    that returns references every persisted RDD, and Py4J releases a
+    dropped Java object up to a second later — long enough for that map
+    to keep every checkpoint alive across the next settle's JVM GC."""
     import gc
     import time
 
@@ -824,6 +826,8 @@ def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
         """The RDDs behind the current seq's series checkpoints."""
         ids = set()
         for df in list(eng._store()._frames.values()):
+            if not isinstance(df, DataFrame):
+                continue
             node = df._jdf.queryExecution().logical()
             if node.nodeName() == "LogicalRDD":
                 ids.add(node.rdd().id())
@@ -834,6 +838,7 @@ def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
         assert eng.prom_query('{app="web"}').count() == 1
 
     read()
+    base = len(persisted())
     built = checkpoint_ids()
     for _ in range(20):
         bump_mutation_seq(cat.root)
@@ -844,11 +849,13 @@ def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
     superseded = built - live
     assert len(superseded) == 40, sorted(built)
     deadline = time.monotonic() + 60
-    left = superseded & persisted()
-    while left and time.monotonic() < deadline:
-        left = superseded & persisted()
-    assert not left, sorted(left)
-    assert live <= persisted()
+    now = persisted()
+    while (superseded & now or len(now) > base) and time.monotonic() < deadline:
+        now = persisted()
+    assert not superseded & now, sorted(superseded & now)
+    # the current seq's checkpoints are live, nothing else piled up
+    assert len(now) <= base, (len(now), base, sorted(now))
+    assert live <= now
 
 
 def test_store_engine_warm_query_reads_no_time_series_files(spark, tmp_path):
