@@ -429,29 +429,19 @@ class Engine:
             m = m.filter(F.col("timestamp_ns") < end_ns)
         return m
 
-    def prom_query(self, expr: str, time_ns: int | None = None) -> DataFrame:
-        """/api/v1/query — instant vector (ref:
+    def prom_query(self, expr: str, time_ns: int) -> DataFrame:
+        """/api/v1/query — instant vector at `time_ns` (ref:
         router/prom_query_instant.go, the stock engine's instant
-        evaluation).
+        evaluation; httpd reads a missing `time` as now).
 
-        With `time_ns` the expression is compiled at that one instant
+        The expression is compiled at that one instant
         (PromQLContext.at_ns): each range selector reads (t - range, t],
         each instant selector its newest sample in (t - 5m, t], a
         subquery's inner runs on its own grid inside (t - range, t],
-        every row is stamped t, and no sample after t is read. Every
-        serving caller passes a time. Without one — only timeless test
-        callers — the whole history on the step grid, reduced to each
-        series' newest step (not Prometheus' "no time means now")."""
+        every row is stamped t, and no sample after t is read."""
         ctx = self.promctx()
-        if time_ns is not None:
-            ctx.at_ns = time_ns
-            return _promql_query(ctx, expr)
-        m = _promql_query(ctx, expr)
-        group_cols = [c for c in m.columns if c not in ("timestamp_ns", "value")]
-        w_val = F.max_by("value", F.col("timestamp_ns"))
-        return m.groupBy(*group_cols).agg(
-            F.max("timestamp_ns").alias("timestamp_ns"), w_val.alias("value")
-        )
+        ctx.at_ns = time_ns
+        return _promql_query(ctx, expr)
 
     def prom_labels(
         self,

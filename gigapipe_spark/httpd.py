@@ -804,7 +804,10 @@ class _Handler(BaseHTTPRequestHandler):
                 err = self._prom_parse_check(q["query"][0])
                 if err is not None:
                     return self._prom_error(400, err)
-                rows = e.prom_query(q["query"][0], _int_arg(q, "time")).collect()
+                t = _int_arg(q, "time")
+                rows = e.prom_query(
+                    q["query"][0], time.time_ns() if t is None else t
+                ).collect()
                 return self._json(_prom_envelope(rows, instant=True))
             if path == "/api/v1/query_range":
                 if "query" not in q:

@@ -1197,6 +1197,46 @@ def _labels_keyed_agg(
     return out.select("fingerprint", "labels", "timestamp_ns", "value")
 
 
+def select_per_step(
+    df: DataFrame,
+    fn: str,
+    param: float,
+    by: list[str] | None = None,
+    without: list[str] | None = None,
+) -> DataFrame:
+    """Keep a subset of series per step (ref: planner_topk.go, one pass
+    per timestamp): topk/bottomk the k largest/smallest values,
+    limitk the first k series, limit_ratio the first r·n (r < 0: the
+    complement suffix, so limit_ratio(r) ∪ limit_ratio(-(1 - r)) is
+    everything). by/without scope the pick to each label group.
+
+    One row_number window over (timestamp, group); ties (and limitk's
+    whole order) break on the canonical label string, a stable rule
+    the DuckDB oracles reproduce where upstream's hash order is
+    unstable. limit_ratio's count window shares the partition spec, so
+    the selection is one exchange."""
+    parts = ["timestamp_ns"]
+    if by is not None or without is not None:
+        df = df.withColumn(
+            "__g",
+            F.xxhash64(F.array_sort(F.map_entries(_group_labels_col(by, without)))),
+        )
+        parts.append("__g")
+    order = [canonical_labels_str(F.coalesce(F.col("labels"), F.expr("map()"))).asc()]
+    if fn in ("topk", "bottomk"):
+        order.insert(0, F.col("value").desc() if fn == "topk" else F.col("value").asc())
+    df = df.withColumn(
+        "__rn", F.row_number().over(Window.partitionBy(*parts).orderBy(*order))
+    )
+    if fn == "limit_ratio":
+        df = df.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(*parts)))
+        n, r = F.col("__n"), float(param)
+        keep = F.col("__rn") <= F.lit(r) * n if r >= 0 else F.col("__rn") > F.lit(1.0 + r) * n
+    else:
+        keep = F.col("__rn") <= int(param)
+    return df.filter(keep).drop("__rn", "__n", "__g")
+
+
 def _group_labels_col(by: list[str] | None, without: list[str] | None) -> Column:
     labels = F.coalesce(F.col("labels"), F.expr("map()"))
     if by is None and without is None:
@@ -1276,16 +1316,7 @@ def compile_expr(ctx: LogQLContext, expr: A.Expr) -> Result:
         return _regroup(inner, expr.by, expr.without, expr.fn)
     if isinstance(expr, A.TopK):
         inner = compile_expr(ctx, expr.inner)
-        # tiebreak on the canonical label string (deterministic and
-        # engine-independent, unlike a hash)
-        order = [F.col("value").desc() if expr.fn == "topk" else F.col("value").asc(),
-                 canonical_labels_str(F.coalesce(F.col("labels"), F.expr("map()"))).asc()]
-        w = Window.partitionBy("timestamp_ns").orderBy(*order)
-        out = (
-            inner.df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= expr.k)
-            .drop("__rn")
-        )
+        out = select_per_step(inner.df, expr.fn, expr.k)
         return Result(out, "matrix", inner.labels_mutated)
     if isinstance(expr, A.BinOp):
         return _compile_binop(ctx, expr)

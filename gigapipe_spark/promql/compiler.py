@@ -30,6 +30,7 @@ from gigapipe_spark.logql.compiler import (
     LogQLContext,
     _group_labels_col,
     _labels_keyed_agg,
+    select_per_step,
 )
 from gigapipe_spark.model.fingerprint import canonical_labels_str
 from gigapipe_spark.promql.functions import fp_entries_agg, window_key
@@ -169,11 +170,15 @@ def _stamp(ctx: PromQLContext, sel: VectorSelector) -> int | None:
     return sel.at_ns if ctx.at_ns is None else ctx.at_ns
 
 
-def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
+def _instant_matrix(
+    ctx: PromQLContext, sel: VectorSelector, sample_time: bool = False
+) -> DataFrame:
     """Instant vector: last raw sample per step bucket per series
     (ref: downsample_values.go argMaxMerge(last) per step). With an
     @-modifier: one point per series — the last sample within the
-    staleness lookback before the pinned time.
+    staleness lookback before the pinned time. `sample_time` answers
+    that sample's own time in seconds instead of its value (upstream's
+    timestamp() over a plain selector; offset undone).
 
     Labels re-attach AFTER the aggregate via the broadcast series dim
     (fingerprint IS the label hash, so the dim's labels are exactly
@@ -184,10 +189,15 @@ def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
     audit of promql_instant_sum_by). A long+double buffer hash-aggs."""
     df = _selector_samples(ctx, sel, with_labels=False)
     series = F.broadcast(ctx.series().select("fingerprint", "labels"))
+    last = (
+        (F.max("timestamp_ns") - F.lit(sel.offset_ns)) / F.lit(1e9)
+        if sample_time
+        else F.max_by("value", "timestamp_ns")
+    ).alias("value")
     if sel.at_ns is not None:
         return (
             df.groupBy("fingerprint")
-            .agg(F.max_by("value", "timestamp_ns").alias("value"))
+            .agg(last)
             .join(series, "fingerprint", "left")
             .select(
                 "fingerprint", "labels",
@@ -196,7 +206,7 @@ def _instant_matrix(ctx: PromQLContext, sel: VectorSelector) -> DataFrame:
         )
     return (
         df.groupBy("fingerprint", _bucket(F.col("timestamp_ns"), ctx.step_ns).alias("timestamp_ns"))
-        .agg(F.max_by("value", "timestamp_ns").alias("value"))
+        .agg(last)
         .join(series, "fingerprint", "left")
         .select("fingerprint", "labels", "timestamp_ns", "value")
     )
@@ -837,7 +847,10 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
                 F.least(F.greatest(F.col("value"), F.lit(e.param)), F.lit(e.param2)),
             )
         if e.fn == "timestamp":
-            inner = compile_expr(ctx, e.args[0])
+            arg = e.args[0]
+            if isinstance(arg, VectorSelector) and arg.range_ns is None:
+                return _instant_matrix(ctx, arg, sample_time=True)
+            inner = compile_expr(ctx, arg)
             return inner.withColumn(
                 "value", (F.col("timestamp_ns") / F.lit(1e9)).cast("double")
             )
@@ -939,156 +952,7 @@ def compile_expr(ctx: PromQLContext, e: PromExpr) -> DataFrame:
             return _range_fn(ctx, e.inner, group=(e.by, e.without, e.fn))
         inner = compile_expr(ctx, e.inner)
         if e.fn in ("topk", "bottomk", "limitk", "limit_ratio"):
-            # All four SELECT series per evaluation step (values and
-            # labels pass through unchanged); by/without scopes the
-            # selection to each group like upstream's per-group heaps.
-            #
-            # The deterministic tiebreak is canonical-label-string order
-            # (upstream's hash-order pick is documented unstable; the
-            # stable rule lets the DuckDB oracle reproduce the pick).
-            # The string depends only on the SERIES, so it is built once
-            # per series in a small rank dim — row_number over the group
-            # in string order — and the big matrix sorts by the joined
-            # INTEGER rank instead of building + comparing the string
-            # per (series, step) row (r9 probe: the per-row string build
-            # was limitk's dominant 30× cost). Rank order is
-            # order-isomorphic to string order on every subset, so the
-            # per-step pick among PRESENT series is unchanged.
-            grouping = e.by is not None or e.without is not None
-            g_expr = (
-                F.xxhash64(
-                    F.array_sort(
-                        F.map_entries(_group_labels_col(e.by, e.without))
-                    )
-                )
-                if grouping
-                else F.lit(0).cast("long")
-            )
-            tb = canonical_labels_str(
-                F.coalesce(F.col("labels"), F.expr("map()"))
-            )
-            dim = (
-                inner.select("fingerprint", "labels")
-                .dropDuplicates(["fingerprint"])
-                .select(
-                    "fingerprint",
-                    "labels",
-                    g_expr.alias("__g"),
-                    tb.alias("__tb"),
-                )
-                .withColumn(
-                    "__rank",
-                    F.row_number().over(
-                        Window.partitionBy("__g").orderBy(F.col("__tb").asc())
-                    ),
-                )
-                .drop("__tb")
-            )
-            # the selection window shuffles by (step, group): keep that
-            # exchange NARROW — fixed-width columns only; the heavy
-            # labels map rides the broadcast dim and re-attaches after
-            # the filter (at 30× the labels strings dominated the
-            # shuffle bytes)
-            df2 = inner.drop("labels").join(
-                F.broadcast(dim.select("fingerprint", "__g", "__rank")),
-                "fingerprint",
-            )
-            parts: list = [F.col("timestamp_ns")]
-            if grouping:
-                parts.append(F.col("__g"))
-            if e.fn == "limitk" and ctx.at_ns is None:
-                # (at an instant there is one step: the rank window
-                # below is as cheap, and the persisted frames here
-                # would be new cache entries for every distinct t)
-                # FAST PATH (r11, VERDICT task 3): limitk's pick at a
-                # step is "the k smallest ranks among series PRESENT at
-                # that step" — so wherever ALL of the global rank ≤ k
-                # series are present, they ARE the answer and no window
-                # is needed. One count aggregation (map-side partial:
-                # the exchange carries (step, group) partial counts,
-                # not matrix rows) classifies each step; rank ≤ k rows
-                # at complete steps pass straight through, and ONLY the
-                # steps missing one of the top-k (series churn — rare)
-                # fall back to the row_number window, now over a tiny
-                # row subset. The full (step, group) sort exchange over
-                # the whole matrix — limitk's residual 30× cost after
-                # the r10 rank-dim rewrite — is gone.
-                k = int(e.param)
-                keys = ["timestamp_ns"] + (["__g"] if grouping else [])
-                # the classify/fast/slow branches all consume df2, and
-                # the two broadcast subtrees would otherwise each
-                # re-execute the whole inner aggregation as their own
-                # job — persist the NARROW matrix (5 numeric columns)
-                # once; MEMORY_AND_DISK with LRU eviction bounds it
-                df2 = df2.persist()
-                # the classification table is (step, group)-sized —
-                # persist it too, or the fast/slow broadcast subtrees
-                # EACH re-run the count aggregation over the full
-                # persisted matrix (one extra full pass, cold and warm)
-                cnt = (
-                    df2.groupBy(*keys)
-                    .agg(
-                        F.count(
-                            F.when(F.col("__rank") <= k, 1)
-                        ).alias("__ck")
-                    )
-                    .persist()
-                )
-                fast = df2.filter(F.col("__rank") <= k).join(
-                    F.broadcast(
-                        cnt.filter(F.col("__ck") == k).select(*keys)
-                    ),
-                    keys,
-                    "left_semi",
-                )
-                slow_steps = cnt.filter(F.col("__ck") < k).select(*keys)
-                w = Window.partitionBy(*keys).orderBy(F.col("__rank").asc())
-                slow = (
-                    df2.join(F.broadcast(slow_steps), keys, "left_semi")
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") <= k)
-                    .drop("__rn")
-                )
-                kept = fast.unionByName(slow).drop("__g", "__rank")
-                return kept.join(
-                    F.broadcast(dim.select("fingerprint", "labels")),
-                    "fingerprint",
-                ).select("fingerprint", "labels", "timestamp_ns", "value")
-            if e.fn in ("topk", "bottomk"):
-                order = [
-                    F.col("value").desc()
-                    if e.fn == "topk"
-                    else F.col("value").asc(),
-                    F.col("__rank").asc(),
-                ]
-            else:
-                # limitk (at an instant) keeps the k lowest ranks;
-                # limit_ratio r>0 keeps the first ceil-free r·n prefix;
-                # r<0 keeps the complement suffix, so limit_ratio(r) ∪
-                # limit_ratio(-(1-r)) == everything (upstream's
-                # complement contract)
-                order = [F.col("__rank").asc()]
-            w = Window.partitionBy(*parts).orderBy(*order)
-            df2 = df2.withColumn("__rn", F.row_number().over(w))
-            if e.fn == "limit_ratio":
-                r = float(e.param)
-                df2 = df2.withColumn(
-                    "__n", F.count(F.lit(1)).over(Window.partitionBy(*parts))
-                )
-                cond = (
-                    F.col("__rn") <= F.lit(r) * F.col("__n")
-                    if r >= 0
-                    else F.col("__rn") > F.lit(1.0 + r) * F.col("__n")
-                )
-                kept = df2.filter(cond).drop("__rn", "__n", "__g", "__rank")
-            else:
-                kept = df2.filter(F.col("__rn") <= int(e.param)).drop(
-                    "__rn", "__g", "__rank"
-                )
-            return kept.join(
-                F.broadcast(dim.select("fingerprint", "labels")),
-                "fingerprint",
-            ).select("fingerprint", "labels", "timestamp_ns", "value")
+            return select_per_step(inner, e.fn, e.param, e.by, e.without)
         if e.fn == "count_values":
             # count_values("l", v): series count per distinct sample value;
             # the value joins the label set as label `l`. Default grouping

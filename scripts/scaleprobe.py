@@ -167,6 +167,7 @@ def main() -> None:
         "dedup_span_removal",
         "text_tfidf_keywords",
         # r9: experimental PromQL fns (single-shuffle windows/aggs)
+        "promql_topk",
         "promql_limitk",
         "promql_limit_ratio",
         "promql_ts_of_max_over_time",
@@ -248,6 +249,10 @@ def main() -> None:
         containment_pairs(boiler_corpus(n_docs), max_shingle_df=10_000).count()
         return round(time.monotonic() - t0, 2)
 
+    if os.environ.get("SCALEPROBE_ONLY") and (
+        "dedup_containment_boilerplate_capped" not in sel
+    ):
+        return
     n1 = 20_000
     run_boiler(n1)  # warm
     s1 = run_boiler(n1)

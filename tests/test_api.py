@@ -5,6 +5,7 @@ per endpoint family over the sf0.001 fixtures.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from gigapipe_spark.api import Engine
 
@@ -79,8 +80,13 @@ def test_loki_tail_poll(engine):
 def test_prom_query_range_and_instant(engine):
     m = engine.prom_query_range('sum by (app) (rate({app=~".+"}[1h]))')
     assert m.count() > 0
-    inst = engine.prom_query('sum by (app) (rate({app=~".+"}[1h]))')
+    # an instant a minute after the newest sample
+    last = engine.metric_samples_table().agg(F.max("timestamp_ns")).first()[0]
+    inst = engine.prom_query(
+        'sum by (app) (rate({app=~".+"}[1h]))', last + 60_000_000_000
+    )
     # instant: exactly one row per series
+    assert inst.count() > 0
     assert inst.count() == inst.select("fingerprint").distinct().count()
 
 

@@ -15,6 +15,7 @@ import urllib.request
 import pytest
 
 T0 = 1_700_000_000_000_000_000
+S = 1_000_000_000
 
 
 @pytest.fixture(scope="module")
@@ -76,7 +77,9 @@ def test_http_push_then_query_loop(gateway):
     assert len(stream["values"]) == 4
 
     # Prometheus instant vector over the same store (type-0 rows)
-    st, body = _get(base, "/api/v1/query?query=%7Bapp%3D%22web%22%7D")
+    st, body = _get(
+        base, f"/api/v1/query?query=%7Bapp%3D%22web%22%7D&time={T0 // S + 60}"
+    )
     assert st == 200 and body["data"]["resultType"] == "vector"
     assert float(body["data"]["result"][0]["value"][1]) == 3.0
 
@@ -262,7 +265,9 @@ def test_http_otlp_and_remote_write_push(gateway):
     # remote-write: one timeseries, one sample
     assert _remote_write(base, "rw", [(T0, 42.5)]) == 204
     st, body = _get(
-        base, "/api/v1/query?query=" + urllib.parse.quote('{job="rw"}')
+        base,
+        "/api/v1/query?query=" + urllib.parse.quote('{job="rw"}')
+        + f"&time={T0 // S + 60}",
     )
     assert float(body["data"]["result"][0]["value"][1]) == 42.5
 
@@ -568,7 +573,9 @@ def test_http_prom_push_alias(gateway):
     )
     assert st == 204 and body == b""
     st, body = _get(
-        base, "/api/v1/query?query=" + urllib.parse.quote('{job="lp"}')
+        base,
+        "/api/v1/query?query=" + urllib.parse.quote('{job="lp"}')
+        + f"&time={T0 // S + 60}",
     )
     assert float(body["data"]["result"][0]["value"][1]) == 33.0
 
@@ -589,7 +596,8 @@ def test_http_datadog_metrics_push(gateway):
     st, body = _get(
         base,
         "/api/v1/query?query="
-        + urllib.parse.quote('{resource1_host="h1"}'),
+        + urllib.parse.quote('{resource1_host="h1"}')
+        + f"&time={T0 // S + 60}",
     )
     assert float(body["data"]["result"][0]["value"][1]) == 9.5
 

@@ -7,6 +7,7 @@ dimension joins broadcast, and selector scans stay shuffle-free.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gigapipe_spark.sources import views
@@ -232,45 +233,67 @@ def test_limit_ratio_windows_share_one_exchange(spark):
     # Filter/Project between) with NO Exchange between them
     sel_wins = [i for i in win_idx if "row_number" in lines[i] or "count(1)" in lines[i]]
     assert len(sel_wins) >= 2, plan
-    # the SELECTION windows are the top two (r10 adds a third
-    # row_number deep in the broadcast rank-dim subtree — that one runs
-    # over the tiny series dim and owns its own exchange by design)
     top_two = sorted(sel_wins)[:2]
     between = lines[top_two[0]: top_two[1] + 1]
     assert not any("Exchange" in ln for ln in between), "\n".join(between)
-    # the per-row tiebreak is the joined integer rank, not a per-row
-    # canonical-string build (the r9 probe's dominant limitk cost)
-    rn_line = lines[top_two[1]]
-    assert "__rank" in rn_line and "concat" not in rn_line, rn_line
 
 
-def test_limitk_group_partition_single_exchange(spark):
-    """limitk by(app), r11 fast path: the full-matrix selection window
-    is gone — a map-side-combined count classifies each (step, group),
-    rank≤k rows at complete steps pass through a broadcast semi-join,
-    and the row_number window (still partitioned by timestamp + group
-    hash) runs only over the slow branch's step subset."""
-    from gigapipe_spark.promql.compiler import PromQLContext
-    from gigapipe_spark.promql.compiler import query as promql_query
+_S = 1_000_000_000
+_T0 = 1_700_000_000 * _S
 
-    df = promql_query(
-        PromQLContext(spark, SF_DIR),
-        'limitk(2, max_over_time({app=~"click|view|error"}[1h])) by (app)',
-    )
-    plan = _plan(df)
-    # the SELECTION window (slow branch) still requires the
-    # (timestamp, group-hash) distribution — pick it out by its
-    # partition keys; the rank-dim window partitions by __g alone
-    sel = [
-        ln
-        for ln in plan.splitlines()
-        if "row_number" in ln and "timestamp_ns" in ln
+
+@pytest.fixture(scope="module")
+def metric_store(spark, tmp_path_factory):
+    """A written store of six counters in two apps, 15 s scrapes."""
+    from gigapipe_spark.sources import ingest
+    from gigapipe_spark.storage.query import StoreEngine
+    from gigapipe_spark.storage.writer import Catalog, ingest_fanout
+
+    lines = [
+        f"m,app={app},instance={inst} req_total={i * (n + 1)} {_T0 + i * 15 * _S}"
+        for n, (app, inst) in enumerate(
+            (app, inst) for app in ("api", "web") for inst in "abc"
+        )
+        for i in range(80)
     ]
-    assert sel, plan
-    part = sel[0].split("], [")[1]
-    assert "," in part, sel[0]  # timestamp_ns + the group hash
-    # fast path present: broadcast semi-joins gate both branches
-    assert "LeftSemi" in plan, plan
+    raw = spark.createDataFrame([(ln,) for ln in lines], "line string")
+    cat = Catalog(str(tmp_path_factory.mktemp("plans") / "store"))
+    ingest_fanout(ingest.influx_line(raw), cat)
+    return StoreEngine(spark, cat.root, catalog=cat)
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "topk(3, rate(req_total[5m]))",
+        "limitk(2, req_total) by (app)",
+        "limit_ratio(0.5, req_total)",
+    ],
+)
+def test_selection_reads_samples_once(metric_store, expr):
+    """topk/limitk/limit_ratio select from the inner matrix in one
+    window pass: the inner subtree is evaluated once, so the executed
+    plan scans the stored samples once — the samples table at an
+    instant; over a range, samples or their 15 s rollup (metrics_15s),
+    whichever the inner routes to."""
+
+    def fact_scans(df) -> list:
+        assert df.collect()
+        # AQE prints the final plan, then the initial one
+        final = _plan(df).split("== Initial Plan ==")[0]
+        return [
+            ln for ln in final.splitlines()
+            if "FileScan parquet" in ln
+            and ("/samples]" in ln or "/metrics_15s]" in ln)
+        ]
+
+    t = _T0 + 1000 * _S
+    scans = fact_scans(metric_store.prom_query(expr, t))
+    assert len(scans) == 1 and "/samples]" in scans[0], scans
+    scans = fact_scans(
+        metric_store.prom_query_range(expr, t - 600 * _S, t, 60 * _S)
+    )
+    assert len(scans) == 1, scans
 
 
 def test_ancestor_closure_join_count_is_logarithmic(spark):

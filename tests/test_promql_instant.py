@@ -122,16 +122,44 @@ def test_instant_topk_returns_at_most_k(eng):
 
 
 def test_instant_limitk_caches_nothing(eng, spark):
-    """limitk at an instant picks the k lowest-ranked series and leaves
-    no persisted frame behind: every distinct t is a new plan, so a
-    cache entry per request would pile up."""
+    """limitk picks the k first series in label order and leaves no
+    persisted frame behind, at an instant or over a range: every
+    distinct t or window is a new plan, so a cache entry per request
+    would pile up."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
     for t in (T_MID, T_LATE):
         rows = eng.prom_query("limitk(2, req_total)", t).collect()
         assert len(rows) == 2
         assert {r["timestamp_ns"] for r in rows} == {t}
+        assert {r["labels"]["instance"] for r in rows} == {"a", "b"}
+    for start in (T0 + 600 * S, T0 + 900 * S, T0 + 1200 * S):
+        rows = eng.prom_query_range(
+            "limitk(2, req_total)", start, start + 300 * S, 60 * S
+        ).collect()
+        assert rows and {r["labels"]["instance"] for r in rows} == {"a", "b"}
     assert cache.numCachedEntries() == before
+
+
+def test_instant_timestamp_is_the_samples_time(eng):
+    """timestamp() of a plain selector answers the time of the sample
+    it used (upstream's special case), not the evaluation time; over
+    any other argument it is the evaluation time."""
+    got = _by_instance(eng.prom_query("timestamp(req_total)", T_MID))
+    assert {k: r["value"] for k, r in got.items()} == {
+        inst: (T0 + 1020 * S) / 1e9 for inst in LEAD
+    }
+    got = _by_instance(eng.prom_query("timestamp(abs(req_total))", T_MID))
+    assert {r["value"] for r in got.values()} == {T_MID / 1e9}
+    # over a range, each step's answer is its newest sample's time
+    sample_ts = {ts for ts, _ in SAMPLES["a"]}
+    rows = eng.prom_query_range(
+        'timestamp(req_total{instance="a"})', T0 + 600 * S, T0 + 900 * S, 60 * S
+    ).collect()
+    assert rows
+    for r in rows:
+        t = round(r["value"]) * S
+        assert t in sample_ts and r["timestamp_ns"] <= t < r["timestamp_ns"] + 60 * S
 
 
 @pytest.mark.parametrize(

@@ -17,6 +17,7 @@ from gigapipe_spark.storage.query import (
 from gigapipe_spark.storage.writer import Catalog, ingest_fanout
 
 T0 = 1_700_000_000_000_000_000
+S = 1_000_000_000
 
 
 def _seed(spark, tmp_path) -> Catalog:
@@ -172,7 +173,7 @@ def test_store_engine_endpoints(spark, tmp_path):
     st = eng.loki_index_stats().collect()[0]
     assert st["streams"] == 2 and st["entries"] == 7
     # prometheus over the same store: type-0 rows serve as metrics
-    inst = eng.prom_query('{app="web"}')
+    inst = eng.prom_query('{app="web"}', T0 + 60 * S)
     assert inst.count() >= 1
     # metadata comes from the STORED column (none ingested here → empty)
     assert eng.prom_metadata().count() == 0
@@ -194,7 +195,7 @@ def test_store_engine_sees_foreign_catalog_append(spark, tmp_path):
     eng = StoreEngine(spark, cat.root, catalog=cat)
     warm = eng._store()
     assert eng.loki_query_range('{app="db"}').count() == 1
-    assert eng.prom_query('{app="web"}').count() == 1
+    assert eng.prom_query('{app="web"}', T0 + 60 * S).count() == 1
     assert eng._store() is warm  # unchanged store: table cache kept
 
     streams = [
@@ -210,7 +211,7 @@ def test_store_engine_sees_foreign_catalog_append(spark, tmp_path):
 
     lines = {r["string"] for r in eng.loki_query_range('{app="db"}').collect()}
     assert lines == {"slow query", "slower query"}
-    assert eng.prom_query('{app="cache"}').count() == 1
+    assert eng.prom_query('{app="cache"}', T0 + 60 * S).count() == 1
     assert eng._store() is not warm
 
 
@@ -835,7 +836,7 @@ def test_store_engine_series_checkpoints_stay_bounded(spark, tmp_path):
 
     def read() -> None:
         assert eng.loki_query_range('{app="web"}').count() == 6
-        assert eng.prom_query('{app="web"}').count() == 1
+        assert eng.prom_query('{app="web"}', T0 + 60 * S).count() == 1
 
     read()
     base = len(persisted())
