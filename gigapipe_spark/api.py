@@ -75,6 +75,11 @@ def _date_bounded(
     return dim
 
 
+# /metrics reader family: reads answered by re-collecting an executed
+# frame ("hit") or by building one ("miss"), see Engine.served
+SERVED_FRAMES = "gigapipe_served_frames_total"
+
+
 def _find_range_ns(query: str) -> int | None:
     """Range of the outermost range aggregation in a LogQL metric query
     (walks through vector aggs / topk / binops)."""
@@ -127,6 +132,17 @@ class Engine:
 
     def tracectx(self) -> TraceQLContext:
         return TraceQLContext(self.spark, self.sf_dir, step_ns=self.trace_step_ns)
+
+    def served(self, key, build) -> list:
+        """Rows of one read: `build()` makes the request's frame, `key`
+        names it (the route plus the exact arguments it was built
+        from). Here every read is built and collected; a store-backed
+        engine re-collects an already-executed frame for a repeated key
+        under one store version (storage/query.StoreEngine)."""
+        from gigapipe_spark.telemetry import TELEMETRY
+
+        TELEMETRY.inc(SERVED_FRAMES, {"result": "miss"})
+        return build().collect()
 
     # ------------------------------------------------- table providers
     # Every endpoint reads its tables through these, so a store-backed
@@ -918,7 +934,9 @@ class Engine:
         writer/metric/variabels.go): Prometheus text exposition of the
         engine's self-telemetry — sent_rows/sent_bytes per service,
         json_parse_errors_count (decode-error accumulator snapshot),
-        tx_close_time_ms histogram with the reference's bucket bounds."""
+        tx_close_time_ms histogram with the reference's bucket bounds —
+        and the reader's gigapipe_served_frames_total{result="hit"|"miss"}
+        (see `served`)."""
         from gigapipe_spark.telemetry import TELEMETRY
 
         TELEMETRY.sync_decode_errors(self.spark)

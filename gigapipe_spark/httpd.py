@@ -50,7 +50,7 @@ def _labels_of(row) -> dict:
     return dict(lab or {})
 
 
-def _loki_envelope(rows) -> dict:
+def _loki_envelope(rows, direction: str = "backward") -> dict:
     """Rows → Loki query_range response body (streams or matrix by
     shape, matching the reference's response builders)."""
     if rows and "string" in rows[0].__fields__:
@@ -66,14 +66,26 @@ def _loki_envelope(rows) -> dict:
         }
     return {
         "status": "success",
-        "data": {"resultType": "matrix", "result": _matrix(rows)},
+        "data": {"resultType": "matrix", "result": _matrix(rows, direction)},
     }
 
 
-def _matrix(rows) -> list:
+def _matrix(rows, direction: str | None = None) -> list:
     """Rows → matrix series, each series' values in ascending time
     order whatever the row order (the Prometheus/Loki matrix contract;
-    a backward query_range collects newest-first)."""
+    a backward query_range collects newest-first). With a Loki
+    `direction` the rows are first put in query_range's row order
+    (timestamp, fingerprint; a null fingerprint where Spark sorts it),
+    so series come in the order a sorted collect shows them: the
+    compiler leaves an unlimited metric result unsorted."""
+    if direction is not None:
+        rows = sorted(
+            rows,
+            key=lambda r: (
+                r["timestamp_ns"], r["fingerprint"] is not None, r["fingerprint"] or 0
+            ),
+            reverse=direction == "backward",
+        )
     series: dict[tuple, dict] = {}
     for r in rows:
         lab = _labels_of(r)
@@ -101,17 +113,18 @@ def _prom_envelope(rows, instant: bool) -> dict:
     return {"status": "success", "data": {"resultType": rt, "result": result}}
 
 
-def _stream_labels(engine, df) -> list:
-    """Collect log rows with their stream labels attached. The compiler
-    skips the series join when the pipeline never reads labels (a
+def _stream_labels(engine, df):
+    """Log rows with their stream labels attached. The compiler skips
+    the series join when the pipeline never reads labels (a
     bare-selector fact scan stays pruned); the HTTP envelope needs them
     — the reference's response builder attaches the stream's label set
     (query_range response shaping). Broadcast join, filled only where
-    the compiler left labels null."""
+    the compiler left labels null; returned as a frame, so the join is
+    part of the plan `Engine.served` keeps."""
     from pyspark.sql import functions as F
 
     if "string" not in df.columns or "fingerprint" not in df.columns:
-        return df.collect()
+        return df
     series = engine.stream_labels().select(
         "fingerprint", F.col("labels").alias("__slabels")
     )
@@ -119,8 +132,29 @@ def _stream_labels(engine, df) -> list:
         df.join(F.broadcast(series), "fingerprint", "left")
         .withColumn("labels", F.coalesce(F.col("labels"), F.col("__slabels")))
         .drop("__slabels")
-        .collect()
     )
+
+
+def _served(engine, method: str, *args, shape=None) -> list:
+    """Rows of `engine.<method>(*args)` through `Engine.served`, keyed
+    on the method name and that exact argument tuple, so the key and
+    the call cannot diverge. `shape(engine, df)` finishes the frame
+    inside the served plan."""
+
+    def build():
+        df = getattr(engine, method)(*args)
+        return df if shape is None else shape(engine, df)
+
+    return engine.served((method, args), build)
+
+
+def _matches(q: dict, *names: str) -> tuple | None:
+    """The first present match[] parameter as a tuple (hashable, so it
+    can key a served read), else None."""
+    for name in names:
+        if name in q:
+            return tuple(q[name])
+    return None
 
 
 def _multipart_first_file(body: bytes, ctype: str) -> bytes:
@@ -691,31 +725,44 @@ class _Handler(BaseHTTPRequestHandler):
                 if "query" not in q:
                     # query_range.go:36-39 PromError(400, …)
                     return self._prom_error(400, "query parameter is required")
-                df = e.loki_query_range(
+                direction = q.get("direction", ["backward"])[0]
+                rows = _served(
+                    e, "loki_query_range",
                     q["query"][0],
                     _int_arg(q, "start"),
                     _int_arg(q, "end"),
                     int(q["limit"][0]) if "limit" in q else None,
-                    q.get("direction", ["backward"])[0],
+                    direction,
+                    shape=_stream_labels,
                 )
-                return self._json(_loki_envelope(_stream_labels(e, df)))
+                return self._json(_loki_envelope(rows, direction))
             if path == "/loki/api/v1/query":
-                df = e.loki_query(q["query"][0], _int_arg(q, "time"))
-                return self._json(_loki_envelope(_stream_labels(e, df)))
+                rows = _served(
+                    e, "loki_query", q["query"][0], _int_arg(q, "time"),
+                    shape=_stream_labels,
+                )
+                return self._json(_loki_envelope(rows))
             if path == "/loki/api/v1/tail":
                 return self._tail_ws(q)
             if path in ("/loki/api/v1/labels", "/loki/api/v1/label"):
-                vals = [r["key"] for r in e.loki_labels(q.get("match[]")).collect()]
+                vals = [
+                    r["key"]
+                    for r in _served(e, "loki_labels", _matches(q, "match[]"))
+                ]
                 return self._json({"status": "success", "data": sorted(vals)})
             if path.startswith("/loki/api/v1/label/") and path.endswith("/values"):
                 name = unquote(path.split("/")[-2])
                 vals = [
                     r["val"]
-                    for r in e.loki_label_values(name, q.get("match[]")).collect()
+                    for r in _served(
+                        e, "loki_label_values", name, _matches(q, "match[]")
+                    )
                 ]
                 return self._json({"status": "success", "data": sorted(vals)})
             if path == "/loki/api/v1/series":
-                rows = e.loki_series(q.get("match[]", q.get("match", []))).collect()
+                rows = _served(
+                    e, "loki_series", _matches(q, "match[]", "match") or ()
+                )
                 return self._json(
                     {"status": "success", "data": [_labels_of(r) for r in rows]}
                 )
@@ -805,9 +852,10 @@ class _Handler(BaseHTTPRequestHandler):
                 if err is not None:
                     return self._prom_error(400, err)
                 t = _int_arg(q, "time")
-                rows = e.prom_query(
-                    q["query"][0], time.time_ns() if t is None else t
-                ).collect()
+                rows = _served(
+                    e, "prom_query",
+                    q["query"][0], time.time_ns() if t is None else t,
+                )
                 return self._json(_prom_envelope(rows, instant=True))
             if path == "/api/v1/query_range":
                 if "query" not in q:
@@ -824,14 +872,14 @@ class _Handler(BaseHTTPRequestHandler):
                         "are not accepted. Try a positive integer",
                     )
                 step_ns = int(float(step) * 1e9) if step else None
-                # resolution cap, verbatim (prom_query_range.go:64-71);
-                # integer division matches Go's duration division on
-                # the exact boundary
+                # resolution cap, verbatim (prom_query_range.go:64-71),
+                # on the step the grid is built with: the engine's
+                # default when the request names none; integer division
+                # matches Go's duration division on the exact boundary
                 if (
                     start_ns is not None
                     and end_ns is not None
-                    and step_ns
-                    and (end_ns - start_ns) // step_ns > 11000
+                    and (end_ns - start_ns) // (step_ns or e.prom_step_ns) > 11000
                 ):
                     return self._prom_error(
                         500,
@@ -842,26 +890,32 @@ class _Handler(BaseHTTPRequestHandler):
                 err = self._prom_parse_check(q["query"][0])
                 if err is not None:
                     return self._prom_error(400, err)
-                rows = e.prom_query_range(
-                    q["query"][0], start_ns, end_ns, step_ns
-                ).collect()
+                rows = _served(
+                    e, "prom_query_range", q["query"][0], start_ns, end_ns, step_ns
+                )
                 return self._json(_prom_envelope(rows, instant=False))
             if path == "/api/v1/labels":
-                vals = [r["key"] for r in e.prom_labels(q.get("match[]")).collect()]
+                vals = [
+                    r["key"]
+                    for r in _served(e, "prom_labels", _matches(q, "match[]"))
+                ]
                 return self._json({"status": "success", "data": sorted(vals)})
             if path.startswith("/api/v1/label/") and path.endswith("/values"):
                 name = unquote(path.split("/")[-2])
                 vals = [
                     r["val"]
-                    for r in e.prom_label_values(name, q.get("match[]")).collect()
+                    for r in _served(
+                        e, "prom_label_values", name, _matches(q, "match[]")
+                    )
                 ]
                 return self._json({"status": "success", "data": sorted(vals)})
             if path == "/api/v1/series":
-                rows = e.prom_series(
-                    q.get("match[]", q.get("match", [])),
-                    start_ns=_int_arg(q, "start"),
-                    end_ns=_int_arg(q, "end"),
-                ).collect()
+                rows = _served(
+                    e, "prom_series",
+                    _matches(q, "match[]", "match") or (),
+                    _int_arg(q, "start"),
+                    _int_arg(q, "end"),
+                )
                 return self._json(
                     {"status": "success", "data": [_labels_of(r) for r in rows]}
                 )
@@ -883,22 +937,17 @@ class _Handler(BaseHTTPRequestHandler):
 
             if path == "/api/search":
                 limit = int(q.get("limit", ["20"])[0])
+                bounds = (limit, _int_arg(q, "start"), _int_arg(q, "end"))
                 if "tags" in q:  # legacy pre-TraceQL search
-                    df = e.tempo_search_tags(
-                        q["tags"][0],
-                        limit=limit,
-                        start_ns=_int_arg(q, "start"),
-                        end_ns=_int_arg(q, "end"),
-                    )
+                    rows = _served(e, "tempo_search_tags", q["tags"][0], *bounds)
                 else:
-                    df = e.tempo_search(
+                    rows = _served(
+                        e, "tempo_search",
                         q.get("q", [None])[0] or q.get("query", [None])[0],
-                        limit=limit,
-                        start_ns=_int_arg(q, "start"),
-                        end_ns=_int_arg(q, "end"),
+                        *bounds,
                     )
                 return self._json(
-                    {"traces": [r.asDict(recursive=True) for r in df.collect()]}
+                    {"traces": [r.asDict(recursive=True) for r in rows]}
                 )
             if path.startswith("/api/traces/"):
                 # /api/traces/{id} and its /json alias

@@ -1474,6 +1474,9 @@ def query_range(
     planner_main_limit.go, planner_main_finalizer.go): time-range bounds,
     newest/oldest-first ordering, row limit. The limit's tiebreak is the
     (timestamp, fingerprint) total order so pagination is deterministic.
+    A metric (matrix) result without a limit is left unsorted: the sort
+    is a range-partition exchange plus its sampling job, and the matrix
+    envelope orders series and values itself (httpd._matrix).
     """
     ctx.start_ns, ctx.end_ns = start_ns, end_ns
     res = query(ctx, text)
@@ -1484,6 +1487,8 @@ def query_range(
         df = df.filter(F.col("timestamp_ns") >= start_ns)
     if end_ns is not None:
         df = df.filter(F.col("timestamp_ns") < end_ns)
+    if limit is None and res.kind == "matrix":
+        return Result(df, res.kind, res.labels_mutated)
     ts = F.col("timestamp_ns")
     fp = F.col("fingerprint")
     order = [ts.desc(), fp.desc()] if direction == "backward" else [ts.asc(), fp.asc()]

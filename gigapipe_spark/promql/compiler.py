@@ -499,6 +499,15 @@ def _range_fn(
         return out
     if group is None and _counter_rollup_eligible(ctx, fn, sel):
         return _counter_fn_rollup(ctx, fn, sel)
+    if fn.fn in _COUNTER_FNS:
+        # window: per-series consecutive-pair deltas WITHIN each bucket
+        # (@-pinned ranges are one window per series), over label-free
+        # samples; labels re-attach from the series dim afterwards
+        return _counter_agg(
+            _selector_samples(ctx, sel, with_labels=False),
+            window_key(rng, at), rng, fn.fn,
+            series=ctx.series().select("fingerprint", "labels"),
+        )
     df = _selector_samples(ctx, sel)
     if group is not None:
         # agg/range commute (ref: optimizer/vector_agg.go — the vector
@@ -536,10 +545,6 @@ def _range_fn(
         return fp_entries_agg(df, bucket, agg.alias("value")).select(
             "fingerprint", "labels", "timestamp_ns", "value"
         )
-    if fn.fn in _COUNTER_FNS:
-        # window: per-series consecutive-pair deltas WITHIN each bucket
-        # (@-pinned ranges are one window per series)
-        return _counter_agg(df, window_key(rng, at), rng, fn.fn)
     if fn.fn in (
         "ts_of_min_over_time", "ts_of_max_over_time", "ts_of_last_over_time"
     ):
@@ -706,7 +711,11 @@ def _counter_fn_rollup(ctx: PromQLContext, fn: FnCall, sel: VectorSelector) -> D
 
 
 def _counter_agg(
-    df: DataFrame, window_bucket: Column, rng: int, fn_name: str
+    df: DataFrame,
+    window_bucket: Column,
+    rng: int,
+    fn_name: str,
+    series: DataFrame | None = None,
 ) -> DataFrame:
     """Shared counter computation (ref counter.go:62-96, :173): lag
     window per (series, bucket), reset detection, one aggregation.
@@ -717,7 +726,15 @@ def _counter_agg(
     bucket expression twice plans as two different attributes, so the
     post-window aggregate fails to recognize the window's exchange as
     satisfying its required distribution and pays a second full
-    shuffle of every sample row."""
+    shuffle of every sample row.
+
+    Labels stay out of the aggregation buffer, where a map forces a
+    SortAggregate that sorts every windowed sample: the raw path passes
+    label-free samples and the `series` dim, joined after the bucket
+    reduction (as _counter_fn_rollup does); subquery points carry their
+    own, possibly derived, labels, which ride the group key as sorted
+    entries (fp_entries_agg). The window's (fingerprint, __wb)
+    partitioning satisfies either grouping: no extra exchange."""
     df2 = df.withColumn("__wb", window_bucket)
     w = Window.partitionBy("fingerprint", "__wb").orderBy("timestamp_ns")
     prev = F.lag("value").over(w)
@@ -730,9 +747,7 @@ def _counter_agg(
     reset_cnt = F.when(
         F.col("__prev").isNotNull() & (F.col("__prev") > F.col("value")), 1
     ).otherwise(0)
-    grouped = df2.groupBy(
-        "fingerprint", F.col("__wb").alias("timestamp_ns")
-    ).agg(
+    aggs = (
         F.min_by("value", "timestamp_ns").alias("__first"),
         F.max_by("value", "timestamp_ns").alias("__last"),
         F.sum(reset_amt).alias("__resets_amt"),
@@ -741,8 +756,16 @@ def _counter_agg(
         # last pair in bucket for irate/idelta
         F.max_by(F.col("value") - F.col("__prev"), F.when(F.col("__prev").isNotNull(), F.col("timestamp_ns"))).alias("__last_delta"),
         F.max_by(F.col("timestamp_ns") - F.col("__prev_ts"), F.when(F.col("__prev").isNotNull(), F.col("timestamp_ns"))).alias("__last_dt"),
-        F.first("labels").alias("labels"),
     )
+    bucket = F.col("__wb").alias("timestamp_ns")
+    if series is None:
+        grouped = fp_entries_agg(df2, bucket, *aggs)
+    else:
+        grouped = (
+            df2.groupBy("fingerprint", bucket)
+            .agg(*aggs)
+            .join(F.broadcast(series), "fingerprint", "left")
+        )
     # ref counter.go:74-82: increase = end - start + Σ reset amounts
     increase = F.col("__last") - F.col("__first") + F.col("__resets_amt")
     value = {

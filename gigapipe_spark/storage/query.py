@@ -17,12 +17,13 @@ transform. Type filtering follows the reference planners' `type IN
 from __future__ import annotations
 
 import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gigapipe_spark.api import Engine
+from gigapipe_spark.api import SERVED_FRAMES, Engine
 from gigapipe_spark.logql.compiler import LogQLContext
 from gigapipe_spark.promql.compiler import PromQLContext
 from gigapipe_spark.sources.views import ancestors_from_spans
@@ -30,6 +31,7 @@ from gigapipe_spark.traceql.compiler import TraceQLContext
 from gigapipe_spark.storage.snapshot import read_mutation_seq
 from gigapipe_spark.storage.writer import Catalog
 from gigapipe_spark.streaming.rollup import rollup_15s_batch
+from gigapipe_spark.telemetry import TELEMETRY
 
 
 def _stu_tp_unit(df: DataFrame) -> DataFrame:
@@ -245,6 +247,12 @@ def store_traceql_context(spark, catalog: Catalog, **kw) -> StoreTraceQLContext:
     return StoreTraceQLContext(spark, catalog.root, catalog=catalog, **kw)
 
 
+# executed request frames one store version retains, least recently
+# used dropped first (a live tail repeats 1 key, a dashboard refresh
+# reads 7)
+SERVED_FRAMES_MAX = 64
+
+
 class _SeqCatalog(Catalog):
     """The store's tables as of one mutation seq — StoreEngine's
     per-seq table cache. Each table's relation (file listing plus the
@@ -262,13 +270,53 @@ class _SeqCatalog(Catalog):
     unpersisted by Spark's ContextCleaner once nothing references them
     — an in-flight request's plan holds its checkpoint's RDD, so it is
     never released under a running query (the flush checkpoints in
-    storage/writer.py rely on the same cleaner)."""
+    storage/writer.py rely on the same cleaner).
 
-    def __init__(self, base: Catalog):
+    It also keeps each read route's executed frame (`served`), so a
+    repeated request re-collects a plan Spark has already analysed,
+    planned and run: the AQE final plan comes back with its
+    materialized broadcast and shuffle stages, and only the result
+    stage runs. `retain=False` keeps none (see StoreEngine.refresh)."""
+
+    def __init__(self, base: Catalog, retain: bool = True):
         super().__init__(base.root, base.oid)
         # re-entrant: a read_series build reads time_series through read()
         self._lock = threading.RLock()
         self._frames: dict = {}
+        self._retain = retain
+        # request key -> executed frame, in least-recently-used order;
+        # its own lock, so a lookup never waits behind a table build
+        self._served: OrderedDict = OrderedDict()
+        self._served_lock = threading.Lock()
+
+    def served(self, key, build) -> list:
+        """Engine.served under this seq. Misses build outside any lock
+        (concurrent misses compile in parallel; identical ones may both
+        build, the last one kept). A frame whose collect raises is
+        evicted: a failed or cancelled stage must not fail every later
+        hit."""
+        with self._served_lock:
+            df = self._served.get(key)
+            if df is not None:
+                self._served.move_to_end(key)
+        hit = df is not None
+        TELEMETRY.inc(SERVED_FRAMES, {"result": "hit" if hit else "miss"})
+        if not hit:
+            df = build()
+        try:
+            rows = df.collect()
+        except BaseException:
+            with self._served_lock:
+                if self._served.get(key) is df:
+                    del self._served[key]
+            raise
+        if not hit and self._retain:
+            with self._served_lock:
+                self._served[key] = df
+                self._served.move_to_end(key)
+                while len(self._served) > SERVED_FRAMES_MAX:
+                    self._served.popitem(last=False)
+        return rows
 
     def _memo(self, key, build) -> DataFrame:
         df = self._frames.get(key)
@@ -310,14 +358,17 @@ class StoreEngine(Engine):
 
     Each request builds its own query context (see `Engine`); what
     they read is cached per store version: the table relations, the
-    series dimension and the TraceQL probe verdicts that contexts and
-    table providers share (`_SeqCatalog`) are built under the store's
-    mutation seq and dropped when it moves (`_store`).
+    series dimension, the TraceQL probe verdicts that contexts and
+    table providers share, and the gateway's executed read frames
+    (`_SeqCatalog`) are built under the store's mutation seq and
+    dropped when it moves (`_store`).
     """
 
     catalog: Catalog | None = None
     _seq: int | None = field(default=None, repr=False)
     _tables: _SeqCatalog | None = field(default=None, repr=False)
+    # False from an explicit refresh until the seq next moves
+    _seq_names_files: bool = field(default=False, repr=False)
     # re-entrant: `_store` refreshes under it
     _seq_lock: threading.RLock = field(
         default_factory=threading.RLock, repr=False, compare=False
@@ -353,9 +404,15 @@ class StoreEngine(Engine):
         store root, so the NEXT query re-lists files. Called by `_store`
         whenever the store's mutation seq moved (the reader freshness
         contract — see storage/writer.py "Reader freshness"), and by
-        the gateway's stale-listing retry."""
+        the gateway's stale-listing retry.
+
+        Called while the seq stands still, it means the seq no longer
+        names the files (a maintenance walk deletes files before its
+        exit bump), so until the seq moves no executed read frame is
+        retained: a plan listed mid-walk is not served again."""
         with self._seq_lock:
             self._tables = None
+            self._seq_names_files = False
             try:
                 self.spark.catalog.refreshByPath(self.catalog.root)
             except Exception:
@@ -377,9 +434,17 @@ class StoreEngine(Engine):
             if seq != self._seq:
                 self.refresh()
                 self._seq = seq
+                self._seq_names_files = True
             if self._tables is None:
-                self._tables = _SeqCatalog(self.catalog)
+                self._tables = _SeqCatalog(
+                    self.catalog, retain=self._seq_names_files
+                )
             return self._tables
+
+    def served(self, key, build) -> list:
+        """Engine.served over the current seq's tables: a key already
+        answered under this seq re-collects its executed frame."""
+        return self._store().served(key, build)
 
     def rule_managers(self) -> dict:
         """The engine's two rule managers ("loki" LogQL / "prom"

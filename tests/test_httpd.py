@@ -886,6 +886,84 @@ def test_prom_error_codes_match_reference(gateway):
     assert "exceeded maximum resolution" not in body.get("error", ""), body
 
 
+def test_prom_query_range_cap_applies_to_default_step(gateway):
+    """Without `step` the grid uses the engine's default step (60 s),
+    and the 11,000-point cap applies to that step."""
+    base, _ = gateway
+
+    def _code_body(path):
+        try:
+            with urllib.request.urlopen(base + path, timeout=60) as r:
+                return r.status, json.loads(r.read())
+        except urllib.error.HTTPError as ex:
+            return ex.code, json.loads(ex.read())
+
+    # 660,060 s / 60 s = 11,001 points
+    code, body = _code_body("/api/v1/query_range?query=up&start=0&end=660060")
+    assert code == 500
+    assert "exceeded maximum resolution of 11,000 points" in body["error"]
+    # 11,000 points exactly: not capped
+    code, body = _code_body("/api/v1/query_range?query=up&start=0&end=660000")
+    assert "exceeded maximum resolution" not in body.get("error", ""), body
+
+
+def _served_metrics(base) -> dict:
+    """gigapipe_served_frames_total by result, read from /metrics."""
+    _, text = _get_text(base, "/metrics")
+    out = {"hit": 0, "miss": 0}
+    for line in text.splitlines():
+        if line.startswith("gigapipe_served_frames_total{"):
+            result = line.split('result="', 1)[1].split('"', 1)[0]
+            out[result] = int(float(line.rsplit(" ", 1)[1]))
+    return out
+
+
+def test_served_frames_counter(gateway):
+    """Two identical reads: one miss, then a hit. With a push between
+    two reads the store version moves: both miss, and each answer
+    holds the line pushed before it."""
+    base, _ = gateway
+    push = lambda i: _post(base, "/loki/api/v1/push", json.dumps(
+        {"streams": [{"stream": {"app": "memo"},
+                      "values": [[str(T0 + i * S), f"memo {i}"]]}]}
+    ).encode())
+    path = (
+        "/loki/api/v1/query_range?query=" + urllib.parse.quote('{app="memo"}')
+        + f"&start={T0}&end={T0 + 100 * S}&limit=10"
+    )
+    lines = lambda: sorted(
+        v[1] for s in _get(base, path)[1]["data"]["result"] for v in s["values"]
+    )
+    assert push(1) == 204
+    before = _served_metrics(base)
+    assert lines() == lines() == ["memo 1"]
+    mid = _served_metrics(base)
+    assert (mid["hit"] - before["hit"], mid["miss"] - before["miss"]) == (1, 1)
+    assert push(2) == 204
+    assert lines() == ["memo 1", "memo 2"]
+    assert push(3) == 204
+    assert lines() == ["memo 1", "memo 2", "memo 3"]
+    after = _served_metrics(base)
+    assert (after["hit"] - mid["hit"], after["miss"] - mid["miss"]) == (0, 2)
+
+
+def test_prom_instant_query_without_time_never_hits(gateway):
+    """`/api/v1/query` without `time` evaluates at now, and the served
+    key carries that resolved instant: a repeat is never a hit. With
+    the same `time` it is."""
+    base, _ = gateway
+    q = "/api/v1/query?query=" + urllib.parse.quote("vector(1)")
+    before = _served_metrics(base)
+    for _ in range(2):
+        assert _get(base, q)[1]["status"] == "success"
+    mid = _served_metrics(base)
+    assert (mid["hit"] - before["hit"], mid["miss"] - before["miss"]) == (0, 2)
+    for _ in range(2):
+        assert _get(base, q + f"&time={T0 // S}")[1]["status"] == "success"
+    after = _served_metrics(base)
+    assert (after["hit"] - mid["hit"], after["miss"] - mid["miss"]) == (1, 1)
+
+
 def test_render_param_validation_and_time_scope(gateway):
     """Render param contract (prof.go:208-223): query/from/until
     REQUIRED -> 400 defaultError (a bare JSON-quoted string body, not

@@ -600,3 +600,26 @@ def test_nonpushable_tripwire(spark):
     plan = df.filter(F.col("x") > 2)._jdf.queryExecution().optimizedPlan()
     assert plan.nodeName() == "Filter", hint + "\n" + plan.toString()
     assert plan.child().nodeName() == "Project", hint + "\n" + plan.toString()
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "topk(3, rate(req_total[5m]))",
+        "rate(sum by (app) (req_total)[5m:1m])",
+    ],
+)
+def test_counter_aggregate_is_hash_aggregated(metric_store, expr):
+    """rate/increase/... aggregate with no labels map in the buffer: the
+    raw path re-attaches labels from the series dim, the subquery path
+    carries them in the group key. A map there would plan a
+    SortAggregate sorting every windowed sample."""
+    t = _T0 + 1000 * _S
+    for df in (
+        metric_store.prom_query(expr, t),
+        metric_store.prom_query_range(expr, t - 600 * _S, t, 60 * _S),
+    ):
+        assert df.collect()
+        final = _plan(df).split("== Initial Plan ==")[0]
+        assert "SortAggregate" not in final, final
+        assert "HashAggregate" in final, final

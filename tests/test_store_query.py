@@ -741,14 +741,21 @@ def test_store_engine_new_stream_visible_on_warm_engine(spark, tmp_path):
     """A push adding a new stream reaches a warm engine's next
     query_range, labels attached the way the HTTP envelope attaches
     them, and its next label listing: the per-seq tables are rebuilt
-    when the push bumps the mutation seq."""
+    when the push bumps the mutation seq. The query goes through
+    `served` under one key before and after the push, so the executed
+    frame kept for the old seq is not served again."""
     from gigapipe_spark.httpd import _stream_labels
     from gigapipe_spark.storage.query import StoreEngine
 
     cat = _seed(spark, tmp_path)
     eng = StoreEngine(spark, cat.root, catalog=cat)
-    q = lambda: _stream_labels(eng, eng.loki_query_range('{app=~"web|cache"}'))
+    sel = '{app=~"web|cache"}'
+    q = lambda: eng.served(
+        ("loki_query_range", (sel,)),
+        lambda: _stream_labels(eng, eng.loki_query_range(sel)),
+    )
     assert {r["labels"]["app"] for r in q()} == {"web"}
+    assert {r["labels"]["app"] for r in q()} == {"web"}  # served again
     values = lambda: {r["val"] for r in eng.loki_label_values("app").collect()}
     assert values() == {"web", "db"}
 
@@ -990,3 +997,259 @@ def test_store_engine_concurrent_readers_share_one_build(spark, tmp_path, monkey
     assert not any(t.is_alive() for t in threads)
     assert counts == [6] * 8
     assert builds and set(builds.values()) == {1}, builds
+
+
+def _group_jobs(spark, group: str, fn):
+    """(fn's result, the Spark job ids it ran) under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _served_counts() -> tuple:
+    from gigapipe_spark.api import SERVED_FRAMES
+    from gigapipe_spark.telemetry import TELEMETRY
+
+    c = TELEMETRY._counters
+    return tuple(
+        c.get((SERVED_FRAMES, (("result", r),)), 0.0) for r in ("hit", "miss")
+    )
+
+
+def test_served_repeat_reuses_executed_plan(spark, tmp_path, monkeypatch):
+    """Two identical reads under one seq: the same rows, the second a
+    hit that re-collects the executed plan — at most one Spark job (the
+    result stage) and no LogQL compile."""
+    from gigapipe_spark import api
+    from gigapipe_spark.httpd import _served, _stream_labels
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    compiles = []
+    real = api._logql_query_range
+    monkeypatch.setattr(
+        api, "_logql_query_range",
+        lambda *a, **kw: compiles.append(a[1]) or real(*a, **kw),
+    )
+    for i, text in enumerate(
+        ('{app=~"web|db"}', 'sum by (app) (count_over_time({app=~".+"}[1m]))')
+    ):
+        read = lambda: _served(
+            eng, "loki_query_range", text, T0, T0 + 10**12, None, "backward",
+            shape=_stream_labels,
+        )
+        h0, m0 = _served_counts()
+        first, _ = _group_jobs(spark, f"served-miss-{i}", read)
+        second, jobs = _group_jobs(spark, f"served-hit-{i}", read)
+        assert first and second == first
+        assert len(jobs) <= 1, jobs
+        assert compiles == [text]
+        assert _served_counts() == (h0 + 1, m0 + 1)
+        compiles.clear()
+
+
+def test_served_failed_or_cancelled_hit_is_rebuilt(spark, tmp_path):
+    """A hit whose collect raises, or is cancelled, drops its frame: the
+    identical read after it builds again and answers correctly."""
+    import os
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    fail, slow = str(tmp_path / "fail"), str(tmp_path / "slow")
+
+    @F.udf("long")
+    def probe(x):
+        import os as _os
+        import time as _t
+
+        if _os.path.exists(fail):
+            raise RuntimeError("stage failed")
+        if _os.path.exists(slow):
+            _t.sleep(60)
+        return x
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        # no exchange: every collect re-runs the probe
+        return spark.range(0, 4, 1, 1).select(probe("id").alias("id"))
+
+    read = lambda: sorted(r["id"] for r in eng.served(("probe",), build))
+    assert read() == read() == [0, 1, 2, 3] and len(builds) == 1
+
+    open(fail, "w").close()
+    try:
+        read()
+        raise AssertionError("the failing stage must raise")
+    except Exception as ex:
+        assert "stage failed" in str(ex)
+    os.remove(fail)
+    assert read() == [0, 1, 2, 3] and len(builds) == 2
+
+    open(slow, "w").close()
+    sc = spark.sparkContext
+    out = {}
+
+    def cancelled_read():
+        sc.setJobGroup("served-cancel", "served-cancel", True)
+        try:
+            out["rows"] = read()
+        except Exception as ex:
+            out["error"] = ex
+
+    t = threading.Thread(target=cancelled_read)
+    t.start()
+    deadline = time.monotonic() + 60
+    while not sc.statusTracker().getJobIdsForGroup("served-cancel"):
+        assert time.monotonic() < deadline
+        time.sleep(0.1)
+    sc.cancelJobGroup("served-cancel")
+    t.join(60)
+    assert not t.is_alive() and "error" in out, out
+    os.remove(slow)
+    assert read() == [0, 1, 2, 3] and len(builds) == 3
+
+
+def test_served_frames_lru_bound(spark, tmp_path, monkeypatch):
+    """One seq retains at most SERVED_FRAMES_MAX executed frames; the
+    least recently used goes first."""
+    from gigapipe_spark.storage import query as sq
+
+    cat = _seed(spark, tmp_path)
+    eng = sq.StoreEngine(spark, cat.root, catalog=cat)
+    monkeypatch.setattr(sq, "SERVED_FRAMES_MAX", 3)
+    builds = []
+
+    def read(n):
+        def build():
+            builds.append(n)
+            return spark.range(n)
+
+        return eng.served(("n", n), build)
+
+    for n in (1, 2, 3, 1, 4):  # 1 is used again before 4 evicts 2
+        assert len(read(n)) == n
+    assert list(eng._store()._served) == [("n", 3), ("n", 1), ("n", 4)]
+    read(2)
+    assert builds == [1, 2, 3, 4, 2]
+    assert len(eng._store()._served) == 3
+
+
+def test_unlimited_metric_query_range_skips_sort(spark, tmp_path):
+    """A Loki metric query_range without a limit is not globally sorted
+    (the sort is a range-partition exchange plus its sampling job: two
+    jobs per read), and the matrix envelope orders series itself, so
+    the response body is the one the sorted rows give."""
+    from gigapipe_spark.httpd import _loki_envelope, _matrix
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = Catalog(str(tmp_path / "store"))
+    _push(spark, cat, [
+        {"stream": {"app": app, "env": "prod", "pod": pod},
+         "values": [[str(T0 + (i * 7 + k) * S), f"error {i}" if i % 3 else "ok"]
+                    for i in range(40)]}
+        for k, (app, pod) in enumerate(
+            (a, p) for a in ("api", "web", "db") for p in "xy"
+        )
+    ])
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    text = 'sum by (app) (rate({env="prod"} |= "error" [1m]))'
+    for direction in ("backward", "forward"):
+        df = eng.loki_query_range(text, T0, T0 + 400 * S, None, direction)
+        ts, fp = F.col("timestamp_ns"), F.col("fingerprint")
+        order = (
+            [ts.desc(), fp.desc()] if direction == "backward" else [ts.asc(), fp.asc()]
+        )
+        ordered = df.orderBy(*order)
+        rows, jobs = _group_jobs(spark, f"unsorted-{direction}", df.collect)
+        sorted_rows, sorted_jobs = _group_jobs(
+            spark, f"sorted-{direction}", ordered.collect
+        )
+        assert len(sorted_jobs) - len(jobs) == 2, (jobs, sorted_jobs)
+        assert len({r["labels"]["app"] for r in rows}) == 3
+        # the sorted rows' series in order of first appearance: the
+        # envelope as it was built from a sorted collect
+        body = json.dumps(_loki_envelope(rows, direction)["data"]["result"])
+        assert body == json.dumps(_matrix(sorted_rows))
+
+
+def test_served_concurrent_readers(spark, tmp_path):
+    """More reader threads than cores, a short switch interval, two
+    keys on one engine: every answer is right, every read is counted
+    once as a hit or a miss, and the memo holds one frame per key."""
+    import sys
+    import threading
+
+    from gigapipe_spark.httpd import _served, _stream_labels
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    want = {'{app="web"}': 6, '{app="db"}': 1}
+    read = lambda sel: _served(
+        eng, "loki_query_range", sel, None, None, None, "backward",
+        shape=_stream_labels,
+    )
+    h0, m0 = _served_counts()
+    wrong = []
+
+    def reader(i):
+        for k in range(4):
+            sel = list(want)[(i + k) % 2]
+            rows = read(sel)
+            if len(rows) != want[sel] or any(r["labels"] is None for r in rows):
+                wrong.append((sel, len(rows)))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not wrong, wrong
+    h, m = _served_counts()
+    assert (h - h0) + (m - m0) == 32 and h - h0 >= 1
+    assert sorted(k[1][0] for k in eng._store()._served) == sorted(want)
+
+
+def test_served_keeps_nothing_after_explicit_refresh(spark, tmp_path):
+    """An explicit refresh under an unchanged seq (the gateway's
+    stale-listing retry) stops the seq from naming the files: reads
+    still answer, but no executed frame is kept until the seq moves."""
+    from gigapipe_spark.storage.query import StoreEngine
+    from gigapipe_spark.storage.snapshot import bump_mutation_seq
+
+    cat = _seed(spark, tmp_path)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    builds = []
+
+    def read():
+        def build():
+            builds.append(1)
+            return eng.loki_query_range('{app="web"}')
+
+        assert len(eng.served(("web",), build)) == 6
+        return len(builds)
+
+    assert [read(), read()] == [1, 1]
+    eng.refresh()
+    assert [read(), read()] == [2, 3]
+    bump_mutation_seq(cat.root)
+    assert [read(), read()] == [4, 4]
