@@ -165,6 +165,10 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf_dir": sf_dir,
+        # the parallelism the run actually had (a cpus cap the session
+        # ignored shows here)
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     if cal_runs:
         cal = statistics.median(cal_runs)

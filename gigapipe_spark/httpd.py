@@ -301,16 +301,6 @@ def _ms_to_ns(val: str) -> int:
     return secs * 1_000_000_000
 
 
-def _stale_listing_error(ex: Exception) -> bool:
-    """True when a Spark error means 'a file in the snapshot listing is
-    gone' — the signature of a rotate/compact swapping parquet files
-    under an in-flight scan (canonical matcher lives next to the
-    snapshot protocol in storage/snapshot.py)."""
-    from gigapipe_spark.storage.snapshot import stale_listing_error
-
-    return stale_listing_error(ex)
-
-
 def _int_arg(q: dict, name: str) -> int | None:
     v = q.get(name, [None])[0]
     if v is None:
@@ -1184,32 +1174,19 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _guarded_read(self, desc: str, path: str, read):
         """Run one read route under a RequestGuard (see `_guard`) and
-        answer its errors; one route fails, the server survives.
-
-        A stale file listing is retried once: a rotate/compact swapped
-        parquet files under an in-flight scan (the soak's reproducible
-        500: a query planned against the pre-tick listing reads a file
-        the tick deleted). The engine's seq check cannot catch this:
-        the walk deletes files before its maintenance window bumps the
-        mutation seq on exit, so the seq the tables were read under
-        still looks current — refresh explicitly and re-run the read
-        once under a new guard, the way the reference's reader simply
-        re-queries ClickHouse (whose MVCC makes parts-gone invisible to
-        it)."""
-        for retry in (False, True):
-            guard = self._guard(f"{desc} retry" if retry else desc, path=path)
-            try:
-                with guard:
-                    return read()
-            except BrokenPipeError:
-                raise
-            except Exception as ex:
-                if retry or guard.reason is not None or not _stale_listing_error(ex):
-                    return self._guard_error(guard, ex)
-            try:
-                self.engine.refresh()
-            except Exception:
-                pass
+        answer its errors; one route fails, the server survives. A
+        rotate/compact deleting files under a read needs no retry here:
+        the engine reads one pinned snapshot per mutation seq, answers
+        from it while a maintenance walk runs, and never names a file
+        that is already gone (storage/query.py `_store`)."""
+        guard = self._guard(desc, path=path)
+        try:
+            with guard:
+                return read()
+        except BrokenPipeError:
+            raise
+        except Exception as ex:
+            return self._guard_error(guard, ex)
 
     def _querier_v1(self, method: str, req: dict):
         """connect-protocol Pyroscope querier RPCs (reader/router/
@@ -1336,9 +1313,8 @@ class _Handler(BaseHTTPRequestHandler):
                         return self._json({"error": f"unknown rpc {path}"}, 404)
                     return self._json(out)
 
-                # querier RPCs are reads — same per-request deadline,
-                # disconnect cancellation and stale-listing retry as the
-                # GET query surface
+                # querier RPCs are reads — same per-request deadline
+                # and disconnect cancellation as the GET query surface
                 return self._guarded_read(f"POST {path}", path, rpc)
             if path == "/settings.v1.SettingsService/Get":
                 return self._json(e.pyroscope_settings())

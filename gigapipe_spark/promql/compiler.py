@@ -320,30 +320,22 @@ def _range_fn_subquery(ctx: PromQLContext, fn: FnCall, sq) -> DataFrame:
             agg = F.max(
                 F.struct(v.alias("v"), F.col("timestamp_ns").alias("t"))
             ).getField("t")
-        return (
-            inner.groupBy("fingerprint", bucket)
-            .agg(
-                (agg / F.lit(1e9)).cast("double").alias("value"),
-                F.first("labels").alias("labels"),
-            )
-            .select("fingerprint", "labels", "timestamp_ns", "value")
-        )
+        # the inner's (possibly derived) labels ride the group key
+        return fp_entries_agg(
+            inner, bucket, (agg / F.lit(1e9)).cast("double").alias("value")
+        ).select("fingerprint", "labels", "timestamp_ns", "value")
     if fn.fn == "mad_over_time":
         # window median + regroup share the (fingerprint, bucket)
         # partitioning — one exchange, like the raw path (:437)
         w = Window.partitionBy("fingerprint", wb)
         med = F.percentile("value", F.lit(0.5)).over(w)
-        return (
-            inner.withColumn("__med", med)
-            .groupBy("fingerprint", bucket)
-            .agg(
-                F.percentile(
-                    F.abs(F.col("value") - F.col("__med")), F.lit(0.5)
-                ).alias("value"),
-                F.first("labels").alias("labels"),
-            )
-            .select("fingerprint", "labels", "timestamp_ns", "value")
-        )
+        return fp_entries_agg(
+            inner.withColumn("__med", med),
+            bucket,
+            F.percentile(
+                F.abs(F.col("value") - F.col("__med")), F.lit(0.5)
+            ).alias("value"),
+        ).select("fingerprint", "labels", "timestamp_ns", "value")
     if fn.fn == "quantile_over_time":
         agg = F.percentile("value", F.lit(fn.param))
     else:
@@ -409,15 +401,7 @@ def _range_fn_rollup(ctx: PromQLContext, fn: FnCall, sel: VectorSelector) -> Dat
     if sel.offset_ns:
         df = df.withColumn("timestamp_ns", F.col("timestamp_ns") + F.lit(sel.offset_ns))
     bucket = _bucket(F.col("timestamp_ns"), sel.range_ns).alias("timestamp_ns")
-    agg = _ROLLUP_AGGS[fn.fn]()
-    # label-free hash aggregate over the rollup cells, labels re-joined
-    # from the broadcast series dim on the bucket-reduced output (the
-    # r14 instant-vector shape; see _range_fn's group-None branch)
-    out = df.groupBy("fingerprint", bucket).agg(agg.alias("value"))
-    series = ctx.series().select("fingerprint", "labels")
-    return out.join(F.broadcast(series), "fingerprint", "left").select(
-        "fingerprint", "labels", "timestamp_ns", "value"
-    )
+    return _per_series_agg(ctx, df, bucket, _ROLLUP_AGGS[fn.fn]())
 
 
 def _range_fn(
@@ -529,17 +513,7 @@ def _range_fn(
             else _SIMPLE_RANGE[fn.fn]()
         )
         if group is None:
-            # per-SERIES grouping: aggregate label-free and re-attach
-            # labels from the broadcast series dim on the bucket-reduced
-            # output (the r14 instant-vector shape) — the aggregation
-            # buffer stays numeric (hash agg / object-hash for
-            # percentile) and the exchange ships (fp, bucket, partial)
-            # only. The dim IS where df's labels came from, so the join
-            # reproduces first(labels) exactly.
-            out = df.groupBy("fingerprint", bucket).agg(agg.alias("value"))
-            series = ctx.series().select("fingerprint", "labels")
-            out = out.join(F.broadcast(series), "fingerprint", "left")
-            return out.select("fingerprint", "labels", "timestamp_ns", "value")
+            return _per_series_agg(ctx, df, bucket, agg)
         # commuted grouping: labels were just regrouped (not in the dim)
         # — they ride the group key as sorted entries instead
         return fp_entries_agg(df, bucket, agg.alias("value")).select(
@@ -564,14 +538,9 @@ def _range_fn(
             agg = F.max(
                 F.struct(v.alias("v"), F.col("timestamp_ns").alias("t"))
             ).getField("t")
-        out = (
-            df.groupBy("fingerprint", bucket)
-            .agg(
-                (agg / F.lit(1e9)).cast("double").alias("value"),
-                F.first("labels").alias("labels"),
-            )
+        return _per_series_agg(
+            ctx, df, bucket, (agg / F.lit(1e9)).cast("double")
         )
-        return out.select("fingerprint", "labels", "timestamp_ns", "value")
     if fn.fn == "mad_over_time":
         # median(|v - median(v)|) per window (upstream experimental
         # functions.go funcMadOverTime: quantile 0.5 with linear
@@ -580,18 +549,29 @@ def _range_fn(
         # second aggregation adds no exchange.
         w = Window.partitionBy("fingerprint", window_key(rng, at))
         med = F.percentile("value", F.lit(0.5)).over(w)
-        out = (
-            df.withColumn("__med", med)
-            .groupBy("fingerprint", bucket)
-            .agg(
-                F.percentile(
-                    F.abs(F.col("value") - F.col("__med")), F.lit(0.5)
-                ).alias("value"),
-                F.first("labels").alias("labels"),
-            )
+        return _per_series_agg(
+            ctx,
+            df.withColumn("__med", med),
+            bucket,
+            F.percentile(F.abs(F.col("value") - F.col("__med")), F.lit(0.5)),
         )
-        return out.select("fingerprint", "labels", "timestamp_ns", "value")
     raise NotImplementedError(f"range fn {fn.fn}")
+
+
+def _per_series_agg(
+    ctx: PromQLContext, df: DataFrame, bucket: Column, agg: Column
+) -> DataFrame:
+    """Per-SERIES range aggregate: aggregate label-free and re-attach
+    labels from the broadcast series dim on the bucket-reduced output
+    (the r14 instant-vector shape) — the aggregation buffer stays
+    numeric (hash agg / object-hash for percentile; a labels map there
+    plans a SortAggregate that sorts every windowed sample) and the
+    exchange ships (fp, bucket, partial) only. The dim IS where df's
+    labels came from, so the join reproduces first(labels) exactly."""
+    out = df.groupBy("fingerprint", bucket).agg(agg.alias("value"))
+    series = ctx.series().select("fingerprint", "labels")
+    out = out.join(F.broadcast(series), "fingerprint", "left")
+    return out.select("fingerprint", "labels", "timestamp_ns", "value")
 
 
 _ROLLUP_COUNTERS = {"rate", "increase", "delta", "resets", "changes",

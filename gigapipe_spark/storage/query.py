@@ -16,6 +16,7 @@ transform. Type filtering follows the reference planners' `type IN
 
 from __future__ import annotations
 
+import os
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass, field
@@ -28,7 +29,13 @@ from gigapipe_spark.logql.compiler import LogQLContext
 from gigapipe_spark.promql.compiler import PromQLContext
 from gigapipe_spark.sources.views import ancestors_from_spans
 from gigapipe_spark.traceql.compiler import TraceQLContext
-from gigapipe_spark.storage.snapshot import read_mutation_seq
+from gigapipe_spark.storage.maintenance import ALL_TABLES
+from gigapipe_spark.storage.snapshot import (
+    SnapshotUnstable,
+    in_maintenance,
+    pin_listing,
+    read_mutation_seq,
+)
 from gigapipe_spark.storage.writer import Catalog
 from gigapipe_spark.streaming.rollup import rollup_15s_batch
 from gigapipe_spark.telemetry import TELEMETRY
@@ -72,6 +79,9 @@ class StoreLogQLContext(LogQLContext):
     """LogQL over the stored samples/time_series/gin tables."""
 
     catalog: Catalog | None = None
+    # a live-tail poll's new samples files (`_SeqCatalog.read_files`);
+    # None reads the whole table
+    samples_files: frozenset | None = None
 
     def match_series(self) -> DataFrame:
         # NO type scoping (the GIN-bitmask matcher this replaces had
@@ -88,7 +98,12 @@ class StoreLogQLContext(LogQLContext):
 
     def samples(self) -> DataFrame:
         if self._samples is None:
-            df = self.catalog.read(self.spark, "samples")
+            if self.samples_files is None:
+                df = self.catalog.read(self.spark, "samples")
+            else:
+                df = self.catalog.read_files(
+                    self.spark, "samples", self.samples_files
+                )
             df = _bounded(df, *self._scan_bounds)
             self._samples = df.filter(F.col("type").isin(0, 1)).select(
                 "fingerprint", "timestamp_ns", "value", "string", "type"
@@ -137,8 +152,6 @@ class StorePromQLContext(PromQLContext):
 
     def rollup(self) -> DataFrame:
         if self._rollup is None:
-            import os
-
             if os.path.isdir(self.catalog.path("metrics_15s")):
                 # stored rollup MV, partials merged on read
                 self._rollup = self.catalog.read_rollup(self.spark)
@@ -200,8 +213,6 @@ class StoreTraceQLContext(TraceQLContext):
         # row-oriented twin of the GIN — its own stored table maintained
         # at ingest (spans_fanout); falls back to a rebuild for stores
         # written before the table existed
-        import os
-
         if os.path.isdir(self.catalog.path("tempo_traces_attr_map")):
             return self.catalog.read(self.spark, "tempo_traces_attr_map").select(
                 "trace_id", "span_id", "timestamp_ns", "duration", "attrs"
@@ -253,18 +264,33 @@ def store_traceql_context(spark, catalog: Catalog, **kw) -> StoreTraceQLContext:
 SERVED_FRAMES_MAX = 64
 
 
+# the tables a snapshot pins: every table a fan-out journals. The
+# ancestor index is not journaled (its pairs are orphan-tolerant and
+# its rebuild swaps the whole dir), so it is listed live, as before.
+PINNED_TABLES = tuple(t for t in ALL_TABLES if t != "tempo_traces_anc")
+
+# A pinned read names every file. Past this many paths Spark lists
+# them with a distributed job (spark.sql.sources.
+# parallelPartitionDiscovery.threshold, default 32): reading 80 files
+# on a 2-core local session took 1.2 s with that job and 0.17 s
+# without. Store sessions list them in-process, whatever the count.
+LOCAL_LISTING_MAX_PATHS = 2**31 - 1
+
+
 class _SeqCatalog(Catalog):
-    """The store's tables as of one mutation seq — StoreEngine's
-    per-seq table cache. Each table's relation (file listing plus the
-    inferred parquet schema) is read once, the rollup's merge-on-read
-    plan is built once, and each `read_series` variant is deduplicated
-    once and materialized with an eager localCheckpoint (and each
-    TraceQL probe verdict is computed once, via `_memo`), so every
-    request under one seq shares them instead of re-listing,
-    re-inferring, re-planning and re-running the time_series dedup
-    shuffle (the reference's series lookup is a local ClickHouse table;
-    this is its per-version analog). Builds run under one lock, so the
-    readers that arrive together after a write share one build.
+    """The store as of one mutation seq: one journal-validated file
+    listing of every journaled table (storage/snapshot.pin_listing, so
+    files of an in-flight batch are excluded), and StoreEngine's
+    per-seq cache of what is built from it. Each table's relation (its
+    pinned files plus the parquet schema inferred from them) is read
+    once, the rollup's merge-on-read plan is built once, and each
+    `read_series` variant is deduplicated once and materialized with an
+    eager localCheckpoint (and each TraceQL probe verdict is computed
+    once, via `_memo`), so every request and tail poll under one seq
+    shares them and sees the same whole batches (the reference's
+    ClickHouse reads see committed parts only; this is their per-version
+    analog). Builds run under one lock, so the readers that arrive
+    together after a write share one build.
 
     A superseded instance is just dropped. Its checkpoints are
     unpersisted by Spark's ContextCleaner once nothing references them
@@ -276,14 +302,15 @@ class _SeqCatalog(Catalog):
     repeated request re-collects a plan Spark has already analysed,
     planned and run: the AQE final plan comes back with its
     materialized broadcast and shuffle stages, and only the result
-    stage runs. `retain=False` keeps none (see StoreEngine.refresh)."""
+    stage runs."""
 
-    def __init__(self, base: Catalog, retain: bool = True):
+    def __init__(self, base: Catalog, seq: int, listing: dict[str, list[str]]):
         super().__init__(base.root, base.oid)
+        self.seq = seq
+        self._listing = listing
         # re-entrant: a read_series build reads time_series through read()
         self._lock = threading.RLock()
         self._frames: dict = {}
-        self._retain = retain
         # request key -> executed frame, in least-recently-used order;
         # its own lock, so a lookup never waits behind a table build
         self._served: OrderedDict = OrderedDict()
@@ -310,7 +337,7 @@ class _SeqCatalog(Catalog):
                 if self._served.get(key) is df:
                     del self._served[key]
             raise
-        if not hit and self._retain:
+        if not hit:
             with self._served_lock:
                 self._served[key] = df
                 self._served.move_to_end(key)
@@ -327,8 +354,39 @@ class _SeqCatalog(Catalog):
                 self._frames[key] = build()
             return self._frames[key]
 
+    def files(self, table: str) -> frozenset:
+        return frozenset(self._listing.get(table, ()))
+
+    def _load(self, spark, table: str) -> DataFrame:
+        files = self._listing.get(table)
+        if files is None:  # not pinned: the live listing
+            return super()._load(spark, table)
+        return self._memo(
+            ("load", table), lambda: self._parquet(spark, table, files)
+        )
+
+    def _parquet(self, spark, table: str, files, schema=None) -> DataFrame:
+        # A maintenance walk deletes files while reads still answer from
+        # this snapshot (until the walk's exit bump); Spark fails a read
+        # naming a missing path, and ignoreMissingFiles skips one that
+        # vanishes after planning.
+        files = [f for f in files if os.path.exists(f)]
+        if not files:
+            return self._empty_table(spark, table)
+        reader = spark.read.option("basePath", self.path(table))
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*files)
+
     def read(self, spark, table: str) -> DataFrame:
         return self._memo(table, lambda: super(_SeqCatalog, self).read(spark, table))
+
+    def read_files(self, spark, table: str, files) -> DataFrame:
+        """`table` narrowed to `files` (a tail poll's new files), read
+        with the schema of the whole pinned table, so no footer is
+        opened and the shared snapshot is left as it is."""
+        schema = self._load(spark, table).schema
+        return self._scope_oid(self._parquet(spark, table, sorted(files), schema))
 
     def read_rollup(self, spark) -> DataFrame:
         return self._memo("rollup", lambda: super(_SeqCatalog, self).read_rollup(spark))
@@ -357,18 +415,15 @@ class StoreEngine(Engine):
     fixture views.
 
     Each request builds its own query context (see `Engine`); what
-    they read is cached per store version: the table relations, the
-    series dimension, the TraceQL probe verdicts that contexts and
-    table providers share, and the gateway's executed read frames
-    (`_SeqCatalog`) are built under the store's mutation seq and
-    dropped when it moves (`_store`).
+    they read is one snapshot per store version: the pinned file
+    listing, and the table relations, the series dimension, the
+    TraceQL probe verdicts and the gateway's executed read frames built
+    from it (`_SeqCatalog`), are taken under the store's mutation seq
+    and dropped when it moves (`_store`).
     """
 
     catalog: Catalog | None = None
-    _seq: int | None = field(default=None, repr=False)
     _tables: _SeqCatalog | None = field(default=None, repr=False)
-    # False from an explicit refresh until the seq next moves
-    _seq_names_files: bool = field(default=False, repr=False)
     # re-entrant: `_store` refreshes under it
     _seq_lock: threading.RLock = field(
         default_factory=threading.RLock, repr=False, compare=False
@@ -389,56 +444,56 @@ class StoreEngine(Engine):
         # bug worth failing loudly on.
         try:
             self.spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
+            self.spark.conf.set(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(LOCAL_LISTING_MAX_PATHS),
+            )
         except Exception:
             pass  # read-only conf in exotic sessions; queries still work
 
     def _has_table(self, table: str) -> bool:
-        import os
-
         return os.path.isdir(self.catalog.path(table))
 
     def refresh(self) -> None:
-        """Drop the per-seq table cache (its relations pin the parquet
-        file listing they were read with, the series checkpoints the
-        rows) and invalidate Spark's cached file listings under the
-        store root, so the NEXT query re-lists files. Called by `_store`
+        """Pin the store's current snapshot — one journal-validated
+        listing of every journaled table (storage/snapshot.pin_listing)
+        — and start a fresh per-seq cache over it. Called by `_store`
         whenever the store's mutation seq moved (the reader freshness
-        contract — see storage/writer.py "Reader freshness"), and by
-        the gateway's stale-listing retry.
-
-        Called while the seq stands still, it means the seq no longer
-        names the files (a maintenance walk deletes files before its
-        exit bump), so until the seq moves no executed read frame is
-        retained: a plan listed mid-walk is not served again."""
+        contract — see storage/writer.py "Reader freshness"). Raises
+        SnapshotUnstable when no quiescent listing window shows up
+        (a maintenance walk is running)."""
         with self._seq_lock:
-            self._tables = None
-            self._seq_names_files = False
-            try:
-                self.spark.catalog.refreshByPath(self.catalog.root)
-            except Exception:
-                pass  # no cached relations under the root yet
+            seq, listing = pin_listing(self.catalog.root, PINNED_TABLES)
+            self._tables = _SeqCatalog(self.catalog, seq, listing)
 
-    def _store(self) -> Catalog:
-        """The store's tables as of its current mutation seq (what every
-        context build and table provider reads), first refreshing if
-        any writer — this process's pushes, bulk flushes,
+    def _store(self, fresh: bool = False) -> _SeqCatalog:
+        """The store's snapshot as of its current mutation seq (what
+        every context build, table provider and tail poll reads), first
+        re-pinning if any writer — this process's pushes, bulk flushes,
         ruler writeback, maintenance, or another process — bumped the
-        seq since they were read. The reference's reader never needs
-        this: ClickHouse reads always see committed parts."""
+        seq since it was pinned. The reference's reader never needs
+        this: ClickHouse reads always see committed parts.
+
+        While a maintenance walk (rotate / compact / tier move) runs,
+        reads answer from the last pinned snapshot until the walk's exit
+        bump; files the walk deletes under it are skipped. A `fresh`
+        caller (a tail poll, whose watermark must not pass rows a walk
+        is moving) gets SnapshotUnstable instead, and so does the first
+        read of an engine that has no snapshot yet once pin_listing's
+        bounded wait runs out."""
+        root = self.catalog.root
         with self._seq_lock:
-            # Read the seq BEFORE the refresh and before anything is
-            # read, record it only AFTER the refresh: a table is then
-            # never labelled with a seq newer than its file listing, so
-            # a commit racing this check is caught by the next access.
-            seq = read_mutation_seq(self.catalog.root)
-            if seq != self._seq:
-                self.refresh()
-                self._seq = seq
-                self._seq_names_files = True
-            if self._tables is None:
-                self._tables = _SeqCatalog(
-                    self.catalog, retain=self._seq_names_files
-                )
+            if in_maintenance(root):
+                if fresh:
+                    raise SnapshotUnstable(f"maintenance walk on {root!r}")
+                if self._tables is not None:
+                    return self._tables
+            if self._tables is None or read_mutation_seq(root) != self._tables.seq:
+                try:
+                    self.refresh()
+                except SnapshotUnstable:
+                    if fresh or self._tables is None:
+                        raise
             return self._tables
 
     def served(self, key, build) -> list:
@@ -534,17 +589,20 @@ class StoreEngine(Engine):
         )
 
     def loki_tail(self, query: str, max_rows_per_poll: int = 1000):
-        """Tail over the STORE with a FRESH context per poll: a cached
-        context's parquet scan snapshots the file listing at read time,
-        so appends landing after the first poll would be invisible
-        through it — rebinding per poll is what makes the tail live
-        (query_range.go:670 re-runs the transpiled query per tick)."""
-        from gigapipe_spark.streaming.ruler import store_tailer
+        """Tail over the STORE (query_range.go:670 re-runs the
+        transpiled query per tick). Each poll reads the engine's current
+        snapshot — the one every read under that seq sees — through a
+        new query context, and scans only the samples files that
+        snapshot holds beyond the last one the tail drained (see
+        streaming/ruler.Tailer)."""
+        from gigapipe_spark.streaming.ruler import Tailer
 
-        return store_tailer(
-            self.spark,
-            self.catalog,
-            query,
+        return Tailer(
+            logctx_factory=lambda snap, files: StoreLogQLContext(
+                self.spark, self.sf_dir, catalog=snap, samples_files=files
+            ),
+            query=query,
+            snapshots=lambda: self._store(fresh=True),
             max_rows_per_poll=max_rows_per_poll,
         )
 
@@ -557,8 +615,6 @@ class StoreEngine(Engine):
     ) -> DataFrame:
         """Merged tree rows from the stored folded-stack layout
         (profiles_folded, written by folded_fanout)."""
-        import os
-
         from gigapipe_spark.prof import selector as psel
         from gigapipe_spark.sources.ingest import collapsed_stacks
 

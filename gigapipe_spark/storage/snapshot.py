@@ -1,23 +1,22 @@
-"""Consistent, LOCK-FREE read snapshots over a live store.
+"""One consistent, LOCK-FREE snapshot of a live store per mutation seq.
 
-THE PROBLEM (judge r13 missing #1 / ADVICE r13 high): a live-tail poll
-needs a consistent view of the store — a Spark append commits its task
-files into the partition dir one rename at a time, so an unlocked
-listing racing a bulk flush can catch a PREFIX of the batch, advance
-the tail watermark past the batch's max ts, and silently skip the
-unlisted rows forever (the r13 soak measured exactly this: ~300 of
-1,300 lines lost). The r13 fix took the store WRITER lock for the
-whole poll, which (a) serialized every ingest flush behind a full
-Spark query execution per tail tick — N tail clients brake ingest —
-and (b) in the split reader/writer deployment acquired (or fought
-over) the cross-process writer flock from a READ path: the reader
-either 500'd every poll on StoreWriterConflict or stole writer
-ownership outright.
+THE PROBLEM: a Spark append commits its task files into the partition
+dir one rename at a time, and a fan-out batch appends to several
+tables one after another, so a reader that lists files live can catch
+part of a batch. A tail poll racing a flush could list a PREFIX of the
+batch, advance its watermark past the batch's max ts and skip the
+unlisted rows forever; a query could see a batch's new samples without
+the series and GIN rows that label them (`{app=~"a|b"}` answered the
+new `app=a` lines but not the new `app=b` ones), and the per-seq frame
+memo then re-served that torn answer until the seq moved. Taking the
+store WRITER lock for a read would serialize every flush behind a
+query and, in the split reader/writer deployment, make the read path
+fight over the cross-process writer flock.
 
-THE FIX — snapshot, don't lock. The writer side already publishes
-everything a reader needs for an MVCC-style consistent view (the
-local-parquet analog of the manifest/commit log an object-store lake
-would use; the reference gets this for free from ClickHouse MVCC,
+THE FIX — snapshot, don't lock. The writer side publishes everything a
+reader needs for an MVCC-style consistent view (the local-parquet
+analog of the manifest/commit log an object-store lake would use; the
+reference gets this for free from ClickHouse MVCC,
 reader/service/query_range.go:670-760):
 
   * every fan-out batch writes a journal entry (atomic rename) BEFORE
@@ -32,19 +31,23 @@ reader/service/query_range.go:670-760):
     entries) run inside `maintenance_window()`, which sets a marker
     (`_journal/.maint`) readers refuse to pin through.
 
-A reader pins a listing with the validation loop in `pin_listing`:
-observe (seq, maint, pending) → list files → observe again; if both
-observations agree and no maintenance is active, exclude the pending
-batches' new files and the listing is a consistent committed view.
-Otherwise retry — a transition happened during the few-ms listing.
-No lock is taken in either process: flushes never wait on polls,
-polls never wait on flushes (in-flight files are simply excluded and
-surface next poll, after the commit), and the cross-process writer
-flock is never touched from a read path.
+`pin_listing` validates a listing: observe (seq, maint, pending) →
+list files → observe again; if both observations agree and no
+maintenance is active, exclude the pending batches' new files and the
+listing is a consistent committed view as of that seq. Otherwise retry
+— a transition happened during the few-ms listing. No lock is taken in
+either process: flushes never wait on reads, reads never wait on
+flushes (in-flight files are simply excluded and surface with the
+commit's seq), and the cross-process writer flock is never touched
+from a read path.
 
-Queries then run against the pinned listing via `SnapshotCatalog`,
-whose `read()` loads exactly the pinned files (basePath preserves the
-(oid, date) partition columns, so partition pruning still applies).
+A StoreEngine pins one listing for every journaled table each time the
+seq moves, and every read under that seq — query routes, label and
+series endpoints, the executed frames it re-serves, and live-tail
+polls — loads exactly the pinned files (storage/query.py `_SeqCatalog`;
+basePath preserves the (oid, date) partition columns, so partition
+pruning still applies). A tail poll scans only the samples files its
+snapshot holds beyond the last one it drained.
 """
 
 from __future__ import annotations
@@ -53,22 +56,17 @@ import json
 import os
 import time
 from contextlib import contextmanager
-from datetime import datetime, timedelta, timezone
 
 from gigapipe_spark.storage.journal import JOURNAL_DIR
 
 SEQ_FILE = ".seq"
 MAINT_MARKER = ".maint"
 
-# what a stored LogQL tail query reads (StoreLogQLContext): the fact
-# table plus the two index tables its selector/label join consume
-TAIL_TABLES = ("samples", "time_series", "gin")
-
 
 class SnapshotUnstable(RuntimeError):
     """pin_listing could not observe a quiescent window (continuous
-    mutation or an active maintenance walk). Callers skip the tick —
-    the tail watermark does not advance, so nothing is lost."""
+    mutation or an active maintenance walk). A tail poll skips its
+    tick — the watermark does not advance, so nothing is lost."""
 
 
 def _seq_path(root: str) -> str:
@@ -127,23 +125,6 @@ def maintenance_window(root: str):
             bump_mutation_seq(key)
 
 
-def stale_listing_error(ex: Exception) -> bool:
-    """True when a Spark error means 'a file in the scan's listing is
-    gone' — the signature of rotate/compact swapping parquet files
-    under an in-flight scan. Deliberately narrow (no bare 'does not
-    exist') so genuine user errors never trigger a silent re-run."""
-    s = str(ex)
-    return any(
-        m in s
-        for m in (
-            "FileNotFoundException",
-            "FILE_NOT_FOUND",
-            "FileReadException",
-            "underlying files have been updated",
-        )
-    )
-
-
 def _pending_entries(root: str) -> dict[str, dict | None]:
     """{entry_name: parsed_entry} for every pending journal entry.
     A value of None means the entry vanished or was torn mid-read —
@@ -165,18 +146,11 @@ def _pending_entries(root: str) -> dict[str, dict | None]:
     return out
 
 
-_SKIP_DIRS = ("_temporary", "_journal")
-
-
-def _list_table_files(
-    root: str, table: str, date_floor: str | None
-) -> list[tuple[str, str, str, str]]:
+def _list_table_files(root: str, table: str) -> list[tuple[str, str, str, str]]:
     """[(oid, iso_date, file_name, abs_path)] for a table's committed
     parquet files. Walks only oid=/date= partition levels (the layout
     every fan-out writer produces), skipping committer staging and
-    compact/tier crash-leftover dirs; `date_floor` prunes the walk to
-    partitions at-or-after the ISO date — the tail's listing cost is
-    O(tail window), not O(store age)."""
+    compact/tier crash-leftover dirs."""
     tdir = os.path.join(root, table)
     out: list[tuple[str, str, str, str]] = []
     try:
@@ -195,8 +169,6 @@ def _list_table_files(
             if not dn.startswith("date="):
                 continue
             iso = dn[5:]
-            if date_floor is not None and iso < date_floor:
-                continue
             pdir = os.path.join(odir, dn)
             if any(pdir.endswith(sfx) for sfx in (".compact_tmp", ".compact_old", ".tier_tmp")):
                 continue
@@ -229,29 +201,30 @@ def _excluded(entry: dict, table: str, oid: str, iso: str, name: str) -> bool:
     return name not in files
 
 
+def in_maintenance(root: str) -> bool:
+    """Is a listing-mutating maintenance walk running on this store?"""
+    return os.path.exists(os.path.join(root, JOURNAL_DIR, MAINT_MARKER))
+
+
 def pin_listing(
     root: str,
     tables: tuple[str, ...],
-    date_floor: dict[str, str] | None = None,
     attempts: int = 40,
     backoff_s: float = 0.025,
-) -> dict[str, list[str]]:
+) -> tuple[int, dict[str, list[str]]]:
     """Pin a consistent committed file listing for `tables` (see module
-    docstring for the protocol). Returns {table: [abs file paths]}.
-    Raises SnapshotUnstable after `attempts` failed validation rounds
-    (~1s default) — e.g. an active compact; callers skip the tick."""
+    docstring for the protocol). Returns (seq, {table: [abs file
+    paths]}), the listing being the committed view as of mutation seq
+    `seq`. Raises SnapshotUnstable after `attempts` failed validation
+    rounds (~1s default) — e.g. an active compact."""
     root = os.path.abspath(os.path.normpath(root))
-    date_floor = date_floor or {}
-    maint = os.path.join(root, JOURNAL_DIR, MAINT_MARKER)
     for _ in range(attempts):
-        if os.path.exists(maint):
+        if in_maintenance(root):
             time.sleep(backoff_s)
             continue
         s1 = read_mutation_seq(root)
         p1 = _pending_entries(root)
-        listing = {
-            t: _list_table_files(root, t, date_floor.get(t)) for t in tables
-        }
+        listing = {t: _list_table_files(root, t) for t in tables}
         p2 = _pending_entries(root)
         s2 = read_mutation_seq(root)
         if (
@@ -259,12 +232,12 @@ def pin_listing(
             or p1.keys() != p2.keys()
             or any(v is None for v in p1.values())
             or any(v is None for v in p2.values())
-            or os.path.exists(maint)
+            or in_maintenance(root)
         ):
             time.sleep(backoff_s)
             continue
         pending = list(p2.values())
-        return {
+        return s2, {
             t: [
                 path
                 for (oid, iso, name, path) in files
@@ -275,29 +248,3 @@ def pin_listing(
     raise SnapshotUnstable(
         f"no quiescent listing window for {root!r} after {attempts} attempts"
     )
-
-
-def snapshot_catalog(catalog, tables: tuple[str, ...], date_floor=None,
-                     reuse: dict | None = None):
-    """A Catalog view of `catalog` pinned to one consistent listing."""
-    from gigapipe_spark.storage.writer import SnapshotCatalog
-
-    return SnapshotCatalog(
-        catalog, pin_listing(catalog.root, tables, date_floor), reuse=reuse
-    )
-
-
-def pin_tail_catalog(catalog, last_ts_ns: int = 0, reuse: dict | None = None):
-    """Pinned catalog for one tail poll. The samples listing is pruned
-    to partitions that can hold rows newer than the watermark (same
-    one-day widening as the query-side date prune, storage/query.py
-    `_bounded`); the series/GIN index listings stay full — a stream
-    created long ago still emits new lines, and its index rows live in
-    old partitions. `reuse` (a dict the Tailer owns across polls)
-    memoizes built DataFrames per exact fileset — see
-    SnapshotCatalog."""
-    floor = None
-    if last_ts_ns:
-        dt = datetime.fromtimestamp(last_ts_ns / 1e9, tz=timezone.utc)
-        floor = {"samples": (dt - timedelta(days=1)).date().isoformat()}
-    return snapshot_catalog(catalog, TAIL_TABLES, floor, reuse=reuse)

@@ -17,24 +17,24 @@ Layout decisions for 100 TB (SURVEY §1.2):
     merged on read (ReplacingMergeTree analog = dropDuplicates)
 
 Reader freshness (the flock enforces single WRITER, not single-reader
-freshness): a reader PROCESS holds two layers of snapshot state over a
-store another process appends to — (a) its StoreEngine's per-seq table
-cache: the table relations (file listing and parquet schema, read once
-per table), the checkpointed, deduplicated series dimension and the
-TraceQL probe verdicts every request's query context reads, and (b)
-Spark's shared file-status/plan caches for the paths. The contract: appends are atomic at file
-granularity (parquet files land whole, then readers list them), so a
-stale reader is merely BEHIND, never inconsistent. Every journaled
-fan-out and every maintenance walk bumps the store's mutation seq
+freshness): a reader PROCESS reads a store another process appends to
+through ONE snapshot per mutation seq. Every journaled fan-out commit
+and every maintenance walk bumps the store's mutation seq
 (`_journal/.seq`, storage/snapshot.py), and every StoreEngine context
-build and table read compares it with the seq its cache was built
-under: when it moved, the engine calls StoreEngine.refresh()
-(storage/query.py), which drops the table cache and issues
-spark.catalog.refreshByPath(root). Same-process pushes,
-bulk flushes, ruler writeback and foreign-process writes are therefore
-all visible on the next request, with no writer-side hook and no
-polling. Pinned by tests/test_cache_coherence.py (two real processes)
-and tests/test_store_query.py.
+build and table read compares it with the seq of the engine's current
+snapshot: when it moved, StoreEngine.refresh() (storage/query.py) pins
+a journal-validated file listing of every journaled table
+(snapshot.pin_listing — files of an in-flight batch excluded) and
+starts a fresh per-seq cache over it: the table relations (pinned
+files, parquet schema inferred once per table), the checkpointed,
+deduplicated series dimension, the TraceQL probe verdicts and the
+executed read frames. A reader is therefore merely BEHIND, never torn:
+it sees whole batches only, and the same ones on every route and every
+live-tail poll under one seq. Same-process pushes, bulk flushes, ruler
+writeback and foreign-process writes are all visible on the first
+request after their commit, with no writer-side hook and no polling.
+Pinned by tests/test_cache_coherence.py (two real processes),
+tests/test_snapshot.py and tests/test_store_query.py.
 """
 
 from __future__ import annotations
@@ -260,21 +260,29 @@ class Catalog:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         try:
-            df = spark.read.parquet(self.path(table))
+            df = self._load(spark, table)
         except Exception as ex:
             df = self._empty_table(spark, table, ex)
         return self._scope_oid(df)
 
-    def _empty_table(self, spark: SparkSession, table: str, ex: Exception):
+    def _load(self, spark: SparkSession, table: str) -> DataFrame:
+        """The table's parquet files, unscoped: here every file the
+        table dir lists now; a snapshot view loads its pinned files."""
+        return spark.read.parquet(self.path(table))
+
+    def _empty_table(
+        self, spark: SparkSession, table: str, ex: Exception | None = None
+    ):
         # A table whose every partition was rotated away (or rolled
         # back) keeps its dir + _SUCCESS but has no data files, and
         # a never-pushed deployment has no dir at all; Spark raises
-        # on both. The reference's freshly-provisioned / emptied
-        # ClickHouse table still answers queries with zero rows —
-        # so do we: schema from the sidecar rotate() leaves behind,
-        # else from the generated canonical registry.
+        # on both (`ex`; None: a snapshot holds no file of the table).
+        # The reference's freshly-provisioned / emptied ClickHouse
+        # table still answers queries with zero rows — so do we:
+        # schema from the sidecar rotate() leaves behind, else from the
+        # generated canonical registry.
         msg = str(ex)
-        if (
+        if ex is not None and (
             "UNABLE_TO_INFER_SCHEMA" not in msg
             and "PATH_NOT_FOUND" not in msg
         ):
@@ -283,7 +291,9 @@ class Catalog:
         if df is None:
             schema = canonical_schema(table)
             if schema is None:
-                raise ex
+                raise ex or FileNotFoundError(
+                    f"no data file and no known schema for table {table!r}"
+                )
             df = spark.createDataFrame([], schema)
         return df
 
@@ -399,86 +409,6 @@ class Catalog:
         from gigapipe_spark.streaming.rollup import merge_cells
 
         return merge_cells(self.read(spark, "metrics_15s").drop("date"))
-
-
-class SnapshotCatalog(Catalog):
-    """A Catalog view pinned to one consistent file listing (see
-    storage/snapshot.py): `read()` loads exactly the pinned files
-    instead of re-listing the table dir, so a query plan built from
-    this catalog sees a committed MVCC-style snapshot no matter how
-    many flushes land while it executes. basePath keeps the (oid,
-    date) partition columns, so partition pruning and oid scoping work
-    exactly as on the base catalog. Tables outside the pinned set fall
-    back to the live listing.
-
-    Poll-loop plan reuse: a tail polls several times a second, and the
-    profile showed each poll's COMPILE dominated by py4j round trips —
-    ~90-300ms per spark.read.parquet (JVM file-index build + footer
-    schema inference) times three tables, plus the series-dedup
-    Column rebuild. Two levers, both semantics-free:
-      * reads pass the declared schema (canonical registry / sidecar)
-        so the JVM never opens a footer to infer one — the registry is
-        pinned against the writers by the table-schema drift test;
-      * a caller-owned `reuse` dict memoizes built DataFrames keyed by
-        (table, exact file tuple): an index table whose listing didn't
-        change between polls (series/GIN — new streams are rare)
-        reuses the previous poll's immutable plan object verbatim.
-    """
-
-    def __init__(
-        self,
-        base: Catalog,
-        listing: dict[str, list[str]],
-        reuse: dict | None = None,
-    ):
-        super().__init__(base.root, base.oid)
-        self._listing = listing
-        self.reuse = reuse
-
-    def _memo(self, key: tuple, build):
-        if self.reuse is None:
-            return build()
-        if key not in self.reuse:
-            # one live entry per (kind, table): listings evolve
-            # monotonically, stale filesets never come back
-            for k in [k for k in self.reuse if k[:2] == key[:2]]:
-                del self.reuse[k]
-            self.reuse[key] = build()
-        return self.reuse[key]
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        files = self._listing.get(table)
-        if files is None:
-            return super().read(spark, table)
-        return self._memo(
-            ("read", table, tuple(files)),
-            lambda: self._read_pinned(spark, table, files),
-        )
-
-    def _read_pinned(self, spark, table: str, files: list[str]) -> DataFrame:
-        schema = _empty_from_sidecar(spark, self.path(table))
-        schema = schema.schema if schema is not None else canonical_schema(table)
-        if not files:
-            # nothing committed in the pinned view: same zero-row
-            # empty-table contract as the base catalog
-            if schema is None:
-                return super().read(spark, table)
-            return self._scope_oid(spark.createDataFrame([], schema))
-        reader = spark.read.option("basePath", self.path(table))
-        if schema is not None:
-            reader = reader.schema(schema)
-        return self._scope_oid(reader.parquet(*files))
-
-    def read_series(self, spark: SparkSession, types=None, per_fingerprint=False):
-        files = self._listing.get("time_series")
-        if files is None or self.reuse is None:
-            return super().read_series(spark, types, per_fingerprint)
-        return self._memo(
-            ("series", "time_series", tuple(files), types, per_fingerprint),
-            lambda: super(SnapshotCatalog, self).read_series(
-                spark, types, per_fingerprint
-            ),
-        )
 
 
 def _checkpoint_flush(batch: DataFrame, small: int = 100_000) -> DataFrame:

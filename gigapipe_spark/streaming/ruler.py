@@ -213,23 +213,14 @@ def store_tailer(
 ) -> "Tailer":
     """Live tail over a written store: each poll re-runs the compiled
     query against the stored tables from the last-seen timestamp
-    (query_range.go:670-760 over the writer's tables). Each poll runs
-    against a PINNED consistent listing (storage/snapshot.py) — no
-    lock is ever taken, so tails never stall ingest flushes and a
-    MODE=reader gateway never touches the writer flock."""
-    from gigapipe_spark.storage.query import store_logql_context
-    from gigapipe_spark.storage.snapshot import pin_tail_catalog
+    (query_range.go:670-760 over the writer's tables), reading the
+    store's per-seq snapshot (StoreEngine.loki_tail) — no lock is ever
+    taken, so tails never stall ingest flushes and a MODE=reader
+    gateway never touches the writer flock."""
+    from gigapipe_spark.storage.query import StoreEngine
 
-    reuse: dict = {}  # per-tailer DataFrame memo across polls
-    return Tailer(
-        logctx_factory=lambda pinned=catalog: store_logql_context(
-            spark, pinned
-        ),
-        query=query,
-        pin_factory=lambda last_ts_ns: pin_tail_catalog(
-            catalog, last_ts_ns, reuse=reuse
-        ),
-        **kw,
+    return StoreEngine(spark, catalog.root, catalog=catalog).loki_tail(
+        query, **kw
     )
 
 
@@ -238,97 +229,75 @@ class Tailer:
     """Live tail as a poll loop (ref: query_range.go:670-760): each poll
     re-runs the query filtered to rows newer than the last-seen ts.
 
-    `pin_factory` (set by store_tailer) makes each poll a CONSISTENT
-    snapshot: a Spark append commits its task files into the partition
-    dir one rename at a time, so an unpinned poll racing a bulk flush
-    can list a PREFIX of the batch, advance last_ts past the batch's
-    max, and permanently skip the unlisted rows (the r12 soak's tail
-    leg measured exactly this: ~300 of 1300 lines silently missing).
-    The r13 fix held the store WRITER lock for the whole poll; that
-    serialized every flush behind a full Spark query per tail tick and
-    acquired the cross-process writer flock from a read path (ADVICE
-    r13 high). Now the poll pins a validated committed file listing
-    (storage/snapshot.pin_listing — in-flight batch files excluded via
-    the journal's pre-batch snapshots) and runs the query against the
-    pinned view with NO lock held: flushes never wait on polls, polls
-    never wait on flushes, and rows of an in-flight batch surface on
-    the next poll after its commit. This is the manifest-read pattern
-    an object-store lake uses; the reference gets the same property
-    from ClickHouse MVCC."""
+    `snapshots` (set by StoreEngine.loki_tail) makes each poll read a
+    CONSISTENT snapshot: a Spark append commits its task files into the
+    partition dir one rename at a time, so a poll listing files live
+    while a bulk flush runs can see a PREFIX of the batch, advance
+    last_ts past the batch's max, and permanently skip the unlisted
+    rows. It returns the engine's snapshot for the current mutation
+    seq — a journal-validated committed listing
+    (storage/snapshot.pin_listing, in-flight batch files excluded)
+    shared with every other read under that seq — and raises
+    SnapshotUnstable while a maintenance walk runs, which skips the
+    tick. No lock is held: flushes never wait on polls, polls never
+    wait on flushes, and rows of an in-flight batch surface on the
+    first poll after its commit. This is the manifest-read pattern an
+    object-store lake uses; the reference gets the same property from
+    ClickHouse MVCC.
+
+    INCREMENTAL polls: the store is append-only at file granularity
+    (flushes add files; compact/rotate swap or delete whole partitions,
+    bumping the seq), so once a poll has drained everything in its
+    snapshot, rows newer than the watermark can only live in files
+    ADDED since — the next poll scans just the samples files its
+    snapshot holds beyond the drained one's (`logctx_factory(snapshot,
+    files)`), a read of those files alone that leaves the shared
+    snapshot as it is (the parquet-lake analog of the reference tail's
+    "re-run from last-seen ts" riding ClickHouse's primary-key index).
+    A capped poll leaves backlog in OLD files, so the next poll scans
+    the whole snapshot (`files` None); an empty delta skips Spark
+    entirely."""
 
     logctx_factory: Callable
     query: str
     last_ts_ns: int = 0
     max_rows_per_poll: int = 1000
     dropped: int = field(default=0)
-    # (last_ts_ns) -> pinned Catalog view for one poll (store tails)
-    pin_factory: Callable | None = None
-    # polls skipped because no quiescent listing window was observed
-    # (e.g. an active compact); the watermark never advances on a skip
+    # () -> the store's current snapshot (store tails)
+    snapshots: Callable | None = None
+    # polls skipped because a maintenance walk ran or no quiescent
+    # listing window was observed; the watermark never advances on a skip
     unstable_polls: int = field(default=0)
-    # INCREMENTAL polls (store tails): the store is append-only at file
-    # granularity (flushes add files; compact/rotate swap or delete
-    # whole partitions, bumping the snapshot seq), so once a poll has
-    # drained everything ≤ its pinned listing, rows newer than the
-    # watermark can only live in files ADDED since — the next poll
-    # scans just the listing DELTA instead of the whole tail window
-    # (the parquet-lake analog of the reference tail's "re-run from
-    # last-seen ts" riding ClickHouse's primary-key index,
-    # query_range.go:670-760). A capped poll leaves backlog in OLD
-    # files, so the next poll falls back to the full pinned scan; an
-    # empty delta skips Spark entirely.
-    _prev_samples: frozenset | None = field(default=None, repr=False)
+    # samples files of the last drained snapshot
+    _drained: frozenset | None = field(default=None, repr=False)
     _backlog: bool = field(default=True, repr=False)
 
     def poll(self) -> list:
-        if self.pin_factory is None:
+        if self.snapshots is None:
             return self._poll(self.logctx_factory)
-        from gigapipe_spark.storage.snapshot import (
-            SnapshotUnstable,
-            stale_listing_error,
-        )
+        from gigapipe_spark.storage.snapshot import SnapshotUnstable
 
-        for attempt in range(3):
-            try:
-                pinned = self.pin_factory(self.last_ts_ns)
-            except SnapshotUnstable:
-                # no quiescent listing window (active compact/rotate):
-                # skip the tick — last_ts is untouched, nothing is lost
-                self.unstable_polls += 1
+        try:
+            snap = self.snapshots()
+        except SnapshotUnstable:
+            self.unstable_polls += 1
+            return []
+        cur = snap.files("samples")
+        files = None
+        if self._drained is not None and not self._backlog:
+            files = cur - self._drained
+            if not files:
+                # nothing committed since the drained poll: no file can
+                # hold a row newer than the watermark — skip the query
+                # (compile + scan) entirely this tick
+                self._drained = cur
                 return []
-            cur = frozenset(pinned._listing.get("samples", ()))
-            delta_scan = self._prev_samples is not None and not self._backlog
-            if delta_scan:
-                delta = cur - self._prev_samples
-                if not delta:
-                    # nothing committed since the drained poll: no file
-                    # can hold a row newer than the watermark — skip
-                    # the query (compile + scan) entirely this tick
-                    self._prev_samples = cur
-                    return []
-                pinned._listing["samples"] = sorted(delta)
-            try:
-                rows = self._poll(lambda: self.logctx_factory(pinned))
-            except Exception as ex:
-                # rotate/compact can delete a pinned file between the
-                # pin and the collect. For a listing pinned moments ago,
-                # PATH_NOT_FOUND is the same staleness (the whole
-                # partition dir vanished — AnalysisException at plan
-                # time rather than FileNotFound at scan time). last_ts
-                # only advances on success, so re-pin + re-run loses
-                # nothing; three stale rounds in a row means something
-                # beyond a maintenance race — surface it.
-                stale = stale_listing_error(ex) or "PATH_NOT_FOUND" in str(ex)
-                if not stale or attempt == 2:
-                    raise
-                self.unstable_polls += 1
-                continue
-            # capped ⇒ undelivered rows remain in files already seen:
-            # the next poll must scan the full pinned listing
-            self._backlog = len(rows) >= self.max_rows_per_poll
-            self._prev_samples = cur
-            return rows
-        return []  # unreachable; loop always returns or raises
+        rows = self._poll(lambda: self.logctx_factory(snap, files))
+        # capped ⇒ undelivered rows remain in files already seen: the
+        # next poll must scan the whole snapshot
+        self._backlog = len(rows) >= self.max_rows_per_poll
+        self._drained = cur
+        return rows
 
     def _poll(self, ctx_factory: Callable) -> list:
         from gigapipe_spark.logql.compiler import query as logql_query

@@ -1299,83 +1299,3 @@ def test_http_influx_push_end_to_end(gateway):
     vals = {r["metric"]["host"]: r["value"][1]
             for r in out["data"]["result"]}
     assert vals == {"h1": "0.5", "h2": "0.7"}
-
-
-def test_stale_listing_error_retries_once(gateway):
-    """A rotate/compact can swap parquet files under an in-flight scan;
-    the query surface must refresh + re-run ONCE instead of answering
-    500 (found by the service soak: 4/8 runs lost a query thread to a
-    FileNotFoundException 500 racing the mid-soak maintenance tick).
-    A PERSISTENT failure still answers 500 — one retry, no loop. The
-    GET routes and the querier POST RPCs share the retry."""
-    import gc
-
-    from gigapipe_spark.storage.query import StoreEngine
-
-    base, port = gateway
-    payload = json.dumps({
-        "streams": [{"stream": {"app": "stale"},
-                     "values": [["1700000000000000000", "stale seed"]]}]
-    }).encode()
-    assert _post(base, "/loki/api/v1/push", payload) in (200, 204)
-
-    # the module fixture's engine — match by its store root (a full
-    # suite run leaves OTHER modules' engines alive in gc)
-    eng = next(
-        o for o in gc.get_objects()
-        if isinstance(o, StoreEngine)
-        and getattr(o, "catalog", None)
-        and "httpstore" in o.catalog.root
-    )
-
-    def get_labels():
-        st, body = _get(base, "/loki/api/v1/labels")
-        assert body["status"] == "success"
-        return st
-
-    def post_label_names():
-        st, body = _post_full(
-            base, "/querier.v1.QuerierService/LabelNames", b"{}",
-            {"Content-Type": "application/json"},
-        )
-        assert "names" in json.loads(body)
-        return st
-
-    real_refresh = eng.refresh
-    for method, request in (
-        ("loki_labels", get_labels),
-        ("pyroscope_label_names", post_label_names),
-    ):
-        real = getattr(eng, method)
-        calls = {"n": 0, "refreshes": 0, "always_fail": False}
-
-        def flaky(*a, real=real, calls=calls, **kw):
-            calls["n"] += 1
-            if calls["n"] == 1 or calls["always_fail"]:
-                raise RuntimeError(
-                    "org.apache.spark.SparkException: Job aborted ... "
-                    "Caused by: java.io.FileNotFoundException: part-0000 "
-                    "It is possible the underlying files have been updated."
-                )
-            return real(*a, **kw)
-
-        def counting_refresh(*a, calls=calls, **kw):
-            calls["refreshes"] += 1
-            return real_refresh(*a, **kw)
-
-        setattr(eng, method, flaky)
-        eng.refresh = counting_refresh
-        try:
-            assert request() == 200, method
-            assert calls["n"] == 2, method  # failed once, re-ran once
-            assert calls["refreshes"] >= 1, method  # listing dropped first
-            calls["always_fail"] = True
-            try:
-                request()
-                raise AssertionError(f"{method}: expected 500 for persistent failure")
-            except urllib.error.HTTPError as ex:
-                assert ex.code == 500, method
-            assert calls["n"] == 4, method  # one retry, no loop
-        finally:
-            setattr(eng, method, real)
-            eng.refresh = real_refresh

@@ -279,17 +279,19 @@ def test_selection_reads_samples_once(metric_store, expr):
 
     def fact_scans(df) -> list:
         assert df.collect()
-        # AQE prints the final plan, then the initial one
+        # AQE prints the final plan, then the initial one; a store
+        # read names its pinned files, so the location is a file path
+        # under the table dir
         final = _plan(df).split("== Initial Plan ==")[0]
         return [
             ln for ln in final.splitlines()
             if "FileScan parquet" in ln
-            and ("/samples]" in ln or "/metrics_15s]" in ln)
+            and ("/samples/" in ln or "/metrics_15s/" in ln)
         ]
 
     t = _T0 + 1000 * _S
     scans = fact_scans(metric_store.prom_query(expr, t))
-    assert len(scans) == 1 and "/samples]" in scans[0], scans
+    assert len(scans) == 1 and "/samples/" in scans[0], scans
     scans = fact_scans(
         metric_store.prom_query_range(expr, t - 600 * _S, t, 60 * _S)
     )
@@ -607,6 +609,10 @@ def test_nonpushable_tripwire(spark):
     [
         "topk(3, rate(req_total[5m]))",
         "rate(sum by (app) (req_total)[5m:1m])",
+        "ts_of_last_over_time(req_total[5m])",
+        "ts_of_last_over_time(sum by (app) (req_total)[5m:1m])",
+        "mad_over_time(req_total[5m])",
+        "mad_over_time(sum by (app) (req_total)[5m:1m])",
     ],
 )
 def test_counter_aggregate_is_hash_aggregated(metric_store, expr):

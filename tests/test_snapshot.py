@@ -12,6 +12,9 @@ import os
 import subprocess
 import sys
 import textwrap
+import urllib.parse
+import urllib.request
+from contextlib import contextmanager
 
 from gigapipe_spark.sources import ingest
 from gigapipe_spark.storage import journal
@@ -172,3 +175,213 @@ def test_mutation_seq_and_window_reentrancy(tmp_path):
         assert snap.read_mutation_seq(root) == 2  # bump only on outermost
     assert not os.path.exists(marker)
     assert snap.read_mutation_seq(root) == 3
+
+
+S = 1_000_000_000
+DAY = 86_400 * S
+
+
+def _loki_batch(spark, streams: dict):
+    """A decoded Loki push of {app: [(ts_ns, line, value)]}."""
+    payload = json.dumps(
+        {
+            "streams": [
+                {
+                    "stream": {"app": app},
+                    "values": [[str(t), line, v] for t, line, v in vals],
+                }
+                for app, vals in streams.items()
+            ]
+        }
+    )
+    raw = spark.createDataFrame([(payload,)], "payload string")
+    return ingest.loki_push(raw).coalesce(1)
+
+
+@contextmanager
+def _gateway(eng):
+    from gigapipe_spark.httpd import HttpGateway
+
+    gw = HttpGateway(eng)
+    port = gw.start()
+    try:
+        yield f"http://127.0.0.1:{port}"
+    finally:
+        gw.stop()
+
+
+def _get(base: str, path: str, **params):
+    url = f"{base}{path}?{urllib.parse.urlencode(params)}"
+    with urllib.request.urlopen(url, timeout=120) as r:
+        return json.loads(r.read())
+
+
+def _lines(base: str, sel: str, limit: int = 100) -> list:
+    res = _get(
+        base, "/loki/api/v1/query_range",
+        query=sel, start=T0 - S, end=T0 + 10 * DAY, limit=limit,
+    )["data"]["result"]
+    return sorted(v[1] for s in res for v in s["values"])
+
+
+def test_parked_fanout_reads_whole_batches(spark, tmp_path, monkeypatch):
+    """A fan-out parked after its samples leg (serial legs: the series
+    and GIN rows not yet appended) is invisible to every read route and
+    to a tail poll: each answers the pre-batch state while it is parked
+    and the post-batch state once it commits, never a mix, and a frame
+    read while the batch was in flight is not re-served after the
+    commit. Listing files live, `{app=~"a|b"}` answered the batch's new
+    `app=a` line without its new `app=b` stream."""
+    import threading
+
+    from gigapipe_spark import telemetry
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = Catalog(str(tmp_path / "store"))
+    ingest_fanout(
+        _loki_batch(spark, {"a": [(T0, "a0", 1.0), (T0 + S, "a1", 2.0)]}), cat
+    )
+    batch = _loki_batch(
+        spark,
+        {
+            "a": [(T0 + 2 * S, "a2", 3.0)],
+            "b": [(T0 + 2 * S, "b0", 10.0), (T0 + 3 * S, "b1", 20.0)],
+        },
+    )
+    real = telemetry.observed_write
+    parked, release = threading.Event(), threading.Event()
+
+    def parking(df, service, write_fn, bytes_col):
+        got = real(df, service, write_fn, bytes_col)
+        if service == "samples":
+            parked.set()
+            release.wait(300)
+        return got
+
+    monkeypatch.setattr(telemetry, "observed_write", parking)
+    monkeypatch.setenv("GIGAPIPE_FANOUT_SERIAL", "1")
+    writer = threading.Thread(
+        target=ingest_fanout, args=(batch, cat), kwargs={"mine_patterns": False}
+    )
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    sel = '{app=~"a|b"}'
+
+    def state(base):
+        prom = _get(base, "/api/v1/query", query=sel, time=(T0 + 5 * S) // S)
+        series = _get(base, "/loki/api/v1/series", **{"match[]": sel})
+        return (
+            _lines(base, sel),
+            sorted(
+                (r["metric"]["app"], float(r["value"][1]))
+                for r in prom["data"]["result"]
+            ),
+            sorted(d["app"] for d in series["data"]),
+        )
+
+    pre = (["a0", "a1"], [("a", 2.0)], ["a"])
+    post = (["a0", "a1", "a2", "b0", "b1"], [("a", 3.0), ("b", 20.0)], ["a", "b"])
+    with _gateway(eng) as base:
+        writer.start()
+        try:
+            assert parked.wait(300)
+            tail = eng.loki_tail(sel)
+            # each route twice: the second answer is a served frame
+            assert [state(base), state(base)] == [pre, pre]
+            assert sorted(r["string"] for r in tail.poll()) == ["a0", "a1"]
+            assert tail.poll() == []
+        finally:
+            release.set()
+            writer.join(300)
+        assert not writer.is_alive()
+        assert [state(base), state(base)] == [post, post]
+        assert sorted(r["string"] for r in tail.poll()) == ["a2", "b0", "b1"]
+
+
+def test_pinned_read_lists_many_files_without_a_job(spark, tmp_path):
+    """A snapshot read names each pinned file, and past 32 paths Spark
+    lists them with a distributed job. A store engine lists them
+    in-process: a read of 40 pinned files runs only the schema-inference
+    job a one-file read runs, and a tail's narrowed read (schema taken
+    from the whole table) runs none. The tail's full-scan poll reads
+    the table through the same pinned read."""
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = Catalog(str(tmp_path / "store"))
+    # one flush over 40 days: one samples file per date partition
+    ingest_fanout(
+        _loki_batch(
+            spark, {"web": [(T0 + d * DAY, f"d{d}", 1.0) for d in range(40)]}
+        ),
+        cat,
+        mine_patterns=False,
+    )
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    snap_ = eng._store()
+    files = snap_.files("samples")
+    assert len(files) == 40
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = jobs("pinned-one", lambda: spark.read.parquet(min(files)))
+    assert jobs("pinned-all", lambda: snap_.read(spark, "samples")) == one
+    assert jobs(
+        "pinned-narrowed", lambda: snap_.read_files(spark, "samples", files)
+    ) == 0
+    assert snap_.read(spark, "samples").count() == 40
+
+
+def test_tail_delta_poll_leaves_engine_snapshot_whole(spark, tmp_path):
+    """A tail's delta poll reads only the new samples files, through a
+    narrowed read of its own: a query issued right after it, under the
+    same seq, still reads every committed line."""
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = Catalog(str(tmp_path / "store"))
+    _push(spark, cat, ["a", "b"])
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    tail = eng.loki_tail('{app="web"}')
+    assert sorted(r["string"] for r in tail.poll()) == ["a", "b"]
+    _push(spark, cat, ["c"], t0=T0 + 60 * S)
+    assert [r["string"] for r in tail.poll()] == ["c"]
+    seq = eng._store().seq
+    rows = eng.loki_query_range('{app="web"}').collect()
+    assert sorted(r["string"] for r in rows) == ["a", "b", "c"]
+    assert eng._store().seq == seq
+    assert len(eng._store().files("samples")) == 2
+
+
+def test_reads_answer_last_snapshot_during_maintenance_walk(spark, tmp_path):
+    """While a rotate/compact walk runs, HTTP reads answer 200 from the
+    engine's last pinned snapshot (a batch committed just before the
+    walk shows only after the walk's exit bump), even once a compaction
+    has swapped that snapshot's files away — the gone files are
+    skipped, never a 500 — and a tail poll skips its tick. After the
+    walk, reads re-pin and the tail delivers the batch from the
+    compacted file."""
+    from gigapipe_spark.storage.maintenance import compact
+    from gigapipe_spark.storage.query import StoreEngine
+
+    cat = Catalog(str(tmp_path / "store"))
+    _push(spark, cat, ["a"])
+    _push(spark, cat, ["b"], t0=T0 + S)
+    eng = StoreEngine(spark, cat.root, catalog=cat)
+    tail = eng.loki_tail('{app="web"}')
+    assert sorted(r["string"] for r in tail.poll()) == ["a", "b"]
+    _push(spark, cat, ["c"], t0=T0 + 2 * S)  # commits before the walk
+    sel = '{app="web"}'
+    with _gateway(eng) as base:
+        with snap.maintenance_window(cat.root):
+            assert _lines(base, sel) == ["a", "b"]
+            assert compact(spark, cat, "samples")  # 3 files → 1
+            assert set(_lines(base, sel, limit=99)) <= {"a", "b"}
+            assert tail.poll() == []
+            assert tail.unstable_polls == 1
+        assert _lines(base, sel) == ["a", "b", "c"]
+    assert [r["string"] for r in tail.poll()] == ["c"]

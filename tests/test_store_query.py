@@ -1227,29 +1227,3 @@ def test_served_concurrent_readers(spark, tmp_path):
     h, m = _served_counts()
     assert (h - h0) + (m - m0) == 32 and h - h0 >= 1
     assert sorted(k[1][0] for k in eng._store()._served) == sorted(want)
-
-
-def test_served_keeps_nothing_after_explicit_refresh(spark, tmp_path):
-    """An explicit refresh under an unchanged seq (the gateway's
-    stale-listing retry) stops the seq from naming the files: reads
-    still answer, but no executed frame is kept until the seq moves."""
-    from gigapipe_spark.storage.query import StoreEngine
-    from gigapipe_spark.storage.snapshot import bump_mutation_seq
-
-    cat = _seed(spark, tmp_path)
-    eng = StoreEngine(spark, cat.root, catalog=cat)
-    builds = []
-
-    def read():
-        def build():
-            builds.append(1)
-            return eng.loki_query_range('{app="web"}')
-
-        assert len(eng.served(("web",), build)) == 6
-        return len(builds)
-
-    assert [read(), read()] == [1, 1]
-    eng.refresh()
-    assert [read(), read()] == [2, 3]
-    bump_mutation_seq(cat.root)
-    assert [read(), read()] == [4, 4]
