@@ -75,9 +75,16 @@ def _date_bounded(
     return dim
 
 
-# /metrics reader family: reads answered by re-collecting an executed
-# frame ("hit") or by building one ("miss"), see Engine.served
+# /metrics reader families: reads (Engine.served) and time blocks
+# (Engine.served_blocks) answered from kept rows ("hit") or by running
+# a query ("miss")
 SERVED_FRAMES = "gigapipe_served_frames_total"
+SERVED_BLOCKS = "gigapipe_served_blocks_total"
+
+# data-time width of the absolute blocks a step-local range read is
+# split at (Engine.served_blocks): block b covers [b, b + BLOCK_NS),
+# b a multiple of BLOCK_NS
+BLOCK_NS = 3_600_000_000_000
 
 
 def _find_range_ns(query: str) -> int | None:
@@ -137,12 +144,27 @@ class Engine:
         """Rows of one read: `build()` makes the request's frame, `key`
         names it (the route plus the exact arguments it was built
         from). Here every read is built and collected; a store-backed
-        engine re-collects an already-executed frame for a repeated key
-        under one store version (storage/query.StoreEngine)."""
+        engine keeps the collected rows, and returns them for a
+        repeated key under one store version without running a Spark
+        job (storage/query.StoreEngine). The rows may be shared between
+        callers: never mutate them."""
         from gigapipe_spark.telemetry import TELEMETRY
 
         TELEMETRY.inc(SERVED_FRAMES, {"result": "miss"})
         return build().collect()
+
+    def served_blocks(self, key, start_ns: int, end_ns: int, build) -> list:
+        """Rows of a step-local range read over [start, end): one whose
+        every point depends only on the samples of its own absolute
+        bucket, none of which straddles a block edge, so its answer over
+        any span is the union of its answers over that span's BLOCK_NS
+        blocks (httpd._step_local decides). `build(lo, hi)`
+        makes the read's frame over [lo, hi); `key` names the read
+        without its window (route, query, step). Here the read is built
+        whole; a store-backed engine keeps each block's rows under one
+        store version, so a sliding window re-serves the blocks an
+        earlier request built (storage/query.StoreEngine)."""
+        return self.served(key + (start_ns, end_ns), lambda: build(start_ns, end_ns))
 
     # ------------------------------------------------- table providers
     # Every endpoint reads its tables through these, so a store-backed
@@ -935,8 +957,9 @@ class Engine:
         engine's self-telemetry — sent_rows/sent_bytes per service,
         json_parse_errors_count (decode-error accumulator snapshot),
         tx_close_time_ms histogram with the reference's bucket bounds —
-        and the reader's gigapipe_served_frames_total{result="hit"|"miss"}
-        (see `served`)."""
+        and the reader's gigapipe_served_frames_total and
+        gigapipe_served_blocks_total{result="hit"|"miss"} (see `served`
+        and `served_blocks`)."""
         from gigapipe_spark.telemetry import TELEMETRY
 
         TELEMETRY.sync_decode_errors(self.spark)

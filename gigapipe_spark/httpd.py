@@ -108,7 +108,9 @@ def _prom_envelope(rows, instant: bool) -> dict:
         ]
         rt = "vector"
     else:
-        result = _matrix(rows)
+        # series by label set, as upstream sorts a range query's Matrix
+        # (labels.Compare): the rows' collect order is not stable
+        result = sorted(_matrix(rows), key=lambda s: sorted(s["metric"].items()))
         rt = "matrix"
     return {"status": "success", "data": {"resultType": rt, "result": result}}
 
@@ -120,7 +122,7 @@ def _stream_labels(engine, df):
     — the reference's response builder attaches the stream's label set
     (query_range response shaping). Broadcast join, filled only where
     the compiler left labels null; returned as a frame, so the join is
-    part of the plan `Engine.served` keeps."""
+    part of the read `Engine.served` collects."""
     from pyspark.sql import functions as F
 
     if "string" not in df.columns or "fingerprint" not in df.columns:
@@ -139,13 +141,52 @@ def _served(engine, method: str, *args, shape=None) -> list:
     """Rows of `engine.<method>(*args)` through `Engine.served`, keyed
     on the method name and that exact argument tuple, so the key and
     the call cannot diverge. `shape(engine, df)` finishes the frame
-    inside the served plan."""
+    inside the served read. The rows may be kept and shared with later
+    reads of the same key: never mutate them."""
 
     def build():
         df = getattr(engine, method)(*args)
         return df if shape is None else shape(engine, df)
 
     return engine.served((method, args), build)
+
+
+# a step-local read spanning more blocks than this is served whole: its
+# per-block keys would cost more than a re-run saves
+BLOCKS_MAX = 31 * 24
+
+
+def _step_local(widths, start_ns: int | None, end_ns: int | None) -> bool:
+    """Whether a range read over [start, end) whose points bucket
+    samples by `widths` (the compilers' `bucket_widths`, None when its
+    answer can depend on the request's edges) is served from absolute
+    blocks: every width must divide BLOCK_NS, so no bucket straddles a
+    block edge, and the request's end, so the unsplit read's cut at
+    end (its scans stop there) falls on a bucket edge too."""
+    from gigapipe_spark.api import BLOCK_NS
+
+    return (
+        widths is not None
+        and start_ns is not None
+        and end_ns is not None
+        and start_ns < end_ns
+        and end_ns - start_ns <= (BLOCKS_MAX - 1) * BLOCK_NS
+        and all(w > 0 and BLOCK_NS % w == 0 and end_ns % w == 0 for w in widths)
+    )
+
+
+def _served_range(engine, method, widths, query, start_ns, end_ns, *rest, shape=None):
+    """Rows of the range read `engine.<method>(query, start, end,
+    *rest)`: through `Engine.served_blocks`, keyed on the read without
+    its window, when `_step_local` holds; else through `_served`."""
+    if not _step_local(widths, start_ns, end_ns):
+        return _served(engine, method, query, start_ns, end_ns, *rest, shape=shape)
+
+    def build(lo, hi):
+        df = getattr(engine, method)(query, lo, hi, *rest)
+        return df if shape is None else shape(engine, df)
+
+    return engine.served_blocks((method, query) + rest, start_ns, end_ns, build)
 
 
 def _matches(q: dict, *names: str) -> tuple | None:
@@ -715,13 +756,17 @@ class _Handler(BaseHTTPRequestHandler):
                 if "query" not in q:
                     # query_range.go:36-39 PromError(400, …)
                     return self._prom_error(400, "query parameter is required")
+                from gigapipe_spark.logql.compiler import bucket_widths
+
                 direction = q.get("direction", ["backward"])[0]
-                rows = _served(
+                limit = int(q["limit"][0]) if "limit" in q else None
+                rows = _served_range(
                     e, "loki_query_range",
+                    None if limit is not None else bucket_widths(q["query"][0]),
                     q["query"][0],
                     _int_arg(q, "start"),
                     _int_arg(q, "end"),
-                    int(q["limit"][0]) if "limit" in q else None,
+                    limit,
                     direction,
                     shape=_stream_labels,
                 )
@@ -880,8 +925,12 @@ class _Handler(BaseHTTPRequestHandler):
                 err = self._prom_parse_check(q["query"][0])
                 if err is not None:
                     return self._prom_error(400, err)
-                rows = _served(
-                    e, "prom_query_range", q["query"][0], start_ns, end_ns, step_ns
+                from gigapipe_spark.promql.compiler import bucket_widths
+
+                rows = _served_range(
+                    e, "prom_query_range",
+                    bucket_widths(q["query"][0], step_ns or e.prom_step_ns),
+                    q["query"][0], start_ns, end_ns, step_ns,
                 )
                 return self._json(_prom_envelope(rows, instant=False))
             if path == "/api/v1/labels":

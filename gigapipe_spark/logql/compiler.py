@@ -1444,6 +1444,37 @@ def _max_lookback_ns(expr) -> int:
     return 0
 
 
+def bucket_widths(text: str) -> set[int] | None:
+    """The range widths a metric query_range of `text` buckets samples
+    in (see _bucket_col): each point b of its answer counts only the
+    samples in [b, b + range) of its range aggregations, on absolute
+    buckets. None when the answer can depend on the request's edges
+    instead, or is not a matrix: log lines, an `offset` (its buckets
+    reach past the request's end), a macro or a planner plugin (their
+    plans are not this compiler's)."""
+    from gigapipe_spark import plugins
+    from gigapipe_spark.logql.parser import parse
+
+    if plugins.get_plugins(plugins.MACRO) or plugins.get_plugins(
+        plugins.LOGQL_PLANNER
+    ):
+        return None
+
+    def walk(e) -> set[int] | None:
+        if isinstance(e, A.RangeAgg):
+            return None if e.offset_ns else {e.range_ns}
+        if isinstance(e, A.Scalar):
+            return set()
+        if isinstance(e, (A.VectorAgg, A.TopK)):
+            return walk(e.inner)
+        if isinstance(e, A.BinOp):
+            left, right = walk(e.left), walk(e.right)
+            return None if left is None or right is None else left | right
+        return None
+
+    return walk(parse(text))
+
+
 def restep(matrix: DataFrame, range_ns: int, step_ns: int) -> DataFrame:
     """Step re-interpolation (ref: planner_step_fix.go:11 +
     matrix_step.go:9): each range bucket's value is repeated onto the

@@ -1298,3 +1298,44 @@ def query(ctx: PromQLContext, text: str) -> DataFrame:
         _pin(expr, ctx.at_ns)
     ctx.set_scan_bounds(_max_lookback_ns(expr))
     return compile_expr(ctx, expr)
+
+
+def bucket_widths(text: str, step_ns: int) -> set[int] | None:
+    """The bucket widths a range query of `text` on the `step_ns` grid
+    reads samples in. Each point t of its answer depends only on the
+    samples in [t, t + w) of each width w, shifted back by an offset:
+    a range selector's range, an instant selector's (or absent()'s)
+    step — the subquery's step inside a subquery — and a subquery's
+    range. Points sit on absolute grids (_step_grid, _bucket), so when
+    every width divides both edges of a span, the answer over that
+    span is the union of its answers over any split of it at such
+    edges. None when a point can depend on the request's edges
+    instead: an `@` pin (`@ start()`/`@ end()` included) or a negative
+    offset, which reads samples after the point's bucket."""
+
+    def walk(e, step: int) -> set[int] | None:
+        if isinstance(e, VectorSelector):
+            if e.at_ns is not None or e.at_ref or e.offset_ns < 0:
+                return None
+            return {e.range_ns or step}
+        if isinstance(e, PromScalar):
+            return set()
+        if isinstance(e, P.Subquery):
+            subs, own = [(e.inner, e.step_ns)], {e.range_ns}
+        elif isinstance(e, FnCall):
+            subs = [(a, step) for a in e.args]
+            own = {step} if e.fn == "absent" else set()
+        elif isinstance(e, AggExpr):
+            subs, own = [(e.inner, step)], set()
+        elif isinstance(e, PromBinOp):
+            subs, own = [(e.left, step), (e.right, step)], set()
+        else:
+            return None
+        for sub, sub_step in subs:
+            w = walk(sub, sub_step)
+            if w is None:
+                return None
+            own |= w
+        return own
+
+    return walk(P.parse(text), step_ns)

@@ -17,6 +17,7 @@ transform. Type filtering follows the reference planners' `type IN
 from __future__ import annotations
 
 import os
+import sys
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass, field
@@ -24,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gigapipe_spark.api import SERVED_FRAMES, Engine
+from gigapipe_spark.api import BLOCK_NS, SERVED_BLOCKS, SERVED_FRAMES, Engine
 from gigapipe_spark.logql.compiler import LogQLContext
 from gigapipe_spark.promql.compiler import PromQLContext
 from gigapipe_spark.sources.views import ancestors_from_spans
@@ -258,10 +259,28 @@ def store_traceql_context(spark, catalog: Catalog, **kw) -> StoreTraceQLContext:
     return StoreTraceQLContext(spark, catalog.root, catalog=catalog, **kw)
 
 
-# executed request frames one store version retains, least recently
-# used dropped first (a live tail repeats 1 key, a dashboard refresh
-# reads 7)
-SERVED_FRAMES_MAX = 64
+# approximate bytes of collected rows one store version keeps, served
+# reads and time blocks together, least recently used dropped first
+SERVED_BYTES_MAX = 64 << 20
+
+
+def _approx_bytes(rows: list) -> int:
+    """Rough in-memory size of collected rows: the deep size of up to 32
+    evenly spaced rows, scaled to the row count."""
+    if not rows:
+        return sys.getsizeof(rows)
+    sample = rows[:: max(1, len(rows) // 32)]
+    per_row = sum(_deep_size(r) for r in sample) / len(sample)
+    return sys.getsizeof(rows) + int(per_row * len(rows))
+
+
+def _deep_size(v) -> int:
+    n = sys.getsizeof(v)
+    if isinstance(v, dict):
+        n += sum(_deep_size(k) + _deep_size(x) for k, x in v.items())
+    elif isinstance(v, (tuple, list)):  # a Row is a tuple
+        n += sum(_deep_size(x) for x in v)
+    return n
 
 
 # the tables a snapshot pins: every table a fan-out journals. The
@@ -298,11 +317,11 @@ class _SeqCatalog(Catalog):
     never released under a running query (the flush checkpoints in
     storage/writer.py rely on the same cleaner).
 
-    It also keeps each read route's executed frame (`served`), so a
-    repeated request re-collects a plan Spark has already analysed,
-    planned and run: the AQE final plan comes back with its
-    materialized broadcast and shuffle stages, and only the result
-    stage runs."""
+    It also keeps what its reads answered, as collected rows bounded by
+    SERVED_BYTES_MAX: each read route's rows under the request's key
+    (`served`), and a step-local range read's rows per absolute time
+    block (`served_blocks`). A repeated request, or a sliding window
+    whose blocks an earlier refresh built, runs no Spark job."""
 
     def __init__(self, base: Catalog, seq: int, listing: dict[str, list[str]]):
         super().__init__(base.root, base.oid)
@@ -311,39 +330,70 @@ class _SeqCatalog(Catalog):
         # re-entrant: a read_series build reads time_series through read()
         self._lock = threading.RLock()
         self._frames: dict = {}
-        # request key -> executed frame, in least-recently-used order;
-        # its own lock, so a lookup never waits behind a table build
-        self._served: OrderedDict = OrderedDict()
-        self._served_lock = threading.Lock()
+        # request or block key -> (rows, approximate bytes), in
+        # least-recently-used order; its own lock, so a lookup never
+        # waits behind a table build
+        self._rows: OrderedDict = OrderedDict()
+        self._rows_bytes = 0
+        self._rows_lock = threading.Lock()
+
+    def _kept(self, key) -> list | None:
+        with self._rows_lock:
+            kept = self._rows.get(key)
+            if kept is None:
+                return None
+            self._rows.move_to_end(key)
+            return kept[0]
+
+    def _keep(self, key, rows: list) -> None:
+        size = _approx_bytes(rows)
+        with self._rows_lock:
+            old = self._rows.pop(key, None)
+            self._rows_bytes += size - (old[1] if old else 0)
+            self._rows[key] = (rows, size)
+            while self._rows_bytes > SERVED_BYTES_MAX:
+                self._rows_bytes -= self._rows.popitem(last=False)[1][1]
 
     def served(self, key, build) -> list:
-        """Engine.served under this seq. Misses build outside any lock
+        """Engine.served under this seq: the rows kept under `key`, or
+        `build()` collected and kept. Misses build outside any lock
         (concurrent misses compile in parallel; identical ones may both
-        build, the last one kept). A frame whose collect raises is
-        evicted: a failed or cancelled stage must not fail every later
-        hit."""
-        with self._served_lock:
-            df = self._served.get(key)
-            if df is not None:
-                self._served.move_to_end(key)
-        hit = df is not None
-        TELEMETRY.inc(SERVED_FRAMES, {"result": "hit" if hit else "miss"})
-        if not hit:
-            df = build()
-        try:
-            rows = df.collect()
-        except BaseException:
-            with self._served_lock:
-                if self._served.get(key) is df:
-                    del self._served[key]
-            raise
-        if not hit:
-            with self._served_lock:
-                self._served[key] = df
-                self._served.move_to_end(key)
-                while len(self._served) > SERVED_FRAMES_MAX:
-                    self._served.popitem(last=False)
+        build, the last one kept); a collect that raises or is
+        cancelled keeps nothing. The returned list is shared with later
+        hits: callers must not mutate it."""
+        rows = self._kept(key)
+        TELEMETRY.inc(SERVED_FRAMES, {"result": "miss" if rows is None else "hit"})
+        if rows is None:
+            rows = build().collect()
+            self._keep(key, rows)
         return rows
+
+    def served_blocks(self, key, start_ns: int, end_ns: int, build) -> list:
+        """Engine.served_blocks under this seq. Each BLOCK_NS block of
+        [start, end) is kept under `key + (block start,)`; the missing
+        ones are built by ONE `build(lo, hi)` over their span, rounded
+        out to block edges, whose rows are split by `timestamp_ns`
+        (a block between two missing ones is rebuilt with them). The
+        blocks' rows are trimmed to [start, end) and concatenated in
+        time order."""
+        edges = range(start_ns - start_ns % BLOCK_NS, end_ns, BLOCK_NS)
+        kept = {b: self._kept(key + (b,)) for b in edges}
+        missing = [b for b in edges if kept[b] is None]
+        built = range(missing[0], missing[-1] + BLOCK_NS, BLOCK_NS) if missing else ()
+        TELEMETRY.inc(SERVED_BLOCKS, {"result": "hit"}, len(edges) - len(built))
+        TELEMETRY.inc(SERVED_BLOCKS, {"result": "miss"}, len(built))
+        if missing:
+            fresh = {b: [] for b in built}
+            for r in build(built.start, built.stop).collect():
+                ts = r["timestamp_ns"]
+                fresh[ts - ts % BLOCK_NS].append(r)
+            for b, rows in fresh.items():
+                self._keep(key + (b,), rows)
+            kept.update(fresh)
+        return [
+            r for b in edges for r in kept[b]
+            if start_ns <= r["timestamp_ns"] < end_ns
+        ]
 
     def _memo(self, key, build) -> DataFrame:
         df = self._frames.get(key)
@@ -498,8 +548,15 @@ class StoreEngine(Engine):
 
     def served(self, key, build) -> list:
         """Engine.served over the current seq's tables: a key already
-        answered under this seq re-collects its executed frame."""
+        answered under this seq returns its kept rows, with no Spark
+        job."""
         return self._store().served(key, build)
+
+    def served_blocks(self, key, start_ns: int, end_ns: int, build) -> list:
+        """Engine.served_blocks over the current seq's tables: the
+        blocks this seq already built are re-served from their kept
+        rows, and the missing ones are built by one query."""
+        return self._store().served_blocks(key, start_ns, end_ns, build)
 
     def rule_managers(self) -> dict:
         """The engine's two rule managers ("loki" LogQL / "prom"

@@ -43,10 +43,10 @@ from a read path.
 
 A StoreEngine pins one listing for every journaled table each time the
 seq moves, and every read under that seq — query routes, label and
-series endpoints, the executed frames it re-serves, and live-tail
-polls — loads exactly the pinned files (storage/query.py `_SeqCatalog`;
-basePath preserves the (oid, date) partition columns, so partition
-pruning still applies). A tail poll scans only the samples files its
+series endpoints, the rows and blocks it keeps for served reads, and
+live-tail polls — loads exactly the pinned files (storage/query.py
+`_SeqCatalog`; basePath preserves the (oid, date) partition columns,
+so partition pruning still applies). A tail poll scans only the samples files its
 snapshot holds beyond the last one it drained.
 """
 

@@ -907,12 +907,12 @@ def test_prom_query_range_cap_applies_to_default_step(gateway):
     assert "exceeded maximum resolution" not in body.get("error", ""), body
 
 
-def _served_metrics(base) -> dict:
-    """gigapipe_served_frames_total by result, read from /metrics."""
+def _served_metrics(base, family="gigapipe_served_frames_total") -> dict:
+    """A served-read counter family by result, read from /metrics."""
     _, text = _get_text(base, "/metrics")
     out = {"hit": 0, "miss": 0}
     for line in text.splitlines():
-        if line.startswith("gigapipe_served_frames_total{"):
+        if line.startswith(family + "{"):
             result = line.split('result="', 1)[1].split('"', 1)[0]
             out[result] = int(float(line.rsplit(" ", 1)[1]))
     return out
@@ -945,6 +945,37 @@ def test_served_frames_counter(gateway):
     assert lines() == ["memo 1", "memo 2", "memo 3"]
     after = _served_metrics(base)
     assert (after["hit"] - mid["hit"], after["miss"] - mid["miss"]) == (0, 2)
+
+
+def test_served_blocks_counter(gateway):
+    """A step-local range read counts its time blocks: a cold 1 h window
+    over two blocks misses both, the window slid 5 min hits both, and
+    the same read with a limit is a plain served read, no block."""
+    base, _ = gateway
+    m0 = T0 - T0 % (300 * S)
+    assert _post(base, "/loki/api/v1/push", json.dumps(
+        {"streams": [{"stream": {"app": "blocks"},
+                      "values": [[str(m0 + i * 60 * S), f"b {i}"] for i in range(90)]}]}
+    ).encode()) == 204
+    q = urllib.parse.quote('count_over_time({app="blocks"}[1m])')
+    path = lambda lo, extra="": (
+        f"/loki/api/v1/query_range?query={q}&start={lo}&end={lo + 3600 * S}{extra}"
+    )
+    points = lambda p: sum(len(s["values"]) for s in _get(base, p)[1]["data"]["result"])
+    blocks = lambda: _served_metrics(base, "gigapipe_served_blocks_total")
+    frames = lambda: _served_metrics(base)
+    b0, f0 = blocks(), frames()
+    assert points(path(m0)) == 60
+    b1 = blocks()
+    assert (b1["hit"] - b0["hit"], b1["miss"] - b0["miss"]) == (0, 2)
+    assert points(path(m0 + 300 * S)) == 60
+    b2 = blocks()
+    assert (b2["hit"] - b1["hit"], b2["miss"] - b1["miss"]) == (2, 0)
+    assert points(path(m0, "&limit=1000")) == 60
+    assert blocks() == b2
+    f1 = frames()
+    assert (f1["hit"] - f0["hit"], f1["miss"] - f0["miss"]) == (0, 1)
+    assert "# TYPE gigapipe_served_blocks_total counter" in _get_text(base, "/metrics")[1]
 
 
 def test_prom_instant_query_without_time_never_hits(gateway):

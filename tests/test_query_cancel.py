@@ -29,6 +29,9 @@ class _SlowEngine:
     def served(self, key, build):
         return build().collect()
 
+    def served_blocks(self, key, start_ns, end_ns, build):
+        return build(start_ns, end_ns).collect()
+
     def loki_query_range(self, query, start, end, limit, direction):
         import pyspark.sql.functions as F
 

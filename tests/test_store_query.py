@@ -742,8 +742,8 @@ def test_store_engine_new_stream_visible_on_warm_engine(spark, tmp_path):
     query_range, labels attached the way the HTTP envelope attaches
     them, and its next label listing: the per-seq tables are rebuilt
     when the push bumps the mutation seq. The query goes through
-    `served` under one key before and after the push, so the executed
-    frame kept for the old seq is not served again."""
+    `served` under one key before and after the push, so the rows kept
+    for the old seq are not served again."""
     from gigapipe_spark.httpd import _stream_labels
     from gigapipe_spark.storage.query import StoreEngine
 
@@ -1022,8 +1022,8 @@ def _served_counts() -> tuple:
 
 def test_served_repeat_reuses_executed_plan(spark, tmp_path, monkeypatch):
     """Two identical reads under one seq: the same rows, the second a
-    hit that re-collects the executed plan — at most one Spark job (the
-    result stage) and no LogQL compile."""
+    hit served from the kept rows — no Spark job and no LogQL
+    compile."""
     from gigapipe_spark import api
     from gigapipe_spark.httpd import _served, _stream_labels
     from gigapipe_spark.storage.query import StoreEngine
@@ -1047,15 +1047,16 @@ def test_served_repeat_reuses_executed_plan(spark, tmp_path, monkeypatch):
         first, _ = _group_jobs(spark, f"served-miss-{i}", read)
         second, jobs = _group_jobs(spark, f"served-hit-{i}", read)
         assert first and second == first
-        assert len(jobs) <= 1, jobs
+        assert jobs == []
         assert compiles == [text]
         assert _served_counts() == (h0 + 1, m0 + 1)
         compiles.clear()
 
 
-def test_served_failed_or_cancelled_hit_is_rebuilt(spark, tmp_path):
-    """A hit whose collect raises, or is cancelled, drops its frame: the
-    identical read after it builds again and answers correctly."""
+def test_served_failed_or_cancelled_miss_keeps_nothing(spark, tmp_path):
+    """A miss whose collect raises, or is cancelled, keeps no rows: the
+    identical read after it builds again and answers correctly, and a
+    read that succeeded is then served without building."""
     import os
     import threading
     import time
@@ -1083,11 +1084,10 @@ def test_served_failed_or_cancelled_hit_is_rebuilt(spark, tmp_path):
 
     def build():
         builds.append(1)
-        # no exchange: every collect re-runs the probe
         return spark.range(0, 4, 1, 1).select(probe("id").alias("id"))
 
     read = lambda: sorted(r["id"] for r in eng.served(("probe",), build))
-    assert read() == read() == [0, 1, 2, 3] and len(builds) == 1
+    kept = lambda: ("probe",) in eng._store()._rows
 
     open(fail, "w").close()
     try:
@@ -1096,7 +1096,7 @@ def test_served_failed_or_cancelled_hit_is_rebuilt(spark, tmp_path):
     except Exception as ex:
         assert "stage failed" in str(ex)
     os.remove(fail)
-    assert read() == [0, 1, 2, 3] and len(builds) == 2
+    assert not kept() and len(builds) == 1
 
     open(slow, "w").close()
     sc = spark.sparkContext
@@ -1119,32 +1119,39 @@ def test_served_failed_or_cancelled_hit_is_rebuilt(spark, tmp_path):
     t.join(60)
     assert not t.is_alive() and "error" in out, out
     os.remove(slow)
+    assert not kept() and len(builds) == 2
+
     assert read() == [0, 1, 2, 3] and len(builds) == 3
+    assert kept() and read() == [0, 1, 2, 3] and len(builds) == 3
 
 
-def test_served_frames_lru_bound(spark, tmp_path, monkeypatch):
-    """One seq retains at most SERVED_FRAMES_MAX executed frames; the
-    least recently used goes first."""
+def test_served_rows_byte_bound(spark, tmp_path, monkeypatch):
+    """One seq keeps collected rows up to SERVED_BYTES_MAX approximate
+    bytes; the least recently used go first."""
     from gigapipe_spark.storage import query as sq
 
     cat = _seed(spark, tmp_path)
     eng = sq.StoreEngine(spark, cat.root, catalog=cat)
-    monkeypatch.setattr(sq, "SERVED_FRAMES_MAX", 3)
+    one = sq._approx_bytes(spark.range(100).collect())
+    monkeypatch.setattr(sq, "SERVED_BYTES_MAX", 3 * one + one // 2)
     builds = []
 
     def read(n):
         def build():
             builds.append(n)
-            return spark.range(n)
+            return spark.range(n * 1000, n * 1000 + 100)
 
         return eng.served(("n", n), build)
 
     for n in (1, 2, 3, 1, 4):  # 1 is used again before 4 evicts 2
-        assert len(read(n)) == n
-    assert list(eng._store()._served) == [("n", 3), ("n", 1), ("n", 4)]
+        assert len(read(n)) == 100
+    store = eng._store()
+    assert list(store._rows) == [("n", 3), ("n", 1), ("n", 4)]
+    assert store._rows_bytes == sum(size for _, size in store._rows.values())
+    assert store._rows_bytes <= sq.SERVED_BYTES_MAX
     read(2)
     assert builds == [1, 2, 3, 4, 2]
-    assert len(eng._store()._served) == 3
+    assert list(store._rows) == [("n", 1), ("n", 4), ("n", 2)]
 
 
 def test_unlimited_metric_query_range_skips_sort(spark, tmp_path):
@@ -1187,11 +1194,13 @@ def test_unlimited_metric_query_range_skips_sort(spark, tmp_path):
 
 def test_served_concurrent_readers(spark, tmp_path):
     """More reader threads than cores, a short switch interval, two
-    keys on one engine: every answer is right, every read is counted
-    once as a hit or a miss, and the memo holds one frame per key."""
+    keys and one block-split read on one engine: every answer is right,
+    every read is counted once as a hit or a miss, the memo holds one
+    entry per key and block, and its byte total is their sum."""
     import sys
     import threading
 
+    from gigapipe_spark.api import BLOCK_NS
     from gigapipe_spark.httpd import _served, _stream_labels
     from gigapipe_spark.storage.query import StoreEngine
 
@@ -1205,12 +1214,21 @@ def test_served_concurrent_readers(spark, tmp_path):
     h0, m0 = _served_counts()
     wrong = []
 
+    metric = 'sum(count_over_time({app=~".+"}[1m]))'
+    blocks = lambda: eng.served_blocks(
+        ("loki_query_range", metric), T0 - 3600 * S, T0 + 3600 * S,
+        lambda lo, hi: eng.loki_query_range(metric, lo, hi),
+    )
+    want_blocks = sorted(map(tuple, blocks()))
+
     def reader(i):
         for k in range(4):
             sel = list(want)[(i + k) % 2]
             rows = read(sel)
             if len(rows) != want[sel] or any(r["labels"] is None for r in rows):
                 wrong.append((sel, len(rows)))
+            if sorted(map(tuple, blocks())) != want_blocks:
+                wrong.append((metric, k))
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -1226,4 +1244,10 @@ def test_served_concurrent_readers(spark, tmp_path):
     assert not wrong, wrong
     h, m = _served_counts()
     assert (h - h0) + (m - m0) == 32 and h - h0 >= 1
-    assert sorted(k[1][0] for k in eng._store()._served) == sorted(want)
+    store = eng._store()
+    assert sorted(k[1][0] for k in store._rows if len(k) == 2) == sorted(want)
+    lo, hi = T0 - 3600 * S, T0 + 3600 * S
+    assert sorted(k[2] for k in store._rows if len(k) == 3) == list(
+        range(lo - lo % BLOCK_NS, hi, BLOCK_NS)
+    )
+    assert store._rows_bytes == sum(size for _, size in store._rows.values())
